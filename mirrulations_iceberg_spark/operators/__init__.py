@@ -31,180 +31,11 @@ from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
-#: The round driver correctness-checks only the first 50 entries of
-#: ``queries()`` in insertion order. Curate that window so it spans
-#: every operator family — one representative per SURVEY §2 row plus
-#: the LLM-pipeline operators (dedup, similarity, text, multimodal,
-#: maintenance, streaming, and the flagship e2 pipeline). Everything
-#: past the window stays pytest/replica-verified (tests/test_oracle_parity.py
-#: sweeps all entries, not just these).
-#:
-#: Round-8 rotation (VERDICT r7 item #4): the rotation queue is
-#: empty — every oracle-bearing query has a banked green row — so the
-#: window becomes a RE-VERIFICATION window, filled oldest-green-first
-#: from the mechanical ledger (``python scripts/ledger.py``; claims
-#: derive from CORRECTNESS_r*.json, never memory). Composition: the
-#: flagship e2 + m9 (round 7's single red row, fixed this round via
-#: integer-cents arithmetic) + the 33 queries whose latest green row
-#: is r02/r04/r05 (three-plus rounds of code drift ago) + the 15
-#: oldest r06-latest representatives chosen for family spread (agg,
-#: scalar, filter, join, window, dedup, ETL). Every entrant was
-#: re-verified green at the driver's sf0.01 via scripts/drivercheck.py
-#: (--window-order gate replay) before commit; the sf0.01 sweep is now
-#: a documented pre-rotation gate (VERDICT r7 item #2 — sf0.001 hides
-#: value-boundary divergence, measured 0/493 vs 3/5,088 on m9).
-#:
-#: Twelve NEW r8 operators (never green by definition) took the r8
-#: slots of a1/a2/a3/a4/a5/a12/f1/f4/c_scalar_suite/w7/d1/j1 — the
-#: re-verification fillers with the deepest green history (r02–r06).
-#:
-#: Round-11 rotation (VERDICT r10 items #1-#6; r10 shipped nothing,
-#: so this executes the outstanding r10 brief, plus five bonus
-#: operators added later in the round): the window = 9 NEW operators
-#: (j14 episode attribution, d15b ExactSubstr cut, x16 graph-community
-#: dedup, t17b iterated BPE, d19 duplicate reweighting, t19 hashed-
-#: feature quality classifier, x17 two-stage PQ rerank, x18 IVF-routed
-#: PQ, o11 Neyman allocation — never green by definition) + 7 whose code changed this round
-#: and must re-verify at the driver (j13: the redundant w.count() scan
-#: folded into the island aggregation; x12: kept-edge core extracted
-#: into the shared _x12_kept_edges helper x16 composes; x9:
-#: fit/encode/ADC extracted into the shared _pq_codes_qside helper
-#: x17/x18 compose; x5: centroid artifacts + assign fold extracted
-#: into the helpers x18 composes; d13/x11/x14: their verbatim copies
-#: of that fold rewired onto the shared _ivf_assign_fold — review
-#: pass 2's half-applied-discipline finding) + ALL 28
-#: r06-stale greens (last driver-checked four-plus rounds of refactors
-#: ago — the 9bdcc3c shared-helper extraction touched d1/d3/d8's code
-#: paths; list verified against the regenerated LEDGER.md, never
-#: memory) + 6 r07-stale fillers chosen for family spread (the ten
-#: displaced by the bonus operators and the fold-share re-entries —
-#: a13/a15/d2/d4/d6/g2/t7/w6/x1/x5 — each leave another family
-#: representative in the window and stay in the pytest sweep + next
-#: round's rotation queue; x5 then re-entered as a code-changed row
-#: when x18 extracted its centroid artifacts). Pre-
-#: rotation gate: the full sf0.01 sweep ran green this session
-#: (181 pass / 0 fail) and every changed/new entry re-verified at
-#: sf0.01 in targeted passes; the exact 50-slot order replayed green
-#: via --window-order before commit.
-#: Round-12 rotation (VERDICT r11 item #1): the window = 4 NEW
-#: operators (x18b residual IVFPQ, x19 build/serve split, m18 z-order
-#: design, x20 filtered ANN — never green by definition) + 6 whose
-#: code changed this round and must re-verify at the driver (o11: the 2^53 radicand
-#: guard now rides the ssq projection; x9/x17/x18: the shared
-#: _pq_code_col/_pq_dtab_col/_adc_col helpers gained column-name
-#: parameters for x18b — defaults keep the plans identical, but
-#: identical-by-argument is exactly the claim the gate exists to
-#: attest; s4: directory-source single-filing for scale-stress; t17b:
-#: per-round cache → localCheckpoint lineage truncation) + ALL 38
-#: r07-stale greens (last driver-checked five rounds of refactors
-#: ago; list verified against the regenerated LEDGER.md, never
-#: memory) + 2 r08-stale fillers (the flagship e2 and w1). The r08
-#: cohort's remainder (45) is next round's rotation queue. Pre-rotation gate: the full sf0.01 sweep ran green this
-#: session (181 pass / 0 fail) BEFORE the new operators landed; every
-#: new/changed entry re-verified at sf0.01 in targeted passes; the
-#: exact 50-slot order replayed green via --window-order before each
-#: commit that touched the window.
-#: Round-13 rotation (VERDICT r11 #1's trajectory, continued): the
-#: window = 6 NEW operators (w16 CUSUM changepoint, d20 per-source
-#: MinHash overlap sketch, x21 IVFPQ incremental upsert, e15 dataset-
-#: card report, t20 BPE corpus encode, s8 streamed CUSUM with w16's
-#: oracle verbatim as the stream/batch parity proof — never green by
-#: definition) + 2 whose code changed
-#: this round and must re-verify at the driver (o11: the radicand
-#: guard now evaluates in DECIMAL — ADVICE r12; x20: output driven
-#: from the filtered-truth key set with COALESCEd left joins — ADVICE
-#: r12, oracle updated identically) + 42 of the 45 remaining r08-stale
-#: greens (last driver-checked five rounds of refactors ago; list
-#: verified against the regenerated LEDGER.md, never memory) —
-#: w5_sessionize, f2_is_not_null, and a9_value_counts yield their
-#: slots to e15, t20, and s8 and head r14's rotation queue — all
-#: picked from the cohort's 10-way tie at the deepest green history
-#: (5 banked rounds) by family redundancy: each leaves same-family
-#: siblings in the window (w2/w4/w12/w13 for w5; f3 for f2;
-#: a6/a7/a10/a12b/a14/a16 for a9), so no family's live attestation
-#: thins. Pre-rotation
-#: gate: the full sf0.01 sweep ran green this session (185 pass /
-#: 2 rows-only / 0 fail) with the o11/x20 fixes in, each new operator
-#: verified at sf0.01 on first contact, and the exact 50-slot order
-#: replayed green via --window-order before commit.
-#: Round-14 rotation (VERDICT r13 item #1 + the round's build list):
-#: the window = 9 NEW oracle-bearing entries (t22 intra-doc repetition
-#: filter and mm7 video frame-signature dedup — landed late-round,
-#: displacing q10/e9, o13 grouped k-fold
-#: split, m20 z-order sorted rewrite, s9 streaming near-dup admission
-#: — d18's parity twin, t17c batched BPE trainer, and m1/m2 which flip
-#: from rows-only to hash-checked on their engine-invariant halves —
-#: VERDICT r13 #6; their byte-size halves split out as m1b/m2b,
-#: rows-only by nature, outside the window per the round-6 rule) + 3
-#: whose code changed this round and must re-verify at the driver
-#: (m19: coalesced checksum aggregates — ADVICE r13; mm6: banding
-#: widened 4×16 → 8×8 bits with the oracle regenerated from the same
-#: constants — ADVICE r13; m18: z-space extraction into the shared
-#: _m18_zspace helper m20 composes) + ALL 11 remaining r08-stale
-#: greens (a6/a7/a9/a10/e1/f2/j6/o2/o4/u1/w5 — last driver-checked six
-#: rounds of refactors ago; exactly the list VERDICT r13 #1 names,
-#: verified against the regenerated LEDGER.md, never memory) + 27 of
-#: the 45 r10-stale greens (30 at first rotation; q10, e9, and d7 were
-#: then displaced late-round when t22_intra_doc_repetition,
-#: mm7_video_framesig_neardup, and o14_walk_forward_folds landed — q7
-#: keeps the q family live, e1/e13/e14 the e family, d10/d17/d18 the
-#: d family). The 18 r10 entries heading r15's queue
-#: (q2/q4/q5/q6/q10, e9/e10/e11/e12, d7/d15/d16, f1c, s3, t16, x13,
-#: w15, m13)
-#: were picked by family redundancy — each leaves same-family siblings
-#: in the window (q7; e1/e13/e14; d10/d17/d18; f1b/f4/f2;
-#: s2/s5/s7/s13/s9; t13/t17/t18/t17c; x7/x10/x15; w14/w5;
-#: m7/m14/m15/m16/m19/m18/m20/m1/m2) — so no family's live attestation
-#: thins. Pre-rotation gate: the full sf0.01 sweep ran green this
-#: session with every new/changed entry re-verified at sf0.01 on
-#: first contact, and the exact 50-slot order replayed green via
-#: --window-order before commit.
-#: Round-15 rotation (VERDICT r14 item #2 + the round's build list):
-#: the window = 4 NEW oracle-bearing entries (e18 DSIR importance
-#: resampling and mm8 audio fingerprint near-dup at rotation time;
-#: e19 filter ablation and t23 language-ID landed late-round — never
-#: green by definition, all forced in by the rotation-queue rule) + 5
-#: whose code changed this round and must re-verify at the driver
-#: (m1/m2: the ADVICE r14 writer-independence split — compresses flag
-#: moved to m1b, null_count data-scan fallback; o13: broadcast 1-row
-#: total replaces the unpartitioned Window — ADVICE r14; s9: the
-#: cap-proximity runtime guard; mm7: containment machinery extracted
-#: into the shared signature_containment_pairs helper mm8 composes) +
-#: ALL 18 r10-stale greens (d7/d15/d16, e9/e10/e11/e12, f1c, m13,
-#: q2/q4/q5/q6/q10, s3, t16, w15, x13 — exactly the list VERDICT r14
-#: #2 names, verified against the regenerated LEDGER.md, never
-#: memory) + 23 of the 45 r11-stale greens chosen for family spread
-#: (a1–a5/a8/a12, both c-suite entries, d1/d3/d8, e4/e5/e6, g1, j9,
-#: m6, t19, w7, x2/x5/x6 — e7 and t1 entered at first rotation and
-#: yielded their slots to the late e19/t23). The 22 r11 entries
-#: heading r16's queue (d13/d15b/d19, e7, f1, j13/j14, m10/m11, mm3,
-#: o7, q1/q3/q8/q9, s1/s6, t1, x11/x12/x14/x16) were picked by family
-#: redundancy — each leaves same-family siblings in the window
-#: (d1/d3/d7/d8/d15/d16; e4/e5/e6 + e9–e12 + e18/e19; f1c; j9;
-#: m1/m2/m6/m13; mm7/mm8; o13; q2/q4/q5/q6/q10; s3/s9; t16/t19/t23;
-#: x2/x5/x6/x13) — so no family's live attestation thins.
-#: Pre-rotation gate: the full sf0.01 sweep ran green this session
-#: (twice — 210 pass pre-rotation, 211 pass after e19 landed) with
-#: every new/changed entry re-verified at sf0.01 on first contact,
-#: and the exact 50-slot order replayed green via --window-order
-#: after every window edit (four replays this round).
-#: Round-16 rotation (VERDICT r15 items #1/#3): 2 NEW oracle-bearing
-#: entries (e19b threshold sweep, t24 predicted-language card) + 2
-#: whose code changed this round (e18: ADVICE r15 offset-headroom
-#: guard; t23: scoring factored into the shared t23_pred_frame swap
-#: point that t24 composes) + ALL 22 r11-stale greens (exactly
-#: VERDICT r15 #1's list, from the regenerated ledger) + 24 of the 47
-#: r12-stale greens by family spread. The 23 r12 entries left out
-#: head r17's queue (a13/a15/a5b, d12/d2b/d3b/d5/d6, o8, t8/t12/
-#: t17b, w6/w8/w9/w10/w11, x17/x18/x18b/x19/x4/x4b) — each has
-#: same-family siblings in-window or a green row <= 2 rounds old.
-#: WINDOW-SIZE CONSTRAINT (VERDICT r15 #3): the driver consumes
-#: list(queries())[:50] — every CORRECTNESS_r02..r15 file has exactly
-#: 50 rows regardless of registry size (60 -> 215 queries), so the cap
-#: is the driver's, not ours. Growth policy from r16 on: new operators
-#: per round <= 50 − (code-changed re-verifies) − (current oldest
-#: stale cohort), so the worst-case attestation staleness stops
-#: lengthening; see README "Driver window" note.
+#: The first 50 entries of ``queries()`` (insertion order) are the
+#: driver's correctness window: exactly 50 oracle-bearing names that
+#: span every operator family, never-green and code-changed queries
+#: first, then the stalest greens from ``scripts/ledger.py``. Rotation
+#: history lives in LEDGER.md and the VERDICTs.
 DRIVER_WINDOW = (
     # --- NEW round-16 operators (oracle-bearing, never checked;
     #     forced in by the rotation-queue rule). mm9 (VERDICT r15 #7,

@@ -64,20 +64,14 @@ def lsh_hottest_bucket(
     uselessly conservative (all-rows-in-one-bucket); the measured
     occupancy is the fact (3–4 vs cap 1000 on the fixtures).
 
-    ``extra_counts`` (r17): a precomputed (band, bucket, n) frame to
+    ``extra_counts``: a precomputed (band, bucket, n) frame to
     union into the occupancy — a caller that already holds a cached
     bucket index for one side (s9's standing base index) passes its
     counts instead of re-exploding that side's signatures. Per-bucket
     occupancy of a union of disjoint frames is the SUM of the sides'
     counts, so ``max(count_sigs + count_extra)`` over a full outer
-    join is exactly the old ``max`` over the unioned signatures."""
-    counts = (
-        sigs.select(
-            F.posexplode(band_buckets_col()).alias("band", "bucket")
-        )
-        .groupBy("band", "bucket")
-        .count()
-    )
+    join is exactly the ``max`` over the unioned signatures."""
+    counts = _band_rows(sigs).groupBy("band", "bucket").count()
     if extra_counts is not None:
         counts = (
             counts.join(
@@ -403,7 +397,7 @@ def band_buckets_col():
     ``signature`` column — ONE home for the banding arithmetic shared
     by d3/d7 and the cross-frame variant (a bands/rows tuning change
     edits this expression only). Null signature (shingle-less doc) →
-    null array → ``posexplode`` emits zero rows."""
+    null array → the explode in :func:`_band_rows` emits zero rows."""
     return F.when(
         F.col("signature").isNotNull(),
         F.transform(
@@ -417,6 +411,30 @@ def band_buckets_col():
     )
 
 
+def _band_rows(sigs: DataFrame) -> DataFrame:
+    """(doc_id, band, bucket) rows of a signature frame — the ONE
+    explode of :func:`band_buckets_col`. Every banded-LSH index
+    (:func:`lsh_band_buckets`) and the cap guard
+    (:func:`lsh_hottest_bucket`) build from it."""
+    return sigs.select(
+        "doc_id", F.posexplode(band_buckets_col()).alias("band", "bucket")
+    )
+
+
+def lsh_band_buckets(sigs: DataFrame, ids_alias: str) -> DataFrame:
+    """(band, bucket) → sorted doc-id array index of a signature frame:
+    the band explode + the ONE hash-agg shuffle every banded-LSH path
+    pairs from (d3/d16 within a corpus, d7 against the bucket min,
+    d18/e14/s9 across two frames). A repeat prober (s9) computes the
+    BASE side once, caches it, and reuses it across micro-batches (the
+    stored-index shape of the 100 TB story)."""
+    return (
+        _band_rows(sigs)
+        .groupBy("band", "bucket")
+        .agg(F.sort_array(F.collect_list("doc_id")).alias(ids_alias))
+    )
+
+
 def verify_exact_jaccard(
     cand: DataFrame, sigs: DataFrame, threshold: float,
     sigs_b: DataFrame | None = None,
@@ -425,10 +443,10 @@ def verify_exact_jaccard(
     against the signature frame's shingle arrays — the shared verify
     step of the within-corpus and cross-frame LSH paths (the
     ``ROUND(j, 4) >= threshold`` contract the oracles mirror lives
-    here once). ``sigs_b`` (r17): the cross-frame probe resolves
-    ``doc_a`` from the probe frame and ``doc_b`` from the base frame
-    directly — doc-id spaces are disjoint, so two frames and the old
-    union are the same lookup, minus materializing a combined cache."""
+    here once). ``sigs_b``: the cross-frame probe resolves ``doc_a``
+    from the probe frame and ``doc_b`` from the base frame directly —
+    doc-id spaces are disjoint, so two frames and their union are the
+    same lookup, minus materializing a combined cache."""
     sh_a = sigs.select(
         F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a")
     )
@@ -497,10 +515,6 @@ def minhash_lsh_pairs_over(
     sigs = minhash_signatures(docs).cache()
     if caches is not None:
         caches.append(sigs)
-    bands = sigs.select(
-        "doc_id",
-        F.posexplode(band_buckets_col()).alias("band", "bucket"),
-    )
     # Group-and-pair (same shape as d2): ONE shuffle on (band, bucket)
     # builds per-bucket doc lists; candidate pairs are generated with
     # array lambdas inside the bucket instead of a bands⋈bands self-join
@@ -509,10 +523,8 @@ def minhash_lsh_pairs_over(
     # thousands of near-identical docs into one bucket and make pair
     # generation quadratic — buckets past the cap carry no pruning
     # signal. No-op at test SF, load-bearing at 100 TB.
-    buckets = (
-        bands.groupBy("band", "bucket")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-        .filter((F.size("ids") > 1) & (F.size("ids") <= max_bucket_size))
+    buckets = lsh_band_buckets(sigs, "ids").filter(
+        (F.size("ids") > 1) & (F.size("ids") <= max_bucket_size)
     )
     pair_arr = F.flatten(
         F.transform(
@@ -705,14 +717,8 @@ def d7_dedup_apply_lsh(
     """
     docs = load_table(spark, sf_dir, "documents")
     sigs = minhash_signatures(docs).cache()
-    bands = sigs.select(
-        "doc_id",
-        F.posexplode(band_buckets_col()).alias("band", "bucket"),
-    )
-    buckets = (
-        bands.groupBy("band", "bucket")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-        .filter((F.size("ids") > 1) & (F.size("ids") <= max_bucket_size))
+    buckets = lsh_band_buckets(sigs, "ids").filter(
+        (F.size("ids") > 1) & (F.size("ids") <= max_bucket_size)
     )
     # (bucket-min, member) candidates: LINEAR in bucket size.
     cand = (
@@ -722,16 +728,8 @@ def d7_dedup_apply_lsh(
         )
         .distinct()
     )
-    sh_a = sigs.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
-    sh_b = sigs.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
-    common = F.size(F.array_intersect("sh_a", "sh_b"))
-    jaccard = F.round(
-        common / (F.size("sh_a") + F.size("sh_b") - common).cast("double"), 4
-    )
     drop = (
-        cand.join(sh_a, "doc_a")
-        .join(sh_b, "doc_b")
-        .filter(jaccard >= threshold)
+        verify_exact_jaccard(cand, sigs, threshold)
         .select(F.col("doc_b").alias("doc_id"))
         .distinct()
     )
@@ -783,8 +781,9 @@ def connected_components(
     convergence is confirmed only by a zero-change round, so the
     usable budget is ``max_iter - 1`` rounds (a graph whose labels
     settle exactly on the last round still raises — a conservative
-    false positive, never a quiet wrong answer). With jumping the
-    budget covers diameters ~2^(max_iter-1): effectively any graph.
+    false positive, never a quiet wrong answer). With jumping from
+    round 3 on, the budget covers diameters ~2^(max_iter-2):
+    effectively any graph.
 
     Returns (node, label) for every node with at least one edge.
     """
@@ -844,9 +843,9 @@ def connected_components(
         raise RuntimeError(
             "connected_components could not confirm convergence within"
             f" {max_iter} rounds (last round still changed {changed}"
-            " labels) — raise max_iter (with pointer jumping built into"
-            " every round, the usable diameter budget is already"
-            " ~2^(max_iter-1))"
+            " labels) — raise max_iter (with pointer jumping from round 3"
+            " on, the usable diameter budget is already"
+            " ~2^(max_iter-2))"
         )
     return labels
 
@@ -1855,22 +1854,6 @@ def d17_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     return materialize_release(spark, out, groups, pe, *lsh_caches)
 
 
-def lsh_band_buckets(sigs: DataFrame, ids_alias: str) -> DataFrame:
-    """One side's (band, bucket) → sorted doc-id array index — the
-    band explode + hash-agg of the banded-LSH probe, factored out so a
-    repeat prober (s9) can compute the BASE side once, cache it, and
-    reuse it across micro-batches (the stored-index shape of the
-    100 TB story). Null signatures (shingle-less docs) explode to zero
-    rows, exactly as in the fused pre-r17 shape."""
-    return (
-        sigs.select(
-            "doc_id", F.posexplode(band_buckets_col()).alias("band", "bucket")
-        )
-        .groupBy("band", "bucket")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias(ids_alias))
-    )
-
-
 def minhash_lsh_cross_pairs_over(
     probe: DataFrame,
     base: DataFrame | None = None,
@@ -1902,22 +1885,17 @@ def minhash_lsh_cross_pairs_over(
     raw ``base`` would re-shingle and re-hash the base text on every
     probe.
 
-    ``base_buckets`` (r17, VERDICT r16 #4): a PRECOMPUTED
-    ``lsh_band_buckets(base_sigs, "bids")`` frame. Before r17 the
-    probe unioned probe+base signatures, cached the union, and
-    re-exploded + re-shuffled the BASE's band rows on every call —
-    s9's three micro-batches each re-bucketed and re-cached the whole
-    base, contradicting the operator's own stored-index story. Now the
-    two sides bucket separately and inner-join on (band, bucket): a
-    repeat prober passes the cached base bucket index once and each
-    batch shuffles only its OWN bands — at 100 TB, exactly "each
-    ingest co-locates against the stored band-bucketed signature
-    table". One-shot callers (d18, e14) omit it and the index is
-    derived (and cached alongside the probe signatures) internally.
-    Pair set unchanged: the inner join keeps exactly the buckets where
-    both sides are non-empty, the cap still compares the combined
-    occupancy, and the verify resolves each pair side from its own
-    frame (disjoint id spaces — see ``verify_exact_jaccard``).
+    ``base_buckets``: a PRECOMPUTED ``lsh_band_buckets(base_sigs,
+    "bids")`` frame. The two sides bucket separately and inner-join on
+    (band, bucket): a repeat prober passes the cached base bucket
+    index once and each batch shuffles only its OWN bands — at 100 TB,
+    exactly "each ingest co-locates against the stored band-bucketed
+    signature table". One-shot callers (d18, e14) omit it and the
+    index is derived internally, uncached: it is read once, by the
+    bucket join. The inner join keeps exactly the buckets where both
+    sides are non-empty, the cap compares the combined occupancy, and
+    the verify resolves each pair side from its own frame (disjoint
+    id spaces — see ``verify_exact_jaccard``).
     """
     if (base is None) == (base_sigs is None):
         raise ValueError("pass exactly one of base / base_sigs")

@@ -26,50 +26,20 @@ before ranking so both engines rank identically.
 from __future__ import annotations
 
 import random
-from contextlib import contextmanager
+from functools import reduce
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..tables import load_table
 from .dedup import parallelize_scan
+from .util import scoped_conf
 
 TOP_K = 10
 N_QUERIES = 5
 EMB_DIM = 64
 
-
-@contextmanager
-def _fit_conf(spark: SparkSession):
-    """Scoped execution conf for the Lloyd-fit collects (r17, VERDICT
-    r16 #1): disable AQE and pin shuffle parallelism to a
-    dimension-derived bound for the duration of a fit action.
-
-    Why this is scale-safe and not a local[32] twiddle: every exchange
-    inside a fit plan carries only PRE-AGGREGATED, dimension-bounded
-    rows (≤ cells·dims = 1024 for IVF, ≤ M·K = 128 for PQ — the sample
-    itself never crosses an exchange, which was r16's structural win).
-    AQE therefore has nothing to improve — its per-stage
-    re-optimization of the deep nested fit tree is pure driver cost
-    (~15 stage-jobs per fit collect, measured as the r16 x-family
-    regression) — and the static partition count needs only to cover
-    ≤1024 tiny rows, on a laptop or on a 4000-initial-partition
-    cluster (where leaving the fit's exchanges at the cluster-wide
-    initial parallelism would schedule thousands of near-empty tasks
-    per Lloyd step once AQE is off). Conf is read at plan time, scoped
-    to the fit action, and restored on exit — the consumer's main
-    query keeps the session's AQE and parallelism.
-    """
-    a_key, p_key = "spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions"
-    prev_a, prev_p = spark.conf.get(a_key), spark.conf.get(p_key)
-    cores = spark.sparkContext.defaultParallelism
-    spark.conf.set(a_key, "false")
-    spark.conf.set(p_key, str(min(cores, 64)))
-    try:
-        yield
-    finally:
-        spark.conf.set(a_key, prev_a)
-        spark.conf.set(p_key, prev_p)
 
 #: SRP-LSH layout: L hash tables × B hyperplane bits each. For a pair
 #: at angle θ a bit agrees with probability 1-θ/π, a table collides at
@@ -638,16 +608,13 @@ IVF_LLOYD_ITERS = 2
 
 def _center_rows_lit(center_rows: list) -> "F.Column":
     """(cell, center[]) rows → the ONE nested centroid literal the
-    assign fold consumes (``[{cell, center}]``, cells ascending).
+    assign fold consumes (``array<struct<cell:int,center:
+    array<double>>>``, cells ascending).
 
-    r17 (guide §1.2 "per-task work" at the driver): built from TWO
-    array literals (``F.lit(list)`` — one py4j call, one Literal after
-    constant folding) zipped into structs in-plan, instead of a
-    ``F.array`` tree of ~16·(dim+2) Column objects. The tree form cost
-    ~1k py4j round-trips to BUILD and ~1k expression nodes for the
-    analyzer to walk per reference; values and output type
-    (``array<struct<cell:int,center:array<double>>>``, cells
-    ascending) are identical, so every fold over it is bit-unchanged.
+    Built from TWO array literals (``F.lit(list)`` — one py4j call, one
+    Literal after constant folding) zipped into structs in-plan: an
+    ``F.array`` tree of the same values would cost ~1k py4j round-trips
+    to build and ~1k expression nodes for the analyzer to walk.
     """
     return F.zip_with(
         F.lit([c for c, _ in center_rows]).cast("array<int>"),
@@ -659,11 +626,10 @@ def _center_rows_lit(center_rows: list) -> "F.Column":
 def _ivf_fit_centroids(emb: DataFrame) -> DataFrame:
     """Deterministic Lloyd coarse quantizer — (cell, center) DataFrame.
 
-    Round 6 replaced MLlib KMeans here: its centroids depend on
-    aggregation order inside the JVM, which no other engine can
-    reproduce, so x5 was the one algorithmic rows-only row on the
-    driver gate. This fit is engine-reproducible by construction,
-    which is what lets x5 carry a full DuckDB oracle:
+    Not MLlib KMeans, whose centroids depend on aggregation order
+    inside the JVM, which no other engine can reproduce. This fit is
+    engine-reproducible by construction, which is what lets x5 carry a
+    full DuckDB oracle:
 
     * sample: ``vec_id % IVF_SAMPLE_MOD == 0`` (the fit never needs the
       full corpus; a fixed-rate deterministic slice replaces
@@ -679,24 +645,16 @@ def _ivf_fit_centroids(emb: DataFrame) -> DataFrame:
       is exact and aggregation-order-independent, then divided once in
       double. Empty cells drop (deterministic on both engines).
 
-    Staging (r16, guide §2.4; EXECUTION retuned r17 — see
-    :func:`_fit_rows_fused` for the measured story): each Lloyd step's
-    centroids ride as a BROADCAST 1-row frame (``collect_list`` of
-    ≤IVF_CLUSTERS structs, ``array_sort`` pinning cell order, built
-    IN-PLAN from the previous step), and the assignment is the
-    zero-shuffle argmin fold the corpus projection uses
-    (:func:`_ivf_assign_fold`). The whole fit is ONE lazy plan — the
-    fit sample crosses NO exchange (the recompute's exchanges carry
-    only ≤cells·dims pre-aggregated rows), so at 100 TB a fit is one
-    pass discipline over a bounded sample, not d shuffles of it.
-    Arithmetic is bit-identical to the oracle's replay.
-
-    r17 (VERDICT r16 #1): the SHAPE above is plan-correct at scale but
-    its r16 execution regressed every consumer 12–50% at the driver —
-    collectors must run it under :func:`_fit_conf` (AQE off +
-    dimension-bounded shuffle parallelism), which `_fit_rows_fused`
-    does. Direct ``.collect()`` of this frame (tests) stays correct,
-    just unscoped.
+    Staging: each Lloyd step's centroids ride as a BROADCAST 1-row
+    frame (``collect_list`` of ≤IVF_CLUSTERS structs, ``array_sort``
+    pinning cell order, built IN-PLAN from the previous step), and the
+    assignment is the zero-shuffle argmin fold the corpus projection
+    uses (:func:`_ivf_assign_fold`). The whole fit is ONE lazy plan —
+    the fit sample crosses NO exchange (the recompute's exchanges
+    carry only ≤cells·dims pre-aggregated rows), so at 100 TB a fit is
+    one pass over a bounded sample, not d shuffles of it. Arithmetic
+    is bit-identical to the oracle's replay. Consumers run it through
+    :func:`fit_artifacts`.
     """
     samp = emb.filter(F.col("vec_id") % IVF_SAMPLE_MOD == 0).select("vec_id", "e")
     w0 = Window.orderBy("__seed", "vec_id")  # IVF_CLUSTERS rows only
@@ -736,35 +694,6 @@ def _ivf_fit_centroids(emb: DataFrame) -> DataFrame:
             )
         )
     return centers
-
-
-def _ivf_fit_center_rows(emb: DataFrame) -> list:
-    """The IVF fit result — (cell, center) tuples, cells ascending,
-    collected under the scoped fit conf."""
-    return _fit_rows_fused(emb, want_ivf=True, want_pq=False)[0]
-
-
-def _ivf_cent_lit(emb: DataFrame):
-    """Fit the IVF coarse quantizer and return the centroid literal
-    for the fold-based corpus assignment. The fit's own per-step
-    collects ARE the bounded driver traffic (r17 — no extra collect
-    here; the last Lloyd step's rows are the result). Callers that
-    never rank probes (d13, x14) use this directly and skip the
-    centers DataFrame."""
-    center_rows = _ivf_fit_center_rows(emb)
-    return center_rows, _center_rows_lit(center_rows)
-
-
-def _ivf_centroid_artifacts(spark, emb: DataFrame):
-    """Shared x5/x11/x18 IVF coarse-quantizer artifacts: the centroid
-    literal plus a small DataFrame of the same centroids (for probe
-    ranking). Returns (centers, cent_lit)."""
-    center_rows, cent_lit = _ivf_cent_lit(emb)
-    centers = spark.createDataFrame(
-        [(c, [float(v) for v in vec]) for c, vec in center_rows],
-        "cell int, center array<double>",
-    )
-    return centers, cent_lit
 
 
 def _ivf_assign_fold(cent_lit):
@@ -817,7 +746,7 @@ def x5_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-checked end-to-end (new in round 6; rows-only before).
     """
     emb = _embeddings(spark, sf_dir).cache()
-    centers, cent_lit = _ivf_centroid_artifacts(spark, emb)
+    centers, cent_lit, *_ = fit_artifacts(emb, ivf=True)
     assigned = emb.select(
         "vec_id", "e", "norm", _ivf_assign_cell_col(cent_lit).alias("cell")
     )
@@ -916,7 +845,7 @@ def d13_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus until the final label-sized hash-agg.
     """
     emb = _embeddings(spark, sf_dir).cache()
-    _, cent_lit = _ivf_cent_lit(emb)
+    cent_lit = fit_artifacts(emb, ivf=True).cent_lit
     folded = _ivf_assign_fold(cent_lit)
     assigned = emb.select(
         "vec_id",
@@ -1001,19 +930,17 @@ def _pq_fit_codebooks(emb: DataFrame) -> DataFrame:
     fixed iteration count, DECIMAL-exact means), so the whole PQ
     pipeline carries a full DuckDB oracle.
 
-    Staging (r16, same move as the IVF fit — execution retuned r17,
-    see :func:`_fit_rows_fused`): each Lloyd step's codebooks ride as
-    a BROADCAST 1-row nested-array frame built IN-PLAN from the
-    previous step (per-m ``collect_list`` + ``array_sort``, cells
-    ascending), and the assign step is a zero-shuffle per-subspace
-    argmin fold in one projection (the ``_pq_code_col`` shape, with
-    explicit cell ids because cells can go empty mid-fit). One lazy
-    plan; the sample never crosses an exchange (the ONE (m, cell)
-    hash-agg's exchange carries ≤M·K pre-aggregated rows). Arithmetic
-    is unchanged expression-for-expression — the fold's strict-<
-    first-wins on ascending cells IS the window's ``ORDER BY dist2,
-    cell`` — so the fit stays bit-identical to the oracle's replay.
-    Collectors run it under :func:`_fit_conf` via `_fit_rows_fused`.
+    Staging, as in the IVF fit: each Lloyd step's codebooks ride as a
+    BROADCAST 1-row nested-array frame built IN-PLAN from the previous
+    step (per-m ``collect_list`` + ``array_sort``, cells ascending),
+    and the assign step is a zero-shuffle per-subspace argmin fold in
+    one projection (the ``_pq_code_col`` shape, with explicit cell ids
+    because cells can go empty mid-fit). One lazy plan; the sample
+    never crosses an exchange (the ONE (m, cell) hash-agg's exchange
+    carries ≤M·K pre-aggregated rows). The fold's strict-< first-wins
+    on ascending cells IS the oracle window's ``ORDER BY dist2, cell``,
+    so the fit is bit-identical to the oracle's replay. Consumers run
+    it through :func:`fit_artifacts`.
     """
     samp = emb.filter(F.col("vec_id") % PQ_SAMPLE_MOD == 0).select("vec_id", "e")
     sub_arr = F.transform(
@@ -1091,101 +1018,17 @@ def _pq_fit_codebooks(emb: DataFrame) -> DataFrame:
     return cb
 
 
-def _pq_fit_codebook_rows(emb: DataFrame) -> list:
-    """The PQ fit — (m, cell, center) tuples, sorted.
-    See :func:`_pq_fit_codebooks` for the algorithm + staging notes."""
-    return _fit_rows_fused(emb, want_ivf=False, want_pq=True)[1]
-
-
-def _fit_rows_fused(emb: DataFrame, want_ivf: bool, want_pq: bool):
-    """Execute the wanted fits and return their bounded row sets —
-    ``(ivf_center_rows | None, pq_cb_rows | None)`` — in ONE action,
-    under the scoped fit conf.
-
-    r17 (VERDICT r16 #1), the measured story: the r16 in-plan fit
-    shape is plan-right at scale (zero sample-row exchanges) but its
-    EXECUTION regressed every consumer 12–50% under the driver's cold
-    single-pass sweeps, and job profiling located the cost in AQE:
-    every exchange of the nested lazy plan becomes a query stage whose
-    re-optimization walks the whole remaining tree, so one fit collect
-    ran as ~15 driver-bound stage-jobs. Three alternatives were
-    measured against full 216-query sweeps before this landed:
-
-    * flat per-step jobs with ``F.lit(list)`` literal re-entry (one
-      small job per Lloyd step): wins in fresh sessions (8-consumer
-      proxy 115→75 s) but each EXTRA ACTION pays a driver gap that
-      grows with session age — in the full sweep the late x queries
-      (x19/x20/x21/x9) regressed vs r16 and the family read 126.2 s;
-    * the r16 nested plan with AQE left on: x family 128.2 s (min-2);
-    * the r16 nested plan collected under :func:`_fit_conf` (AQE off +
-      dimension-bounded shuffle parallelism): **x family 117.5 s
-      (min-2) — parity with the pre-r16 shape** while keeping zero
-      sample exchanges. Kept.
-
-    On top of that, when BOTH fits are wanted (x18/x18b/x19/x20/x21)
-    they are FUSED into one action: the two fit frames harmonize to
-    (kind, m, cell, center) and union, so their stages overlap inside
-    a single driver round-trip (guide §2.6 done in-plan) and a 2-fit
-    consumer pays one fit action instead of two. The union is pure job
-    packaging — each fit's expressions are untouched and the collected
-    rows are split by ``kind``.
-    """
-    parts = []
-    if want_ivf:
-        parts.append(
-            _ivf_fit_centroids(emb).select(
-                F.lit(0).alias("kind"), F.lit(-1).alias("m"), "cell", "center"
-            )
-        )
-    if want_pq:
-        parts.append(
-            _pq_fit_codebooks(emb).select(
-                F.lit(1).alias("kind"), "m", "cell", "center"
-            )
-        )
-    fused = parts[0]
-    for p in parts[1:]:
-        fused = fused.unionByName(p)
-    with _fit_conf(emb.sparkSession):
-        rows = fused.collect()
-    centers = cb = None
-    if want_ivf:
-        centers = sorted(
-            (r["cell"], [float(v) for v in r["center"]])
-            for r in rows
-            if r["kind"] == 0
-        )
-    if want_pq:
-        cb = sorted(
-            (r["m"], r["cell"], [float(v) for v in r["center"]])
-            for r in rows
-            if r["kind"] == 1
-        )
-    return centers, cb
-
-
-def _pq_cb_lit(emb: DataFrame):
-    """Fit the PQ codebooks and build the ONE nested codebook literal,
-    indexed at runtime: ``cb_lit[m][pos] = struct(p, center)``. Both
-    the encode argmin and the query distance table are a single lambda
-    expression parameterized over m (the subspace slice start is a
-    lambda-variable-derived Column), not PQ_M unrolled copies — the
+def _pq_rows_to_cb_lit(cb: list) -> Column:
+    """(m, cell, center) fit rows → the ONE nested codebook literal,
+    indexed at runtime: ``cb_lit[m][pos] = struct(p, center)``
+    (``array<array<struct<p:int,center:array<double>>>>``). Both the
+    encode argmin and the query distance table are a single lambda
+    expression parameterized over m, not PQ_M unrolled copies — the
     unrolled form multiplied plan size and codegen time by M, and a
-    When-chain variant of the argmin embeds the accumulator 3× per
-    centroid (≈3^16 nodes — OOMed the analyzer). A lambda fold is one
-    node; acc is a named variable.
-
-    r17: the literal is built from two ``F.lit(list)`` array literals
-    zipped into structs (the :func:`_center_rows_lit` move) instead of
-    an ~M·K·(subdim+2)-node ``F.array`` tree — same values, same type
-    (``array<array<struct<p:int,center:array<double>>>>``), one
-    Literal each after constant folding."""
-    return _pq_rows_to_cb_lit(_pq_fit_codebook_rows(emb))
-
-
-def _pq_rows_to_cb_lit(cb: list) -> "F.Column":
-    """(m, cell, center) fit rows → the position-indexed codebook
-    literal (see :func:`_pq_cb_lit`)."""
+    When-chain argmin embeds the accumulator 3× per centroid (≈3^16
+    nodes — it OOMed the analyzer). Built from two ``F.lit(list)``
+    array literals zipped into structs, like :func:`_center_rows_lit`.
+    """
     by_m: dict[int, list[list[float]]] = {m: [] for m in range(PQ_M)}
     for m, _cell, cen in sorted(cb):  # cells ascend within m; positions follow
         by_m[m].append([float(v) for v in cen])
@@ -1200,18 +1043,80 @@ def _pq_rows_to_cb_lit(cb: list) -> "F.Column":
     )
 
 
-def _ivfpq_lits(spark, emb: DataFrame):
-    """Fused IVF+PQ fit for the IVFPQ consumers (x18/x18b/x20/x21):
-    one seed job + one job per Lloyd step for BOTH fits
-    (:func:`_fit_rows_fused`). Returns (centers DataFrame, cent_lit,
-    cb_lit) — the same three artifacts `_ivf_centroid_artifacts` +
-    `_pq_cb_lit` produced in twice the actions."""
-    ivf_rows, pq_rows = _fit_rows_fused(emb, want_ivf=True, want_pq=True)
-    centers = spark.createDataFrame(
-        [(c, [float(v) for v in vec]) for c, vec in ivf_rows],
-        "cell int, center array<double>",
-    )
-    return centers, _center_rows_lit(ivf_rows), _pq_rows_to_cb_lit(pq_rows)
+class FitArtifacts(NamedTuple):
+    """:func:`fit_artifacts`' result; a model not asked for is None."""
+
+    centers: DataFrame | None  # (cell, center) frame, for probe ranking
+    cent_lit: Column | None  # centroid literal of the assign fold
+    cb_lit: Column | None  # position-indexed PQ codebook literal
+    center_rows: list | None  # (cell, center) tuples, cells ascending
+    cb_rows: list | None  # (m, cell, center) tuples, sorted
+
+
+def fit_artifacts(
+    emb: DataFrame, ivf: bool = False, pq: bool = False
+) -> FitArtifacts:
+    """Run the wanted Lloyd fits over ``emb`` — the IVF coarse
+    quantizer (:func:`_ivf_fit_centroids`) and/or the PQ codebooks
+    (:func:`_pq_fit_codebooks`) — in ONE action, and return their
+    artifacts. The one fit entry point of every ANN consumer.
+
+    Both fit frames harmonize to (kind, m, cell, center) and union, so
+    a two-fit consumer pays one driver round-trip and the fits' stages
+    overlap. The union is pure job packaging: each fit's expressions
+    are untouched and the collected rows split back by ``kind``.
+
+    The collect runs with AQE off and shuffle parallelism
+    ``min(cores, 64)``, scoped to the action. Every exchange of a fit
+    plan carries only pre-aggregated, dimension-bounded rows (≤ cells·
+    dims for IVF, ≤ M·K for PQ), so AQE has nothing to improve, while
+    its per-stage re-optimization of the deep nested fit tree is pure
+    driver cost; and the static partition count only has to cover
+    ≤1024 tiny rows, on a laptop or on a cluster whose initial
+    parallelism is in the thousands. The consumer's own query keeps
+    the session's conf.
+    """
+    parts = []
+    if ivf:
+        parts.append(
+            _ivf_fit_centroids(emb).select(
+                F.lit(0).alias("kind"), F.lit(-1).alias("m"), "cell", "center"
+            )
+        )
+    if pq:
+        parts.append(
+            _pq_fit_codebooks(emb).select(
+                F.lit(1).alias("kind"), "m", "cell", "center"
+            )
+        )
+    spark = emb.sparkSession
+    fit_conf = {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": str(
+            min(spark.sparkContext.defaultParallelism, 64)
+        ),
+    }
+    with scoped_conf(spark, fit_conf):
+        rows = reduce(DataFrame.unionByName, parts).collect()
+    centers = cent_lit = cb_lit = center_rows = cb_rows = None
+    if ivf:
+        center_rows = sorted(
+            (r["cell"], [float(v) for v in r["center"]])
+            for r in rows
+            if r["kind"] == 0
+        )
+        centers = spark.createDataFrame(
+            center_rows, "cell int, center array<double>"
+        )
+        cent_lit = _center_rows_lit(center_rows)
+    if pq:
+        cb_rows = sorted(
+            (r["m"], r["cell"], [float(v) for v in r["center"]])
+            for r in rows
+            if r["kind"] == 1
+        )
+        cb_lit = _pq_rows_to_cb_lit(cb_rows)
+    return FitArtifacts(centers, cent_lit, cb_lit, center_rows, cb_rows)
 
 
 def _pq_sub_d2(sub_col, cen_col):
@@ -1274,7 +1179,7 @@ def _pq_codes_qside(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
     * ``codes`` — (vec_id, code[PQ_M]) via :func:`_pq_code_col`;
     * ``qside`` — (query_id, qe, dtab) via :func:`_pq_dtab_col`.
     """
-    cb_lit = _pq_cb_lit(emb)
+    cb_lit = fit_artifacts(emb, pq=True).cb_lit
     codes = emb.select("vec_id", _pq_code_col(cb_lit).alias("code"))
     qside = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
@@ -1501,9 +1406,8 @@ def x18_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     prunes the corpus to ``IVF_NPROBE`` cells per query and the
     compressed-code ADC scan runs over those candidates only — x5's
     routing composed with x9's compression, both via the shared
-    helpers (:func:`_ivf_centroid_artifacts` /
-    :func:`_ivf_assign_cell_col` and :func:`_pq_cb_lit` /
-    :func:`_pq_code_col` / :func:`_pq_dtab_col`), so none of the ANN
+    helpers (:func:`fit_artifacts`, :func:`_ivf_assign_cell_col`,
+    :func:`_pq_code_col`, :func:`_pq_dtab_col`), so none of the ANN
     operators can drift.
 
     Textbook IVFPQ encodes per-cell RESIDUALS (x − centroid); here PQ
@@ -1528,7 +1432,7 @@ def x18_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     same routed-ADC / recall arithmetic.
     """
     emb = _embeddings(spark, sf_dir).cache()
-    centers, cent_lit, cb_lit = _ivfpq_lits(spark, emb)
+    centers, cent_lit, cb_lit, *_ = fit_artifacts(emb, ivf=True, pq=True)
     base = emb.select(
         "vec_id",
         _pq_code_col(cb_lit).alias("code"),
@@ -1642,7 +1546,7 @@ def x18b_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     double-ADC / double-recall arithmetic.
     """
     emb = _embeddings(spark, sf_dir).cache()
-    centers, cent_lit, cb_raw = _ivfpq_lits(spark, emb)
+    centers, cent_lit, cb_raw, *_ = fit_artifacts(emb, ivf=True, pq=True)
     # Residual corpus: cell via the shared assign fold, centroid via a
     # literal lookup BY CELL (cells may be sparse after empty-cell
     # drops, so position ≠ cell id — filter, not element_at).
@@ -1658,7 +1562,9 @@ def x18b_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "e",
         F.zip_with("e", ccen, lambda x, y: x - y).alias("r"),
     )
-    cb_res = _pq_cb_lit(res.select("vec_id", F.col("r").alias("e")))
+    cb_res = fit_artifacts(
+        res.select("vec_id", F.col("r").alias("e")), pq=True
+    ).cb_lit
     base = res.select(
         "vec_id",
         "cell",
@@ -1784,14 +1690,10 @@ def x19_ivfpq_build_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe cells, and join the probe table against the partitioned
     index — Spark plans DYNAMIC PARTITION PRUNING on ``cell``
     (plan-asserted in tests/test_operators.py), so each search reads
-    ~nprobe/IVF_CLUSTERS of the index bytes.
-
-    The literal-construction snippets are duplicated from
-    ``_pq_cb_lit`` / ``_ivf_cent_lit`` deliberately: those helpers fit
-    in-line and feed six green operators — x19's copies read frozen
-    artifacts instead, and sharing them this round would have put the
-    whole ANN family back through the rotation gate for a pure
-    refactor.
+    ~nprobe/IVF_CLUSTERS of the index bytes. The serve literals come
+    from the same builders as the in-line fit's
+    (:func:`_center_rows_lit`, :func:`_pq_rows_to_cb_lit`), fed the
+    rows read back from the artifacts.
 
     Contract: serve-from-artifacts returns EXACTLY x18's in-line-fit
     answer (same routing, same codes, same grade) — the oracle is
@@ -1805,50 +1707,24 @@ def x19_ivfpq_build_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     base_dir = tempfile.mkdtemp(prefix="miis_x19_")
     try:
         # ---- BUILD (offline, once) -------------------------------
-        # r17: ONE fused fit (shared seed + one job per Lloyd step for
-        # both models — _fit_rows_fused) feeds both artifact writes;
-        # the writes themselves are bounded local frames (16 / M·K
-        # rows), so the build's heavy work runs once, not twice.
-        ivf_rows, pq_rows = _fit_rows_fused(emb, want_ivf=True, want_pq=True)
+        # one fused fit feeds both artifact writes; the writes
+        # themselves are bounded local frames (16 / M·K rows)
+        fit = fit_artifacts(emb, ivf=True, pq=True)
         spark.createDataFrame(
-            [(m, c, list(cen)) for m, c, cen in pq_rows],
-            "m int, cell int, center array<double>",
+            fit.cb_rows, "m int, cell int, center array<double>"
         ).write.parquet(f"{base_dir}/codebooks")
-        spark.createDataFrame(
-            [(c, list(vec)) for c, vec in ivf_rows],
-            "cell int, center array<double>",
-        ).write.parquet(f"{base_dir}/centroids")
-        cb_rows = sorted(
-            (r["m"], r["cell"], [float(v) for v in r["center"]])
-            for r in spark.read.parquet(f"{base_dir}/codebooks").collect()
-        )
-        by_m: dict[int, list[list[float]]] = {m: [] for m in range(PQ_M)}
-        for m, _cell, cen in cb_rows:
-            by_m[m].append(cen)
-        # r17: F.lit(list)-pair literals (single Literal nodes) instead
-        # of the F.array trees — same values/types; see _pq_cb_lit /
-        # _center_rows_lit (still duplicated here deliberately: these
-        # read FROZEN artifacts, not the in-line fit)
-        cb_lit = F.zip_with(
-            F.lit(
-                [[p for p in range(len(by_m[m]))] for m in range(PQ_M)]
-            ).cast("array<array<int>>"),
-            F.lit([by_m[m] for m in range(PQ_M)]),
-            lambda ps, cs: F.zip_with(
-                ps,
-                cs,
-                lambda p, cen: F.struct(p.alias("p"), cen.alias("center")),
-            ),
+        fit.centers.write.parquet(f"{base_dir}/centroids")
+        cb_lit = _pq_rows_to_cb_lit(
+            [
+                (r["m"], r["cell"], r["center"])
+                for r in spark.read.parquet(f"{base_dir}/codebooks").collect()
+            ]
         )
         cent_rows = sorted(
             (r["cell"], [float(v) for v in r["center"]])
             for r in spark.read.parquet(f"{base_dir}/centroids").collect()
         )
-        cent_lit = F.zip_with(
-            F.lit([c for c, _ in cent_rows]).cast("array<int>"),
-            F.lit([vec for _, vec in cent_rows]),
-            lambda c, cen: F.struct(c.alias("cell"), cen.alias("center")),
-        )
+        cent_lit = _center_rows_lit(cent_rows)
         centers = spark.createDataFrame(
             cent_rows, "cell int, center array<double>"
         )
@@ -1987,8 +1863,10 @@ def x21_ivfpq_upsert_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     base_rows = emb.filter(
         F.col("vec_id") % X21_DELTA_MOD != X21_DELTA_RES
     )
-    # frozen: both fits see base only (fused — one seed + one job/step)
-    centers, cent_lit, cb_lit = _ivfpq_lits(spark, base_rows)
+    # frozen: both fits see base only
+    centers, cent_lit, cb_lit, *_ = fit_artifacts(
+        base_rows, ivf=True, pq=True
+    )
     merged = emb.select(
         "vec_id",
         _pq_code_col(cb_lit).alias("code"),
@@ -2142,7 +2020,7 @@ def x20_filtered_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the routed ADC + the two-stage ranking replayed verbatim.
     """
     emb = _embeddings(spark, sf_dir).cache()
-    centers, cent_lit, cb_lit = _ivfpq_lits(spark, emb)
+    centers, cent_lit, cb_lit, *_ = fit_artifacts(emb, ivf=True, pq=True)
     base = emb.select(
         "vec_id",
         "label",
@@ -2345,7 +2223,7 @@ def _x11_build(spark: SparkSession, sf_dir: str):
     (executorRunTime / input bytes via the UI REST API) on exactly the
     query the driver row runs."""
     emb = _embeddings(spark, sf_dir).cache()
-    centers, cent_lit = _ivf_centroid_artifacts(spark, emb)
+    centers, cent_lit, *_ = fit_artifacts(emb, ivf=True)
     assigned = emb.select(
         "vec_id", "e", "norm", _ivf_assign_cell_col(cent_lit).alias("cell")
     )
@@ -2820,7 +2698,7 @@ def x14_cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     the identical ROW_NUMBER quota.
     """
     emb = _embeddings(spark, sf_dir).cache()
-    _, cent_lit = _ivf_cent_lit(emb)
+    cent_lit = fit_artifacts(emb, ivf=True).cent_lit
     assigned = emb.select(
         "vec_id",
         _ivf_assign_cell_col(cent_lit).alias("cell"),

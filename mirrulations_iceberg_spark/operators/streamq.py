@@ -28,21 +28,12 @@ is covered in ``tests/test_streaming_semantics.py``.
 from __future__ import annotations
 
 import os
-import threading
 import uuid
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-#: Serializes stream_state_conf entries (see its docstring). RLock,
-#: not Lock: a helper that composes two streaming runners re-enters on
-#: the same thread — with a plain Lock that would DEADLOCK; with RLock
-#: the nested entry saves the already-reduced value and the LIFO exits
-#: restore correctly (inner restores the reduced value, outer restores
-#: the caller's original).
-_STATE_CONF_LOCK = threading.RLock()
+from .util import scoped_conf
 
 
 #: Input bytes one state partition is sized for. The state-store task
@@ -88,7 +79,6 @@ def _path_bytes(path: str) -> int | None:
     return total if total > 0 else None
 
 
-@contextmanager
 def stream_state_conf(spark: SparkSession, input_bytes: int | None = None):
     """Right-size stateful-shuffle parallelism for the one-shot runs.
 
@@ -115,31 +105,17 @@ def stream_state_conf(spark: SparkSession, input_bytes: int | None = None):
     mistaken for a tiny one (VERDICT r16 #2 — the state layout is
     pinned per checkpoint, so a spurious 1 would be permanent).
 
-    Scoped: set for the duration of the streaming run (conf is read at
-    plan time), restored afterwards so callers' batch work keeps its
-    own setting.
-
-    Concurrency (ADVICE r6): the conf is session-global, so a batch
-    query planned concurrently in the same session would inherit the
-    reduced parallelism, and nested use would restore a stale prev
-    value. A module lock serializes entries — concurrent streaming
-    runners queue instead of clobbering each other — and the driver /
-    bench / pytest protocols are single-threaded per session anyway.
+    Scoped and serialized by :func:`.util.scoped_conf`: set for the
+    duration of the streaming run, restored afterwards so callers'
+    batch work keeps its own setting.
     """
-    with _STATE_CONF_LOCK:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        cores = spark.sparkContext.defaultParallelism
-        parts = cores
-        if input_bytes:  # None/0 = unknown size → cores rule
-            parts = max(
-                1,
-                min(cores, -(-int(input_bytes) // STREAM_STATE_TARGET_BYTES)),
-            )
-        spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+    cores = spark.sparkContext.defaultParallelism
+    parts = cores
+    if input_bytes:  # None/0 = unknown size → cores rule
+        parts = max(
+            1, min(cores, -(-int(input_bytes) // STREAM_STATE_TARGET_BYTES))
+        )
+    return scoped_conf(spark, {"spark.sql.shuffle.partitions": str(parts)})
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -884,7 +860,10 @@ def s9_stream_neardup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         # governs the PROBE's batch-side shuffles — tokenize/shingle/
         # signature CPU work that wants all cores. Byte-sizing it to 1
         # partition serialized the probe (measured 12.8 s → 29.2 s in
-        # the r16 bench; reverted)
+        # the r16 bench; reverted). ``probe`` runs on the stream's
+        # callback thread while this thread holds the conf lock, so it
+        # must never enter scoped_conf (the RLock is per-thread: that
+        # entry would deadlock).
         with stream_state_conf(spark):
             q = (
                 stream.writeStream.foreachBatch(probe)

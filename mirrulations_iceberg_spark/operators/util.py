@@ -1,4 +1,5 @@
-"""Cache-lifecycle helper for operators that persist an intermediate.
+"""Scoped-execution helpers: session-conf scoping and the cache
+lifecycle of operators that persist an intermediate.
 
 A query function that ``cache()``/``persist()``-es an intermediate must
 not leak the cached blocks past its own return: a long-lived session
@@ -19,7 +20,41 @@ before the caller's action would re-run the lineage per reference.
 
 from __future__ import annotations
 
+import threading
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
+
+#: Serializes scoped_conf entries. RLock, not Lock: a helper that
+#: composes two scoped runners re-enters on the same thread, and the
+#: LIFO exits then restore correctly (inner restores the outer's
+#: value, outer restores the caller's original).
+_CONF_LOCK = threading.RLock()
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, settings: dict[str, str]):
+    """Set the session conf ``settings`` for the duration of the block
+    and restore the previous values on exit, error included. Conf is
+    read at plan time, so the block must contain the action.
+
+    Session conf is global, so a query planned concurrently in the same
+    session would inherit the scoped values and nested use would
+    restore stale ones: one module lock serializes every entry, and
+    concurrent scoped actions queue instead of clobbering each other.
+    The lock is per-thread, so code that runs on another thread while
+    a caller holds it (a streaming query's ``foreachBatch`` function,
+    a worker-pool task the holder waits on) must not enter here.
+    """
+    with _CONF_LOCK:
+        prev = {k: spark.conf.get(k) for k in settings}
+        for k, v in settings.items():
+            spark.conf.set(k, v)
+        try:
+            yield
+        finally:
+            for k, v in prev.items():
+                spark.conf.set(k, v)
 
 
 def materialize_release(

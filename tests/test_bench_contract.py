@@ -14,24 +14,64 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 import pytest
 
+from .conftest import SF_DIR
 
-@pytest.mark.parametrize("shuffle_args", [(), ("--shuffle-order", "7")])
-def test_bench_emits_one_wellformed_json_line(tmp_path, shuffle_args):
-    env = dict(os.environ)
-    env["SPARK_GRAFT_SF_DIR"] = "/root/testdata/sf0.001"
-    env["SPARK_GRAFT_CPUS"] = "8"
-    detail_path = str(tmp_path / "detail.json")
-    env["SPARK_GRAFT_DETAIL_PATH"] = detail_path
-    proc = subprocess.run(
-        [sys.executable, os.path.join(REPO, "bench.py"), *shuffle_args],
-        capture_output=True,
-        text=True,
-        timeout=900,
-        cwd=REPO,
-        env=env,
-    )
-    assert proc.returncode == 0, proc.stderr[-2000:]
-    lines = [ln for ln in proc.stdout.splitlines() if ln.strip()]
+SHUFFLE_ARGS = [(), ("--shuffle-order", "7")]
+
+
+@pytest.fixture(scope="module")
+def bench_runs(tmp_path_factory):
+    """Both bench sweeps, started together and run concurrently.
+
+    Each sweep is one long single-session process whose queries are
+    tiny at sf0.001, so its time is mostly per-query planning and
+    scheduling latency; two concurrent sweeps finish well before two
+    sequential ones. The runs
+    share nothing mutable: each writes its own detail file, and the
+    only table-writing query (j10) uses per-invocation names. Yields
+    ``shuffle_args -> (Popen, output dir)``."""
+    runs = {}
+    for args in SHUFFLE_ARGS:
+        out_dir = tmp_path_factory.mktemp("bench")
+        env = dict(os.environ)
+        env["SPARK_GRAFT_SF_DIR"] = SF_DIR
+        env["SPARK_GRAFT_CPUS"] = "8"
+        env["SPARK_GRAFT_DETAIL_PATH"] = str(out_dir / "detail.json")
+        # files, not pipes: an undrained pipe would stall the run that
+        # is not being waited on once its buffer fills
+        with open(out_dir / "stdout", "w") as out, open(
+            out_dir / "stderr", "w"
+        ) as err:
+            proc = subprocess.Popen(
+                [sys.executable, os.path.join(REPO, "bench.py"), *args],
+                stdout=out,
+                stderr=err,
+                text=True,
+                cwd=REPO,
+                env=env,
+            )
+        runs[args] = (proc, out_dir)
+    yield runs
+    for proc, _ in runs.values():
+        if proc.poll() is None:
+            proc.kill()
+            proc.wait()
+
+
+@pytest.mark.parametrize("shuffle_args", SHUFFLE_ARGS)
+def test_bench_emits_one_wellformed_json_line(bench_runs, shuffle_args):
+    proc, out_dir = bench_runs[shuffle_args]
+    try:
+        proc.wait(timeout=900)
+    except subprocess.TimeoutExpired:
+        proc.kill()
+        proc.wait()
+        raise
+    stdout = (out_dir / "stdout").read_text()
+    stderr = (out_dir / "stderr").read_text()
+    detail_path = str(out_dir / "detail.json")
+    assert proc.returncode == 0, stderr[-2000:]
+    lines = [ln for ln in stdout.splitlines() if ln.strip()]
     # progress lines precede the ONE machine-readable line; the
     # driver parses the LAST stdout line as JSON
     assert lines, "no stdout"

@@ -263,11 +263,11 @@ def test_x19_serve_scan_is_partition_pruned(spark, tmp_path):
         N_QUERIES,
         _embeddings,
         _ivf_assign_cell_col,
-        _ivf_cent_lit,
+        fit_artifacts,
     )
 
     emb = _embeddings(spark, SF_DIR)
-    _, cent_lit = _ivf_cent_lit(emb)
+    cent_lit = fit_artifacts(emb, ivf=True).cent_lit
     path = str(tmp_path / "index")
     emb.select(
         "vec_id", _ivf_assign_cell_col(cent_lit).alias("cell")

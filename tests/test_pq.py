@@ -10,6 +10,7 @@ from mirrulations_iceberg_spark.operators.similarity import (
     PQ_M,
     _embeddings,
     _pq_fit_codebooks,
+    fit_artifacts,
     x9_pq_adc_topk,
 )
 
@@ -57,6 +58,21 @@ def test_pq_fit_deterministic_and_complete(spark):
     for m in ms:
         cells = [c for mm, c, _ in a if mm == m]
         assert len(cells) == len(set(cells)) <= PQ_K
+
+
+def test_fused_fit_equals_single_fits(spark):
+    """Fusing the IVF and PQ fits into one action is pure packaging:
+    the fused call returns exactly the rows of the ivf-only and pq-only
+    calls, and the unasked model stays None."""
+    emb = _embeddings(spark, SF_DIR)
+    both = fit_artifacts(emb, ivf=True, pq=True)
+    ivf = fit_artifacts(emb, ivf=True)
+    pq = fit_artifacts(emb, pq=True)
+    assert both.center_rows and both.cb_rows
+    assert both.center_rows == ivf.center_rows
+    assert both.cb_rows == pq.cb_rows
+    assert ivf.cb_rows is ivf.cb_lit is pq.center_rows is pq.centers is None
+    assert sorted(map(tuple, both.centers.collect())) == both.center_rows
 
 
 def test_pq_output_deterministic(spark, tmp_path):

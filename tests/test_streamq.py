@@ -3,6 +3,7 @@ driver-surface queries added in operators/streamq.py and etl.py:e2."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from mirrulations_iceberg_spark.operators.etl import (
@@ -69,23 +70,71 @@ def test_s6_equals_d10_batch(spark):
     assert got == want and got
 
 
-def test_stream_state_conf_scoped_and_restored(spark):
-    """The state-parallelism override must apply only inside the
-    context and restore the caller's setting on exit AND on error."""
+@pytest.mark.parametrize("scope", ["stream", "fit"])
+def test_stream_state_conf_scoped_and_restored(spark, monkeypatch, scope):
+    """Both scoped-conf callers — the streaming state-parallelism
+    override and the Lloyd-fit collect — must apply their keys only
+    inside the scope and restore EVERY key on exit AND on error."""
+    from mirrulations_iceberg_spark.operators.similarity import (
+        _embeddings,
+        fit_artifacts,
+    )
     from mirrulations_iceberg_spark.operators.streamq import stream_state_conf
 
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    cores = str(spark.sparkContext.defaultParallelism)
-    with stream_state_conf(spark):
-        assert spark.conf.get(key) == cores
-    assert spark.conf.get(key) == prev
+    cores = spark.sparkContext.defaultParallelism
+    if scope == "stream":
+        want = {"spark.sql.shuffle.partitions": str(cores)}
+
+        def run(body):
+            with stream_state_conf(spark):
+                body()
+
+    else:
+        want = {
+            "spark.sql.adaptive.enabled": "false",
+            "spark.sql.shuffle.partitions": str(min(cores, 64)),
+        }
+        emb = _embeddings(spark, SF_DIR)
+        frame_cls = type(emb)
+
+        def run(body):
+            # the fit's one collect is the action inside its scope
+            real_collect = frame_cls.collect
+
+            def collect(df):
+                body()
+                return real_collect(df)
+
+            with monkeypatch.context() as m:
+                m.setattr(frame_cls, "collect", collect)
+                fit_artifacts(emb, ivf=True, pq=True)
+
+    def current():
+        return {k: spark.conf.get(k) for k in want}
+
+    original = current()
+    # caller values distinct from the scoped ones, so a missed restore shows
+    caller = {
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.shuffle.partitions": "257",
+    }
     try:
-        with stream_state_conf(spark):
+        for k in want:
+            spark.conf.set(k, caller[k])
+        seen = {}
+        run(lambda: seen.update(current()))
+        assert seen == want
+        assert current() == {k: caller[k] for k in want}
+
+        def boom():
             raise RuntimeError("boom")
-    except RuntimeError:
-        pass
-    assert spark.conf.get(key) == prev
+
+        with pytest.raises(RuntimeError, match="boom"):
+            run(boom)
+        assert current() == {k: caller[k] for k in want}
+    finally:
+        for k, v in original.items():
+            spark.conf.set(k, v)
 
 
 def test_stream_state_conf_sizes_from_input_bytes(spark):
