@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from ..tables import load_table
 from .dedup import parallelize_scan
-from .util import scoped_conf
+from .util import materialize_release, scoped_conf
 
 TOP_K = 10
 N_QUERIES = 5
@@ -72,6 +72,18 @@ def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda p, q: p + q)
 
 
+def _l2sq(u, v):
+    """Squared L2 distance — the ascending-dim ``(…(0.0 + d₁²) + d₂²)…``
+    fold every L2 step uses (Lloyd assign, PQ encode and distance
+    tables, probe ranking, exact truth); the oracles replay this order,
+    so results are bit-identical across engines."""
+    return F.aggregate(
+        F.zip_with(u, v, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda a, b: a + b,
+    )
+
+
 def _pydot(a: list, b: list) -> float:
     """Driver-side twin of :func:`_dot`: the same left-to-right
     ``(…(0.0 + a₁b₁) + a₂b₂)…`` IEEE-double fold, so results are
@@ -98,11 +110,23 @@ def _cosine_sim():
     ).otherwise(F.lit(0.0))
 
 
-def _queries_side(emb: DataFrame) -> DataFrame:
-    return emb.filter(F.col("vec_id") < N_QUERIES).select(
+def _queries_side(frame: DataFrame, *cols) -> DataFrame:
+    """The query set — the rows of ``frame`` with ``vec_id <
+    N_QUERIES`` — as ``query_id`` plus ``cols``: a column name ``c`` is
+    carried as ``q<c>`` (``"e"`` → ``qe``), a Column is selected as
+    given."""
+    return frame.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.col("norm").alias("qnorm"),
+        *[F.col(c).alias(f"q{c}") if isinstance(c, str) else c for c in cols],
+    )
+
+
+def _query_pairs(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """Every (corpus row, query) pair except the self-pair — the
+    brute-force candidate set. The bounded query side is broadcast, so
+    the corpus is scanned once and never shuffled."""
+    return corpus.crossJoin(F.broadcast(queries)).filter(
+        F.col("vec_id") != F.col("query_id")
     )
 
 
@@ -118,16 +142,46 @@ def _rank_topk(scored: DataFrame, k: int = TOP_K) -> DataFrame:
     )
 
 
+def _cosine_truth(emb: DataFrame) -> DataFrame:
+    """Exact cosine top-k of every query — x1's answer, and the truth
+    the cosine ANN operators (x2/x5/x11/x13/x15/x22) grade against."""
+    pairs = _query_pairs(emb, _queries_side(emb, "e", "norm"))
+    return _rank_topk(pairs.withColumn("cos_sim", _cosine_sim()))
+
+
+def _cosine_hits(emb: DataFrame, topk: DataFrame) -> DataFrame:
+    """(query_id, n_hits): how many of each query's retrieved ``topk``
+    rows are in the exact cosine top-k. Queries with no hit have no
+    row; callers left-join and coalesce."""
+    exact = _cosine_truth(emb).select(
+        "query_id", F.col("vec_id").alias("exact_vec_id")
+    )
+    hits = topk.join(
+        exact,
+        (topk.query_id == exact.query_id) & (topk.vec_id == exact.exact_vec_id),
+        "left_semi",
+    )
+    return hits.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_hits"))
+
+
+def _cosine_recall(emb: DataFrame, cand: DataFrame) -> DataFrame:
+    """x2/x5's grade: per query, the candidate count and the recall@k of
+    the candidates' exact-cosine top-k against the corpus-wide one."""
+    topk = _rank_topk(cand.withColumn("cos_sim", _cosine_sim()))
+    n_cand = cand.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_candidates"))
+    return n_cand.join(_cosine_hits(emb, topk), "query_id", "left").select(
+        "query_id",
+        "n_candidates",
+        F.round(
+            F.coalesce(F.col("n_hits"), F.lit(0)) / F.lit(float(TOP_K)), 4
+        ).alias("recall_at_k"),
+    )
+
+
 def x1_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k: broadcast the queries across the corpus
     scan — one pass, no corpus shuffle, WindowGroupLimit top-k."""
-    emb = _embeddings(spark, sf_dir)
-    scored = (
-        emb.crossJoin(F.broadcast(_queries_side(emb)))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("cos_sim", _cosine_sim())
-    )
-    return _rank_topk(scored)
+    return _cosine_truth(_embeddings(spark, sf_dir))
 
 
 RANGE_TAU = 0.2  # fixture pairs peak near cos 0.37; 0.2 yields real hits
@@ -149,8 +203,7 @@ def x8_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     emb = _embeddings(spark, sf_dir)
     scored = (
-        emb.crossJoin(F.broadcast(_queries_side(emb)))
-        .filter(F.col("vec_id") != F.col("query_id"))
+        _query_pairs(emb, _queries_side(emb, "e", "norm"))
         .withColumn("cos_sim", _cosine_sim())
         .filter(F.col("cos_sim") >= RANGE_TAU)
     )
@@ -244,12 +297,8 @@ def x2_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = emb.select(
         "vec_id", "e", "norm", F.posexplode("buckets").alias("t", "bucket")
     )
-    qrows = emb.filter(F.col("vec_id") < N_QUERIES)
-    qside = qrows.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.col("norm").alias("qnorm"),
-        F.posexplode("buckets").alias("t", "bucket"),
+    qside = _queries_side(
+        emb, "e", "norm", F.posexplode("buckets").alias("t", "bucket")
     )
     cand = (
         corpus.join(F.broadcast(qside), ["t", "bucket"])
@@ -257,42 +306,8 @@ def x2_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "vec_id", "e", "norm", "qe", "qnorm")
         .dropDuplicates(["query_id", "vec_id"])
     )
-    lsh_topk = _rank_topk(cand.withColumn("cos_sim", _cosine_sim()))
-    exact_scored = (
-        emb.crossJoin(
-            F.broadcast(
-                qrows.select(
-                    F.col("vec_id").alias("query_id"),
-                    F.col("e").alias("qe"),
-                    F.col("norm").alias("qnorm"),
-                )
-            )
-        )
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("cos_sim", _cosine_sim())
-    )
-    exact_topk = _rank_topk(exact_scored).select(
-        "query_id", F.col("vec_id").alias("exact_vec_id")
-    )
-    hits = lsh_topk.join(
-        exact_topk,
-        (lsh_topk.query_id == exact_topk.query_id)
-        & (lsh_topk.vec_id == exact_topk.exact_vec_id),
-        "left_semi",
-    )
-    n_cand = cand.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_candidates"))
-    n_hit = hits.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_hits"))
-    out = n_cand.join(n_hit, "query_id", "left").select(
-        "query_id",
-        "n_candidates",
-        F.round(
-            F.coalesce(F.col("n_hits"), F.lit(0)) / F.lit(float(TOP_K)), 4
-        ).alias("recall_at_k"),
-    )
     # N_QUERIES bounded rows out; release the hyperplane-projection cache.
-    from .util import materialize_release
-
-    return materialize_release(spark, out, emb)
+    return materialize_release(spark, _cosine_recall(emb, cand), emb)
 
 
 def x3_label_centroid_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -542,8 +557,6 @@ def x6_embedding_dedup_apply(
         F.sum("vec_id").alias("id_checksum"),
     )
     # One summary row out; release the bucket-projection cache.
-    from .util import materialize_release
-
     return materialize_release(spark, out, emb)
 
 
@@ -580,12 +593,7 @@ def x7_ann_partitioned_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bucket"
         ).write.partitionBy("bucket").parquet(path)
         idx = spark.read.parquet(path)
-        qside = emb.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("e").alias("qe"),
-            F.col("norm").alias("qnorm"),
-            "bucket",
-        )
+        qside = _queries_side(emb, "e", "norm", F.col("bucket"))
         scored = (
             idx.join(F.broadcast(qside), "bucket")
             .filter(F.col("vec_id") != F.col("query_id"))
@@ -702,20 +710,15 @@ def _ivf_assign_fold(cent_lit):
     First-wins on ties == lowest cell (cells ascend). Returns the full
     (d, c) struct: d13 reads the winning distance too; everyone else
     takes ``["c"]`` via :func:`_ivf_assign_cell_col`. ONE home for the
-    fold across x5/x11/x14/x18/d13 — a tie-break or literal-shape fix
-    lands once."""
+    fold across the IVF Lloyd fit and every IVF consumer (x5/x11/x14/
+    x18/x18b/x19/x20/x21/d13) — a tie-break or literal-shape fix lands
+    once."""
     acc0 = F.struct(
         F.lit(float("inf")).alias("d"), F.lit(-1).alias("c")
     )
 
     def _step(acc, cs):
-        d = F.aggregate(
-            F.zip_with(
-                F.col("e"), cs["center"], lambda x, y: (x - y) * (x - y)
-            ),
-            F.lit(0.0),
-            lambda a, b: a + b,
-        )
+        d = _l2sq(F.col("e"), cs["center"])
         better = d < acc["d"]
         return F.struct(
             F.when(better, d).otherwise(acc["d"]).alias("d"),
@@ -730,6 +733,22 @@ def _ivf_assign_cell_col(cent_lit):
     return _ivf_assign_fold(cent_lit)["c"]
 
 
+def _probe_cells(queries: DataFrame, centers: DataFrame, nprobe: int) -> DataFrame:
+    """Probe ranking: each query's ``nprobe`` nearest IVF cells by
+    squared L2 to the centroid, ties to the lower cell (the oracles'
+    ``ORDER BY dist2, cell``). ``queries`` carries (query_id, qe, …);
+    the |queries|×cells rows keep every input column plus cell, center,
+    dist2 and the probe rank ``pr`` (1 = nearest). The centroid table
+    is broadcast; no driver-side math."""
+    w = Window.partitionBy("query_id").orderBy("dist2", "cell")
+    return (
+        queries.crossJoin(F.broadcast(centers))
+        .withColumn("dist2", _l2sq("qe", "center"))
+        .withColumn("pr", F.row_number().over(w))
+        .filter(F.col("pr") <= nprobe)
+    )
+
+
 def x5_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN: Lloyd coarse quantizer + n-probe search, with in-plan
     recall@k against exact top-k (the x2 pattern, different index).
@@ -738,68 +757,26 @@ def x5_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     — at 100 TB the corpus assignment is one broadcast of k·dim
     centroid doubles folded over the corpus scan (a pure projection,
     no join, no shuffle), and the fit itself runs on a bounded sample.
-    Search: each query probes its IVF_NPROBE nearest cells (ranked via
-    a broadcast centroid table — no driver-side math), candidates are
-    the union of those cells, exact cosine re-ranks. The DuckDB oracle
-    replays the ENTIRE pipeline — seeded init, both Lloyd steps,
-    assignment, probe ranking, re-rank — so index build and search are
-    hash-checked end-to-end (new in round 6; rows-only before).
+    Search: each query probes its IVF_NPROBE nearest cells
+    (:func:`_probe_cells`), candidates are the union of those cells,
+    exact cosine re-ranks. The DuckDB oracle replays the ENTIRE
+    pipeline — seeded init, both Lloyd steps, assignment, probe
+    ranking, re-rank — so index build and search are hash-checked
+    end-to-end.
     """
     emb = _embeddings(spark, sf_dir).cache()
     centers, cent_lit, *_ = fit_artifacts(emb, ivf=True)
     assigned = emb.select(
         "vec_id", "e", "norm", _ivf_assign_cell_col(cent_lit).alias("cell")
     )
-    qrows = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.col("norm").alias("qnorm"),
-    )
-    # probe ranking: L2 distance query→centroid, keep the nprobe nearest
-    d2 = F.aggregate(
-        F.zip_with("qe", "center", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda a, b: a + b,
-    )
-    wp = Window.partitionBy("query_id").orderBy("dist2", "cell")
-    probes = (
-        qrows.crossJoin(F.broadcast(centers))
-        .withColumn("dist2", d2)
-        .withColumn("pr", F.row_number().over(wp))
-        .filter(F.col("pr") <= IVF_NPROBE)
-        .select("query_id", "qe", "qnorm", "cell")
-    )
+    probes = _probe_cells(
+        _queries_side(emb, "e", "norm"), centers, IVF_NPROBE
+    ).select("query_id", "qe", "qnorm", "cell")
     cand = assigned.join(F.broadcast(probes), "cell").filter(
         F.col("vec_id") != F.col("query_id")
     )
-    ivf_topk = _rank_topk(cand.withColumn("cos_sim", _cosine_sim()))
-    exact_scored = (
-        emb.crossJoin(F.broadcast(qrows))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("cos_sim", _cosine_sim())
-    )
-    exact_topk = _rank_topk(exact_scored).select(
-        "query_id", F.col("vec_id").alias("exact_vec_id")
-    )
-    hits = ivf_topk.join(
-        exact_topk,
-        (ivf_topk.query_id == exact_topk.query_id)
-        & (ivf_topk.vec_id == exact_topk.exact_vec_id),
-        "left_semi",
-    )
-    n_cand = cand.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_candidates"))
-    n_hit = hits.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_hits"))
-    out = n_cand.join(n_hit, "query_id", "left").select(
-        "query_id",
-        "n_candidates",
-        F.round(
-            F.coalesce(F.col("n_hits"), F.lit(0)) / F.lit(float(TOP_K)), 4
-        ).alias("recall_at_k"),
-    )
     # N_QUERIES bounded rows out; release the vectorized-corpus cache.
-    from .util import materialize_release
-
-    return materialize_release(spark, out, emb)
+    return materialize_release(spark, _cosine_recall(emb, cand), emb)
 
 
 #: SemDeDup removal threshold — a vector whose cosine to its cluster
@@ -907,8 +884,6 @@ def d13_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("label")
     )
     # label-sized rows out; release the vectorized-corpus cache.
-    from .util import materialize_release
-
     return materialize_release(spark, out, emb)
 
 
@@ -972,7 +947,7 @@ def _pq_fit_codebooks(emb: DataFrame) -> DataFrame:
 
         def _argmin_cell(m):
             def step(acc, cs):
-                d = _pq_sub_d2(_pq_slice(F.col("e"), m), cs["center"])
+                d = _l2sq(_pq_slice(F.col("e"), m), cs["center"])
                 better = d < acc["d"]
                 return F.struct(
                     F.when(better, d).otherwise(acc["d"]).alias("d"),
@@ -1119,16 +1094,6 @@ def fit_artifacts(
     return FitArtifacts(centers, cent_lit, cb_lit, center_rows, cb_rows)
 
 
-def _pq_sub_d2(sub_col, cen_col):
-    """Squared L2 over one PQ subspace — ascending-dim zip_with fold,
-    the Spark twin of the oracle's ``_x9_sub_d2``."""
-    return F.aggregate(
-        F.zip_with(sub_col, cen_col, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda a, b: a + b,
-    )
-
-
 def _pq_slice(col, m):
     return F.slice(col, m * PQ_SUBDIM + 1, PQ_SUBDIM)
 
@@ -1145,7 +1110,7 @@ def _pq_code_col(cb_lit, vec="e"):
         # strict < keeps the first (lowest-position) winner on ties —
         # matching the oracle's row_number ORDER BY d2, cell
         def step(acc, cs):
-            d = _pq_sub_d2(_pq_slice(vec, m), cs["center"])
+            d = _l2sq(_pq_slice(vec, m), cs["center"])
             better = d < acc["d"]
             return F.struct(
                 F.when(better, d).otherwise(acc["d"]).alias("d"),
@@ -1165,28 +1130,29 @@ def _pq_dtab_col(cb_lit, vec="qe"):
         F.sequence(F.lit(0), F.lit(PQ_M - 1)),
         lambda m: F.transform(
             F.element_at(cb_lit, m + 1),
-            lambda cs: _pq_sub_d2(_pq_slice(vec, m), cs["center"]),
+            lambda cs: _l2sq(_pq_slice(vec, m), cs["center"]),
         ),
     )
 
 
 def _pq_codes_qside(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Shared x9/x17/x18 PQ artifacts — ONE home for the fit/encode/
-    table pipeline (the ``_x12_kept_edges`` discipline: x9 grades raw
-    ADC, x17 composes a rerank stage, x18 routes the compressed scan
-    through an IVF coarse quantizer, and none can drift):
+    """Shared x9/x17 PQ artifacts — ONE home for the fit/encode/score
+    pipeline of the flat (unrouted) PQ scan (the ``_x12_kept_edges``
+    discipline: x9 grades raw ADC, x17 composes a rerank stage over the
+    same scores, and neither can drift):
 
-    * ``codes`` — (vec_id, code[PQ_M]) via :func:`_pq_code_col`;
+    * ``scored`` — (query_id, vec_id, code[PQ_M], dtab, adc): every
+      corpus code (:func:`_pq_code_col`) against the distance table of
+      every query but itself, scored by :func:`_adc_col`. Only query_id + the
+      M×K dtab are broadcast, not the EMB_DIM-double ``qe``, which cuts
+      the per-task payload of the one corpus-proportional stage;
     * ``qside`` — (query_id, qe, dtab) via :func:`_pq_dtab_col`.
     """
     cb_lit = fit_artifacts(emb, pq=True).cb_lit
     codes = emb.select("vec_id", _pq_code_col(cb_lit).alias("code"))
-    qside = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        _pq_dtab_col(cb_lit).alias("dtab"),
-    )
-    return codes, qside
+    qside = _queries_side(emb, "e", _pq_dtab_col(cb_lit).alias("dtab"))
+    scored = _query_pairs(codes, qside.drop("qe")).withColumn("adc", _adc_col())
+    return scored, qside
 
 
 def _adc_col(code="code", dtab="dtab"):
@@ -1208,6 +1174,118 @@ def _adc_col(code="code", dtab="dtab"):
     )
 
 
+def _adc_rank():
+    """Row number of a scored candidate within its query by ADC score,
+    ties to the lower vec_id — the ``ORDER BY adc, vec_id`` every ADC
+    oracle replays (x9/x17's flat scan, the routed serve, x20's pre- and
+    post-filter rankings)."""
+    return F.row_number().over(
+        Window.partitionBy("query_id").orderBy("adc", "vec_id")
+    )
+
+
+def _l2_topk(pairs: DataFrame) -> DataFrame:
+    """Exact-L2 top-k per query over (query_id, vec_id, e, qe) rows —
+    (query_id, vec_id). Distances round to 4 places before ranking and
+    ties go to the lower vec_id, the order the oracles' ``ORDER BY l2,
+    vec_id`` replays."""
+    w = Window.partitionBy("query_id").orderBy("l2", "vec_id")
+    return (
+        pairs.withColumn("l2", F.round(_l2sq("e", "qe"), 4))
+        .withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= TOP_K)
+        .select("query_id", "vec_id")
+    )
+
+
+def _l2_truth(emb: DataFrame) -> DataFrame:
+    """Exact-L2 top-k of every query over the whole corpus — (query_id,
+    exact_vec_id), the truth the PQ family grades against (PQ
+    approximates L2, so the honest baseline is L2, not cosine)."""
+    pairs = _query_pairs(emb, _queries_side(emb, "e"))
+    return _l2_topk(pairs).withColumnRenamed("vec_id", "exact_vec_id")
+
+
+def _grade(topk: DataFrame, truth: DataFrame) -> DataFrame:
+    """Left-join retrieved rows onto the exact top-k: ``exact_vec_id``
+    is non-null exactly on a hit, so ``count(exact_vec_id)`` per query
+    is the hit count and the retrieval pipeline under ``topk`` is
+    consumed once (a second reference would re-run it inside the same
+    action)."""
+    return topk.join(
+        truth,
+        (topk.query_id == truth.query_id) & (topk.vec_id == truth.exact_vec_id),
+        "left",
+    ).select(*[topk[c] for c in topk.columns], truth.exact_vec_id)
+
+
+def _routed_adc(
+    index: DataFrame, qside: DataFrame, centers: DataFrame
+) -> DataFrame:
+    """IVF-routed ADC scoring, the candidate step of x18/x19/x20/x21:
+    each query probes its ``IVF_NPROBE`` nearest cells
+    (:func:`_probe_cells`), the probe table is broadcast-joined to the
+    (vec_id, code, cell, …) ``index`` on ``cell``, the self-pair drops,
+    and every candidate is scored against its query's distance table.
+    ``qside`` is (query_id, qe, dtab, …); its columns other than ``qe``
+    ride on the candidate rows."""
+    probes = _probe_cells(
+        qside.select("query_id", "qe"), centers, IVF_NPROBE
+    ).select("query_id", "cell")
+    return (
+        index.join(F.broadcast(probes), "cell")
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .join(F.broadcast(qside.drop("qe")), "query_id")
+        .withColumn("adc", _adc_col())
+    )
+
+
+def _ivfpq_serve(
+    emb: DataFrame, index: DataFrame, centers: DataFrame, cb_lit, *carry
+) -> DataFrame:
+    """Routed IVFPQ serve — ONE home for x18/x19/x21's search:
+    :func:`_routed_adc` over the (vec_id, code, cell) ``index`` for the
+    query set of ``emb``, then the ADC top-k per query with its
+    candidate count. Returns (query_id, vec_id, n_candidates, *carry),
+    one row per retrieved vector; callers grade it with :func:`_grade`.
+
+    The candidate count is an unordered count window on the same
+    partition key as the top-k window, so both ride ONE exchange and the
+    routed scan is consumed once (plan-asserted in tests/test_plans.py).
+    """
+    qside = _queries_side(emb, "e", _pq_dtab_col(cb_lit).alias("dtab"))
+    wq = Window.partitionBy("query_id")
+    return (
+        _routed_adc(index, qside, centers)
+        .withColumn("rnk", _adc_rank())
+        .withColumn("n_candidates", F.count(F.lit(1)).over(wq))
+        .filter(F.col("rnk") <= TOP_K)
+        .select("query_id", "vec_id", "n_candidates", *carry)
+    )
+
+
+def _ivfpq_topk(
+    emb: DataFrame, index: DataFrame, centers: DataFrame, cb_lit
+) -> DataFrame:
+    """x18's answer — (query_id, n_candidates, id_checksum,
+    recall_at_k): :func:`_ivfpq_serve` over a (vec_id, code, cell)
+    ``index``, graded against the exact-L2 truth. x19 serves its
+    artifact-built index through it, so its answer is x18's by
+    construction."""
+    flagged = _grade(_ivfpq_serve(emb, index, centers, cb_lit), _l2_truth(emb))
+    return (
+        flagged.groupBy("query_id")
+        .agg(
+            F.max("n_candidates").alias("n_candidates"),
+            F.sum("vec_id").alias("id_checksum"),
+            F.round(F.count("exact_vec_id") / F.lit(float(TOP_K)), 4).alias(
+                "recall_at_k"
+            ),
+        )
+        .orderBy("query_id")
+    )
+
+
 def x9_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN with asymmetric distance computation —
     the FAISS-PQ memory-bound scale path: the corpus is stored as
@@ -1218,68 +1296,26 @@ def x9_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pipeline, all deterministic and oracle-replayed end-to-end: fit +
     encode + per-query distance tables via the shared
     :func:`_pq_codes_qside`, ADC scoring as a table-lookup fold
-    (:func:`_adc_col`), recall measured in-plan against exact L2 top-k
-    (PQ approximates L2, so the honest baseline is L2, not cosine).
-    x17 composes an exact re-rank stage over the same artifacts.
+    (:func:`_adc_col`), recall measured in-plan against the exact L2
+    top-k (:func:`_l2_truth`). x17 composes an exact re-rank stage over
+    the same artifacts.
 
     Output is bounded: one row per query — the ADC top-k id-checksum
     pins the retrieved SET, recall@k grades it.
     """
     emb = _embeddings(spark, sf_dir).cache()
-    codes, qside = _pq_codes_qside(emb)
-    adc = _adc_col()
-    # broadcast only what ADC reads — query_id + the M×K dtab — not the
-    # EMB_DIM-double qe riding in qside (qe is for the exact re-rank
-    # subtree only; trimming it cuts the per-task broadcast payload of
-    # the one corpus-proportional stage)
-    scored = (
-        codes.crossJoin(F.broadcast(qside.select("query_id", "dtab")))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("adc", adc)
-    )
-    wk = Window.partitionBy("query_id").orderBy("adc", "vec_id")
+    scored, _ = _pq_codes_qside(emb)
     pq_topk = (
-        scored.withColumn("rnk", F.row_number().over(wk))
+        scored.withColumn("rnk", _adc_rank())
         .filter(F.col("rnk") <= TOP_K)
         .select("query_id", "vec_id")
     )
-    d2_full = F.round(
-        F.aggregate(
-            F.zip_with("e", "qe", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda a, b: a + b,
-        ),
-        4,
-    )
-    exact_scored = (
-        emb.crossJoin(F.broadcast(qside.select("query_id", "qe")))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("l2", d2_full)
-    )
-    wx = Window.partitionBy("query_id").orderBy("l2", "vec_id")
-    exact_topk = (
-        exact_scored.withColumn("rnk", F.row_number().over(wx))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", F.col("vec_id").alias("exact_vec_id"))
-    )
-    # LEFT join + one aggregation: count(non-null) IS the hit count, so
-    # pq_topk (and the whole encode/ADC pipeline under it) is consumed
-    # exactly once — a second reference would re-run the corpus encode
-    # inside the same action.
-    flagged = pq_topk.join(
-        exact_topk,
-        (pq_topk.query_id == exact_topk.query_id)
-        & (pq_topk.vec_id == exact_topk.exact_vec_id),
-        "left",
-    ).select(pq_topk.query_id, pq_topk.vec_id, exact_topk.exact_vec_id)
-    out = flagged.groupBy("query_id").agg(
+    out = _grade(pq_topk, _l2_truth(emb)).groupBy("query_id").agg(
         F.sum("vec_id").alias("id_checksum"),
         F.round(F.count("exact_vec_id") / F.lit(float(TOP_K)), 4).alias(
             "recall_at_k"
         ),
     )
-    from .util import materialize_release
-
     return materialize_release(spark, out, emb)
 
 
@@ -1294,10 +1330,10 @@ def x17_pq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scans the compressed codes and keeps a C = ``X17_SHORTLIST``
     candidate shortlist per query by ADC distance; stage 2 fetches
     FULL-precision vectors for those C candidates only and re-ranks
-    them by exact L2. Output grades BOTH stages against exact top-k —
-    raw ADC recall@k vs reranked recall@k plus the integer hit gain —
-    the measured answer to "how much recall does the refine stage buy
-    at C = 4k?".
+    them by exact L2 (:func:`_l2_topk`, the truth's own ranking). Output
+    grades BOTH stages against exact top-k — raw ADC recall@k vs
+    reranked recall@k plus the integer hit gain — the measured answer
+    to "how much recall does the refine stage buy at C = 4k?".
 
     Scale shape: stage 1 is x9's memory-bound compressed scan (4
     bytes/vector); stage 2 touches C·\\|queries\\| full vectors instead
@@ -1314,15 +1350,9 @@ def x17_pq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratios carry no cross-engine float risk; the gain is integer hits.
     """
     emb = _embeddings(spark, sf_dir).cache()
-    codes, qside = _pq_codes_qside(emb)
-    scored = (
-        codes.crossJoin(F.broadcast(qside.select("query_id", "dtab")))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("adc", _adc_col())
-    )
-    wk = Window.partitionBy("query_id").orderBy("adc", "vec_id")
+    scored, qside = _pq_codes_qside(emb)
     short = (
-        scored.withColumn("rnk", F.row_number().over(wk))
+        scored.withColumn("rnk", _adc_rank())
         .filter(F.col("rnk") <= X17_SHORTLIST)
         .select("query_id", "vec_id", "rnk")
         .cache()
@@ -1330,49 +1360,18 @@ def x17_pq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     adc_topk = short.filter(F.col("rnk") <= TOP_K).select(
         "query_id", "vec_id"
     )
-    d2_full = F.round(
-        F.aggregate(
-            F.zip_with("e", "qe", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda a, b: a + b,
-        ),
-        4,
-    )
-    cand = (
+    rr_topk = _l2_topk(
         emb.select("vec_id", "e")
         .join(F.broadcast(short.select("query_id", "vec_id")), "vec_id")
-        .join(F.broadcast(qside.select("query_id", "qe")), "query_id")
-        .withColumn("l2", d2_full)
-    )
-    wr = Window.partitionBy("query_id").orderBy("l2", "vec_id")
-    rr_topk = (
-        cand.withColumn("r2", F.row_number().over(wr))
-        .filter(F.col("r2") <= TOP_K)
-        .select("query_id", "vec_id")
-    )
-    exact_scored = (
-        emb.crossJoin(F.broadcast(qside.select("query_id", "qe")))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("l2", d2_full)
-    )
-    wx = Window.partitionBy("query_id").orderBy("l2", "vec_id")
-    exact_topk = (
-        exact_scored.withColumn("rnk", F.row_number().over(wx))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", F.col("vec_id").alias("exact_vec_id"))
+        .join(F.broadcast(qside.drop("dtab")), "query_id")
     )
     # one tagged union → ONE left join against the exact baseline →
     # one aggregation: both stages grade in a single consumption of
-    # every subtree (the x9 count-non-null discipline)
+    # every subtree
     tagged = adc_topk.withColumn("stage", F.lit("adc")).unionByName(
         rr_topk.withColumn("stage", F.lit("rr"))
     )
-    flag = tagged.join(
-        exact_topk,
-        (tagged.query_id == exact_topk.query_id)
-        & (tagged.vec_id == exact_topk.exact_vec_id),
-        "left",
-    ).select(tagged.query_id, tagged.vec_id, tagged.stage, "exact_vec_id")
+    flag = _grade(tagged, _l2_truth(emb))
     hit_adc = F.when(
         (F.col("stage") == "adc") & F.col("exact_vec_id").isNotNull(), 1
     )
@@ -1395,8 +1394,6 @@ def x17_pq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("query_id")
     )
-    from .util import materialize_release
-
     return materialize_release(spark, out, emb, short)
 
 
@@ -1407,8 +1404,8 @@ def x18_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     compressed-code ADC scan runs over those candidates only — x5's
     routing composed with x9's compression, both via the shared
     helpers (:func:`fit_artifacts`, :func:`_ivf_assign_cell_col`,
-    :func:`_pq_code_col`, :func:`_pq_dtab_col`), so none of the ANN
-    operators can drift.
+    :func:`_pq_code_col`, and the routed serve :func:`_ivfpq_serve`),
+    so none of the ANN operators can drift.
 
     Textbook IVFPQ encodes per-cell RESIDUALS (x − centroid); here PQ
     encodes raw vectors (codes identical to x9's) — a documented
@@ -1421,9 +1418,9 @@ def x18_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (both are centroid-literal folds — no join, no shuffle between
     them); routing is a broadcast join against the queries×nprobe
     probe table; the per-query candidate count rides the SAME exchange
-    as the top-k window (an unordered count window on the identical
-    partition key), so the corpus is touched exactly once — plus the
-    exact-truth baseline the grading itself needs.
+    as the top-k window (:func:`_ivfpq_serve`), so the corpus is
+    touched exactly once — plus the exact-truth baseline the grading
+    itself needs.
 
     Oracle: the shared PQ prefix + an i-prefixed replay of x5's Lloyd
     chain with its OWN isamp/iseeds CTEs (own IVF_SAMPLE_MOD and
@@ -1433,87 +1430,12 @@ def x18_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     emb = _embeddings(spark, sf_dir).cache()
     centers, cent_lit, cb_lit, *_ = fit_artifacts(emb, ivf=True, pq=True)
-    base = emb.select(
+    index = emb.select(
         "vec_id",
         _pq_code_col(cb_lit).alias("code"),
         _ivf_assign_cell_col(cent_lit).alias("cell"),
     )
-    qside = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        _pq_dtab_col(cb_lit).alias("dtab"),
-    )
-    d2c = F.aggregate(
-        F.zip_with("qe", "center", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda a, b: a + b,
-    )
-    wp = Window.partitionBy("query_id").orderBy("dist2", "cell")
-    probes = (
-        qside.select("query_id", "qe")
-        .crossJoin(F.broadcast(centers))
-        .withColumn("dist2", d2c)
-        .withColumn("pr", F.row_number().over(wp))
-        .filter(F.col("pr") <= IVF_NPROBE)
-        .select("query_id", "cell")
-    )
-    scored = (
-        base.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .join(F.broadcast(qside.select("query_id", "dtab")), "query_id")
-        .withColumn("adc", _adc_col())
-    )
-    wk = Window.partitionBy("query_id").orderBy("adc", "vec_id")
-    wq = Window.partitionBy("query_id")
-    topk = (
-        scored.withColumn("rnk", F.row_number().over(wk))
-        .withColumn("n_candidates", F.count(F.lit(1)).over(wq))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "vec_id", "n_candidates")
-    )
-    d2_full = F.round(
-        F.aggregate(
-            F.zip_with("e", "qe", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda a, b: a + b,
-        ),
-        4,
-    )
-    exact_scored = (
-        emb.crossJoin(F.broadcast(qside.select("query_id", "qe")))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("l2", d2_full)
-    )
-    wx = Window.partitionBy("query_id").orderBy("l2", "vec_id")
-    exact_topk = (
-        exact_scored.withColumn("rnk", F.row_number().over(wx))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", F.col("vec_id").alias("exact_vec_id"))
-    )
-    # LEFT join + one aggregation (the x9 discipline): the routed
-    # encode pipeline under topk is consumed exactly once.
-    flagged = topk.join(
-        exact_topk,
-        (topk.query_id == exact_topk.query_id)
-        & (topk.vec_id == exact_topk.exact_vec_id),
-        "left",
-    ).select(
-        topk.query_id, topk.vec_id, topk.n_candidates,
-        exact_topk.exact_vec_id,
-    )
-    out = (
-        flagged.groupBy("query_id")
-        .agg(
-            F.max("n_candidates").alias("n_candidates"),
-            F.sum("vec_id").alias("id_checksum"),
-            F.round(F.count("exact_vec_id") / F.lit(float(TOP_K)), 4).alias(
-                "recall_at_k"
-            ),
-        )
-        .orderBy("query_id")
-    )
-    from .util import materialize_release
-
+    out = _ivfpq_topk(emb, index, centers, cb_lit)
     return materialize_release(spark, out, emb)
 
 
@@ -1571,29 +1493,13 @@ def x18b_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         _pq_code_col(cb_raw).alias("code_raw"),
         _pq_code_col(cb_res, vec="r").alias("code_res"),
     )
-    qraw = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        _pq_dtab_col(cb_raw).alias("dtab_raw"),
-    )
-    d2c = F.aggregate(
-        F.zip_with("qe", "center", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda a, b: a + b,
-    )
-    wp = Window.partitionBy("query_id").orderBy("dist2", "cell")
-    probes = (
-        emb.filter(F.col("vec_id") < N_QUERIES)
-        .select(F.col("vec_id").alias("query_id"), F.col("e").alias("qe"))
-        .crossJoin(F.broadcast(centers))
-        .withColumn("dist2", d2c)
-        .withColumn("pr", F.row_number().over(wp))
-        .filter(F.col("pr") <= IVF_NPROBE)
-        .select(
-            "query_id",
-            "cell",
-            F.zip_with("qe", "center", lambda x, y: x - y).alias("qr"),
-        )
+    qraw = _queries_side(emb, "e", _pq_dtab_col(cb_raw).alias("dtab_raw"))
+    probes = _probe_cells(
+        _queries_side(emb, "e"), centers, IVF_NPROBE
+    ).select(
+        "query_id",
+        "cell",
+        F.zip_with("qe", "center", lambda x, y: x - y).alias("qr"),
     )
     probes_d = probes.select(
         "query_id", "cell", _pq_dtab_col(cb_res, vec="qr").alias("dtab_res")
@@ -1601,7 +1507,7 @@ def x18b_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         base.join(F.broadcast(probes_d), "cell")
         .filter(F.col("vec_id") != F.col("query_id"))
-        .join(F.broadcast(qraw.select("query_id", "dtab_raw")), "query_id")
+        .join(F.broadcast(qraw.drop("qe")), "query_id")
         .withColumn("adc_res", _adc_col(code="code_res", dtab="dtab_res"))
         .withColumn("adc_raw", _adc_col(code="code_raw", dtab="dtab_raw"))
     )
@@ -1619,38 +1525,7 @@ def x18b_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id", "vec_id", "rnk_res", "rnk_raw", "n_candidates"
         )
     )
-    d2_full = F.round(
-        F.aggregate(
-            F.zip_with("e", "qe", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda a, b: a + b,
-        ),
-        4,
-    )
-    exact_scored = (
-        emb.crossJoin(F.broadcast(qraw.select("query_id", "qe")))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("l2", d2_full)
-    )
-    wx = Window.partitionBy("query_id").orderBy("l2", "vec_id")
-    exact_topk = (
-        exact_scored.withColumn("rnk", F.row_number().over(wx))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", F.col("vec_id").alias("exact_vec_id"))
-    )
-    flagged = topk.join(
-        exact_topk,
-        (topk.query_id == exact_topk.query_id)
-        & (topk.vec_id == exact_topk.exact_vec_id),
-        "left",
-    ).select(
-        topk.query_id,
-        topk.vec_id,
-        topk.rnk_res,
-        topk.rnk_raw,
-        topk.n_candidates,
-        exact_topk.exact_vec_id,
-    )
+    flagged = _grade(topk, _l2_truth(emb))
     in_res = F.col("rnk_res") <= TOP_K
     in_raw = F.col("rnk_raw") <= TOP_K
     hit_res = F.count(F.when(in_res, F.col("exact_vec_id")))
@@ -1670,35 +1545,33 @@ def x18b_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("query_id")
     )
-    from .util import materialize_release
-
     return materialize_release(spark, out, emb)
 
 
 def x19_ivfpq_build_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OFFLINE-build / ONLINE-serve IVFPQ — the production split x18
-    lacks (VERDICT r11 #3): x18 re-fits centroids and codebooks inside
-    the query; every deployed ANN system instead BUILDS once (write
-    the centroids, the codebooks, and the coded corpus partitioned by
-    IVF cell) and SERVES by reading ONLY the probed cells. Build phase
-    here: fit → persist three parquet artifacts (``centroids`` 16
-    rows, ``codebooks`` M·K rows, ``index`` coded corpus
-    hive-partitioned by ``cell``, repartitioned first so the layout is
-    one file per cell, not tasks×cells shards). Serve phase: rebuild
-    the two bounded literals from the ARTIFACTS (parquet round-trips
-    doubles bit-exactly, so serve never touches the fit lineage), rank
-    probe cells, and join the probe table against the partitioned
-    index — Spark plans DYNAMIC PARTITION PRUNING on ``cell``
-    (plan-asserted in tests/test_operators.py), so each search reads
-    ~nprobe/IVF_CLUSTERS of the index bytes. The serve literals come
-    from the same builders as the in-line fit's
-    (:func:`_center_rows_lit`, :func:`_pq_rows_to_cb_lit`), fed the
-    rows read back from the artifacts.
+    lacks: x18 re-fits centroids and codebooks inside the query; every
+    deployed ANN system instead BUILDS once (write the centroids, the
+    codebooks, and the coded corpus partitioned by IVF cell) and SERVES
+    by reading ONLY the probed cells. Build phase here: fit → persist
+    three parquet artifacts (``centroids`` 16 rows, ``codebooks`` M·K
+    rows, ``index`` coded corpus hive-partitioned by ``cell``,
+    repartitioned first so the layout is one file per cell, not
+    tasks×cells shards). Serve phase: rebuild the two bounded literals
+    from the ARTIFACTS (parquet round-trips doubles bit-exactly, so
+    serve never touches the fit lineage), then run x18's serve
+    (:func:`_ivfpq_topk`) over the partitioned index — Spark plans
+    DYNAMIC PARTITION PRUNING on ``cell`` (plan-asserted in
+    tests/test_operators.py), so each search reads ~nprobe/IVF_CLUSTERS
+    of the index bytes. The serve literals come from the same builders
+    as the in-line fit's (:func:`_center_rows_lit`,
+    :func:`_pq_rows_to_cb_lit`), fed the rows read back from the
+    artifacts.
 
     Contract: serve-from-artifacts returns EXACTLY x18's in-line-fit
-    answer (same routing, same codes, same grade) — the oracle is
-    x18's SQL verbatim, and the equality is the proof the split is
-    lossless.
+    answer (same routing, same codes, same grade — the same function)
+    — the oracle is x18's SQL verbatim, and the equality is the proof
+    the split is lossless.
     """
     import shutil
     import tempfile
@@ -1737,84 +1610,7 @@ def x19_ivfpq_build_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # ---- SERVE (online, per query batch) ---------------------
         idx = spark.read.parquet(f"{base_dir}/index")
-        qside = emb.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("e").alias("qe"),
-            _pq_dtab_col(cb_lit).alias("dtab"),
-        )
-        d2c = F.aggregate(
-            F.zip_with("qe", "center", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda a, b: a + b,
-        )
-        wp = Window.partitionBy("query_id").orderBy("dist2", "cell")
-        probes = (
-            qside.select("query_id", "qe")
-            .crossJoin(F.broadcast(centers))
-            .withColumn("dist2", d2c)
-            .withColumn("pr", F.row_number().over(wp))
-            .filter(F.col("pr") <= IVF_NPROBE)
-            .select("query_id", "cell")
-        )
-        scored = (
-            idx.join(F.broadcast(probes), "cell")
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .join(
-                F.broadcast(qside.select("query_id", "dtab")), "query_id"
-            )
-            .withColumn("adc", _adc_col())
-        )
-        wk = Window.partitionBy("query_id").orderBy("adc", "vec_id")
-        wq = Window.partitionBy("query_id")
-        topk = (
-            scored.withColumn("rnk", F.row_number().over(wk))
-            .withColumn("n_candidates", F.count(F.lit(1)).over(wq))
-            .filter(F.col("rnk") <= TOP_K)
-            .select("query_id", "vec_id", "n_candidates")
-        )
-        d2_full = F.round(
-            F.aggregate(
-                F.zip_with("e", "qe", lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda a, b: a + b,
-            ),
-            4,
-        )
-        exact_scored = (
-            emb.crossJoin(F.broadcast(qside.select("query_id", "qe")))
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .withColumn("l2", d2_full)
-        )
-        wx = Window.partitionBy("query_id").orderBy("l2", "vec_id")
-        exact_topk = (
-            exact_scored.withColumn("rnk", F.row_number().over(wx))
-            .filter(F.col("rnk") <= TOP_K)
-            .select("query_id", F.col("vec_id").alias("exact_vec_id"))
-        )
-        flagged = topk.join(
-            exact_topk,
-            (topk.query_id == exact_topk.query_id)
-            & (topk.vec_id == exact_topk.exact_vec_id),
-            "left",
-        ).select(
-            topk.query_id,
-            topk.vec_id,
-            topk.n_candidates,
-            exact_topk.exact_vec_id,
-        )
-        out = (
-            flagged.groupBy("query_id")
-            .agg(
-                F.max("n_candidates").alias("n_candidates"),
-                F.sum("vec_id").alias("id_checksum"),
-                F.round(
-                    F.count("exact_vec_id") / F.lit(float(TOP_K)), 4
-                ).alias("recall_at_k"),
-            )
-            .orderBy("query_id")
-        )
-        from .util import materialize_release
-
+        out = _ivfpq_topk(emb, idx, centers, cb_lit)
         # materialize BEFORE the scratch artifacts are removed
         return materialize_release(spark, out, emb)
     finally:
@@ -1843,13 +1639,13 @@ def x21_ivfpq_upsert_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     many of each query's retrieved top-k are delta rows: proof the
     upsert actually serves the new data rather than orphaning it.
 
-    Scale shape: identical to x18's serving plan — cell and code are
-    ONE corpus projection over broadcast literals (at 100 TB the
-    incremental run projects only the delta partition and appends to
-    x19's cell-partitioned artifacts; here the full-corpus projection
-    doubles as the merged index), routing is a broadcast probe join,
-    and the candidate count rides the top-k exchange. The fit folds
-    over the base sample only — the delta never enters Lloyd.
+    Scale shape: x18's serving plan (:func:`_ivfpq_serve`) — cell and
+    code are ONE corpus projection over broadcast literals (at 100 TB
+    the incremental run projects only the delta partition and appends
+    to x19's cell-partitioned artifacts; here the full-corpus
+    projection doubles as the merged index), routing is a broadcast
+    probe join, and the candidate count rides the top-k exchange. The
+    fit folds over the base sample only — the delta never enters Lloyd.
 
     Oracle: a self-contained replay — the PQ prefix and the
     i-prefixed IVF chain with their fit samples drawn FROM THE BASE
@@ -1872,91 +1668,24 @@ def x21_ivfpq_upsert_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         _pq_code_col(cb_lit).alias("code"),
         _ivf_assign_cell_col(cent_lit).alias("cell"),
     )
-    qside = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        _pq_dtab_col(cb_lit).alias("dtab"),
+    is_delta = (F.col("vec_id") % X21_DELTA_MOD == X21_DELTA_RES).cast("long")
+    served = _ivfpq_serve(
+        emb, merged, centers, cb_lit, is_delta.alias("is_delta")
     )
-    d2c = F.aggregate(
-        F.zip_with("qe", "center", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda a, b: a + b,
-    )
-    wp = Window.partitionBy("query_id").orderBy("dist2", "cell")
-    probes = (
-        qside.select("query_id", "qe")
-        .crossJoin(F.broadcast(centers))
-        .withColumn("dist2", d2c)
-        .withColumn("pr", F.row_number().over(wp))
-        .filter(F.col("pr") <= IVF_NPROBE)
-        .select("query_id", "cell")
-    )
-    scored = (
-        merged.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .join(F.broadcast(qside.select("query_id", "dtab")), "query_id")
-        .withColumn("adc", _adc_col())
-    )
-    wk = Window.partitionBy("query_id").orderBy("adc", "vec_id")
-    wq = Window.partitionBy("query_id")
-    topk = (
-        scored.withColumn("rnk", F.row_number().over(wk))
-        .withColumn("n_candidates", F.count(F.lit(1)).over(wq))
-        .filter(F.col("rnk") <= TOP_K)
-        .select(
-            "query_id",
-            "vec_id",
-            "n_candidates",
-            (
-                F.col("vec_id") % X21_DELTA_MOD == X21_DELTA_RES
-            ).cast("long").alias("is_delta"),
-        )
-    )
-    d2_full = F.round(
-        F.aggregate(
-            F.zip_with("e", "qe", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda a, b: a + b,
-        ),
-        4,
-    )
-    exact_scored = (
-        emb.crossJoin(F.broadcast(qside.select("query_id", "qe")))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("l2", d2_full)
-    )
-    wx = Window.partitionBy("query_id").orderBy("l2", "vec_id")
-    exact_topk = (
-        exact_scored.withColumn("rnk", F.row_number().over(wx))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", F.col("vec_id").alias("exact_vec_id"))
-    )
-    flagged = topk.join(
-        exact_topk,
-        (topk.query_id == exact_topk.query_id)
-        & (topk.vec_id == exact_topk.exact_vec_id),
-        "left",
-    ).select(
-        topk.query_id,
-        topk.vec_id,
-        topk.n_candidates,
-        topk.is_delta,
-        exact_topk.exact_vec_id,
-    )
+    flagged = _grade(served, _l2_truth(emb))
     per_q = flagged.groupBy("query_id").agg(
         F.max("n_candidates").alias("n_candidates"),
         F.sum("vec_id").alias("id_checksum"),
         F.sum("is_delta").alias("n_delta_topk"),
         F.count("exact_vec_id").alias("__hits"),
     )
-    # Drive the output from the query key set (the x20 lesson, caught
-    # in this round's review): a query alone in all its probed cells
-    # has no routed candidates and would otherwise vanish instead of
-    # reporting n_candidates = 0 / recall 0 — the exact frozen-
-    # quantizer drift signal the operator exists to surface. The
-    # oracle drives from q identically.
+    # Drive the output from the query key set (as x20 does): a query
+    # alone in all its probed cells has no routed candidates and would
+    # otherwise vanish instead of reporting n_candidates = 0 / recall 0
+    # — the exact frozen-quantizer drift signal the operator exists to
+    # surface. The oracle drives from q identically.
     out = (
-        qside.select("query_id")
+        _queries_side(emb)
         .join(F.broadcast(per_q), "query_id", "left")
         .select(
             "query_id",
@@ -1977,8 +1706,6 @@ def x21_ivfpq_upsert_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("query_id")
     )
-    from .util import materialize_release
-
     return materialize_release(spark, out, emb)
 
 
@@ -2010,11 +1737,12 @@ def x20_filtered_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     axis), post-filter survivor count (wasted-compute axis), both
     recalls, and the pre-filter id checksum.
 
-    Scale shape: ONE scored frame (x18's routing joins + the label
-    column carried through) feeds both strategies — the pre-filter
-    ranking is a filter + one row_number, the post-filter ranking is
-    two row_numbers on the same partition key, so everything rides a
-    single exchange; the filtered exact baseline exists only to grade.
+    Scale shape: ONE scored frame (x18's routed ADC,
+    :func:`_routed_adc`, with the query label carried through) feeds
+    both strategies — the pre-filter ranking is a filter + one
+    row_number, the post-filter ranking is two row_numbers on the same
+    partition key, so everything rides a single exchange; the filtered
+    exact baseline exists only to grade.
 
     Oracle: x18's composed SQL prefix + a label join on each side of
     the routed ADC + the two-stage ranking replayed verbatim.
@@ -2027,98 +1755,37 @@ def x20_filtered_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         _pq_code_col(cb_lit).alias("code"),
         _ivf_assign_cell_col(cent_lit).alias("cell"),
     )
-    qside = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.col("label").alias("qlabel"),
-        _pq_dtab_col(cb_lit).alias("dtab"),
+    qside = _queries_side(
+        emb, "e", "label", _pq_dtab_col(cb_lit).alias("dtab")
     )
-    d2c = F.aggregate(
-        F.zip_with("qe", "center", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda a, b: a + b,
-    )
-    wp = Window.partitionBy("query_id").orderBy("dist2", "cell")
-    probes = (
-        qside.select("query_id", "qe")
-        .crossJoin(F.broadcast(centers))
-        .withColumn("dist2", d2c)
-        .withColumn("pr", F.row_number().over(wp))
-        .filter(F.col("pr") <= IVF_NPROBE)
-        .select("query_id", "cell")
-    )
-    scored = (
-        base.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .join(
-            F.broadcast(qside.select("query_id", "qlabel", "dtab")),
-            "query_id",
-        )
-        .withColumn("adc", _adc_col())
-    )
-    wk = Window.partitionBy("query_id").orderBy("adc", "vec_id")
+    scored = _routed_adc(base, qside, centers)
     wq = Window.partitionBy("query_id")
     matches = F.col("label") == F.col("qlabel")
     pre = (
         scored.filter(matches)
-        .withColumn("rnk", F.row_number().over(wk))
+        .withColumn("rnk", _adc_rank())
         .withColumn("n_candidates", F.count(F.lit(1)).over(wq))
         .filter(F.col("rnk") <= TOP_K)
         .select("query_id", "vec_id", "n_candidates")
     )
     post = (
-        scored.withColumn("rnk", F.row_number().over(wk))
+        scored.withColumn("rnk", _adc_rank())
         .filter(F.col("rnk") <= X20_EXPAND * TOP_K)
         .filter(matches)
-        .withColumn("rnk2", F.row_number().over(wk))
+        .withColumn("rnk2", _adc_rank())
         .withColumn("n_kept_post", F.count(F.lit(1)).over(wq))
         .filter(F.col("rnk2") <= TOP_K)
         .select("query_id", "vec_id", "n_kept_post")
     )
-    d2_full = F.round(
-        F.aggregate(
-            F.zip_with("e", "qe", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda a, b: a + b,
-        ),
-        4,
-    )
-    exact_scored = (
-        emb.crossJoin(
-            F.broadcast(qside.select("query_id", "qe", "qlabel"))
-        )
-        .filter(
-            (F.col("vec_id") != F.col("query_id"))
-            & (F.col("label") == F.col("qlabel"))
-        )
-        .withColumn("l2", d2_full)
-    )
-    wx = Window.partitionBy("query_id").orderBy("l2", "vec_id")
-    exact_topk = (
-        exact_scored.withColumn("rnk", F.row_number().over(wx))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", F.col("vec_id").alias("exact_vec_id"))
+    same_label = _query_pairs(emb, qside.drop("dtab")).filter(matches)
+    exact_topk = _l2_topk(same_label).withColumnRenamed(
+        "vec_id", "exact_vec_id"
     )
     truth_n = exact_topk.groupBy("query_id").agg(
         F.count(F.lit(1)).alias("n_truth")
     )
-    pre_f = pre.join(
-        exact_topk,
-        (pre.query_id == exact_topk.query_id)
-        & (pre.vec_id == exact_topk.exact_vec_id),
-        "left",
-    ).select(
-        pre.query_id, pre.vec_id, pre.n_candidates,
-        exact_topk.exact_vec_id,
-    )
-    post_f = post.join(
-        exact_topk,
-        (post.query_id == exact_topk.query_id)
-        & (post.vec_id == exact_topk.exact_vec_id),
-        "left",
-    ).select(
-        post.query_id, post.n_kept_post, exact_topk.exact_vec_id
-    )
+    pre_f = _grade(pre, exact_topk)
+    post_f = _grade(post, exact_topk)
     pre_agg = pre_f.groupBy("query_id").agg(
         F.max("n_candidates").alias("n_candidates"),
         F.sum("vec_id").cast("long").alias("id_checksum"),
@@ -2128,14 +1795,14 @@ def x20_filtered_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("n_kept_post").alias("n_kept_post"),
         F.count("exact_vec_id").alias("__hits_post"),
     )
-    # Drive the final select from truth_n, not pre_agg (ADVICE r12): a
-    # query whose ROUTED candidate set contains zero same-label rows
-    # has no pre_agg row, and an inner/pre-driven join would silently
-    # drop it — the exact worst-case pre-filter miss this operator
-    # exists to surface. truth_n is the complete key set (pre rows are
-    # same-label routed candidates, so pre nonempty ⇒ a same-label
-    # vector exists ⇒ exact filtered truth nonempty); left-join both
-    # aggregates onto it and COALESCE counts/recalls to 0.
+    # Drive the final select from truth_n, not pre_agg: a query whose
+    # ROUTED candidate set contains zero same-label rows has no pre_agg
+    # row, and an inner/pre-driven join would silently drop it — the
+    # exact worst-case pre-filter miss this operator exists to surface.
+    # truth_n is the complete key set (pre rows are same-label routed
+    # candidates, so pre nonempty ⇒ a same-label vector exists ⇒ exact
+    # filtered truth nonempty); left-join both aggregates onto it and
+    # COALESCE counts/recalls to 0.
     out = (
         truth_n.join(F.broadcast(pre_agg), "query_id", "left")
         .join(F.broadcast(post_agg), "query_id", "left")
@@ -2163,8 +1830,6 @@ def x20_filtered_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("query_id")
     )
-    from .util import materialize_release
-
     return materialize_release(spark, out, emb)
 
 
@@ -2173,10 +1838,10 @@ X11_NPROBE_SWEEP = (1, 2, 4, 8)
 
 #: Bytes a deployment fetches per IVF candidate: the float64 vector
 #: (8·dim) plus its 8-byte id. Multiplying the exact candidate count
-#: by this width gives the curve's byte-budget axis deterministically
-#: (VERDICT r8 item #7) — runtime task metrics (executorRunTime /
-#: inputBytes per nprobe) are inherently run-dependent, so they live
-#: in scripts/x11_metrics.py + PLANS.md, not in the hash-gated row.
+#: by this width gives the curve's byte-budget axis deterministically —
+#: runtime task metrics (executorRunTime / inputBytes per nprobe) are
+#: inherently run-dependent, so they live in scripts/x11_metrics.py +
+#: PLANS.md, not in the hash-gated row.
 X11_CAND_ROW_BYTES = 8 * EMB_DIM + 8
 
 
@@ -2209,8 +1874,6 @@ def x11_ivf_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = summaries[0]
     for s in summaries[1:]:
         out = out.unionByName(s)
-    from .util import materialize_release
-
     return materialize_release(
         spark, out.orderBy("nprobe"), emb, pool, exact_topk
     )
@@ -2227,21 +1890,9 @@ def _x11_build(spark: SparkSession, sf_dir: str):
     assigned = emb.select(
         "vec_id", "e", "norm", _ivf_assign_cell_col(cent_lit).alias("cell")
     )
-    qrows = _queries_side(emb)
-    d2 = F.aggregate(
-        F.zip_with("qe", "center", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda a, b: a + b,
-    )
-    wp = Window.partitionBy("query_id").orderBy("dist2", "cell")
-    max_probe = max(X11_NPROBE_SWEEP)
-    probes = (
-        qrows.crossJoin(F.broadcast(centers))
-        .withColumn("dist2", d2)
-        .withColumn("pr", F.row_number().over(wp))
-        .filter(F.col("pr") <= max_probe)
-        .select("query_id", "qe", "qnorm", "cell", "pr")
-    )
+    probes = _probe_cells(
+        _queries_side(emb, "e", "norm"), centers, max(X11_NPROBE_SWEEP)
+    ).select("query_id", "qe", "qnorm", "cell", "pr")
     pool = (
         assigned.join(F.broadcast(probes), "cell")
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -2252,29 +1903,14 @@ def _x11_build(spark: SparkSession, sf_dir: str):
     # cache(): the exact baseline is referenced by EVERY sweep point's
     # hit join — uncached, the full-corpus exact scoring would re-run
     # |sweep| times inside the one collecting action.
-    exact_topk = (
-        _rank_topk(
-            emb.crossJoin(F.broadcast(_queries_side(emb)))
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .withColumn("cos_sim", _cosine_sim())
-        )
-        .select("query_id", "vec_id")
-        .cache()
-    )
+    exact_topk = _cosine_truth(emb).select("query_id", "vec_id").cache()
     return emb, pool, exact_topk
 
 
 def _x11_point_summary(pool, exact_topk, pool_total, np_, denom):
     """One sweep point's 1-row summary over the shared pool."""
     sub = pool.filter(F.col("pr") <= np_)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("vec_id")
-    )
-    topk = (
-        sub.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "vec_id")
-    )
+    topk = _rank_topk(sub).select("query_id", "vec_id")
     hits = topk.join(exact_topk, ["query_id", "vec_id"], "left_semi")
     return (
         sub.agg(F.count(F.lit(1)).alias("n_candidates"))
@@ -2492,8 +2128,6 @@ def x12_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("label")
     )
-    from .util import materialize_release
-
     return materialize_release(spark, out, *caches)
 
 
@@ -2569,8 +2203,6 @@ def x16_graph_community_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("community")
     )
-    from .util import materialize_release
-
     return materialize_release(spark, out, kept, *caches)
 
 
@@ -2600,11 +2232,7 @@ def x13_lsh_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = emb.select(
         "vec_id", F.posexplode("buckets").alias("t", "bucket")
     )
-    qrows = emb.filter(F.col("vec_id") < N_QUERIES)
-    qside = qrows.select(
-        F.col("vec_id").alias("query_id"),
-        F.posexplode("buckets").alias("t", "bucket"),
-    )
+    qside = _queries_side(emb, F.posexplode("buckets").alias("t", "bucket"))
     first_hit = (
         corpus.join(F.broadcast(qside), ["t", "bucket"])
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -2613,16 +2241,7 @@ def x13_lsh_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scored = (
         first_hit.join(emb.select("vec_id", "e", "norm"), "vec_id")
-        .join(
-            F.broadcast(
-                qrows.select(
-                    F.col("vec_id").alias("query_id"),
-                    F.col("e").alias("qe"),
-                    F.col("norm").alias("qnorm"),
-                )
-            ),
-            "query_id",
-        )
+        .join(F.broadcast(_queries_side(emb, "e", "norm")), "query_id")
         .withColumn("cos_sim", _cosine_sim())
         .select("query_id", "vec_id", "first_t", "cos_sim")
     )
@@ -2640,11 +2259,7 @@ def x13_lsh_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rnk") <= TOP_K)
         .select("n_tables", "query_id", "vec_id")
     )
-    exact_topk = _rank_topk(
-        emb.crossJoin(F.broadcast(_queries_side(emb)))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("cos_sim", _cosine_sim())
-    ).select("query_id", "vec_id")
+    exact_topk = _cosine_truth(emb).select("query_id", "vec_id")
     hits = lsh_topk.join(exact_topk, ["query_id", "vec_id"]).groupBy(
         "n_tables"
     ).agg(F.count(F.lit(1)).alias("n_hits"))
@@ -2669,8 +2284,6 @@ def x13_lsh_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("n_tables")
     )
-    from .util import materialize_release
-
     return materialize_release(spark, out, emb)
 
 
@@ -2724,8 +2337,6 @@ def x14_cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("cell")
     )
-    from .util import materialize_release
-
     return materialize_release(spark, out, emb)
 
 
@@ -2807,14 +2418,8 @@ def x15_sq_int8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cache()
     )
-    qside = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.col("norm").alias("qnorm"),
-    )
     scored = (
-        recon.crossJoin(F.broadcast(qside))
-        .filter(F.col("vec_id") != F.col("query_id"))
+        _query_pairs(recon, _queries_side(emb, "e", "norm"))
         .withColumn(
             "cos_sim",
             F.when(
@@ -2828,25 +2433,10 @@ def x15_sq_int8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sq_topk = _rank_topk(scored)
-    exact_scored = (
-        emb.crossJoin(F.broadcast(qside))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("cos_sim", _cosine_sim())
-    )
-    exact_topk = _rank_topk(exact_scored).select(
-        "query_id", F.col("vec_id").alias("exact_vec_id")
-    )
-    hits = sq_topk.join(
-        exact_topk,
-        (sq_topk.query_id == exact_topk.query_id)
-        & (sq_topk.vec_id == exact_topk.exact_vec_id),
-        "left_semi",
-    )
-    n_hit = hits.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_hits"))
     out = (
         sq_topk.groupBy("query_id")
         .agg(F.sum("vec_id").alias("id_checksum"))
-        .join(n_hit, "query_id", "left")
+        .join(_cosine_hits(emb, sq_topk), "query_id", "left")
         .select(
             "query_id",
             F.col("id_checksum").cast("long").alias("id_checksum"),
@@ -2856,8 +2446,6 @@ def x15_sq_int8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("query_id")
     )
-    from .util import materialize_release
-
     return materialize_release(spark, out, emb, recon)
 
 
@@ -2948,10 +2536,10 @@ def x22_binary_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "norm",
         *[_lane(l).alias(f"s{l}") for l in range(X22_LANES)],
     ).cache()
-    qside = sigs.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.col("norm").alias("qnorm"),
+    qside = _queries_side(
+        sigs,
+        "e",
+        "norm",
         *[F.col(f"s{l}").alias(f"q{l}") for l in range(X22_LANES)],
     )
     hamming = F.bit_count(F.col("s0").bitwiseXOR(F.col("q0")))
@@ -2959,11 +2547,7 @@ def x22_binary_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         hamming = hamming + F.bit_count(
             F.col(f"s{l}").bitwiseXOR(F.col(f"q{l}"))
         )
-    ham = (
-        sigs.crossJoin(F.broadcast(qside))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("hamming", hamming)
-    )
+    ham = _query_pairs(sigs, qside).withColumn("hamming", hamming)
     wh = Window.partitionBy("query_id").orderBy(
         F.asc("hamming"), F.asc("vec_id")
     )
@@ -2979,28 +2563,13 @@ def x22_binary_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rnk") <= TOP_K)
         .select("query_id", "vec_id", "hamming")
     )
-    exact_scored = (
-        emb.crossJoin(F.broadcast(_queries_side(emb)))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("cos_sim", _cosine_sim())
-    )
-    exact_topk = _rank_topk(exact_scored).select(
-        "query_id", F.col("vec_id").alias("exact_vec_id")
-    )
-    hits = bin_topk.join(
-        exact_topk,
-        (bin_topk.query_id == exact_topk.query_id)
-        & (bin_topk.vec_id == exact_topk.exact_vec_id),
-        "left_semi",
-    )
-    n_hit = hits.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_hits"))
     out = (
         bin_topk.groupBy("query_id")
         .agg(
             F.sum("vec_id").alias("id_checksum"),
             F.sum("hamming").alias("hamming_sum"),
         )
-        .join(n_hit, "query_id", "left")
+        .join(_cosine_hits(emb, bin_topk), "query_id", "left")
         .select(
             "query_id",
             F.col("id_checksum").cast("long").alias("id_checksum"),
@@ -3011,8 +2580,6 @@ def x22_binary_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("query_id")
     )
-    from .util import materialize_release
-
     return materialize_release(spark, out, emb, sigs)
 
 

@@ -494,3 +494,76 @@ def test_m16_clustered_layout_prunes_partitions(spark, tmp_path):
     )[1].split("]")[0], plan
     # the pruned scan must not re-check lang row-by-row
     assert "PushedFilters: []" in plan or "EqualTo(lang" not in plan
+
+
+def _plan_nodes(plan: str) -> list[tuple[str, list[str]]]:
+    """(node text, ancestor texts root-first) for each line of a
+    ``treeString``: a node at depth d > 0 is prefixed by d-1 three-char
+    ``":  "``/``"   "`` groups and a ``"+- "``/``":- "`` marker."""
+    import re
+
+    nodes, stack = [], []
+    for line in plan.splitlines():
+        m = re.match(r"((?:[ :]{3})*)[+:]- (.*)", line)
+        depth, text = (len(m.group(1)) // 3 + 1, m.group(2)) if m else (0, line)
+        del stack[depth:]
+        nodes.append((text, list(stack)))
+        stack.append(text)
+    return nodes
+
+
+def test_ivfpq_serve_windows_share_one_exchange(spark):
+    """The routed IVFPQ serve (x18/x19/x21) ranks by ADC and counts
+    candidates in two windows on the same ``query_id`` key: outside the
+    broadcast probe table (whose probe ranking has its own small
+    exchange) the serve plans exactly ONE ``hashpartitioning(query_id)``
+    exchange, and both windows sit above it with no other exchange in
+    between. x18 materializes its result, so its query-level plan
+    cannot show this; the serve frame is built here on a 12-row
+    input."""
+    import random
+
+    from mirrulations_iceberg_spark.operators.similarity import (
+        EMB_DIM,
+        PQ_M,
+        PQ_SUBDIM,
+        _center_rows_lit,
+        _ivf_assign_cell_col,
+        _ivfpq_serve,
+        _pq_code_col,
+        _pq_rows_to_cb_lit,
+    )
+
+    rng = random.Random(7)
+
+    def vec(n):
+        return [rng.uniform(-1.0, 1.0) for _ in range(n)]
+
+    emb = spark.createDataFrame(
+        [(i, vec(EMB_DIM)) for i in range(12)], "vec_id long, e array<double>"
+    )
+    center_rows = [(c, vec(EMB_DIM)) for c in range(3)]
+    centers = spark.createDataFrame(center_rows, "cell int, center array<double>")
+    cb_lit = _pq_rows_to_cb_lit(
+        [(m, c, vec(PQ_SUBDIM)) for m in range(PQ_M) for c in range(2)]
+    )
+    index = emb.select(
+        "vec_id",
+        _pq_code_col(cb_lit).alias("code"),
+        _ivf_assign_cell_col(_center_rows_lit(center_rows)).alias("cell"),
+    )
+    served = _ivfpq_serve(emb, index, centers, cb_lit)
+    nodes = _plan_nodes(served._jdf.queryExecution().executedPlan().toString())
+    serve_ex = [
+        above
+        for text, above in nodes
+        if text.startswith("Exchange hashpartitioning(query_id")
+        and not any(a.startswith("BroadcastExchange") for a in above)
+    ]
+    assert len(serve_ex) == 1, nodes
+    above = serve_ex[0]
+    assert not any(a.startswith("Exchange") for a in above), above
+    assert any(
+        a.startswith("Window [row_number()") and "adc" in a for a in above
+    ), above
+    assert any(a.startswith("Window [count(1)") for a in above), above
