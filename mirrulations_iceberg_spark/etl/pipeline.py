@@ -39,12 +39,13 @@ def run_pipeline(
     """Docket tree → {comments, documents, docket_info} parquet tables.
 
     Writes ``<out>/<table>/agencyId=<a>/*.parquet`` + a
-    ``<out>/quarantine`` sink of corrupt raw rows (F7). Returns the
-    written tables re-read from disk (so callers query exactly what
-    landed) plus row counts. ``agency`` narrows every table to one
-    agency (the reference's ``--agency`` filter,
-    ``convert_to_iceberg.py:1327-1329``) — applied post-flatten so it
-    rides the same agencyId column the partitioned sink uses.
+    ``<out>/quarantine`` sink of corrupt raw rows (F7); a re-run into
+    the same ``out_dir`` replaces both, so ``quarantined`` counts only
+    this run's rows. Returns the written tables re-read from disk (so
+    callers query exactly what landed) plus row counts. ``agency``
+    narrows every table to one agency (the reference's ``--agency``
+    filter, ``convert_to_iceberg.py:1327-1329``) — applied post-flatten
+    so it rides the same agencyId column the partitioned sink uses.
     """
     from pyspark.sql import functions as F
     flatteners = {
@@ -54,6 +55,7 @@ def run_pipeline(
     }
     tables: dict[str, DataFrame] = {}
     counts: dict[str, int] = {}
+    quarantine = os.path.join(out_dir, "quarantine")
     for table, (kind, flatten) in flatteners.items():
         raw = read_docket_json(spark, tree_root, kind)
         clean, bad = split_corrupt(raw)
@@ -74,11 +76,12 @@ def run_pipeline(
         # corrupt-record-only scan, which Spark refuses
         # (QUERY_ONLY_CORRUPT_RECORD_COLUMN); the write's projection
         # keeps real columns, so land the quarantine rows first and
-        # count what landed.
-        bad.write.mode("append").option("compression", codec).parquet(
-            os.path.join(out_dir, "quarantine")
-        )
+        # count what landed. Like the tables, the quarantine of a run
+        # replaces the previous run's: the first table overwrites it.
+        bad.write.mode("append" if tables else "overwrite").option(
+            "compression", codec
+        ).parquet(quarantine)
         tables[table] = spark.read.parquet(out)
         counts[table] = tables[table].count()
-    quarantined = spark.read.parquet(os.path.join(out_dir, "quarantine")).count()
+    quarantined = spark.read.parquet(quarantine).count()
     return PipelineResult(tables=tables, counts=counts, quarantined=quarantined)

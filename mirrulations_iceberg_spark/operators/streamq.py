@@ -33,6 +33,13 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..tables import (
+    ensure_events_read_conf,
+    load_table,
+    local_path,
+    normalize_event_ts,
+    parquet_schema,
+)
 from .util import scoped_conf
 
 
@@ -62,9 +69,9 @@ def _path_bytes(path: str) -> int | None:
     back to the cores rule", which ``stream_state_conf`` does on
     ``None``.
     """
-    if "://" in path and not path.startswith("file://"):
+    local = local_path(path)
+    if local is None:
         return None
-    local = path[len("file://"):] if path.startswith("file://") else path
     try:
         if os.path.isdir(local):
             total = sum(
@@ -122,10 +129,8 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The events fixture as a file-source stream, with the same
     TIMESTAMP(NANOS) → timestamp conversion as ``tables.load_table``
     so stream and batch arithmetic agree."""
-    from ..tables import ensure_events_read_conf, normalize_event_ts
-
     ensure_events_read_conf(spark)
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    batch_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     return normalize_event_ts(
         spark.readStream.schema(batch_schema)
         .option("pathGlobFilter", "events.parquet")
@@ -291,8 +296,6 @@ def s4_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from ..tables import ensure_events_read_conf, normalize_event_ts
-
     ensure_events_read_conf(spark)
     base = tempfile.mkdtemp(prefix="miis_s4_")
     try:
@@ -315,7 +318,7 @@ def s4_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         else:
             for i in range(3):
                 shutil.copyfile(src, f"{base}/delivery{i}.parquet")
-        schema = spark.read.parquet(src).schema
+        schema = parquet_schema(spark, src)
         stream = normalize_event_ts(
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", "1")
@@ -458,7 +461,7 @@ def s6_stream_base_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .dedup import D10_DELTA_MOD, content_fp_from_toks, tokens_col
 
-    batch_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    batch_schema = parquet_schema(spark, f"{sf_dir}/documents.parquet")
     fp = content_fp_from_toks(tokens_col(F.col("text"))).alias("fingerprint")
     is_delta = F.col("doc_id") % D10_DELTA_MOD == 0
 
@@ -606,10 +609,8 @@ def s8_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
         # events.parquet and would stream zero rows. Stream the
         # directory itself instead (the s4 precedent — handled locally
         # so green s1/s5 don't re-enter the gate for this).
-        from ..tables import ensure_events_read_conf, normalize_event_ts
-
         ensure_events_read_conf(spark)
-        schema = spark.read.parquet(src).schema
+        schema = parquet_schema(spark, src)
         events = normalize_event_ts(
             spark.readStream.schema(schema).parquet(src)
         )
@@ -680,7 +681,6 @@ def s9_stream_neardup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         tokens_col,
     )
 
-    from ..tables import load_table
     from .dedup import minhash_signatures, parallelize_scan
 
     # the d18 convention: load_table validates the name, and
@@ -848,7 +848,7 @@ def s9_stream_neardup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for r in rows
             )
 
-        schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+        schema = parquet_schema(spark, f"{sf_dir}/documents.parquet")
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", "1")

@@ -77,7 +77,9 @@ def stream_comments(
             for _r, _d, fs in os.walk(out_dir)
             for f in fs
         ):
-            existing = batch_df.sparkSession.read.parquet(out_dir).select("id")
+            # The package wrote this table, so its id column is known:
+            # declaring it skips schema inference and reads only ids.
+            existing = batch_df.sparkSession.read.schema("id STRING").parquet(out_dir)
             new = new.join(existing, "id", "left_anti")
         new.write.mode("append").parquet(out_dir)
 

@@ -34,10 +34,10 @@ def attributed_purchases(
     one row per qualifying click within ``max_gap`` before the
     purchase (inner join — unattributed purchases drop out).
     """
-    from ..tables import ensure_events_read_conf, normalize_event_ts
+    from ..tables import ensure_events_read_conf, normalize_event_ts, parquet_schema
 
     ensure_events_read_conf(spark)
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    batch_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     events = normalize_event_ts(
         spark.readStream.schema(batch_schema)
         .option("pathGlobFilter", "events.parquet")

@@ -94,10 +94,10 @@ def events_file_stream(
 ) -> DataFrame:
     """File-source events stream with the fixture's ts normalization
     (see tables.normalize_event_ts)."""
-    from ..tables import ensure_events_read_conf, normalize_event_ts
+    from ..tables import ensure_events_read_conf, normalize_event_ts, parquet_schema
 
     ensure_events_read_conf(spark)
-    batch_schema = spark.read.parquet(events_dir).schema
+    batch_schema = parquet_schema(spark, events_dir)
     reader = spark.readStream.schema(batch_schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))

@@ -26,10 +26,10 @@ def windowed_event_counts(
     dependent) so batch and stream agree. Returns an unstarted
     streaming DataFrame; callers pick sink + trigger.
     """
-    from ..tables import ensure_events_read_conf, normalize_event_ts
+    from ..tables import ensure_events_read_conf, normalize_event_ts, parquet_schema
 
     ensure_events_read_conf(spark)
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    batch_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     # The file stream source wants a DIRECTORY basePath; narrow to the
     # events file with a glob filter.
     events = normalize_event_ts(

@@ -5,14 +5,30 @@ Mirrors the reference's in-memory table registration
 df)``) with ``createOrReplaceTempView``; at production scale these are
 Iceberg/Parquet tables and the reader below is the only place that
 changes.
+
+A parquet read without a schema makes Spark run a one-task job that
+reads a footer to infer it. :func:`parquet_schema` is the package's one
+way to learn a parquet schema: it memoizes the inferred ``StructType``
+per path, keyed on a stamp of the files under the path (name, size,
+``mtime_ns``) and on the session confs that change how a footer maps to
+Spark types (:data:`SCHEMA_CONFS`). Rewriting, adding or removing a
+file, or flipping one of those confs, is a new key. Only schemas are
+memoized, never DataFrames: every read still builds a fresh relation,
+so two loads of one table keep distinct attribute ids. URI-schemed paths
+(``s3a://``, ``viewfs://`` …), which ``os`` cannot stamp, are inferred
+on every call.
 """
 
 from __future__ import annotations
 
+import copy
 import os
+import threading
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = (
     "region",
@@ -28,6 +44,80 @@ TABLE_NAMES = (
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+#: Session confs read by Spark's parquet footer-to-schema conversion:
+#: the same file infers a different schema under a different setting.
+SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.caseSensitive",
+)
+#: Schemas kept by :func:`parquet_schema`; the least recently used goes.
+SCHEMA_MEMO_SIZE = 256
+_schema_memo: OrderedDict[tuple, StructType] = OrderedDict()
+_schema_lock = threading.Lock()
+
+
+def local_path(path: str) -> str | None:
+    """``path`` as a local-filesystem path, or ``None`` for a URI-schemed
+    path (``s3a://…``, ``hdfs://…``, ``viewfs://…``) that ``os`` cannot
+    see. ``file://`` URIs are local."""
+    if path.startswith("file://"):
+        return path[len("file://"):]
+    return None if "://" in path else path
+
+
+def _file_stamp(local: str) -> tuple | None:
+    """Sorted (relative name, size, ``mtime_ns``) of every file under
+    ``local`` (a file or a directory). ``None`` when there is nothing to
+    stamp (missing or unreadable path, no files), so the caller lets
+    Spark infer and raise its own error."""
+    try:
+        if not os.path.isdir(local):
+            st = os.stat(local)
+            return (("", st.st_size, st.st_mtime_ns),)
+        stamp = []
+        for d, _, fs in os.walk(local):
+            for f in fs:
+                p = os.path.join(d, f)
+                st = os.stat(p)
+                stamp.append((os.path.relpath(p, local), st.st_size, st.st_mtime_ns))
+    except OSError:
+        return None
+    return tuple(sorted(stamp)) or None
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The ``StructType`` ``spark.read.parquet(path)`` infers, memoized.
+
+    The memo key is the absolute path, the stamp of every file under it
+    and the current values of :data:`SCHEMA_CONFS`, so a rewritten file
+    or a flipped conf infers afresh. Paths ``os`` cannot stamp (URIs,
+    globs, missing paths) infer on every call. The caller gets its own
+    copy: ``StructType.add`` mutates in place.
+    """
+    local = local_path(path)
+    stamp = _file_stamp(local) if local is not None else None
+    if stamp is None:
+        return spark.read.parquet(path).schema
+    key = (
+        os.path.abspath(local),
+        stamp,
+        tuple(spark.conf.get(k) for k in SCHEMA_CONFS),
+    )
+    with _schema_lock:
+        schema = _schema_memo.get(key)
+        if schema is not None:
+            _schema_memo.move_to_end(key)
+    if schema is None:
+        schema = spark.read.parquet(path).schema
+        with _schema_lock:
+            _schema_memo[key] = schema
+            if len(_schema_memo) > SCHEMA_MEMO_SIZE:
+                _schema_memo.popitem(last=False)
+    return copy.deepcopy(schema)
 
 
 def ensure_events_read_conf(spark: SparkSession) -> None:
@@ -92,15 +182,21 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one synthetic table.
 
-    Plain ``spark.read.parquet`` keeps the scan declarative: Catalyst
-    pushes filters / prunes columns into the vectorized Parquet reader,
-    so callers never pre-materialize.
+    The read declares the table's schema from :func:`parquet_schema`,
+    so only the first load of a file version (per conf setting) pays
+    Spark's schema-inference job; a rewritten file or a flipped
+    :data:`SCHEMA_CONFS` conf infers again. The DataFrame itself is
+    built fresh on every call, so loading one table twice and joining
+    it to itself works. The scan stays declarative: Catalyst pushes
+    filters / prunes columns into the vectorized Parquet reader, so
+    callers never pre-materialize.
     """
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     if name == "events":
         ensure_events_read_conf(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     if name == "events":
         df = normalize_event_ts(df)
     return df

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import duckdb
 import pytest
@@ -34,3 +35,16 @@ def ddb():
         if os.path.exists(path):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
     return con
+
+
+@pytest.fixture()
+def mount(spark, tmp_path):
+    """Mount tmp_path as viewfs://<unique-authority>/data and return
+    the viewfs URI root: a non-``file`` scheme that goes through Hadoop's
+    full FileSystem dispatch. A fresh authority per test dodges Hadoop's
+    FileSystem cache (keyed on scheme+authority), so the mount-table
+    conf set here is always the one the new FS instance reads."""
+    auth = f"mock{uuid.uuid4().hex[:8]}"
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    conf.set(f"fs.viewfs.mounttable.{auth}.link./data", f"file://{tmp_path}")
+    return f"viewfs://{auth}/data"

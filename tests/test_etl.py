@@ -38,6 +38,15 @@ def test_round_trip_counts(result):
     assert res.quarantined == expected["corrupt"]
 
 
+def test_rerun_into_same_out_dir_counts_quarantine_once(spark, tree, tmp_path):
+    """Tables overwrite on a re-run, so the quarantine must too: the
+    second run's count is its own, not both runs' rows."""
+    root, expected = tree
+    out = str(tmp_path / "out")
+    for _ in range(2):
+        assert run_pipeline(spark, root, out).quarantined == expected["corrupt"]
+
+
 def test_comments_schema(result):
     res, _, _ = result
     cols = dict(res.tables["comments"].dtypes)

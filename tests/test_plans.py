@@ -5,6 +5,9 @@ regress."""
 
 from __future__ import annotations
 
+import pathlib
+import re
+
 import pytest
 
 from mirrulations_iceberg_spark.operators import collect_queries
@@ -567,3 +570,24 @@ def test_ivfpq_serve_windows_share_one_exchange(spark):
         a.startswith("Window [row_number()") and "adc" in a for a in above
     ), above
     assert any(a.startswith("Window [count(1)") for a in above), above
+
+
+#: ``read.parquet(<args>).schema``, across lines and one level of nested
+#: parentheses in the arguments.
+_SCHEMA_PROBE = re.compile(r"read\.parquet\((?:[^()]|\([^()]*\))*\)\s*\.schema\b")
+
+
+def test_parquet_schema_is_the_one_schema_probe():
+    """Only ``tables.parquet_schema`` infers a parquet schema: any other
+    ``read.parquet(...).schema`` pays Spark's inference job on every
+    call instead of once per file version."""
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "mirrulations_iceberg_spark"
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path == pkg / "tables.py":
+            continue
+        text = path.read_text()
+        for m in _SCHEMA_PROBE.finditer(text):
+            line = text.count("\n", 0, m.start()) + 1
+            offenders.append(f"{path.relative_to(pkg)}:{line}")
+    assert not offenders, offenders

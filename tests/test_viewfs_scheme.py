@@ -18,25 +18,9 @@ assumptions anywhere in the chain.
 
 from __future__ import annotations
 
-import uuid
-
-import pytest
-
 from mirrulations_iceberg_spark.etl.fixtures import write_docket_tree
 from mirrulations_iceberg_spark.etl.ingest import read_docket_json
 from mirrulations_iceberg_spark.etl.preflight import fs_preflight
-
-
-@pytest.fixture()
-def mount(spark, tmp_path):
-    """Mount tmp_path as viewfs://<unique-authority>/data and return
-    the viewfs URI root. A fresh authority per test dodges Hadoop's
-    FileSystem cache (keyed on scheme+authority), so the mount-table
-    conf set here is always the one the new FS instance reads."""
-    auth = f"mock{uuid.uuid4().hex[:8]}"
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    conf.set(f"fs.viewfs.mounttable.{auth}.link./data", f"file://{tmp_path}")
-    return f"viewfs://{auth}/data"
 
 
 def test_s9_parquet_write_read_roundtrip_nonfile_scheme(spark, mount):
