@@ -6,8 +6,10 @@ try/excepts each ``json.load`` (``convert_to_iceberg.py:237-270``,
 
 * the recursive layout (``<docket>/raw-data/comments/*.json`` and
   variant layouts) is matched with a glob + ``recursiveFileLookup`` —
-  listing and reading parallelize across executors, which is what makes
-  S3-scale ingestion (S2) viable;
+  reading parallelizes across executors, and listing is S2's split:
+  parallel listing on a cluster; driver listing on ``local[N]``
+  (``session.get_spark``), where listing tasks would run in the
+  driver's JVM anyway;
 * a fixed envelope schema means no inference pre-scan over 100 TB and
   stable column types on sparse attributes (absent keys → null — the
   reference's present-only columns diverge per docket; SURVEY §1.4);

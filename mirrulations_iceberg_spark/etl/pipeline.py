@@ -16,10 +16,20 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from .flatten import flatten_comments, flatten_dockets, flatten_documents
 from .ingest import read_docket_json, split_corrupt
+
+
+#: Output table → (record-kind subtree, flattener).
+_FLATTENERS = {
+    "comments": ("comments", flatten_comments),
+    "documents": ("documents", flatten_documents),
+    "docket_info": ("docket", flatten_dockets),
+}
 
 
 @dataclass
@@ -39,49 +49,72 @@ def run_pipeline(
     """Docket tree → {comments, documents, docket_info} parquet tables.
 
     Writes ``<out>/<table>/agencyId=<a>/*.parquet`` + a
-    ``<out>/quarantine`` sink of corrupt raw rows (F7); a re-run into
-    the same ``out_dir`` replaces both, so ``quarantined`` counts only
-    this run's rows. Returns the written tables re-read from disk (so
-    callers query exactly what landed) plus row counts. ``agency``
+    ``<out>/quarantine`` sink of corrupt raw rows (F7). ``agency``
     narrows every table to one agency (the reference's ``--agency``
     filter, ``convert_to_iceberg.py:1327-1329``) — applied post-flatten
     so it rides the same agencyId column the partitioned sink uses.
+
+    Each table costs one Spark job, its write. Two observations ride
+    that job: the rows the write lands (``counts``) and the corrupt
+    rows of its raw scan. Only a kind with corrupt rows pays a second
+    scan, the quarantine write, and ``quarantined`` is observed on
+    those writes, so it counts what landed. A re-run into the same
+    ``out_dir`` replaces the tables and the quarantine alike — a clean
+    run lands an empty quarantine — so ``quarantined`` counts only this
+    run's rows.
+
+    The returned tables are re-read from disk (callers query exactly
+    what landed) with the schema the write declared, partition column
+    last, so the re-read infers nothing: it starts no job.
     """
-    from pyspark.sql import functions as F
-    flatteners = {
-        "comments": ("comments", flatten_comments),
-        "documents": ("documents", flatten_documents),
-        "docket_info": ("docket", flatten_dockets),
-    }
     tables: dict[str, DataFrame] = {}
     counts: dict[str, int] = {}
+    quarantined = 0
     quarantine = os.path.join(out_dir, "quarantine")
-    for table, (kind, flatten) in flatteners.items():
+    for table, (kind, flatten) in _FLATTENERS.items():
         raw = read_docket_json(spark, tree_root, kind)
-        clean, bad = split_corrupt(raw)
+        landed, corrupt = Observation(), Observation()
+        # Counting `bad` on its own would column-prune back to a
+        # corrupt-record-only scan, which Spark refuses
+        # (QUERY_ONLY_CORRUPT_RECORD_COLUMN); observed below the
+        # corrupt filter, the count rides the table write's scan.
+        clean, _ = split_corrupt(raw.observe(corrupt, _count("_corrupt_record")))
+        _, bad = split_corrupt(raw)
         out = os.path.join(out_dir, table)
         df = flatten(clean)
         if agency is not None and "agencyId" in df.columns:
             df = df.filter(F.col("agencyId") == agency)
-        partition = ["agencyId"] if "agencyId" in df.columns else None
-        (
-            df.write.mode("overwrite")
-            .option("compression", codec)
-            .partitionBy(*partition)
-            .parquet(out)
-            if partition
-            else df.write.mode("overwrite").option("compression", codec).parquet(out)
-        )
-        # Counting `bad` directly would column-prune back to a
-        # corrupt-record-only scan, which Spark refuses
-        # (QUERY_ONLY_CORRUPT_RECORD_COLUMN); the write's projection
-        # keeps real columns, so land the quarantine rows first and
-        # count what landed. Like the tables, the quarantine of a run
-        # replaces the previous run's: the first table overwrites it.
-        bad.write.mode("append" if tables else "overwrite").option(
+        partition = ["agencyId"] if "agencyId" in df.columns else []
+        df.observe(landed, _count()).write.mode("overwrite").option(
+            "compression", codec
+        ).partitionBy(*partition).parquet(out)
+        counts[table] = landed.get["n"]
+        if corrupt.get["n"]:
+            # The run's first quarantine write replaces the previous
+            # run's rows; later ones append to it.
+            bad_landed = Observation()
+            bad.observe(bad_landed, _count()).write.mode(
+                "append" if quarantined else "overwrite"
+            ).option("compression", codec).parquet(quarantine)
+            quarantined += bad_landed.get["n"]
+        tables[table] = spark.read.schema(_landed_schema(df.schema, partition)).parquet(out)
+    if not quarantined:
+        spark.createDataFrame([], bad.schema).write.mode("overwrite").option(
             "compression", codec
         ).parquet(quarantine)
-        tables[table] = spark.read.parquet(out)
-        counts[table] = tables[table].count()
-    quarantined = spark.read.parquet(quarantine).count()
     return PipelineResult(tables=tables, counts=counts, quarantined=quarantined)
+
+
+def _count(col: str | None = None) -> Column:
+    """The one metric an observation here collects: rows, or the
+    non-null values of ``col``."""
+    return F.count(F.lit(1) if col is None else F.col(col)).alias("n")
+
+
+def _landed_schema(schema: StructType, partition: list[str]) -> StructType:
+    """The written table as a reader sees it: data columns in write
+    order, then the partition columns (where a schema-less read puts
+    them), all nullable, as parquet reads always are."""
+    fields = [f for f in schema if f.name not in partition]
+    fields += [schema[p] for p in partition]
+    return StructType([StructField(f.name, f.dataType, True) for f in fields])

@@ -215,9 +215,15 @@ def s2_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         root, out, ckpt = f"{base}/tree", f"{base}/out", f"{base}/ckpt"
         write_docket_tree(root)
         tree_bytes = _path_bytes(root)
+
+        def ids(path: str) -> DataFrame:
+            # stream_comments wrote these tables, so their id column is
+            # known: declaring it skips one inference job per read.
+            return spark.read.schema("id STRING").parquet(path)
+
         with stream_state_conf(spark, tree_bytes):
             stream_comments(spark, root, out, ckpt).awaitTermination()
-        n_initial = spark.read.parquet(out).count()
+        n_initial = ids(out).count()
 
         docket = sorted(os.listdir(root))[0]
         late_id = f"{docket}-9999"
@@ -242,14 +248,13 @@ def s2_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             json.dump(late, f)
         with stream_state_conf(spark, tree_bytes):
             stream_comments(spark, root, out, ckpt).awaitTermination()
-        n_late = spark.read.parquet(out).count()
+        n_late = ids(out).count()
 
         with stream_state_conf(spark, tree_bytes):
             stream_comments(spark, root, out, ckpt).awaitTermination()
-        landed = spark.read.parquet(out)
-        n_rerun = landed.count()
-        n_ids = landed.select("id").distinct().count()
-        n_quarantined = spark.read.parquet(f"{out}_quarantine").count()
+        n_rerun = ids(out).count()
+        n_ids = ids(out).distinct().count()
+        n_quarantined = ids(f"{out}_quarantine").count()
         rows = [
             ("initial_drain", n_initial),
             ("after_late_arrival", n_late),
@@ -466,7 +471,7 @@ def s6_stream_base_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_delta = F.col("doc_id") % D10_DELTA_MOD == 0
 
     base_fps = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        load_table(spark, sf_dir, "documents")
         .filter(~is_delta)
         .select(fp)
         .distinct()
@@ -526,9 +531,7 @@ def s7_stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .maintenance import cdc_apply_rollup, cdc_changes
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text", "lang"
-    )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "lang")
     changes = cdc_changes(docs)
     base_dir = tempfile.mkdtemp(prefix="miis_s7_")
     try:

@@ -102,6 +102,18 @@ def get_spark(
     builder = builder.config(
         "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
     )
+    if master.startswith("local"):
+        # Past the threshold (32 paths) Spark lists files with a Spark
+        # job, one task per path. A file stream re-lists its last
+        # committed batch's files on every restart, so each
+        # stream_comments call over a 52-file docket paid two 52-task
+        # listing jobs. On local[N] those tasks run in the driver's JVM
+        # anyway, so listing them inline does the same I/O without the
+        # jobs. A cluster keeps the parallel listing that S3-scale trees
+        # need, and extra_conf still overrides this value.
+        builder = builder.config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold", "2147483647"
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -10,9 +10,10 @@ For each named query (or a family prefix with ``--family x``):
   cite);
 * with ``--plan <tag>``, write ``plans/r17/<query>_<tag>.txt`` with the
   ``explain("formatted")`` output of the returned frame, followed by
-  the plan of every ``collect()`` the query ran while building it (fit
-  collects, and the bounded result a materializing operator collects
-  before handing back a local frame).
+  the plan of every ``collect()``, ``count()`` and parquet write the
+  query ran while building it (fit collects, the bounded result a
+  materializing operator collects before handing back a local frame,
+  and a pipeline's table writes and landed-row counts).
 
 This never touches BENCH_DETAIL.json — it is a measurement sidecar,
 not the bench.
@@ -134,21 +135,33 @@ def main() -> int:
                     d._jdf.queryExecution(), "formatted"
                 )
 
-            collected = []
+            actions = []
             frame_cls = type(spark.range(0))  # the concrete DataFrame class
-            real_collect = frame_cls.collect
+            writer_cls = type(spark.range(0).write)
+            hooks = [
+                (frame_cls, "collect", "collect", lambda d: d),
+                (frame_cls, "count", "count", lambda d: d),
+                (writer_cls, "parquet", "write", lambda w: w._df),
+                (writer_cls, "save", "write", lambda w: w._df),
+            ]
+            real = [getattr(cls, meth) for cls, meth, _, _ in hooks]
 
-            def _collect(self):
-                collected.append(_explain(self))
-                return real_collect(self)
+            def _hook(orig, kind, frame):
+                def run(self, *a, **kw):
+                    actions.append((kind, _explain(frame(self))))
+                    return orig(self, *a, **kw)
 
-            frame_cls.collect = _collect
+                return run
+
+            for (cls, meth, kind, frame), orig in zip(hooks, real):
+                setattr(cls, meth, _hook(orig, kind, frame))
             try:
                 df = fn(spark, sf_dir)
             finally:
-                frame_cls.collect = real_collect
+                for (cls, meth, _, _), orig in zip(hooks, real):
+                    setattr(cls, meth, orig)
             txt = _explain(df) + "".join(
-                f"\n== collect {i} ==\n{t}" for i, t in enumerate(collected)
+                f"\n== {kind} {i} ==\n{t}" for i, (kind, t) in enumerate(actions)
             )
             path = os.path.join(plans_dir, f"{name}_{plan_tag}.txt")
             with open(path, "w") as fh:

@@ -22,6 +22,23 @@ from mirrulations_iceberg_spark.tables import TABLE_NAMES
 SF_DIR = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+def job_count(spark, group: str) -> int:
+    """Spark jobs started so far under job group ``group``."""
+    return len(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+
+
+def jobs_during(spark, fn):
+    """(fn's result, number of Spark jobs fn started on this thread)."""
+    sc = spark.sparkContext
+    group = f"jobs-during-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, job_count(spark, group)
+
+
 @pytest.fixture(scope="session")
 def spark():
     return get_spark(app_name="pytest", shuffle_partitions=8)

@@ -3,6 +3,7 @@ partitioned parquet, with tolerant-scan quarantine (SURVEY Phase 2)."""
 
 from __future__ import annotations
 
+import glob
 import os
 
 import pytest
@@ -14,6 +15,8 @@ from mirrulations_iceberg_spark.etl import (
 )
 from mirrulations_iceberg_spark.etl.fixtures import write_docket_tree
 from mirrulations_iceberg_spark.etl.ingest import split_corrupt
+
+from .conftest import jobs_during
 
 
 @pytest.fixture(scope="module")
@@ -45,6 +48,33 @@ def test_rerun_into_same_out_dir_counts_quarantine_once(spark, tree, tmp_path):
     out = str(tmp_path / "out")
     for _ in range(2):
         assert run_pipeline(spark, root, out).quarantined == expected["corrupt"]
+
+
+def test_clean_rerun_replaces_stale_quarantine(spark, tmp_path):
+    """A run with no corrupt rows writes no quarantine rows, yet must
+    not leave the previous run's rows behind in the same ``out_dir``."""
+    root, out = str(tmp_path / "tree"), str(tmp_path / "out")
+    expected = write_docket_tree(root)
+    assert run_pipeline(spark, root, out).quarantined == expected["corrupt"]
+    corrupt = glob.glob(os.path.join(root, "**", "corrupt-*.json"), recursive=True)
+    assert len(corrupt) == expected["corrupt"]
+    for path in corrupt:
+        os.remove(path)
+    assert run_pipeline(spark, root, out).quarantined == 0
+    assert spark.read.parquet(os.path.join(out, "quarantine")).count() == 0
+
+
+def test_convert_runs_one_job_per_write(spark, tree, tmp_path):
+    """Three table writes plus one quarantine write: the counts ride the
+    writes as observations and the re-read declares its schema."""
+    root, expected = tree
+    out = str(tmp_path / "out")
+    res, n_jobs = jobs_during(spark, lambda: run_pipeline(spark, root, out))
+    assert n_jobs <= 4
+    assert res.quarantined == expected["corrupt"]
+    for table, df in res.tables.items():
+        assert df.dtypes == spark.read.parquet(os.path.join(out, table)).dtypes
+        assert df.columns[-1] == "agencyId"
 
 
 def test_comments_schema(result):

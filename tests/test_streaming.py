@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 
@@ -13,7 +14,7 @@ from mirrulations_iceberg_spark.streaming import (
     windowed_event_counts,
 )
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, job_count
 
 
 @pytest.fixture()
@@ -66,6 +67,23 @@ def test_incremental_exactly_once(spark, tree, tmp_path):
     q = stream_comments(spark, root, out, ckpt)
     q.awaitTermination()
     assert spark.read.parquet(out).count() == expected["comments"] + 1
+
+
+def test_second_stream_call_runs_four_jobs(spark, tree, tmp_path):
+    """A restart lists its new files, and re-lists its last committed
+    batch's, on the driver of a local session: a replica of 52 comment
+    files (past Spark's 32-path parallel-listing threshold) adds no
+    listing job to the drain's own jobs. With two listing jobs it ran 6."""
+    root, expected = tree
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    stream_comments(spark, root, out, ckpt).awaitTermination()
+    write_docket_tree(root, replica=1)
+    n_files = len(glob.glob(os.path.join(root, "*", "raw-data", "comments", "*.json")))
+    assert n_files == 2 * (expected["comments"] + expected["corrupt"])  # 2 × 52
+    q = stream_comments(spark, root, out, ckpt)
+    q.awaitTermination()
+    assert job_count(spark, str(q.runId)) <= 4
+    assert spark.read.parquet(out).count() == 2 * expected["comments"]
 
 
 def test_stream_quarantines_corrupt(spark, tree, tmp_path):

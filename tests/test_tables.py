@@ -9,7 +9,6 @@ from __future__ import annotations
 
 import sys
 import threading
-import uuid
 from collections import OrderedDict
 from types import SimpleNamespace
 
@@ -22,19 +21,9 @@ from pyspark.sql.types import LongType, StructField, StructType
 from mirrulations_iceberg_spark import tables
 from mirrulations_iceberg_spark.tables import load_table, parquet_schema
 
+from .conftest import jobs_during
+
 NANOS = "spark.sql.legacy.parquet.nanosAsLong"
-
-
-def _jobs_during(spark, fn):
-    """(fn's result, number of Spark jobs fn started)."""
-    sc = spark.sparkContext
-    group = f"schema-memo-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "")
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _write(path, **cols):
@@ -43,8 +32,8 @@ def _write(path, **cols):
 
 def test_second_load_starts_no_job(spark, tmp_path):
     _write(tmp_path / "region.parquet", r_key=[1, 2], r_name=["a", "b"])
-    first, n_first = _jobs_during(spark, lambda: load_table(spark, str(tmp_path), "region"))
-    again, n_again = _jobs_during(spark, lambda: load_table(spark, str(tmp_path), "region"))
+    first, n_first = jobs_during(spark, lambda: load_table(spark, str(tmp_path), "region"))
+    again, n_again = jobs_during(spark, lambda: load_table(spark, str(tmp_path), "region"))
     assert n_first >= 1  # the inference job the memo saves
     assert n_again == 0
     assert again.schema == first.schema
@@ -75,7 +64,7 @@ def test_nanos_as_long_flip_is_its_own_entry(spark, tmp_path):
         with pytest.raises(AnalysisException):
             parquet_schema(spark, path)
         spark.conf.set(NANOS, "true")
-        schema, n_jobs = _jobs_during(spark, lambda: parquet_schema(spark, path))
+        schema, n_jobs = jobs_during(spark, lambda: parquet_schema(spark, path))
         assert schema["ts"].dataType == LongType() and n_jobs == 0
     finally:
         spark.conf.set(NANOS, before)
