@@ -149,13 +149,32 @@ def with_shingles(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
 
 
 def content_fp_from_toks(toks):
-    """md5 over space-joined tokens — the ONE exact-dup content
-    identity every collapse/staging operator shares (d1/d10/d16/d17/
-    d18, e2/e9/e13, s6). DuckDB twin, kept in lockstep by the oracles:
+    """md5 over space-joined tokens — the exact-dup content identity.
+    Every operator that keys on exact-duplicate content computes it
+    through this helper, never through its own copy. DuckDB twin, kept
+    in lockstep by the oracles:
     ``md5(array_to_string(regexp_extract_all(lower(text), TOKEN_PATTERN),
     ' '))``. A tokenizer/normalization change edits THIS helper (and
-    the oracle twin), never per-operator copies."""
+    the oracle twin)."""
     return F.md5(F.concat_ws(" ", toks))
+
+
+def fingerprint_reps(rows: DataFrame, keys: list[str], payload: str) -> DataFrame:
+    """Collapse ``rows`` to one representative per fingerprint group.
+
+    A group (``keys``, e.g. ``["__fp"]`` or ``["lang", "__fp"]``) is
+    represented by its ``min(doc_id)`` and that doc's ``payload``
+    column, and carries its member count ``n`` and ``id_sum`` (so a
+    group-level flag expands to member counts arithmetically). A side
+    that reads only ``doc_id``/``payload`` selects them, and Catalyst
+    prunes the unread aggregates.
+    """
+    return rows.groupBy(*keys).agg(
+        F.min("doc_id").alias("doc_id"),
+        F.min_by(payload, "doc_id").alias(payload),
+        F.count(F.lit(1)).alias("n"),
+        F.sum("doc_id").alias("id_sum"),
+    )
 
 
 def d1_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1352,12 +1371,13 @@ def d16_cluster_best_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape — the production STAGING, not just the production
     pair path: exact duplicates collapse to one representative per
-    token-fingerprint BEFORE near-dup pair generation (the d1-then-d3
-    ordering every real pipeline uses), so identical copies never
-    enter the LSH join — the replicated/mirror-heavy regime that makes
-    pair materialization quadratic in copy count does its work in one
-    fingerprint hash-agg instead (measured 45.7×→~1× wall at the 100×
-    all-clones stress). The LSH pairs then run over representatives
+    token-fingerprint (:func:`fingerprint_reps`) BEFORE near-dup pair
+    generation (the d1-then-d3 ordering every real pipeline uses), so
+    identical copies never enter the LSH join — the
+    replicated/mirror-heavy regime that makes pair materialization
+    quadratic in copy count does its work in one fingerprint hash-agg
+    instead (measured 45.7×→~1× wall at the 100× all-clones stress).
+    The LSH pairs then run over representatives
     only (d3's banded MinHash + exact-Jaccard verify — output provably
     equal to the exact pair set); components via diameter-bounded
     min-label propagation; membership expands back through the
@@ -1385,12 +1405,11 @@ def d16_cluster_best_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         # cache, or the tokenize+md5 lineage executes twice
         .cache()
     )
-    reps = docs.groupBy("__fp").agg(
-        F.min("doc_id").alias("doc_id"),
-        F.min_by("text", "doc_id").alias("text"),
-    )
+    reps = fingerprint_reps(docs, ["__fp"], "text")
     lsh_caches: list = []
-    pairs = minhash_lsh_pairs_over(reps, caches=lsh_caches)
+    pairs = minhash_lsh_pairs_over(
+        reps.select("doc_id", "text"), caches=lsh_caches
+    )
     cc = connected_components(pairs, src="doc_a", dst="doc_b")
     # reps already holds (fp -> min doc_id): reuse, don't re-aggregate
     rep_map = reps.select("__fp", F.col("doc_id").alias("rep"))
@@ -1944,18 +1963,18 @@ def d18_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     novel remainder, flag rate in basis points, and an id checksum
     pinning the flagged SET.
 
-    Scale shape: d16/d17's staging on BOTH sides — each side collapses
-    to one representative per (content-fingerprint) group before any
-    signature work (the delta additionally keyed by lang to keep the
-    rollup a pure group property), so clone-heavy corpora cost
-    hash-aggs, not quadratic buckets. Cross-LSH then pairs delta reps
+    Scale shape: both sides collapse through :func:`fingerprint_reps`
+    (the d16/s9/e14 collapse) before any signature work — the base per
+    fingerprint, the delta per (lang, fingerprint) to keep the rollup a
+    pure group property — so clone-heavy corpora cost hash-aggs, not
+    quadratic buckets. Cross-LSH then pairs delta reps
     against base reps ONLY (no delta×delta, no base×base — the base's
     internal duplication is irrelevant to admission, and at 100 TB the
     base side is a stored signature/fingerprint table bucketed on
     band-bucket, so each ingest co-locates instead of rescanning
     text). Member-level flags expand arithmetically: exact copies of a
     flagged rep are near-dups of the same base doc, so a group's flag
-    is a group property (n, id_sum carried through the collapse).
+    is a group property (the collapse's ``n`` and ``id_sum``).
 
     Oracle: the UNCOLLAPSED exact cross-Jaccard pair set (valid by
     d3's recall-1 argument, which the exact verify makes deterministic)
@@ -1964,26 +1983,13 @@ def d18_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = parallelize_scan(load_table(spark, sf_dir, "documents"))
     fp = content_fp_from_toks(tokens_col(F.col("text"))).alias("__fp")
     is_delta = F.col("doc_id") % D10_DELTA_MOD == 0
-    dg = (
-        docs.filter(is_delta)
-        .select("doc_id", "lang", "text", fp)
-        .groupBy("lang", "__fp")
-        .agg(
-            F.min("doc_id").alias("doc_id"),
-            F.min_by("text", "doc_id").alias("text"),
-            F.count(F.lit(1)).alias("n"),
-            F.sum("doc_id").alias("id_sum"),
-        )
-        .cache()
-    )
-    bg = (
-        docs.filter(~is_delta)
-        .select("doc_id", "text", fp)
-        .groupBy("__fp")
-        .agg(
-            F.min("doc_id").alias("doc_id"),
-            F.min_by("text", "doc_id").alias("text"),
-        )
+    dg = fingerprint_reps(
+        docs.filter(is_delta).select("doc_id", "lang", "text", fp),
+        ["lang", "__fp"],
+        "text",
+    ).cache()
+    bg = fingerprint_reps(
+        docs.filter(~is_delta).select("doc_id", "text", fp), ["__fp"], "text"
     )
     lsh_caches: list = []
     flagged_reps = (

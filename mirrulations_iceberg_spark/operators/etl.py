@@ -13,7 +13,7 @@ from __future__ import annotations
 import shutil
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..etl.fixtures import expected_counts, write_docket_tree
@@ -799,27 +799,106 @@ def e8_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 E9_MIN_TOKENS = 20  # delta-admission quality gate
 
 
+def _delta_stages(docs: DataFrame, base_fps: DataFrame) -> DataFrame:
+    """The arriving delta (``doc_id % D10_DELTA_MOD == 0``) of the
+    tokenized ``docs`` as ONE frame — ``doc_id, lang, __toks, __fp`` —
+    with one boolean flag per admission stage, each a subset of the
+    one before:
+
+    * ``__g``: passes the ``E9_MIN_TOKENS`` quality gate;
+    * ``__e``: ``__g`` and the minimum ``doc_id`` of its fingerprint
+      (exact dedup WITHIN the delta);
+    * ``__n``: ``__e`` and its fingerprint is not in ``base_fps``
+      (exact novelty against the base corpus).
+
+    The window runs over every delta row, not only the gated ones.
+    That is the same window: ``__fp`` is a function of the token list,
+    so every row of a fingerprint partition has the same gate value.
+    ``base_fps`` (one ``__fp`` column) must be distinct on ``__fp``,
+    or the left join duplicates delta rows.
+    """
+    from pyspark.sql import Window
+
+    from .dedup import D10_DELTA_MOD
+
+    first_of_fp = F.col("doc_id") == F.min("doc_id").over(
+        Window.partitionBy("__fp")
+    )
+    return (
+        docs.filter(F.col("doc_id") % D10_DELTA_MOD == 0)
+        .select(
+            "doc_id",
+            "lang",
+            "__toks",
+            _content_fp(F.col("__toks")).alias("__fp"),
+            (F.size("__toks") >= E9_MIN_TOKENS).alias("__g"),
+        )
+        .withColumn("__e", F.col("__g") & first_of_fp)
+        .join(base_fps.withColumn("__in_base", F.lit(True)), "__fp", "left")
+        .withColumn("__n", F.col("__e") & F.col("__in_base").isNull())
+        .drop("__in_base")
+    )
+
+
+def _stage_report(
+    stages: DataFrame, dropped: DataFrame, **extra: Column
+) -> DataFrame:
+    """One bounded per-language row per language of the delta: every
+    stage's survivor count, then the ADMITTED set's ``extra`` sums, token
+    mass and id checksum (pinning the exact admitted set).
+
+    A row of ``stages`` (see :func:`_delta_stages`) is admitted when it
+    is novel (``__n``) and its ``doc_id`` is not in the caller's
+    ``dropped`` set (one ``doc_id`` column, distinct) — the last stage.
+    One left join and one ``groupBy("lang")`` give every count.
+    """
+    dropped = dropped.withColumn("__drop", F.lit(True))
+    admitted = F.col("__n") & F.col("__drop").isNull()
+
+    def _admitted_sum(c: Column) -> Column:
+        return F.coalesce(F.sum(F.when(admitted, c)), F.lit(0))
+
+    sums = {
+        **extra,
+        "admitted_tokens": F.size("__toks").cast("long"),
+        "id_checksum": F.col("doc_id"),
+    }
+    return (
+        stages.join(dropped, "doc_id", "left")
+        .groupBy("lang")
+        .agg(
+            F.count(F.lit(1)).alias("n_delta"),
+            F.count_if("__g").alias("n_gated"),
+            F.count_if("__e").alias("n_exact"),
+            F.count_if("__n").alias("n_novel"),
+            F.count_if(admitted).alias("n_admitted"),
+            *[_admitted_sum(c).alias(name) for name, c in sums.items()],
+        )
+        .orderBy("lang")
+    )
+
+
 def e9_refresh_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The second flagship — CONTINUOUS-ingest corpus refresh, composed
     end-to-end the way a production pipeline admits each arriving
     batch: quality gate → exact dedup WITHIN the delta → novelty
-    anti-join against the base corpus → benchmark decontamination →
+    against the base corpus → benchmark decontamination →
     per-language admission report with every stage's survivor count
     (the observability a curation team actually reviews). e2 is the
     batch-curation flagship; e9 is its incremental twin (d10's
     split convention: ``doc_id % {mod} == 0`` is the arriving delta).
 
-    Stage order is the cost order: the token-length gate prunes on the
-    scan, fingerprinting runs only on survivors, the base side reduces
-    to DISTINCT fingerprints before its anti-join (32-byte keys
-    through the shuffle, never text — d10's shape), and the benchmark
-    shingle set broadcasts (benchmark-sized at any corpus — d9's
-    shape). Output is one bounded per-language row carrying all five
-    stage counts, admitted token mass, and an id checksum pinning the
-    exact admitted SET.
+    The stages are flags on one delta frame (:func:`_delta_stages`),
+    not one re-derived frame per stage, so the delta is scanned and
+    tokenized once for every count. The base side reduces to DISTINCT
+    fingerprints before its join (32-byte keys through the shuffle,
+    never text — d10's shape), and the benchmark shingle set
+    broadcasts (benchmark-sized at any corpus — d9's shape). Only
+    novel rows are shingled for decontamination, and the contaminated
+    ids are the drop set of :func:`_stage_report`: one bounded
+    per-language row carrying all five stage counts, admitted token
+    mass, and an id checksum pinning the exact admitted SET.
     """
-    from pyspark.sql import Window
-
     from ..tables import load_table
     from .dedup import (
         DECON_MOD,
@@ -832,21 +911,10 @@ def e9_refresh_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = parallelize_scan(load_table(spark, sf_dir, "documents")).withColumn(
         "__toks", tokens_col(F.col("text"))
     )
-    is_delta = F.col("doc_id") % D10_DELTA_MOD == 0
-    base = docs.filter(~is_delta)
-    delta = docs.filter(is_delta).select("doc_id", "lang", "__toks")
-
-    gated = delta.filter(F.size("__toks") >= E9_MIN_TOKENS)
-    fp = gated.withColumn("__fp", _content_fp(F.col("__toks")))
-    w_fp = Window.partitionBy("__fp")
-    exact = fp.withColumn("__min_id", F.min("doc_id").over(w_fp)).filter(
-        F.col("doc_id") == F.col("__min_id")
+    base = docs.filter(F.col("doc_id") % D10_DELTA_MOD != 0)
+    stages = _delta_stages(
+        docs, base.select(_content_fp(F.col("__toks")).alias("__fp")).distinct()
     )
-    base_fps = base.select(
-        _content_fp(F.col("__toks")).alias("__fp")
-    ).distinct()
-    novel = exact.join(base_fps, "__fp", "left_anti")
-
     bench_shingles = (
         base.filter(F.col("doc_id") % DECON_MOD == 0)
         .select(
@@ -855,52 +923,15 @@ def e9_refresh_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     contaminated = (
-        novel.select(
+        stages.filter("__n")
+        .select(
             "doc_id", F.explode(shingles_from_tokens(F.col("__toks"))).alias("sh")
         )
         .join(F.broadcast(bench_shingles), "sh", "left_semi")
         .select("doc_id")
         .distinct()
     )
-    admitted = novel.join(contaminated, "doc_id", "left_anti")
-
-    def _stage(df: DataFrame, name: str) -> DataFrame:
-        return df.groupBy("lang").agg(F.count(F.lit(1)).alias(name))
-
-    out = (
-        _stage(delta, "n_delta")
-        .join(_stage(gated, "n_gated"), "lang", "left")
-        .join(_stage(exact, "n_exact"), "lang", "left")
-        .join(_stage(novel, "n_novel"), "lang", "left")
-        .join(
-            admitted.groupBy("lang").agg(
-                F.count(F.lit(1)).alias("n_admitted"),
-                F.sum(F.size("__toks").cast("long")).alias(
-                    "admitted_tokens"
-                ),
-                F.sum("doc_id").alias("id_checksum"),
-            ),
-            "lang",
-            "left",
-        )
-        .select(
-            "lang",
-            "n_delta",
-            *[
-                F.coalesce(F.col(c), F.lit(0)).alias(c)
-                for c in (
-                    "n_gated",
-                    "n_exact",
-                    "n_novel",
-                    "n_admitted",
-                    "admitted_tokens",
-                    "id_checksum",
-                )
-            ],
-        )
-        .orderBy("lang")
-    )
-    return out
+    return _stage_report(stages, contaminated)
 
 
 def _e8_oracle() -> str:
@@ -1007,39 +1038,40 @@ def _e9_oracle() -> str:
 
 def e14_release_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The THIRD flagship — full RELEASE admission for an arriving
-    batch, e9's refresh upgraded with the two r9 stages a production
-    release actually adds: near-dup novelty (paraphrased re-submissions
-    that slip past the exact-fingerprint gate, d18's cross-frame LSH)
-    and train/holdout ROUTING of the admitted set (o8's deterministic
-    split rule). Composed end-to-end: quality gate → exact dedup
-    WITHIN the delta → exact novelty anti-join vs the base's distinct
-    fingerprints → NEAR-dup novelty vs the base's fingerprint
-    representatives → split routing → one bounded per-language release
-    report carrying every stage's survivor count, the train/holdout
-    routing, admitted token mass, and an id checksum pinning the
-    admitted SET. (e9 keeps the benchmark-decontamination stage on the
-    oracle board; a deployment chains both.)
+    batch: e9's refresh with near-dup novelty (paraphrased
+    re-submissions that slip past the exact-fingerprint gate, d18's
+    cross-frame LSH) in place of decontamination, and train/holdout
+    ROUTING of the admitted set (o8's deterministic split rule).
+    Composed end-to-end: quality gate → exact dedup WITHIN the delta →
+    exact novelty vs the base's distinct fingerprints → NEAR-dup
+    novelty vs the base's fingerprint representatives → split routing
+    → one bounded per-language release report carrying every stage's
+    survivor count, the train/holdout routing, admitted token mass,
+    and an id checksum pinning the admitted SET. (e9 keeps the
+    benchmark-decontamination stage on the oracle board; a deployment
+    chains both.)
 
-    Scale shape, stage by stage: the gate prunes on the scan;
-    fingerprints are 32-byte keys through every exchange (d10); ONE
-    base collapse (fp → rep) serves both the exact anti-join and the
-    cross-LSH base side; the cross-LSH pairs delta survivors against
-    base reps only (no delta×delta, no base×base — d18's shape, the
-    reason the all-novel stress is 6× not 35×); and the report is
-    |langs|-bounded. At 100 TB the base rep/signature table is a
-    stored, bucketed artifact — each release prices at the delta, not
-    the corpus.
+    Scale shape, stage by stage: the stages are flags on one delta
+    frame (:func:`_delta_stages`), so the delta is scanned and
+    tokenized once; fingerprints are 32-byte keys through every
+    exchange (d10); ONE cached base collapse
+    (:func:`dedup.fingerprint_reps`, fp → rep) serves both the exact
+    novelty join and the cross-LSH base side; the cross-LSH pairs
+    novel delta rows against base reps only (no delta×delta, no
+    base×base — d18's shape); its flagged ids are the drop set of
+    :func:`_stage_report`, whose report is |langs|-bounded. At 100 TB
+    the base rep/signature table is a stored, bucketed artifact — each
+    release prices at the delta, not the corpus.
 
     Oracle: e9's stage-replay prefix + d18's uncollapsed exact
     cross-Jaccard pair set + o8's split CASE — every stage count
     hash-checked.
     """
-    from pyspark.sql import Window
-
     from ..tables import load_table
     from .dedup import (
         D10_DELTA_MOD,
         _o8_split_col,
+        fingerprint_reps,
         minhash_lsh_cross_pairs_over,
         parallelize_scan,
     )
@@ -1049,90 +1081,36 @@ def e14_release_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = parallelize_scan(load_table(spark, sf_dir, "documents")).withColumn(
         "__toks", tokens_col(F.col("text"))
     )
-    is_delta = F.col("doc_id") % D10_DELTA_MOD == 0
-    base = docs.filter(~is_delta)
-    delta = docs.filter(is_delta).select("doc_id", "lang", "__toks")
-
-    gated = delta.filter(F.size("__toks") >= E9_MIN_TOKENS)
-    fp = gated.withColumn("__fp", _content_fp(F.col("__toks")))
-    w_fp = Window.partitionBy("__fp")
-    exact = (
-        fp.withColumn("__min_id", F.min("doc_id").over(w_fp))
-        .filter(F.col("doc_id") == F.col("__min_id"))
-        .drop("__min_id")
-    )
-    # ONE base collapse serves the exact anti-join AND the LSH base side
     bg = (
-        base.select(
-            "doc_id", _content_fp(F.col("__toks")).alias("__fp"), "__toks"
+        fingerprint_reps(
+            docs.filter(F.col("doc_id") % D10_DELTA_MOD != 0).select(
+                "doc_id", "__toks", _content_fp(F.col("__toks")).alias("__fp")
+            ),
+            ["__fp"],
+            "__toks",
         )
-        .groupBy("__fp")
-        .agg(
-            F.min("doc_id").alias("doc_id"),
-            F.min_by("__toks", "doc_id").alias("__toks"),
-        )
+        .select("__fp", "doc_id", "__toks")
         .cache()
     )
-    novel = exact.join(bg.select("__fp"), "__fp", "left_anti").cache()
+    stages = _delta_stages(docs, bg.select("__fp")).cache()
     lsh_caches: list = []
     flagged = (
         minhash_lsh_cross_pairs_over(
-            novel.select("doc_id", "__toks"),
+            stages.filter("__n").select("doc_id", "__toks"),
             bg.select("doc_id", "__toks"),
             caches=lsh_caches,
         )
         .select(F.col("doc_a").alias("doc_id"))
         .distinct()
     )
-    admitted = novel.join(flagged, "doc_id", "left_anti").withColumn(
-        "split", _o8_split_col(F.col("doc_id"))
+    split = _o8_split_col(F.col("doc_id"))
+    out = _stage_report(
+        stages,
+        flagged,
+        n_train=(split == "train").cast("long"),
+        n_holdout=(split == "holdout").cast("long"),
     )
-
-    def _stage(df: DataFrame, name: str) -> DataFrame:
-        return df.groupBy("lang").agg(F.count(F.lit(1)).alias(name))
-
-    out = (
-        _stage(delta, "n_delta")
-        .join(_stage(gated, "n_gated"), "lang", "left")
-        .join(_stage(exact, "n_exact"), "lang", "left")
-        .join(_stage(novel, "n_novel"), "lang", "left")
-        .join(
-            admitted.groupBy("lang").agg(
-                F.count(F.lit(1)).alias("n_admitted"),
-                F.sum((F.col("split") == "train").cast("long")).alias(
-                    "n_train"
-                ),
-                F.sum((F.col("split") == "holdout").cast("long")).alias(
-                    "n_holdout"
-                ),
-                F.sum(F.size("__toks").cast("long")).alias(
-                    "admitted_tokens"
-                ),
-                F.sum("doc_id").alias("id_checksum"),
-            ),
-            "lang",
-            "left",
-        )
-        .select(
-            "lang",
-            "n_delta",
-            *[
-                F.coalesce(F.col(c), F.lit(0)).alias(c)
-                for c in (
-                    "n_gated",
-                    "n_exact",
-                    "n_novel",
-                    "n_admitted",
-                    "n_train",
-                    "n_holdout",
-                    "admitted_tokens",
-                    "id_checksum",
-                )
-            ],
-        )
-        .orderBy("lang")
-    )
-    return materialize_release(spark, out, bg, novel, *lsh_caches)
+    return materialize_release(spark, out, bg, stages, *lsh_caches)
 
 
 def e13_cluster_aware_split(spark: SparkSession, sf_dir: str) -> DataFrame:

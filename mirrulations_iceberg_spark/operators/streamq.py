@@ -632,7 +632,7 @@ def s9_stream_neardup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrive as a file-source stream in THREE deterministic deliveries
     (``maxFilesPerTrigger=1`` → three micro-batches), and each
     micro-batch runs d18's cross-frame banded-LSH probe
-    (``dedup.minhash_lsh_cross_pairs_over``, dedup.py:1767) against
+    (``dedup.minhash_lsh_cross_pairs_over``) against
     the STATIC base rep table inside ``foreachBatch`` — the shape a
     continuously-ingesting curation pipeline deploys: the base's
     signature index is standing state, each arriving batch probes it,
@@ -646,7 +646,10 @@ def s9_stream_neardup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     across batches) equals d18's single-pass batch answer. The oracle
     IS d18's SQL verbatim (the s6 parity discipline), so the driver
     row proves stream/batch parity of the whole admission pipeline.
-    BOUNDARY (review r14): the LSH degenerate-bucket cap counts probe
+    Both sides collapse through :func:`dedup.fingerprint_reps`, as in
+    d18 (the base per fingerprint, each batch per (lang, fingerprint)),
+    so the representative rule is d18's by construction.
+    BOUNDARY: the LSH degenerate-bucket cap counts probe
     AND base rows per (band, bucket), so a bucket hot enough to trip
     it can be dropped by d18's all-at-once probe yet survive s9's
     smaller per-batch probes — exact parity is the contract only
@@ -656,9 +659,9 @@ def s9_stream_neardup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself batch-composition-dependent and cannot be made
     batch-invariant without shipping the whole probe set). The
     boundary is EXECUTABLE, not prose: a runtime headroom guard below
-    fails loudly when any possible bucket nears the cap (ADVICE r14),
-    and ``tests/test_r15_operators.py`` pins the divergence-then-
-    parity behavior on an engineered hot bucket (VERDICT r14 #6).
+    fails loudly when any possible bucket nears the cap, and
+    ``tests/test_r15_operators.py`` pins the divergence-then-parity
+    behavior on an engineered hot bucket.
 
     Scale shape: the base side reduces to one rep per fingerprint ONCE
     and is cached across micro-batches (at 100 TB: the stored,
@@ -679,43 +682,33 @@ def s9_stream_neardup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import (
         D10_DELTA_MOD,
         content_fp_from_toks,
+        fingerprint_reps,
         lsh_band_buckets,
         minhash_lsh_cross_pairs_over,
+        minhash_signatures,
+        parallelize_scan,
         tokens_col,
     )
 
-    from .dedup import minhash_signatures, parallelize_scan
-
-    # the d18 convention: load_table validates the name, and
-    # parallelize_scan spreads the single-row-group fixture scan —
-    # the base signature build below is the run's heaviest stage and
-    # would otherwise run on one task (review r14)
+    # parallelize_scan spreads the single-row-group fixture scan: the
+    # base signature build below is the run's heaviest stage and would
+    # otherwise run on one task
     docs = parallelize_scan(load_table(spark, sf_dir, "documents"))
     fp = content_fp_from_toks(tokens_col(F.col("text"))).alias("__fp")
     is_delta = F.col("doc_id") % D10_DELTA_MOD == 0
-    # d18's bg collapsed reps, then SIGNED once: the standing signature
+    # the collapsed base reps, SIGNED once: the standing signature
     # index every micro-batch probes (the stored-index shape of the
     # 100 TB story). Caching raw text here instead would re-shingle and
-    # re-hash the whole base per batch — measured 8.4s → this shape in
-    # the r14 bench note.
-    bg = (
-        docs.filter(~is_delta)
-        .select("doc_id", "text", fp)
-        .groupBy("__fp")
-        .agg(
-            F.min("doc_id").alias("doc_id"),
-            F.min_by("text", "doc_id").alias("text"),
-        )
-        .select("doc_id", "text")
-    )
+    # re-hash the whole base per batch.
+    bg = fingerprint_reps(
+        docs.filter(~is_delta).select("doc_id", "text", fp), ["__fp"], "text"
+    ).select("doc_id", "text")
     base_sigs = minhash_signatures(bg).cache()
-    # r17 (VERDICT r16 #4): the base's band-bucket index is standing
-    # state too — computed and cached ONCE, so each micro-batch
-    # shuffles only its own bands and joins the stored index, instead
-    # of re-exploding + re-shuffling (and re-caching, via the old
-    # probe-side union) the whole base per batch.
+    # the base's band-bucket index is standing state too — computed and
+    # cached ONCE, so each micro-batch shuffles only its own bands and
+    # joins the stored index instead of re-exploding the whole base.
     base_buckets = lsh_band_buckets(base_sigs, "bids").cache()
-    # Cap-proximity guard (ADVICE r14): the parity contract above holds
+    # Cap-proximity guard: the parity contract above holds
     # only while the LSH degenerate-bucket cap never fires — on either
     # side. The union of base signatures and the full delta's collapsed
     # reps bounds every bucket d18's all-at-once probe forms, and each
@@ -727,28 +720,22 @@ def s9_stream_neardup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     # + a bounded hash-agg (measured occupancy 3–4 vs cap 1000).
     from .dedup import LSH_MAX_BUCKET, lsh_hottest_bucket
 
-    dg_all = (
-        docs.filter(is_delta)
-        .select("doc_id", "lang", "text", fp)
-        .groupBy("lang", "__fp")
-        .agg(
-            F.min("doc_id").alias("doc_id"),
-            F.min_by("text", "doc_id").alias("text"),
-        )
-        .select("doc_id", "text")
-    )
+    dg_all = fingerprint_reps(
+        docs.filter(is_delta).select("doc_id", "lang", "text", fp),
+        ["lang", "__fp"],
+        "text",
+    ).select("doc_id", "text")
     base = tempfile.mkdtemp(prefix="miis_s9_")
     partials: list[tuple] = []
     try:
-        # r17 (guide §2.6 "overlap independent jobs"): the guard pass
-        # and the delta landing write are independent actions on
-        # independent lineages — run them from a 2-thread pool so the
-        # landing back-fills the guard's tail instead of queueing
-        # behind it. The guard reuses the CACHED base bucket index for
-        # the base side of the occupancy (no second base explode —
-        # lsh_hottest_bucket sums the sides' per-bucket counts, which
-        # over disjoint id spaces is exactly the old unioned-frame
-        # occupancy). The raise still happens before any micro-batch
+        # The guard pass and the delta landing write are independent
+        # actions on independent lineages — run them from a 2-thread
+        # pool so the landing back-fills the guard's tail instead of
+        # queueing behind it. The guard reuses the CACHED base bucket
+        # index for the base side of the occupancy (no second base
+        # explode — lsh_hottest_bucket sums the sides' per-bucket
+        # counts, which over disjoint id spaces is the occupancy of
+        # the two sides' union). The raise still happens before any micro-batch
         # runs: both futures resolve before the stream starts.
         def _guard() -> int:
             return lsh_hottest_bucket(
@@ -797,13 +784,10 @@ def s9_stream_neardup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
         def probe(batch_df: DataFrame, _batch_id: int) -> None:
-            dg = batch_df.select("doc_id", "lang", "text", fp).groupBy(
-                "lang", "__fp"
-            ).agg(
-                F.min("doc_id").alias("doc_id"),
-                F.min_by("text", "doc_id").alias("text"),
-                F.count(F.lit(1)).alias("n"),
-                F.sum("doc_id").alias("id_sum"),
+            dg = fingerprint_reps(
+                batch_df.select("doc_id", "lang", "text", fp),
+                ["lang", "__fp"],
+                "text",
             )
             caches: list = []
             flagged = (
@@ -862,8 +846,8 @@ def s9_stream_neardup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         # stream itself is stateless (foreachBatch), so the conf here
         # governs the PROBE's batch-side shuffles — tokenize/shingle/
         # signature CPU work that wants all cores. Byte-sizing it to 1
-        # partition serialized the probe (measured 12.8 s → 29.2 s in
-        # the r16 bench; reverted). ``probe`` runs on the stream's
+        # partition serializes the probe (measured 12.8 s → 29.2 s in
+        # the bench sweep). ``probe`` runs on the stream's
         # callback thread while this thread holds the conf lock, so it
         # must never enter scoped_conf (the RLock is per-thread: that
         # entry would deadlock).

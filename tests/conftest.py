@@ -39,6 +39,42 @@ def jobs_during(spark, fn):
     return out, job_count(spark, group)
 
 
+def write_docs(spark, tmp_path, rows) -> str:
+    """Write ``rows`` — (doc_id, text, lang, source), n_chars derived —
+    as a one-file ``documents.parquet`` and return its scale-factor dir."""
+    df = spark.createDataFrame(
+        [(i, t, lg, s, None if t is None else len(t)) for i, t, lg, s in rows],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    sf = str(tmp_path / "sf")
+    os.makedirs(sf, exist_ok=True)
+    df.coalesce(1).write.mode("overwrite").parquet(
+        os.path.join(sf, "documents.parquet")
+    )
+    return sf
+
+
+def documents_oracle_mismatch(sf: str, name: str, df) -> str | None:
+    """``compare()`` of query ``name``'s result ``df`` against its DuckDB
+    oracle run over the ``documents.parquet`` that :func:`write_docs`
+    wrote under ``sf``: None when they agree."""
+    from mirrulations_iceberg_spark.operators import collect_queries
+    from mirrulations_iceberg_spark.testing import compare
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{sf}/documents.parquet/*.parquet')"
+    )
+    res = con.execute(collect_queries()[1][name])
+    return compare(
+        df.columns,
+        [tuple(r) for r in df.collect()],
+        [d[0] for d in res.description],
+        res.fetchall(),
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     return get_spark(app_name="pytest", shuffle_partitions=8)

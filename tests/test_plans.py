@@ -392,6 +392,17 @@ def test_t15_has_exactly_two_shuffles(spark):
     assert "Exchange SinglePartition" not in plan
 
 
+def test_e9_stages_share_one_delta_pass(spark):
+    """e9's admission stages are flags on one delta frame, so every
+    documents scan is tokenized once and no stage re-derives the delta:
+    5 scans in the plan before execution (9 once AQE has run it). The
+    frame-per-stage shape planned 10 scans and 18 tokenizer calls."""
+    plan = _plan(spark, "e9_refresh_pipeline")
+    scans = plan.count("documents.parquet")
+    assert scans <= 5
+    assert plan.count("regexp_extract_all") == scans
+
+
 def test_e8_single_corpus_pass(spark):
     """e8's only corpus-wide exchange is the per-source partial agg;
     the unbounded window runs on the |sources|-row rollup (one

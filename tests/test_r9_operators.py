@@ -34,21 +34,7 @@ from mirrulations_iceberg_spark.operators.relational import (
     o10_stratified_quota_sample,
 )
 
-from .conftest import SF_DIR
-
-
-def _write_docs(spark, tmp_path, rows):
-    """rows: (doc_id, text, lang, source) — n_chars derived."""
-    df = spark.createDataFrame(
-        [(i, t, lg, s, len(t)) for i, t, lg, s in rows],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    sf = str(tmp_path / "sf")
-    os.makedirs(sf, exist_ok=True)
-    df.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(sf, "documents.parquet")
-    )
-    return sf
+from .conftest import SF_DIR, documents_oracle_mismatch, write_docs
 
 
 def test_e10_engineered_stage_assignment(spark, tmp_path):
@@ -60,7 +46,7 @@ def test_e10_engineered_stage_assignment(spark, tmp_path):
     clean = "a" * 40                            # 10000 bp
     mid = "a" * 82 + "!" * 18                   # 8200 bp
     noisy = "a" * 50 + "!" * 50                 # 5000 bp
-    sf = _write_docs(
+    sf = write_docs(
         spark,
         tmp_path,
         [(1, clean, "en", "s"), (2, mid, "en", "s"), (3, noisy, "en", "s")],
@@ -102,7 +88,7 @@ def test_d16_engineered_keeps_best_quality(spark, tmp_path):
         (9, "totally unrelated words only here nothing shared at all",
          "en", "s"),
     ]
-    sf = _write_docs(spark, tmp_path, rows)
+    sf = write_docs(spark, tmp_path, rows)
     out = d16_cluster_best_select(spark, sf).collect()
     assert len(out) == 1
     c = out[0]
@@ -121,7 +107,7 @@ def test_t16_engineered_pairwise_overlap(spark, tmp_path):
         (2, "a b c d x", "en", "srcB"),   # shingles: abc bcd cdx
         (3, "p q r s t", "en", "srcC"),
     ]
-    sf = _write_docs(spark, tmp_path, rows)
+    sf = write_docs(spark, tmp_path, rows)
     out = t16_source_overlap(spark, sf).collect()
     assert len(out) == 1
     r = out[0]
@@ -147,7 +133,7 @@ def test_e11_engineered_caps_bind(spark, tmp_path):
     rows.append(
         (99, " ".join("w%d!!!" % i for i in range(100)), "en", "big")
     )
-    sf = _write_docs(spark, tmp_path, rows)
+    sf = write_docs(spark, tmp_path, rows)
     out = {r["source"]: r for r in e11_epoch_cap_allocation(spark, sf).collect()}
     tiny = out["tiny"]
     assert tiny["capped"] == 1
@@ -174,7 +160,7 @@ def test_o10_engineered_quota_exceeds_stratum(spark, tmp_path):
     stay dense 1..n), never pads or errors."""
     rows = [(i, "word", "en", "small") for i in range(1, 4)]  # 3 < quota
     rows += [(100 + i, "word", "en", "full") for i in range(20)]
-    sf = _write_docs(spark, tmp_path, rows)
+    sf = write_docs(spark, tmp_path, rows)
     out = o10_stratified_quota_sample(spark, sf).collect()
     small = [r for r in out if r["source"] == "small"]
     full = [r for r in out if r["source"] == "full"]
@@ -199,7 +185,7 @@ def test_m14_engineered_disjoint_lang_drift(spark, tmp_path):
         (5, text, "de", "s"),
         (10, text, "de", "s"),
     ]
-    sf = _write_docs(spark, tmp_path, rows)
+    sf = write_docs(spark, tmp_path, rows)
     out = m14_drift_report(spark, sf).collect()
     tvd = {r["feature"]: r["feature_tvd_bp"] for r in out}
     assert tvd == {"lang": 10000, "tokens": 0, "quality": 0}
@@ -257,7 +243,7 @@ def test_e12_engineered_overflow(spark, tmp_path):
     )
 
     rows = [(1, " ".join(f"w{i}" for i in range(100)), "en", "s")]
-    sf = _write_docs(spark, tmp_path, rows)
+    sf = write_docs(spark, tmp_path, rows)
     out = {r["budget"]: r for r in e12_packing_curve(spark, sf).collect()}
     assert out[64]["n_bins"] == 1
     assert out[64]["n_overflow_bins"] == 1
@@ -303,7 +289,7 @@ def test_d17_engineered_split_leakage(spark, tmp_path):
     t2 = "golf hotel india juliet kilo lima"
     t3 = "mike november oscar papa quebec romeo"
     t4 = "sierra tango uniform victor whiskey xray"
-    sf = _write_docs(
+    sf = write_docs(
         spark,
         tmp_path,
         [
@@ -368,7 +354,7 @@ def test_t17_engineered_pair_stats(spark, tmp_path):
     tie (aa vs ab, both 2) breaks lexicographically to 'aa', and
     merges_applied distinguishes overlap from application: 'aaa' has
     TWO 'aa' pair occurrences but ONE greedy application."""
-    sf = _write_docs(
+    sf = write_docs(
         spark, tmp_path, [(1, "aaa bb", "en", "s"), (2, "abab", "en", "s")]
     )
     rows = t17_bpe_pair_stats(spark, sf).collect()
@@ -416,7 +402,7 @@ def test_m15_engineered_merge_and_s7_parity(spark, tmp_path):
     )
 
     rows = [(i, "x" * (10 + i), "en", "s") for i in range(10)]
-    sf = _write_docs(spark, tmp_path, rows)
+    sf = write_docs(spark, tmp_path, rows)
     out = m15_cdc_merge(spark, sf).collect()
     assert len(out) == 1
     r = out[0]
@@ -495,7 +481,7 @@ def test_e13_engineered_cluster_split(spark, tmp_path):
     t2 = "golf hotel india juliet kilo lima"
     t2b = "golf hotel india juliet kilo zulu"  # 3/5 shared shingles
     t4 = "sierra tango uniform victor whiskey xray"
-    sf = _write_docs(
+    sf = write_docs(
         spark,
         tmp_path,
         [
@@ -531,7 +517,7 @@ def test_d18_engineered_incremental_neardup(spark, tmp_path):
     t2b = "golf hotel india juliet kilo lima zulu"  # 4/6 shingles shared
     t3 = "november oscar papa quebec romeo sierra"
     t3b = "november oscar papa quebec romeo tango"
-    sf = _write_docs(
+    sf = write_docs(
         spark,
         tmp_path,
         [
@@ -563,7 +549,7 @@ def test_t18_engineered_backoff_bits(spark, tmp_path):
         t18_backoff_surprisal,
     )
 
-    sf = _write_docs(
+    sf = write_docs(
         spark,
         tmp_path,
         [
@@ -670,7 +656,7 @@ def test_e14_engineered_release_stages(spark, tmp_path):
         "falcon grape harbor island jungle koala lemon mango nectar "
         "orange panda quartz"
     )  # 21 tokens, also placed in base so exact-novelty drops it
-    sf = _write_docs(
+    sf = write_docs(
         spark,
         tmp_path,
         [
@@ -683,7 +669,8 @@ def test_e14_engineered_release_stages(spark, tmp_path):
             (25, novel_t, "en", "s"),  # delta: admitted
         ],
     )
-    rows = e14_release_pipeline(spark, sf).collect()
+    out = e14_release_pipeline(spark, sf)
+    rows = out.collect()
     assert len(rows) == 1
     r = rows[0]
     assert (r["n_delta"], r["n_gated"], r["n_exact"], r["n_novel"]) == (
@@ -696,6 +683,7 @@ def test_e14_engineered_release_stages(spark, tmp_path):
     assert r["n_train"] == (1 if expect_train else 0)
     assert r["n_holdout"] == (0 if expect_train else 1)
     assert r["admitted_tokens"] == 21
+    assert documents_oracle_mismatch(sf, "e14_release_pipeline", out) is None
 
 
 def test_j13_engineered_midnight_merges(spark, tmp_path):
