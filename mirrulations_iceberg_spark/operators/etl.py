@@ -1021,16 +1021,16 @@ def _e9_oracle() -> str:
                COALESCE(a.ck, 0) AS id_checksum
         FROM delta d
         LEFT JOIN (SELECT lang, COUNT(*) AS n FROM gated GROUP BY 1) g
-               ON d.lang = g.lang
+               ON d.lang IS NOT DISTINCT FROM g.lang
         LEFT JOIN (SELECT lang, COUNT(*) AS n FROM exact GROUP BY 1) x
-               ON d.lang = x.lang
+               ON d.lang IS NOT DISTINCT FROM x.lang
         LEFT JOIN (SELECT lang, COUNT(*) AS n FROM novel GROUP BY 1) v
-               ON d.lang = v.lang
+               ON d.lang IS NOT DISTINCT FROM v.lang
         LEFT JOIN (SELECT lang, COUNT(*) AS n,
                           CAST(SUM(len(t)) AS BIGINT) AS tok,
                           CAST(SUM(doc_id) AS BIGINT) AS ck
                    FROM admitted GROUP BY 1) a
-               ON d.lang = a.lang
+               ON d.lang IS NOT DISTINCT FROM a.lang
         GROUP BY 1, g.n, x.n, v.n, a.n, a.tok, a.ck
         ORDER BY d.lang
     """
@@ -2831,18 +2831,18 @@ ORACLE = {
                COALESCE(a.ck, 0) AS id_checksum
         FROM delta d
         LEFT JOIN (SELECT lang, COUNT(*) AS n FROM gated GROUP BY 1) g
-               ON d.lang = g.lang
+               ON d.lang IS NOT DISTINCT FROM g.lang
         LEFT JOIN (SELECT lang, COUNT(*) AS n FROM exact GROUP BY 1) x
-               ON d.lang = x.lang
+               ON d.lang IS NOT DISTINCT FROM x.lang
         LEFT JOIN (SELECT lang, COUNT(*) AS n FROM novel GROUP BY 1) v
-               ON d.lang = v.lang
+               ON d.lang IS NOT DISTINCT FROM v.lang
         LEFT JOIN (SELECT lang, COUNT(*) AS n,
                           CAST(SUM(tr) AS BIGINT) AS ntr,
                           CAST(COUNT(*) - SUM(tr) AS BIGINT) AS nho,
                           CAST(SUM(len(t)) AS BIGINT) AS tok,
                           CAST(SUM(doc_id) AS BIGINT) AS ck
                    FROM admitted GROUP BY 1) a
-               ON d.lang = a.lang
+               ON d.lang IS NOT DISTINCT FROM a.lang
         GROUP BY 1, g.n, x.n, v.n, a.n, a.ntr, a.nho, a.tok, a.ck
         ORDER BY d.lang
     """,

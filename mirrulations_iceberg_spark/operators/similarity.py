@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from ..tables import load_table
 from .dedup import parallelize_scan
-from .util import materialize_release, scoped_conf
+from .util import bind, materialize_release, scoped_session
 
 TOP_K = 10
 N_QUERIES = 5
@@ -1041,15 +1041,15 @@ def fit_artifacts(
     overlap. The union is pure job packaging: each fit's expressions
     are untouched and the collected rows split back by ``kind``.
 
-    The collect runs with AQE off and shuffle parallelism
-    ``min(cores, 64)``, scoped to the action. Every exchange of a fit
-    plan carries only pre-aggregated, dimension-bounded rows (≤ cells·
-    dims for IVF, ≤ M·K for PQ), so AQE has nothing to improve, while
-    its per-stage re-optimization of the deep nested fit tree is pure
-    driver cost; and the static partition count only has to cover
-    ≤1024 tiny rows, on a laptop or on a cluster whose initial
-    parallelism is in the thousands. The consumer's own query keeps
-    the session's conf.
+    The collect runs in a session clone with AQE off and shuffle
+    parallelism ``min(cores, 64)`` (:func:`.util.scoped_session`).
+    Every exchange of a fit plan carries only pre-aggregated,
+    dimension-bounded rows (≤ cells·dims for IVF, ≤ M·K for PQ), so
+    AQE has nothing to improve, while its per-stage re-optimization of
+    the deep nested fit tree is pure driver cost; and the static
+    partition count only has to cover ≤1024 tiny rows, on a laptop or
+    on a cluster whose initial parallelism is in the thousands. The
+    caller's session, and every other query in it, keeps its conf.
     """
     parts = []
     if ivf:
@@ -1065,14 +1065,16 @@ def fit_artifacts(
             )
         )
     spark = emb.sparkSession
-    fit_conf = {
-        "spark.sql.adaptive.enabled": "false",
-        "spark.sql.shuffle.partitions": str(
-            min(spark.sparkContext.defaultParallelism, 64)
-        ),
-    }
-    with scoped_conf(spark, fit_conf):
-        rows = reduce(DataFrame.unionByName, parts).collect()
+    fit = scoped_session(
+        spark,
+        {
+            "spark.sql.adaptive.enabled": "false",
+            "spark.sql.shuffle.partitions": str(
+                min(spark.sparkContext.defaultParallelism, 64)
+            ),
+        },
+    )
+    rows = bind(reduce(DataFrame.unionByName, parts), fit).collect()
     centers = cent_lit = cb_lit = center_rows = cb_rows = None
     if ivf:
         center_rows = sorted(

@@ -40,17 +40,14 @@ from ..tables import (
     normalize_event_ts,
     parquet_schema,
 )
-from .util import scoped_conf
+from .util import bind, scoped_session
 
 
 #: Input bytes one state partition is sized for. The state-store task
 #: count is pure per-micro-batch fixed cost when state is small, so the
 #: partition count must GROW from the data instead of starting at the
-#: core count. Env-overridable for deployments whose per-key state is
-#: far wider than their input rows.
-STREAM_STATE_TARGET_BYTES = int(
-    os.environ.get("SPARK_GRAFT_STREAM_STATE_TARGET", str(32 << 20))
-)
+#: core count.
+STREAM_STATE_TARGET_BYTES = 32 << 20
 
 
 def _path_bytes(path: str) -> int | None:
@@ -61,13 +58,12 @@ def _path_bytes(path: str) -> int | None:
     local-filesystem probe cannot size: URI-schemed paths
     (``s3a://…``, ``hdfs://…`` — ``os.walk`` silently yields nothing
     there), unreadable paths, and empty/missing trees. The distinction
-    matters at scale (VERDICT r16 #2): 0 bytes would clamp the
-    state-store parallelism to ONE partition, and because the state
-    layout is pinned at the checkpoint's first run, a production
-    deployment whose input lives behind ``s3a://`` would permanently
-    serialize every stateful shuffle. Unknown size must mean "fall
-    back to the cores rule", which ``stream_state_conf`` does on
-    ``None``.
+    matters at scale: 0 bytes would clamp the state-store parallelism
+    to ONE partition, and because the state layout is pinned at the
+    checkpoint's first run, a production deployment whose input lives
+    behind ``s3a://`` would permanently serialize every stateful
+    shuffle. Unknown size must mean "fall back to the cores rule",
+    which ``stream_state_partitions`` does on ``None``.
     """
     local = local_path(path)
     if local is None:
@@ -86,8 +82,10 @@ def _path_bytes(path: str) -> int | None:
     return total if total > 0 else None
 
 
-def stream_state_conf(spark: SparkSession, input_bytes: int | None = None):
-    """Right-size stateful-shuffle parallelism for the one-shot runs.
+def stream_state_partitions(
+    spark: SparkSession, input_bytes: int | None = None
+) -> int:
+    """The stateful-shuffle partition count for a one-shot stream run.
 
     The state-store partition count is pinned per checkpoint at first
     run and every partition becomes a task in EVERY micro-batch of
@@ -98,31 +96,33 @@ def stream_state_conf(spark: SparkSession, input_bytes: int | None = None):
     2.4 s at 8 — pure scheduling overhead, zero semantic difference
     (state is hash-distributed; the oracles pin the results).
 
-    Scale-adaptive (r16, guide §2.2/§2.5): with ``input_bytes`` the
-    count is ``clamp(input_bytes / STREAM_STATE_TARGET_BYTES, 1,
-    cores)`` — tiny inputs run one state task instead of ``cores``
-    near-empty ones, and a production-sized feed saturates the cap at
-    the executor core count, exactly the old rule's value. AQE cannot
-    do this for us: adaptive coalescing is disabled in stateful
-    streaming plans because the state-store layout must stay stable
-    across micro-batches, so the initial number IS the final number.
-    Callers that cannot size their input omit ``input_bytes`` (or pass
+    With ``input_bytes`` the count is ``clamp(input_bytes /
+    STREAM_STATE_TARGET_BYTES, 1, cores)``: tiny inputs run one state
+    task instead of ``cores`` near-empty ones, and a production-sized
+    feed saturates at the executor core count. AQE cannot do this for
+    us: adaptive coalescing is disabled in stateful streaming plans
+    because the state-store layout must stay stable across
+    micro-batches, so the initial number IS the final number. Callers
+    that cannot size their input omit ``input_bytes`` (or pass
     ``None``/0 — UNKNOWN, e.g. ``_path_bytes`` on a non-local URI) and
-    keep the core-count rule: an unsizeable input must never be
-    mistaken for a tiny one (VERDICT r16 #2 — the state layout is
-    pinned per checkpoint, so a spurious 1 would be permanent).
-
-    Scoped and serialized by :func:`.util.scoped_conf`: set for the
-    duration of the streaming run, restored afterwards so callers'
-    batch work keeps its own setting.
+    get the core count: an unsizeable input must never be mistaken for
+    a tiny one, because the state layout is pinned per checkpoint and
+    a spurious 1 would be permanent.
     """
     cores = spark.sparkContext.defaultParallelism
-    parts = cores
-    if input_bytes:  # None/0 = unknown size → cores rule
-        parts = max(
-            1, min(cores, -(-int(input_bytes) // STREAM_STATE_TARGET_BYTES))
-        )
-    return scoped_conf(spark, {"spark.sql.shuffle.partitions": str(parts)})
+    if not input_bytes:  # None/0 = unknown size → cores rule
+        return cores
+    return max(1, min(cores, -(-int(input_bytes) // STREAM_STATE_TARGET_BYTES)))
+
+
+def _stream_session(
+    spark: SparkSession, input_bytes: int | None = None
+) -> SparkSession:
+    """A clone of ``spark`` whose shuffle partitions are the state
+    sizing rule for ``input_bytes``: a stream started from it pins
+    that count, and the caller's session keeps its own."""
+    parts = stream_state_partitions(spark, input_bytes)
+    return scoped_session(spark, {"spark.sql.shuffle.partitions": str(parts)})
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -139,22 +139,28 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _run_to_table(
-    agg: DataFrame, prefix: str, input_bytes: int | None = None
+    frame: DataFrame,
+    prefix: str,
+    input_bytes: int | None = None,
+    mode: str = "complete",
 ) -> DataFrame:
-    """Execute a streaming aggregation to completion (availableNow)
-    into a uniquely-named memory sink and return the result table.
-    State parallelism is right-sized for the run (stream_state_conf)."""
+    """Run the stream ``frame`` to completion (availableNow) into a
+    uniquely-named memory sink and return the sink table, bound to
+    ``frame``'s session. The stream starts from a session clone sized
+    by :func:`stream_state_partitions`."""
+    spark = frame.sparkSession
+    run = _stream_session(spark, input_bytes)
     name = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    with stream_state_conf(agg.sparkSession, input_bytes):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return agg.sparkSession.table(name)
+    (
+        bind(frame, run)
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode(mode)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    return bind(run.table(name), spark)
 
 
 def s1_stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -214,15 +220,14 @@ def s2_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         root, out, ckpt = f"{base}/tree", f"{base}/out", f"{base}/ckpt"
         write_docket_tree(root)
-        tree_bytes = _path_bytes(root)
 
         def ids(path: str) -> DataFrame:
             # stream_comments wrote these tables, so their id column is
             # known: declaring it skips one inference job per read.
             return spark.read.schema("id STRING").parquet(path)
 
-        with stream_state_conf(spark, tree_bytes):
-            stream_comments(spark, root, out, ckpt).awaitTermination()
+        run = _stream_session(spark, _path_bytes(root))
+        stream_comments(run, root, out, ckpt).awaitTermination()
         n_initial = ids(out).count()
 
         docket = sorted(os.listdir(root))[0]
@@ -246,12 +251,10 @@ def s2_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         with open(late_path, "w") as f:
             json.dump(late, f)
-        with stream_state_conf(spark, tree_bytes):
-            stream_comments(spark, root, out, ckpt).awaitTermination()
+        stream_comments(run, root, out, ckpt).awaitTermination()
         n_late = ids(out).count()
 
-        with stream_state_conf(spark, tree_bytes):
-            stream_comments(spark, root, out, ckpt).awaitTermination()
+        stream_comments(run, root, out, ckpt).awaitTermination()
         n_rerun = ids(out).count()
         n_ids = ids(out).distinct().count()
         n_quarantined = ids(f"{out}_quarantine").count()
@@ -332,19 +335,9 @@ def s4_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         deduped = stream.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
             ["event_id"]
         )
-        name = f"s4_sink_{uuid.uuid4().hex[:8]}"
-        with stream_state_conf(spark, _path_bytes(base)):
-            q = (
-                deduped.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
         # The memory sink has materialized — the scratch files can go.
         return (
-            spark.table(name)
+            _run_to_table(deduped, "s4_sink", _path_bytes(base), mode="append")
             .groupBy("event_type")
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
@@ -381,21 +374,11 @@ def s3_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     events = _events_stream(spark, sf_dir)
     sess = sessionize_stream(events.select("user_id", "ts", "value"))
-    name = f"s3_sink_{uuid.uuid4().hex[:8]}"
     # deliberately UNSIZED (cores rule): the cost here is per-group
     # Python compute inside applyInPandasWithState, which wants all
     # cores regardless of input bytes — byte-sizing to 1 partition
     # serialized it (measured 8.4 s → 13.9 s at sf0.1, reverted)
-    with stream_state_conf(spark):
-        q = (
-            sess.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select(
+    return _run_to_table(sess, "s3_sink", mode="append").select(
         "user_id",
         F.unix_timestamp("session_start").alias("start_epoch"),
         F.unix_timestamp("session_end").alias("end_epoch"),
@@ -423,17 +406,9 @@ def s5_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.joins import attributed_purchases
 
     joined = attributed_purchases(spark, sf_dir)
-    name = f"s5_sink_{uuid.uuid4().hex[:8]}"
-    with stream_state_conf(spark, _path_bytes(f"{sf_dir}/events.parquet")):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).agg(
+    return _run_to_table(
+        joined, "s5_sink", _path_bytes(f"{sf_dir}/events.parquet"), mode="append"
+    ).agg(
         F.count(F.lit(1)).alias("n_pairs"),
         F.countDistinct("purchase_id").alias("n_purchases"),
         F.countDistinct("click_id").alias("n_clicks"),
@@ -836,28 +811,23 @@ def s9_stream_neardup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
         schema = parquet_schema(spark, f"{sf_dir}/documents.parquet")
-        stream = (
-            spark.readStream.schema(schema)
+        # deliberately UNSIZED (cores rule, the s3 exception): the
+        # stream itself is stateless (foreachBatch), so the clone's
+        # conf governs the PROBE's batch-side shuffles — tokenize/
+        # shingle/signature CPU work that wants all cores. Byte-sizing
+        # it to 1 partition serializes the probe (measured 12.8 s →
+        # 29.2 s in the bench sweep).
+        (
+            _stream_session(spark)
+            .readStream.schema(schema)
             .option("maxFilesPerTrigger", "1")
             .option("pathGlobFilter", "delivery_*.parquet")
             .parquet(base)
+            .writeStream.foreachBatch(probe)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
         )
-        # deliberately UNSIZED (cores rule, the s3 exception): the
-        # stream itself is stateless (foreachBatch), so the conf here
-        # governs the PROBE's batch-side shuffles — tokenize/shingle/
-        # signature CPU work that wants all cores. Byte-sizing it to 1
-        # partition serializes the probe (measured 12.8 s → 29.2 s in
-        # the bench sweep). ``probe`` runs on the stream's
-        # callback thread while this thread holds the conf lock, so it
-        # must never enter scoped_conf (the RLock is per-thread: that
-        # entry would deadlock).
-        with stream_state_conf(spark):
-            q = (
-                stream.writeStream.foreachBatch(probe)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
         rep = spark.createDataFrame(
             partials,
             "lang string, n_delta long, n_flagged long,"

@@ -1,5 +1,15 @@
-"""Scoped-execution helpers: session-conf scoping and the cache
-lifecycle of operators that persist an intermediate.
+"""Scoped-execution helpers: actions that need their own session conf,
+and the cache lifecycle of operators that persist an intermediate.
+
+An action that needs different conf from its caller (the Lloyd-fit
+collect, a stream's state partition count) runs in a clone of the
+caller's session: :func:`scoped_session` copies the caller's runtime
+conf, temp views and functions and applies the settings to the clone
+only, and :func:`bind` moves an analyzed plan between the two. The
+caller's conf is never written, so a query another thread plans in the
+caller's session meanwhile keeps the caller's settings, and there is
+nothing to restore. The clone shares the SparkContext and the cache
+manager, so a frame the caller cached is read from the same blocks.
 
 A query function that ``cache()``/``persist()``-es an intermediate must
 not leak the cached blocks past its own return: a long-lived session
@@ -20,41 +30,27 @@ before the caller's action would re-run the lineage per reference.
 
 from __future__ import annotations
 
-import threading
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, SparkSession
 
-#: Serializes scoped_conf entries. RLock, not Lock: a helper that
-#: composes two scoped runners re-enters on the same thread, and the
-#: LIFO exits then restore correctly (inner restores the outer's
-#: value, outer restores the caller's original).
-_CONF_LOCK = threading.RLock()
+
+def scoped_session(spark: SparkSession, settings: dict[str, str]) -> SparkSession:
+    """A clone of ``spark`` with the conf ``settings`` applied to the
+    clone alone. Conf is read at plan time, so the action that needs
+    ``settings`` must be planned in the clone: :func:`bind` the frame
+    to it, or start the stream from it."""
+    clone = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+    for k, v in settings.items():
+        clone.conf.set(k, v)
+    return clone
 
 
-@contextmanager
-def scoped_conf(spark: SparkSession, settings: dict[str, str]):
-    """Set the session conf ``settings`` for the duration of the block
-    and restore the previous values on exit, error included. Conf is
-    read at plan time, so the block must contain the action.
-
-    Session conf is global, so a query planned concurrently in the same
-    session would inherit the scoped values and nested use would
-    restore stale ones: one module lock serializes every entry, and
-    concurrent scoped actions queue instead of clobbering each other.
-    The lock is per-thread, so code that runs on another thread while
-    a caller holds it (a streaming query's ``foreachBatch`` function,
-    a worker-pool task the holder waits on) must not enter here.
-    """
-    with _CONF_LOCK:
-        prev = {k: spark.conf.get(k) for k in settings}
-        for k, v in settings.items():
-            spark.conf.set(k, v)
-        try:
-            yield
-        finally:
-            for k, v in prev.items():
-                spark.conf.set(k, v)
+def bind(df: DataFrame, spark: SparkSession) -> DataFrame:
+    """``df``'s analyzed plan as a DataFrame of ``spark``, which plans
+    and runs it under its own conf."""
+    jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        spark._jsparkSession, df._jdf.logicalPlan()
+    )
+    return DataFrame(jdf, spark)
 
 
 def materialize_release(

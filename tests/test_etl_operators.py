@@ -18,7 +18,8 @@ def test_e9_engineered_refresh_stages(spark, tmp_path):
     drops it); 20 shares the shingle 'green blue indigo' with base doc
     97, a benchmark doc (decontamination drops it); 25 is admitted.
     The de delta is one NULL-text row: counted, gated out, and its
-    language still reports zeros."""
+    language still reports zeros. Delta 35 has a NULL lang and is
+    admitted: its stage counts must reach the NULL-lang row."""
     assert (D10_DELTA_MOD, DECON_MOD, E9_MIN_TOKENS) == (5, 97, 20)
     base_t = (
         "alpha bravo charlie delta echo foxtrot golf hotel india "
@@ -45,6 +46,11 @@ def test_e9_engineered_refresh_stages(spark, tmp_path):
         "ceres eris haumea makemake sedna quaoar orcus varuna ixion "
         "salacia gonggong vesta"
     )  # 21 tokens, unrelated
+    nolang_t = (
+        "amber basil cedar dune ember fjord glacier heather iris jade "
+        "kelp lagoon meadow nettle opal prairie quill reef sage thistle "
+        "umber"
+    )  # 21 tokens, unrelated
     sf = write_docs(
         spark,
         tmp_path,
@@ -58,6 +64,7 @@ def test_e9_engineered_refresh_stages(spark, tmp_path):
             (20, contaminated_t, "en", "s"),  # delta: contaminated
             (25, novel_t, "en", "s"),  # delta: admitted
             (30, None, "de", "s"),  # delta: NULL text
+            (35, nolang_t, None, "s"),  # delta: NULL lang, admitted
         ],
     )
     out = e9_refresh_pipeline(spark, sf)
@@ -72,6 +79,7 @@ def test_e9_engineered_refresh_stages(spark, tmp_path):
         "id_checksum",
     ]
     assert [tuple(r) for r in out.collect()] == [
+        (None, 1, 1, 1, 1, 1, 21, 35),
         ("de", 1, 0, 0, 0, 0, 0, 0),
         ("en", 5, 4, 3, 2, 1, 21, 25),
     ]

@@ -602,3 +602,32 @@ def test_parquet_schema_is_the_one_schema_probe():
             line = text.count("\n", 0, m.start()) + 1
             offenders.append(f"{path.relative_to(pkg)}:{line}")
     assert not offenders, offenders
+
+
+_CONF_SET = re.compile(r"\.conf\.set\(")
+
+
+def test_session_conf_is_written_only_where_documented():
+    """An action never writes its caller's session conf: a query that
+    another thread plans meanwhile in the same session would plan under
+    the written value. Session conf is set only where a session is
+    built (``session.py``), by the Iceberg catalog registration
+    (``operators/iceberg.py``), by the events-read pin (``tables.py``)
+    and on a clone inside ``util.scoped_session``."""
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "mirrulations_iceberg_spark"
+    allowed = {"session.py", "operators/iceberg.py", "tables.py"}
+    util = (pkg / "operators" / "util.py").read_text()
+    start = util.find("def scoped_session(")
+    helper = range(start, util.find("\ndef ", start)) if start >= 0 else range(0)
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        if rel in allowed:
+            continue
+        text = path.read_text()
+        for m in _CONF_SET.finditer(text):
+            if rel == "operators/util.py" and m.start() in helper:
+                continue
+            line = text.count("\n", 0, m.start()) + 1
+            offenders.append(f"{rel}:{line}")
+    assert not offenders, offenders

@@ -635,7 +635,8 @@ def test_e14_engineered_release_stages(spark, tmp_path):
     (15 collapses into 10); 10's text exists verbatim in base (exact
     novelty drops it); 20 is a near-dup of base doc 1 (near-novelty
     drops it); 25 is admitted and routes to holdout (md5('25')='06..'
-    -> train? no: '0' < 'd' -> train)."""
+    -> train? no: '0' < 'd' -> train). Delta 30 has a NULL lang and is
+    admitted: its stage counts must reach the NULL-lang row."""
     from mirrulations_iceberg_spark.operators.etl import (
         e14_release_pipeline,
     )
@@ -656,6 +657,11 @@ def test_e14_engineered_release_stages(spark, tmp_path):
         "falcon grape harbor island jungle koala lemon mango nectar "
         "orange panda quartz"
     )  # 21 tokens, also placed in base so exact-novelty drops it
+    nolang_t = (
+        "amber basil cedar dune ember fjord glacier heather iris jade "
+        "kelp lagoon meadow nettle opal prairie quill reef sage thistle "
+        "umber"
+    )  # 21 tokens, unrelated
     sf = write_docs(
         spark,
         tmp_path,
@@ -667,12 +673,15 @@ def test_e14_engineered_release_stages(spark, tmp_path):
             (15, dup_t, "en", "s"),   # delta: collapses into 10
             (20, near_t, "en", "s"),  # delta: near-dup of base 1
             (25, novel_t, "en", "s"),  # delta: admitted
+            (30, nolang_t, None, "s"),  # delta: NULL lang, admitted
         ],
     )
     out = e14_release_pipeline(spark, sf)
     rows = out.collect()
-    assert len(rows) == 1
-    r = rows[0]
+    assert [r["lang"] for r in rows] == [None, "en"]
+    nolang, r = rows
+    assert (nolang["n_delta"], nolang["n_novel"], nolang["n_admitted"]) == (1, 1, 1)
+    assert (nolang["admitted_tokens"], nolang["id_checksum"]) == (21, 30)
     assert (r["n_delta"], r["n_gated"], r["n_exact"], r["n_novel"]) == (
         5, 4, 3, 2,
     )

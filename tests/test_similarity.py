@@ -10,13 +10,22 @@ tie wins; these frames put the tie exactly at the cut.
 
 from __future__ import annotations
 
+import threading
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark.sql import functions as F
+
 from mirrulations_iceberg_spark.operators.similarity import (
     N_QUERIES,
     TOP_K,
+    _embeddings,
     _l2_truth,
     _probe_cells,
     _round_half_up,
+    fit_artifacts,
 )
+
+from .conftest import SF_DIR
 
 
 def _pyl2sq(a: list, b: list) -> float:
@@ -92,3 +101,58 @@ def test_l2_truth_tie_keeps_lower_vec_id_and_matches_brute_force(spark):
         want[q] = {v for _, v in ranked[:TOP_K]}
     assert got == want
     assert 14 in got[0] and 15 not in got[0]
+
+
+def test_fit_collect_leaves_concurrent_queries_on_session_conf(spark, monkeypatch):
+    """While the Lloyd fit's collect is running on one thread, a query
+    planned on another thread in the same session keeps the session's
+    conf (adaptive, its shuffle partitions), and the fit plans under
+    its own (AQE off, ``min(cores, 64)``) with the caller's
+    runtime-set timezone."""
+    emb = _embeddings(spark, SF_DIR)
+    frame_cls = type(emb)
+    real_collect = frame_cls.collect
+    keys = (
+        "spark.sql.adaptive.enabled",
+        "spark.sql.shuffle.partitions",
+        "spark.sql.session.timeZone",
+    )
+    entered, release = threading.Event(), threading.Event()
+    seen = []
+
+    def collect(df):
+        seen.append({k: df.sparkSession.conf.get(k) for k in keys})
+        entered.set()
+        assert release.wait(300)
+        return real_collect(df)
+
+    original = {k: spark.conf.get(k) for k in keys}
+    try:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+        spark.conf.set("spark.sql.shuffle.partitions", "257")
+        spark.conf.set("spark.sql.session.timeZone", "America/Chicago")
+        monkeypatch.setattr(frame_cls, "collect", collect)
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            fut = pool.submit(fit_artifacts, emb, ivf=True, pq=True)
+            try:
+                assert entered.wait(300)
+                plain = spark.range(100).groupBy((F.col("id") % 3).alias("k")).count()
+                plan = plain._jdf.queryExecution().executedPlan()
+            finally:
+                release.set()
+            fut.result(timeout=600)
+    finally:
+        for k, v in original.items():
+            spark.conf.set(k, v)
+    assert plan.nodeName() == "AdaptiveSparkPlan"
+    assert ", 257), ENSURE_REQUIREMENTS" in plan.toString()
+    cores = spark.sparkContext.defaultParallelism
+    assert seen and all(
+        s
+        == {
+            "spark.sql.adaptive.enabled": "false",
+            "spark.sql.shuffle.partitions": str(min(cores, 64)),
+            "spark.sql.session.timeZone": "America/Chicago",
+        }
+        for s in seen
+    ), seen

@@ -72,22 +72,38 @@ def test_s6_equals_d10_batch(spark):
 
 @pytest.mark.parametrize("scope", ["stream", "fit"])
 def test_stream_state_conf_scoped_and_restored(spark, monkeypatch, scope):
-    """Both scoped-conf callers — the streaming state-parallelism
-    override and the Lloyd-fit collect — must apply their keys only
-    inside the scope and restore EVERY key on exit AND on error."""
+    """Both scoped actions — a memory-sink stream and the Lloyd-fit
+    collect — must plan under their own conf in a session clone while
+    the caller's conf stays untouched during the action, after it AND
+    after an error inside it."""
     from mirrulations_iceberg_spark.operators.similarity import (
         _embeddings,
         fit_artifacts,
     )
-    from mirrulations_iceberg_spark.operators.streamq import stream_state_conf
+    from mirrulations_iceberg_spark.operators.streamq import (
+        _path_bytes,
+        stream_state_partitions,
+    )
 
     cores = spark.sparkContext.defaultParallelism
     if scope == "stream":
-        want = {"spark.sql.shuffle.partitions": str(cores)}
+        parts = stream_state_partitions(
+            spark, _path_bytes(f"{SF_DIR}/events.parquet")
+        )
+        want = {"spark.sql.shuffle.partitions": str(parts)}
+        from pyspark.sql.streaming import DataStreamWriter
 
         def run(body):
-            with stream_state_conf(spark):
-                body()
+            # the stream's start is the action planned in the scope
+            real_start = DataStreamWriter.start
+
+            def start(writer, *a, **kw):
+                body(writer._spark)
+                return real_start(writer, *a, **kw)
+
+            with monkeypatch.context() as m:
+                m.setattr(DataStreamWriter, "start", start)
+                s1_stream_windowed_counts(spark, SF_DIR).collect()
 
     else:
         want = {
@@ -98,22 +114,22 @@ def test_stream_state_conf_scoped_and_restored(spark, monkeypatch, scope):
         frame_cls = type(emb)
 
         def run(body):
-            # the fit's one collect is the action inside its scope
+            # the fit's one collect is the action planned in the scope
             real_collect = frame_cls.collect
 
             def collect(df):
-                body()
+                body(df.sparkSession)
                 return real_collect(df)
 
             with monkeypatch.context() as m:
                 m.setattr(frame_cls, "collect", collect)
                 fit_artifacts(emb, ivf=True, pq=True)
 
-    def current():
-        return {k: spark.conf.get(k) for k in want}
+    def current(session):
+        return {k: session.conf.get(k) for k in want}
 
-    original = current()
-    # caller values distinct from the scoped ones, so a missed restore shows
+    original = current(spark)
+    # caller values distinct from the scoped ones, so a leak shows
     caller = {
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.shuffle.partitions": "257",
@@ -121,45 +137,46 @@ def test_stream_state_conf_scoped_and_restored(spark, monkeypatch, scope):
     try:
         for k in want:
             spark.conf.set(k, caller[k])
-        seen = {}
-        run(lambda: seen.update(current()))
-        assert seen == want
-        assert current() == {k: caller[k] for k in want}
+        mine = {k: caller[k] for k in want}
+        seen = []
 
-        def boom():
+        def look(session):
+            seen.append((session is spark, current(session), current(spark)))
+
+        run(look)
+        assert seen and all(s == (False, want, mine) for s in seen), seen
+        assert current(spark) == mine
+
+        def boom(session):
             raise RuntimeError("boom")
 
         with pytest.raises(RuntimeError, match="boom"):
             run(boom)
-        assert current() == {k: caller[k] for k in want}
+        assert current(spark) == mine
     finally:
         for k, v in original.items():
             spark.conf.set(k, v)
 
 
 def test_stream_state_conf_sizes_from_input_bytes(spark):
-    """r16 scale-adaptive state parallelism: the partition count grows
-    with the input and saturates at the core count — tiny inputs get 1
-    state task, production-sized inputs keep the old cores rule."""
+    """Scale-adaptive state parallelism: the partition count grows with
+    the input and saturates at the core count — tiny inputs get 1
+    state task, production-sized inputs keep the cores rule."""
     from mirrulations_iceberg_spark.operators.streamq import (
         STREAM_STATE_TARGET_BYTES,
-        stream_state_conf,
+        stream_state_partitions,
     )
 
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
     cores = spark.sparkContext.defaultParallelism
-    with stream_state_conf(spark, 1):
-        assert spark.conf.get(key) == "1"
-    with stream_state_conf(spark, 3 * STREAM_STATE_TARGET_BYTES):
-        assert spark.conf.get(key) == str(min(cores, 3))
-    with stream_state_conf(spark, 10**15):
-        assert spark.conf.get(key) == str(cores)
-    assert spark.conf.get(key) == prev
+    assert stream_state_partitions(spark, 1) == 1
+    assert stream_state_partitions(spark, 3 * STREAM_STATE_TARGET_BYTES) == min(
+        cores, 3
+    )
+    assert stream_state_partitions(spark, 10**15) == cores
 
 
 def test_unsizeable_input_falls_back_to_cores_rule(spark, tmp_path):
-    """VERDICT r16 #2: an input this local probe cannot size (non-local
+    """An input this local probe cannot size (non-local
     URI, missing path, empty tree) must mean UNKNOWN → the cores rule —
     never 0 → 1 state partition, because the state-store layout is
     pinned at the checkpoint's first run and a spurious 1 would
@@ -167,7 +184,7 @@ def test_unsizeable_input_falls_back_to_cores_rule(spark, tmp_path):
     (s3a://…) deployment."""
     from mirrulations_iceberg_spark.operators.streamq import (
         _path_bytes,
-        stream_state_conf,
+        stream_state_partitions,
     )
 
     # non-local URI schemes: os.walk would silently yield nothing
@@ -182,12 +199,8 @@ def test_unsizeable_input_falls_back_to_cores_rule(spark, tmp_path):
     assert _path_bytes(f"file://{f}") == 3
     assert _path_bytes(str(f)) == 3
 
-    # and the conf helper treats None/0 as the cores rule, not 1
-    key = "spark.sql.shuffle.partitions"
-    cores = str(spark.sparkContext.defaultParallelism)
-    with stream_state_conf(spark, None):
-        assert spark.conf.get(key) == cores
-    with stream_state_conf(spark, 0):
-        assert spark.conf.get(key) == cores
-    with stream_state_conf(spark, _path_bytes("s3a://bucket/events")):
-        assert spark.conf.get(key) == cores
+    # and the sizing rule treats None/0 as the cores rule, not 1
+    cores = spark.sparkContext.defaultParallelism
+    assert stream_state_partitions(spark, None) == cores
+    assert stream_state_partitions(spark, 0) == cores
+    assert stream_state_partitions(spark, _path_bytes("s3a://bucket/events")) == cores
