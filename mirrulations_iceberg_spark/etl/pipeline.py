@@ -15,11 +15,13 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass
+from functools import partial, reduce
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from ..session import run_concurrently
 from .flatten import flatten_comments, flatten_dockets, flatten_documents
 from .ingest import read_docket_json, split_corrupt
 
@@ -54,24 +56,24 @@ def run_pipeline(
     filter, ``convert_to_iceberg.py:1327-1329``) — applied post-flatten
     so it rides the same agencyId column the partitioned sink uses.
 
-    Each table costs one Spark job, its write. Two observations ride
-    that job: the rows the write lands (``counts``) and the corrupt
-    rows of its raw scan. Only a kind with corrupt rows pays a second
-    scan, the quarantine write, and ``quarantined`` is observed on
-    those writes, so it counts what landed. A re-run into the same
-    ``out_dir`` replaces the tables and the quarantine alike — a clean
-    run lands an empty quarantine — so ``quarantined`` counts only this
-    run's rows.
+    The three record kinds share nothing, so each runs in its own
+    thread (:func:`~mirrulations_iceberg_spark.session.run_concurrently`):
+    read, flatten, write, re-read. Each table costs one Spark job, its
+    write, and two observations ride that job: the rows the write lands
+    (``counts``) and the corrupt rows of its raw scan. Once all three
+    are written, one more job writes the corrupt rows of every kind
+    that observed any, as one overwrite of their union, and
+    ``quarantined`` is observed on that write, so it counts what
+    landed. A clean run overwrites the quarantine with an empty frame,
+    so a re-run into the same ``out_dir`` replaces the tables and the
+    quarantine alike and ``quarantined`` counts only this run's rows.
 
     The returned tables are re-read from disk (callers query exactly
     what landed) with the schema the write declared, partition column
     last, so the re-read infers nothing: it starts no job.
     """
-    tables: dict[str, DataFrame] = {}
-    counts: dict[str, int] = {}
-    quarantined = 0
-    quarantine = os.path.join(out_dir, "quarantine")
-    for table, (kind, flatten) in _FLATTENERS.items():
+
+    def convert(table: str, kind: str, flatten) -> tuple[int, int, DataFrame, DataFrame]:
         raw = read_docket_json(spark, tree_root, kind)
         landed, corrupt = Observation(), Observation()
         # Counting `bad` on its own would column-prune back to a
@@ -88,21 +90,32 @@ def run_pipeline(
         df.observe(landed, _count()).write.mode("overwrite").option(
             "compression", codec
         ).partitionBy(*partition).parquet(out)
-        counts[table] = landed.get["n"]
-        if corrupt.get["n"]:
-            # The run's first quarantine write replaces the previous
-            # run's rows; later ones append to it.
-            bad_landed = Observation()
-            bad.observe(bad_landed, _count()).write.mode(
-                "append" if quarantined else "overwrite"
-            ).option("compression", codec).parquet(quarantine)
-            quarantined += bad_landed.get["n"]
-        tables[table] = spark.read.schema(_landed_schema(df.schema, partition)).parquet(out)
-    if not quarantined:
-        spark.createDataFrame([], bad.schema).write.mode("overwrite").option(
-            "compression", codec
-        ).parquet(quarantine)
-    return PipelineResult(tables=tables, counts=counts, quarantined=quarantined)
+        reread = spark.read.schema(_landed_schema(df.schema, partition)).parquet(out)
+        return landed.get["n"], corrupt.get["n"], bad, reread
+
+    landed, n_bad, bad, tables = zip(
+        *run_concurrently(
+            spark,
+            *(
+                partial(convert, table, kind, flatten)
+                for table, (kind, flatten) in _FLATTENERS.items()
+            ),
+        )
+    )
+    corrupt = [df for n, df in zip(n_bad, bad) if n]
+    quarantined = Observation()
+    if corrupt:
+        quarantine = reduce(DataFrame.unionAll, corrupt).observe(quarantined, _count())
+    else:
+        quarantine = spark.createDataFrame([], bad[0].schema)
+    quarantine.write.mode("overwrite").option("compression", codec).parquet(
+        os.path.join(out_dir, "quarantine")
+    )
+    return PipelineResult(
+        tables=dict(zip(_FLATTENERS, tables)),
+        counts=dict(zip(_FLATTENERS, landed)),
+        quarantined=quarantined.get["n"] if corrupt else 0,
+    )
 
 
 def _count(col: str | None = None) -> Column:

@@ -33,6 +33,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import run_concurrently
 from ..tables import (
     ensure_events_read_conf,
     load_table,
@@ -704,14 +705,14 @@ def s9_stream_neardup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials: list[tuple] = []
     try:
         # The guard pass and the delta landing write are independent
-        # actions on independent lineages — run them from a 2-thread
-        # pool so the landing back-fills the guard's tail instead of
-        # queueing behind it. The guard reuses the CACHED base bucket
+        # actions on independent lineages — run them at once so the
+        # landing back-fills the guard's tail instead of queueing
+        # behind it. The guard reuses the CACHED base bucket
         # index for the base side of the occupancy (no second base
         # explode — lsh_hottest_bucket sums the sides' per-bucket
         # counts, which over disjoint id spaces is the occupancy of
         # the two sides' union). The raise still happens before any micro-batch
-        # runs: both futures resolve before the stream starts.
+        # runs: both actions finish before the stream starts.
         def _guard() -> int:
             return lsh_hottest_bucket(
                 minhash_signatures(dg_all),
@@ -742,13 +743,7 @@ def s9_stream_neardup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
                     shutil.move(p, f"{base}/delivery_{k}_{j}.parquet")
             shutil.rmtree(scratch, ignore_errors=True)
 
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            hot_fut = pool.submit(_guard)
-            land_fut = pool.submit(_land)
-            hottest = hot_fut.result()
-            land_fut.result()
+        hottest, _ = run_concurrently(spark, _guard, _land)
         if hottest > LSH_MAX_BUCKET // 2:
             raise RuntimeError(
                 "s9 cap proximity: hottest (band,bucket) occupancy "

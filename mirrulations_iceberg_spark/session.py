@@ -9,7 +9,10 @@ to a real cluster, sized down only where local[,N] testing requires.
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
+from typing import Any, Callable
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 
 #: Configs that are correct at any scale (cluster or local test).
@@ -117,3 +120,21 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def run_concurrently(spark: SparkSession, *actions: Callable[[], Any]) -> list[Any]:
+    """Run independent Spark actions at once; their results in order.
+
+    Each action is a thunk on its own thread of a pool sized to the
+    actions, so one action's planning, commit and the driver's wait
+    between its jobs overlap another's running tasks. Every thunk is
+    wrapped in ``inheritable_thread_target(spark)`` on the calling
+    thread, so its jobs carry the caller's job group, local properties
+    and tags: a job-group count or profile of the caller sees them.
+    Every action runs to its end before the first failing one's error
+    (in argument order) is raised, so no thread is left writing behind
+    the caller's back.
+    """
+    with ThreadPoolExecutor(max_workers=len(actions)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(a)) for a in actions]
+    return [f.result() for f in futures]

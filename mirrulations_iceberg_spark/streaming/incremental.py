@@ -6,11 +6,15 @@ Structured Streaming's own machinery:
 
 * the **file source** discovers new comment JSON files per trigger and
   records them in the checkpoint — the progress file, done right;
-* ``foreachBatch`` + an id anti-join against the landed table makes the
-  sink **idempotent**, so a batch replayed after a crash cannot
-  duplicate rows (the parquet sink alone is append-only, not
-  transactional — at production scale the anti-join is replaced by an
-  Iceberg/Delta ``MERGE INTO``, same plan shape);
+* ``foreachBatch`` + an id anti-join against the landed table, for
+  two things Spark's parquet sink does not do (that sink is
+  transactional: it commits each batch through its ``_spark_metadata``
+  log): each batch has a second output, the quarantine of corrupt
+  records; and a comment id must land once across batches and runs,
+  which the anti-join enforces, so a batch replayed after a crash
+  (``foreachBatch`` is at-least-once) duplicates no row — at
+  production scale the anti-join is replaced by an Iceberg/Delta
+  ``MERGE INTO``, same plan shape;
 * ``Trigger.AvailableNow`` drains everything currently on disk and
   stops — the batch-backfill mode; a long-lived trigger interval turns
   the same code into the live tailer.
@@ -26,6 +30,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..etl.flatten import flatten_comments
 from ..etl.ingest import ENVELOPE_SCHEMA
+from ..session import run_concurrently
 
 
 def stream_comments(
@@ -64,24 +69,32 @@ def stream_comments(
             F.col("_src").alias("source_file"),
             F.col("_corrupt_record").alias("raw"),
         )
-        # Quarantine first: if the job dies between the two writes the
-        # checkpoint replays the batch and the id anti-join below keeps
-        # the main table exactly-once; quarantine rows may duplicate on
-        # replay, which is the right failure mode for a triage table.
-        bad.write.mode("append").parquet(quarantine_dir)
-        new = flatten_comments(
-            batch_df.filter(batch_df["_corrupt_record"].isNull())
-        ).dropDuplicates(["id"])
-        if os.path.isdir(out_dir) and any(
-            f.endswith(".parquet")
-            for _r, _d, fs in os.walk(out_dir)
-            for f in fs
-        ):
-            # The package wrote this table, so its id column is known:
-            # declaring it skips schema inference and reads only ids.
-            existing = batch_df.sparkSession.read.schema("id STRING").parquet(out_dir)
-            new = new.join(existing, "id", "left_anti")
-        new.write.mode("append").parquet(out_dir)
+
+        def land() -> None:
+            new = flatten_comments(
+                batch_df.filter(batch_df["_corrupt_record"].isNull())
+            ).dropDuplicates(["id"])
+            if os.path.isdir(out_dir) and any(
+                f.endswith(".parquet")
+                for _r, _d, fs in os.walk(out_dir)
+                for f in fs
+            ):
+                # The package wrote this table, so its id column is known:
+                # declaring it skips schema inference and reads only ids.
+                existing = batch_df.sparkSession.read.schema("id STRING").parquet(out_dir)
+                new = new.join(existing, "id", "left_anti")
+            new.write.mode("append").parquet(out_dir)
+
+        # The two writes share nothing, so they run at once. If either
+        # fails, the batch fails and the checkpoint replays it: the id
+        # anti-join keeps the main table exactly-once whichever write
+        # landed, and quarantine rows may duplicate on replay, which is
+        # the right failure mode for a triage table.
+        run_concurrently(
+            batch_df.sparkSession,
+            lambda: bad.write.mode("append").parquet(quarantine_dir),
+            land,
+        )
 
     return (
         raw.writeStream.foreachBatch(upsert)

@@ -70,11 +70,37 @@ def test_convert_runs_one_job_per_write(spark, tree, tmp_path):
     root, expected = tree
     out = str(tmp_path / "out")
     res, n_jobs = jobs_during(spark, lambda: run_pipeline(spark, root, out))
-    assert n_jobs <= 4
+    assert n_jobs == 4
     assert res.quarantined == expected["corrupt"]
     for table, df in res.tables.items():
         assert df.dtypes == spark.read.parquet(os.path.join(out, table)).dtypes
         assert df.columns[-1] == "agencyId"
+
+
+def test_quarantine_unions_corrupt_rows_of_every_kind(spark, tmp_path):
+    """Corrupt files in two record kinds land in one quarantine write,
+    beside the three table writes, and a clean re-run into the same
+    ``out_dir`` still empties the quarantine."""
+    root, out = str(tmp_path / "tree"), str(tmp_path / "out")
+    expected = write_docket_tree(root)
+    docs = sorted(glob.glob(os.path.join(root, "*", "raw-data", "documents")))[-1]
+    for k in range(3):
+        with open(os.path.join(docs, f"corrupt-{k}.json"), "w") as f:
+            f.write('{"data": {"id": "broken", "attributes": {')
+    res, n_jobs = jobs_during(spark, lambda: run_pipeline(spark, root, out))
+    assert n_jobs == 4
+    assert res.quarantined == expected["corrupt"] + 3
+    assert res.counts["documents"] == expected["documents"]
+    sources = {
+        r.source_file
+        for r in spark.read.parquet(os.path.join(out, "quarantine")).collect()
+    }
+    assert len(sources) == expected["corrupt"] + 3
+    assert {s.rsplit("/", 2)[-2] for s in sources} == {"comments", "documents"}
+    for path in glob.glob(os.path.join(root, "**", "corrupt-*.json"), recursive=True):
+        os.remove(path)
+    assert run_pipeline(spark, root, out).quarantined == 0
+    assert spark.read.parquet(os.path.join(out, "quarantine")).count() == 0
 
 
 def test_comments_schema(result):

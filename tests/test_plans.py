@@ -5,6 +5,7 @@ regress."""
 
 from __future__ import annotations
 
+import ast
 import pathlib
 import re
 
@@ -629,5 +630,31 @@ def test_session_conf_is_written_only_where_documented():
             if rel == "operators/util.py" and m.start() in helper:
                 continue
             line = text.count("\n", 0, m.start()) + 1
+            offenders.append(f"{rel}:{line}")
+    assert not offenders, offenders
+
+
+_THREAD_START = re.compile(r"ThreadPoolExecutor\(|threading\.Thread\(")
+
+
+def test_threads_start_only_through_the_helper():
+    """Package code starts a thread only in ``session.run_concurrently``,
+    which hands each thread its caller's job group, local properties
+    and tags: a plain thread's jobs run unlabelled, invisible to a
+    job-group count or profile."""
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "mirrulations_iceberg_spark"
+    helper = next(
+        node
+        for node in ast.parse((pkg / "session.py").read_text()).body
+        if isinstance(node, ast.FunctionDef) and node.name == "run_concurrently"
+    )
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        text = path.read_text()
+        for m in _THREAD_START.finditer(text):
+            line = text.count("\n", 0, m.start()) + 1
+            if rel == "session.py" and helper.lineno <= line <= helper.end_lineno:
+                continue
             offenders.append(f"{rel}:{line}")
     assert not offenders, offenders

@@ -82,7 +82,7 @@ def test_second_stream_call_runs_four_jobs(spark, tree, tmp_path):
     assert n_files == 2 * (expected["comments"] + expected["corrupt"])  # 2 × 52
     q = stream_comments(spark, root, out, ckpt)
     q.awaitTermination()
-    assert job_count(spark, str(q.runId)) <= 4
+    assert job_count(spark, str(q.runId)) == 4
     assert spark.read.parquet(out).count() == 2 * expected["comments"]
 
 
@@ -95,9 +95,9 @@ def test_stream_quarantines_corrupt(spark, tree, tmp_path):
     q = stream_comments(spark, root, out, str(tmp_path / "ckpt"))
     q.awaitTermination()
     quarantined = spark.read.parquet(f"{out}_quarantine")
-    # The fixture plants corrupt files across record kinds; the comment
-    # stream sees only the comments subtree.
-    assert 0 < quarantined.count() <= expected["corrupt"]
+    # The fixture plants every corrupt file in the first docket's
+    # comments subtree, which the comment stream reads.
+    assert quarantined.count() == expected["corrupt"]
     assert quarantined.filter("source_file IS NULL OR raw IS NULL").count() == 0
 
 
