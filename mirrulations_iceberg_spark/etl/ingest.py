@@ -67,8 +67,20 @@ def read_docket_json(
     analogue of the reference's per-directory walks
     (``convert_to_iceberg.py:441,475,512``). ``kind=None`` reads every
     JSON file under the root (S5 glob read).
+
+    The kind glob is expanded with Hadoop's ``FileSystem.globStatus``
+    (any scheme, ``viewfs://`` and ``s3a://`` included) and the matches
+    are read as a list. Handed the glob itself, Spark's batch reader
+    first probes the literal path for a streaming sink's metadata log,
+    which fails and logs a stack trace per read. A glob with no match
+    is passed on unchanged, so the read fails with ``PATH_NOT_FOUND``.
     """
-    path = f"{root}/*/raw-data/{kind}" if kind else root
+    paths = [root]
+    if kind:
+        glob = spark._jvm.org.apache.hadoop.fs.Path(f"{root}/*/raw-data/{kind}")
+        fs = glob.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+        matches = fs.globStatus(glob) or []
+        paths = sorted(m.getPath().toString() for m in matches) or [glob.toString()]
     return (
         spark.read.schema(ENVELOPE_SCHEMA)
         .option("multiLine", "true")
@@ -76,7 +88,7 @@ def read_docket_json(
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .option("recursiveFileLookup", "true")
         .option("pathGlobFilter", "*.json")
-        .json(path)
+        .json(paths)
     )
 
 

@@ -27,7 +27,7 @@ Scale notes (the whole point of these operators):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..tables import load_table
@@ -42,9 +42,9 @@ SHINGLE_K = 3
 
 #: Degenerate-bucket cap of the CROSS-frame LSH probe (named so s9's
 #: runtime headroom check and the cap-boundary pytest pin the same
-#: number the probe actually uses — ADVICE r14). The within-corpus
-#: variants keep their own literal defaults; only the cross probe's
-#: cap participates in a stream/batch parity contract.
+#: number the probe actually uses). The within-corpus variants keep
+#: their own literal defaults; only the cross probe's cap participates
+#: in a stream/batch parity contract.
 LSH_MAX_BUCKET = 1_000
 
 
@@ -60,7 +60,7 @@ def lsh_hottest_bucket(
     fails loudly and diagnosably at the operator instead of surfacing
     as a mystifying red parity row at the driver — a firing cap is
     batch-composition-dependent and breaks the stream/batch parity
-    contract by design (ADVICE r14). A row-count bound would be
+    contract by design. A row-count bound would be
     uselessly conservative (all-rows-in-one-bucket); the measured
     occupancy is the fact (3–4 vs cap 1000 on the fixtures).
 
@@ -177,6 +177,56 @@ def fingerprint_reps(rows: DataFrame, keys: list[str], payload: str) -> DataFram
     )
 
 
+def bucket_pairs(
+    rows: DataFrame,
+    keys: list[str],
+    member: str | Column,
+    cap: int | None = None,
+    star: bool = False,
+) -> DataFrame:
+    """Candidate pairs from inside each group of ``rows``: the candidate
+    step of every group-then-verify near-dup operator (shingle, MinHash
+    band, SimHash band, SRP bucket, source fingerprint).
+
+    ``rows`` is grouped by ``keys`` into a sorted array of ``member``, a
+    column name or a struct (a struct sorts by its first field first).
+    ONE shuffle builds the groups, and the pairs come from array lambdas
+    inside each group, so the input is scanned once where a self-join
+    would scan and shuffle it twice. A group with one member gives
+    nothing, and so does a group with more than ``cap`` members when
+    ``cap`` is set: a hot group's pairs grow quadratically and carry no
+    pruning signal.
+
+    Returns one row ``(a, b)`` per candidate, ``a`` before ``b`` in sort
+    order: every in-group pair, or with ``star`` each member paired with
+    its group's minimum (linear in group size). A pair that shares
+    several groups comes back once per group; the caller deduplicates
+    before or after its verify.
+    """
+    ids = F.col("ids")
+    size = F.size(ids)
+    keep = size > 1 if cap is None else (size > 1) & (size <= cap)
+    grouped = (
+        rows.groupBy(*keys)
+        .agg(F.sort_array(F.collect_list(member)).alias("ids"))
+        .filter(keep)
+    )
+    if star:
+        return grouped.select(
+            ids[0].alias("a"), F.explode(F.slice(ids, 2, size)).alias("b")
+        )
+    pair_arr = F.flatten(
+        F.transform(
+            ids,
+            lambda x, i: F.transform(
+                F.slice(ids, i + 2, size),
+                lambda y: F.struct(x.alias("a"), y.alias("b")),
+            ),
+        )
+    )
+    return grouped.select(F.explode(pair_arr).alias("p")).select("p.a", "p.b")
+
+
 def d1_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: group by content fingerprint, keep the smallest
     doc_id per group. One hash-agg shuffle of (fingerprint, id) pairs."""
@@ -194,37 +244,22 @@ def jaccard_pairs(
 ) -> DataFrame:
     """Exact 3-gram Jaccard near-dup pairs ≥ threshold over ANY
     document DataFrame with (doc_id, text) — the reusable core of d2,
-    also composed into e2's training pipeline."""
+    also composed into e2's training pipeline. Candidates are the
+    :func:`bucket_pairs` of each shingle's postings; the cap is the
+    hot-shingle guard (ubiquitous shingles carry no signal) — no-op at
+    test SF, load-bearing at 100 TB. Each candidate row is one shared
+    shingle, so counting them gives the intersection size."""
     sh = with_shingles(docs).withColumn("n_sh", F.size("shingles"))
     postings = sh.select("doc_id", "n_sh", F.explode("shingles").alias("shingle"))
-    # Group-and-pair instead of a postings self-join: ONE shuffle on
-    # shingle builds per-shingle doc lists, pairs are generated with
-    # array lambdas inside the group. A self-join would scan + tokenize
-    # the corpus twice and shuffle it twice; this scans once. The size
-    # filter is the hot-shingle guard (ubiquitous shingles carry no
-    # signal and would make pair generation quadratic) — no-op at test
-    # SF, load-bearing at 100 TB.
-    grouped = (
-        postings.groupBy("shingle")
-        .agg(F.sort_array(F.collect_list(F.struct("doc_id", "n_sh"))).alias("ds"))
-        .filter((F.size("ds") > 1) & (F.size("ds") <= max_shingle_freq))
-    )
-    pair_arr = F.flatten(
-        F.transform(
-            F.col("ds"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ds"), i + 2, F.size(F.col("ds"))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
     pairs = (
-        grouped.select(F.explode(pair_arr).alias("p"))
+        bucket_pairs(
+            postings, ["shingle"], F.struct("doc_id", "n_sh"), cap=max_shingle_freq
+        )
         .select(
-            F.col("p.a.doc_id").alias("doc_a"),
-            F.col("p.b.doc_id").alias("doc_b"),
-            F.col("p.a.n_sh").alias("n_a"),
-            F.col("p.b.n_sh").alias("n_b"),
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            F.col("a.n_sh").alias("n_a"),
+            F.col("b.n_sh").alias("n_b"),
         )
         .groupBy("doc_a", "doc_b", "n_a", "n_b")
         .agg(F.count(F.lit(1)).alias("common"))
@@ -292,9 +327,9 @@ def shingle_cap_report(docs: DataFrame, max_shingle_freq: int = 10_000) -> DataF
 def d2b_cap_report(
     spark: SparkSession, sf_dir: str, max_shingle_freq: int = 10_000
 ) -> DataFrame:
-    """d2's truncation companion (VERDICT r3 item #3): the hot-shingle
-    cap's effect as data. One shuffle on shingle (the same key d2
-    groups on), four-column single-row summary out."""
+    """d2's truncation companion: the hot-shingle cap's effect as
+    data. One shuffle on shingle (the same key d2 groups on),
+    four-column single-row summary out."""
     return shingle_cap_report(
         load_table(spark, sf_dir, "documents"), max_shingle_freq
     )
@@ -432,8 +467,9 @@ def band_buckets_col():
 
 def _band_rows(sigs: DataFrame) -> DataFrame:
     """(doc_id, band, bucket) rows of a signature frame — the ONE
-    explode of :func:`band_buckets_col`. Every banded-LSH index
-    (:func:`lsh_band_buckets`) and the cap guard
+    explode of :func:`band_buckets_col`. The within-corpus candidates
+    (:func:`bucket_pairs` in d3/d7 and their reuses), the cross-probe
+    index (:func:`lsh_band_buckets`) and the cap guard
     (:func:`lsh_hottest_bucket`) build from it."""
     return sigs.select(
         "doc_id", F.posexplode(band_buckets_col()).alias("band", "bucket")
@@ -441,12 +477,13 @@ def _band_rows(sigs: DataFrame) -> DataFrame:
 
 
 def lsh_band_buckets(sigs: DataFrame, ids_alias: str) -> DataFrame:
-    """(band, bucket) → sorted doc-id array index of a signature frame:
-    the band explode + the ONE hash-agg shuffle every banded-LSH path
-    pairs from (d3/d16 within a corpus, d7 against the bucket min,
-    d18/e14/s9 across two frames). A repeat prober (s9) computes the
-    BASE side once, caches it, and reuses it across micro-batches (the
-    stored-index shape of the 100 TB story)."""
+    """(band, bucket) → sorted doc-id array index of a signature frame,
+    uncapped and with singleton buckets kept: the two sides of the
+    cross-frame probe (:func:`minhash_lsh_cross_pairs_over`, serving
+    d18/e14/s9), which caps their joined occupancy instead. A repeat
+    prober (s9) computes the BASE side once, caches it, and reuses it
+    across micro-batches (the stored-index shape of the 100 TB
+    story)."""
     return (
         _band_rows(sigs)
         .groupBy("band", "bucket")
@@ -524,39 +561,24 @@ def minhash_lsh_pairs_over(
 ) -> DataFrame:
     """d3's banded MinHash-LSH + exact-Jaccard verify over an arbitrary
     (doc_id, text) frame — factored out so cluster-level consumers
-    (d16) can run it over a pre-collapsed representative set instead of
-    the raw corpus. The signature frame is cached (it feeds the band
-    explode AND both verify joins); a MATERIALIZING caller passes
-    ``caches`` and hands the registered frame to
-    ``materialize_release`` so the cache's lifetime ends with the
-    query (ADVICE: an unregistered internal cache outlives every
-    handle on a long-lived shared session)."""
+    (d16, d17, e13) can run it over a pre-collapsed representative set
+    instead of the raw corpus. Candidates are the :func:`bucket_pairs`
+    of each (band, bucket); the cap is the degenerate-bucket guard (a
+    boilerplate-heavy corpus can put thousands of near-identical docs
+    into one bucket) — no-op at test SF, load-bearing at 100 TB. The
+    signature frame is cached (it feeds the band explode AND both
+    verify joins); a MATERIALIZING caller passes ``caches`` and hands
+    the registered frame to ``materialize_release`` so the cache's
+    lifetime ends with the query (an unregistered internal cache
+    outlives every handle on a long-lived shared session)."""
     sigs = minhash_signatures(docs).cache()
     if caches is not None:
         caches.append(sigs)
-    # Group-and-pair (same shape as d2): ONE shuffle on (band, bucket)
-    # builds per-bucket doc lists; candidate pairs are generated with
-    # array lambdas inside the bucket instead of a bands⋈bands self-join
-    # (which would recompute the signature lineage twice). The size cap
-    # is the degenerate-bucket guard: a boilerplate-heavy corpus can put
-    # thousands of near-identical docs into one bucket and make pair
-    # generation quadratic — buckets past the cap carry no pruning
-    # signal. No-op at test SF, load-bearing at 100 TB.
-    buckets = lsh_band_buckets(sigs, "ids").filter(
-        (F.size("ids") > 1) & (F.size("ids") <= max_bucket_size)
-    )
-    pair_arr = F.flatten(
-        F.transform(
-            F.col("ids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        )
-    )
     cand = (
-        buckets.select(F.explode(pair_arr).alias("p"))
-        .select("p.doc_a", "p.doc_b")
+        bucket_pairs(
+            _band_rows(sigs), ["band", "bucket"], "doc_id", cap=max_bucket_size
+        )
+        .toDF("doc_a", "doc_b")
         .distinct()
     )
     return verify_exact_jaccard(cand, sigs, threshold)
@@ -643,8 +665,8 @@ def d5_simhash_pairs(
     """SimHash near-dup pairs: Hamming-band candidates + bit_count
     verify. By pigeonhole, any pair within Hamming distance 3 agrees on
     at least one of the four 16-bit bands, so candidates come from ONE
-    shuffle on (band_idx, band_key) with in-group pair generation (the
-    d2/d3 shape + the same degenerate-bucket cap) and are verified with
+    shuffle on (band_idx, band_key) with in-group pair generation
+    (:func:`bucket_pairs` with the degenerate-bucket cap) and are verified with
     ``bit_count(a XOR b) <= 3`` — no all-pairs stage anywhere. Oracle:
     all-pairs Hamming SQL — pigeonhole makes the banded candidate set
     EXACTLY complete (not probabilistically), so the outputs are equal
@@ -657,30 +679,16 @@ def d5_simhash_pairs(
             F.array(*[f"band_{i}" for i in range(SIMHASH_BANDS)])
         ).alias("band", "key"),
     )
-    buckets = (
-        bands.groupBy("band", "key")
-        .agg(
-            F.sort_array(F.collect_list(F.struct("doc_id", "simhash"))).alias("ds")
-        )
-        .filter((F.size("ds") > 1) & (F.size("ds") <= max_bucket_size))
-    )
-    pair_arr = F.flatten(
-        F.transform(
-            F.col("ds"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ds"), i + 2, F.size(F.col("ds"))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
     return (
-        buckets.select(F.explode(pair_arr).alias("p"))
+        bucket_pairs(
+            bands, ["band", "key"], F.struct("doc_id", "simhash"), cap=max_bucket_size
+        )
         .select(
-            F.col("p.a.doc_id").alias("doc_a"),
-            F.col("p.b.doc_id").alias("doc_b"),
-            F.bit_count(
-                F.col("p.a.simhash").bitwiseXOR(F.col("p.b.simhash"))
-            ).alias("hamming"),
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias(
+                "hamming"
+            ),
         )
         .filter(F.col("hamming") <= max_hamming)
         .distinct()
@@ -720,8 +728,9 @@ def d7_dedup_apply_lsh(
     (measured: 20× corpus with 20-copy clusters → 36× d2 runtime, all
     of it real output). A pipeline that only needs the deduplicated
     table never builds pairs: within each LSH bucket, verify every doc
-    against the bucket MINIMUM only — candidates are linear in bucket
-    size — and drop docs that match their bucket min. Greedy (keeps
+    against the bucket MINIMUM only (:func:`bucket_pairs` with
+    ``star=True`` — candidates are linear in bucket size) and drop docs
+    that match their bucket min. Greedy (keeps
     the per-bucket canonical, not a transitive-closure canonical),
     which is the standard large-corpus trade. Oracle: the exact
     drop-rule SQL — valid here because the fixture clusters are
@@ -736,15 +745,16 @@ def d7_dedup_apply_lsh(
     """
     docs = load_table(spark, sf_dir, "documents")
     sigs = minhash_signatures(docs).cache()
-    buckets = lsh_band_buckets(sigs, "ids").filter(
-        (F.size("ids") > 1) & (F.size("ids") <= max_bucket_size)
-    )
     # (bucket-min, member) candidates: LINEAR in bucket size.
     cand = (
-        buckets.select(
-            F.col("ids")[0].alias("doc_a"),
-            F.explode(F.slice("ids", 2, F.size("ids"))).alias("doc_b"),
+        bucket_pairs(
+            _band_rows(sigs),
+            ["band", "bucket"],
+            "doc_id",
+            cap=max_bucket_size,
+            star=True,
         )
+        .toDF("doc_a", "doc_b")
         .distinct()
     )
     drop = (
@@ -1468,9 +1478,9 @@ def t16_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: shingles reduce to 32-char md5 fingerprints BEFORE
     anything shuffles (the d1/d15 discipline); one shuffle builds the
     distinct (source, fp) posting set (cached — it feeds totals AND
-    pairs), one group-and-pair shuffle on fp collects each
-    fingerprint's source set and emits pairs with array lambdas (the
-    d2/d3 shape — no self-join, no lineage recompute). Per-fingerprint
+    pairs), and :func:`bucket_pairs` on fp collects each fingerprint's
+    source set and emits its source pairs (no self-join, no lineage
+    recompute). Per-fingerprint
     fanout is bounded by |sources|·(|sources|-1)/2 structurally, and
     the output is |sources|² rows at ANY corpus size. Pairs with zero
     shared shingles are omitted (both engines).
@@ -1482,9 +1492,8 @@ def t16_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE tokenize+shingle+hash pass: per_src is cached and feeds both
     # the per-source totals and the pair counts (a per_src⋈per_src
     # self-join would re-run the whole corpus lineage per side — the
-    # d3 recompute trap); pairs come from the d2/d3 group-and-pair
-    # shape (collect sources per fingerprint, fanout bounded by
-    # |sources| per row) instead of a self-join.
+    # d3 recompute trap); pairs come from bucket_pairs (sources per
+    # fingerprint, fanout bounded by |sources| per row) instead.
     per_src = (
         docs.withColumn("__toks", tokens_col(F.col("text")))
         .select(
@@ -1496,23 +1505,9 @@ def t16_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cache()
     )
     counts = per_src.groupBy("source").agg(F.count(F.lit(1)).alias("n_sh"))
-    srcs = (
-        per_src.groupBy("fp")
-        .agg(F.sort_array(F.collect_set("source")).alias("ss"))
-        .filter(F.size("ss") > 1)
-    )
-    pair_arr = F.flatten(
-        F.transform(
-            F.col("ss"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ss"), i + 2, F.size(F.col("ss"))),
-                lambda y: F.struct(x.alias("src_a"), y.alias("src_b")),
-            ),
-        )
-    )
     inter = (
-        srcs.select(F.explode(pair_arr).alias("p"))
-        .groupBy("p.src_a", "p.src_b")
+        bucket_pairs(per_src, ["fp"], "source")
+        .groupBy(F.col("a").alias("src_a"), F.col("b").alias("src_b"))
         .agg(F.count(F.lit(1)).alias("common"))
     )
     ca = counts.select(
@@ -1621,23 +1616,9 @@ def d20_minhash_source_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = per_src.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_sh")
     )
-    srcs = (
-        per_src.groupBy("fp")
-        .agg(F.sort_array(F.collect_set("source")).alias("ss"))
-        .filter(F.size("ss") > 1)
-    )
-    pair_arr = F.flatten(
-        F.transform(
-            F.col("ss"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ss"), i + 2, F.size(F.col("ss"))),
-                lambda y: F.struct(x.alias("src_a"), y.alias("src_b")),
-            ),
-        )
-    )
     inter = (
-        srcs.select(F.explode(pair_arr).alias("p"))
-        .groupBy("p.src_a", "p.src_b")
+        bucket_pairs(per_src, ["fp"], "source")
+        .groupBy(F.col("a").alias("src_a"), F.col("b").alias("src_b"))
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
     ca = counts.select(

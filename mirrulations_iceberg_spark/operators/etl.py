@@ -1557,14 +1557,13 @@ def e17_changelog_card_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``lang`` moved GROUPS (the rewrite prefixes it) debits the old
     group and credits the new one for free.
 
-    Fixture: m19's exact snapshot layout (files A/B/C; commit 2
+    Fixture: m19's snapshot layout, from the shared
+    ``maintenance.two_snapshot_manifests`` (files A/B/C; commit 2
     rewrites B copy-on-write — %3==1 rows dropped, %3==0 rows get the
-    ``rw:`` lang prefix, %3==2 rows carry verbatim — and appends D),
-    deliberately self-contained rather than shared with m19 (the t20
-    precedent: sharing would put a gated operator back through the
-    gate for a pure refactor). Grading: the incrementally-maintained
-    card vs a full recompute from the manifest-2 read, joined FULL
-    OUTER so one-sided groups report consistent = 0.
+    ``rw:`` lang prefix, %3==2 rows carry verbatim — and appends D).
+    Grading: the incrementally-maintained card vs a full recompute from
+    the manifest-2 read, joined FULL OUTER so one-sided groups report
+    consistent = 0.
 
     Scale shape: the state build and the recompute grade scan the
     corpus once each (a deployment persists the state and skips the
@@ -1572,12 +1571,9 @@ def e17_changelog_card_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     files — O(delta) — and the merge shuffles O(state + delta)
     aggregated rows.
     """
-    import json as _json
-    import os
-
     from ..tables import load_table
     from .dedup import parallelize_scan
-    from .maintenance import _tmpdir, write_parquet
+    from .maintenance import _tmpdir, two_snapshot_manifests
     from .text import tokens_col
 
     docs = parallelize_scan(load_table(spark, sf_dir, "documents")).select(
@@ -1585,43 +1581,7 @@ def e17_changelog_card_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     base = _tmpdir()
     try:
-        buckets = {
-            "A": docs.filter(F.col("doc_id") % 4 == 0),
-            "B": docs.filter(F.col("doc_id") % 4 == 1),
-            "C": docs.filter(F.col("doc_id") % 4 == 2),
-        }
-        b_rewritten = (
-            buckets["B"]
-            .filter(F.col("doc_id") % 3 != 1)
-            .withColumn(
-                "lang",
-                F.when(
-                    F.col("doc_id") % 3 == 0,
-                    F.concat(F.lit("rw:"), F.coalesce("lang", F.lit(""))),
-                ).otherwise(F.col("lang")),
-            )
-        )
-        d_new = docs.filter(F.col("doc_id") % 4 == 3)
-        files: dict[str, list[str]] = {}
-        for name, df in {**buckets, "Bp": b_rewritten, "D": d_new}.items():
-            d = os.path.join(base, f"file-{name}")
-            write_parquet(df, d, n_files=1)
-            files[name] = sorted(
-                os.path.join(d, f)
-                for f in os.listdir(d)
-                if f.endswith(".parquet")
-            )
-        manifests = {
-            "1": files["A"] + files["B"] + files["C"],
-            "2": files["A"] + files["Bp"] + files["C"] + files["D"],
-        }
-        for snap, paths in manifests.items():
-            with open(os.path.join(base, f"manifest-{snap}.json"), "w") as fh:
-                _json.dump({"snapshot": snap, "files": paths}, fh)
-        with open(os.path.join(base, "manifest-1.json")) as fh:
-            m1 = _json.load(fh)["files"]
-        with open(os.path.join(base, "manifest-2.json")) as fh:
-            m2 = _json.load(fh)["files"]
+        m1, m2 = two_snapshot_manifests(docs, base)
         only1 = sorted(set(m1) - set(m2))
         only2 = sorted(set(m2) - set(m1))
 

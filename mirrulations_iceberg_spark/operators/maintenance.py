@@ -1469,6 +1469,61 @@ def m20_zorder_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(base, ignore_errors=True)
 
 
+def two_snapshot_manifests(docs: DataFrame, base: str) -> tuple[list[str], list[str]]:
+    """Write the copy-on-write two-snapshot fixture of m19 and e17
+    under ``base`` and return (manifest-1 files, manifest-2 files).
+
+    S1 = three one-file buckets A (doc_id%4==0), B (%4==1) and
+    C (%4==2). Commit 2 rewrites B copy-on-write as B′ — %3==1 rows are
+    dropped, %3==0 rows get their ``lang`` prefixed with ``rw:``, %3==2
+    rows carry over verbatim — and appends D (%4==3). The rewrite
+    marker is a prefix of the existing value, never a sentinel that
+    could collide with a real lang, so a rewritten row differs from its
+    S1 payload for ANY lang domain, NULL included. Manifest 1 is
+    {A, B, C} and manifest 2 {A, B′, C, D}; each is written as JSON and
+    the lists are read back from those files, as a changelog reader
+    resolves a snapshot.
+    """
+    import json as _json
+
+    buckets = {
+        "A": docs.filter(F.col("doc_id") % 4 == 0),
+        "B": docs.filter(F.col("doc_id") % 4 == 1),
+        "C": docs.filter(F.col("doc_id") % 4 == 2),
+    }
+    b_rewritten = (
+        buckets["B"]
+        .filter(F.col("doc_id") % 3 != 1)
+        .withColumn(
+            "lang",
+            F.when(
+                F.col("doc_id") % 3 == 0,
+                F.concat(F.lit("rw:"), F.coalesce("lang", F.lit(""))),
+            ).otherwise(F.col("lang")),
+        )
+    )
+    d_new = docs.filter(F.col("doc_id") % 4 == 3)
+    files: dict[str, list[str]] = {}
+    for name, df in {**buckets, "Bp": b_rewritten, "D": d_new}.items():
+        d = os.path.join(base, f"file-{name}")
+        write_parquet(df, d, n_files=1)
+        files[name] = sorted(
+            os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")
+        )
+    manifests = {
+        "1": files["A"] + files["B"] + files["C"],
+        "2": files["A"] + files["Bp"] + files["C"] + files["D"],
+    }
+    for snap, paths in manifests.items():
+        with open(os.path.join(base, f"manifest-{snap}.json"), "w") as fh:
+            _json.dump({"snapshot": snap, "files": paths}, fh)
+    resolved = []
+    for snap in manifests:
+        with open(os.path.join(base, f"manifest-{snap}.json")) as fh:
+            resolved.append(_json.load(fh)["files"])
+    return resolved[0], resolved[1]
+
+
 def m19_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M-extension: snapshot-to-snapshot diff — the changelog read
     between two table versions (Iceberg's incremental
@@ -1489,60 +1544,18 @@ def m19_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     A naive corpus×corpus self-join diff would shuffle both snapshots
     in full; this plan shuffles only what the commit touched.
 
-    Fixture (deterministic mod splits, so the whole lifecycle is
-    oracle-checked): S1 = three files A (doc_id%4==0), B (%4==1),
-    C (%4==2). Commit 2 rewrites B copy-on-write — %3==0 rows get a
-    new ``lang`` (changed), %3==1 rows are dropped (deleted), %3==2
-    rows carry over verbatim (unchanged via the JOIN path, proving
-    payload compare works) — and adds file D (%4==3). Manifest 2 =
-    {A, C, B', D}; A and C flow through the shared-file fast path
-    (unchanged via the PRUNE path — both unchanged routes exercised).
+    Fixture (:func:`two_snapshot_manifests`; deterministic mod splits,
+    so the whole lifecycle is oracle-checked): commit 2's rewrite of B
+    gives %3==0 rows a new ``lang`` (changed), drops %3==1 rows
+    (deleted) and carries %3==2 rows verbatim (unchanged via the JOIN
+    path, proving payload compare works), and appends D (added). A and
+    C flow through the shared-file fast path (unchanged via the PRUNE
+    path — both unchanged routes exercised).
     """
-    import json as _json
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
     base = _tmpdir()
     try:
-        buckets = {
-            "A": docs.filter(F.col("doc_id") % 4 == 0),
-            "B": docs.filter(F.col("doc_id") % 4 == 1),
-            "C": docs.filter(F.col("doc_id") % 4 == 2),
-        }
-        files: dict[str, list[str]] = {}
-        # commit 2: copy-on-write rewrite of B + append of D. The
-        # rewrite marker is a prefix of the existing value (never a
-        # sentinel that could collide with a real lang), so 'changed'
-        # rows differ from their S1 payload for ANY lang domain,
-        # including NULL (review r13).
-        b = buckets["B"]
-        b_rewritten = b.filter(F.col("doc_id") % 3 != 1).withColumn(
-            "lang",
-            F.when(
-                F.col("doc_id") % 3 == 0,
-                F.concat(F.lit("rw:"), F.coalesce("lang", F.lit(""))),
-            ).otherwise(F.col("lang")),
-        )
-        d_new = docs.filter(F.col("doc_id") % 4 == 3)
-        for name, df in {**buckets, "Bp": b_rewritten, "D": d_new}.items():
-            d = os.path.join(base, f"file-{name}")
-            write_parquet(df, d, n_files=1)
-            files[name] = sorted(
-                os.path.join(d, f)
-                for f in os.listdir(d)
-                if f.endswith(".parquet")
-            )
-        manifests = {
-            "1": files["A"] + files["B"] + files["C"],
-            "2": files["A"] + files["Bp"] + files["C"] + files["D"],
-        }
-        for snap, paths in manifests.items():
-            with open(os.path.join(base, f"manifest-{snap}.json"), "w") as fh:
-                _json.dump({"snapshot": snap, "files": paths}, fh)
-        # --- the diff proper: resolve manifests fresh from disk
-        with open(os.path.join(base, "manifest-1.json")) as fh:
-            m1 = _json.load(fh)["files"]
-        with open(os.path.join(base, "manifest-2.json")) as fh:
-            m2 = _json.load(fh)["files"]
+        m1, m2 = two_snapshot_manifests(docs, base)
         shared = sorted(set(m1) & set(m2))
         only1 = sorted(set(m1) - set(m2))
         only2 = sorted(set(m2) - set(m1))
@@ -1554,7 +1567,7 @@ def m19_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count(F.lit(1)).alias("n"),
                 # empty shared set -> SUM is NULL; coalesce so the
                 # int() below can't raise on a corpus with no rows in
-                # the shared buckets (ADVICE r13)
+                # the shared buckets
                 F.coalesce(F.sum("doc_id"), F.lit(0)).alias("ck"),
             )
             .collect()[0]
@@ -1562,7 +1575,7 @@ def m19_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         # join path: only the delta files on each side. Presence is
         # carried as explicit flags — classifying on payload nullness
         # would misread a legitimately-NULL column as row absence —
-        # and the payload compare is null-safe (review r13).
+        # and the payload compare is null-safe.
         s1 = spark.read.parquet(*only1).select(
             F.col("doc_id"),
             F.col("lang").alias("lang1"),

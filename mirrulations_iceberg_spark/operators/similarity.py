@@ -33,7 +33,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..tables import load_table
-from .dedup import parallelize_scan
+from .dedup import bucket_pairs, parallelize_scan
 from .util import bind, materialize_release, scoped_session
 
 TOP_K = 10
@@ -348,8 +348,8 @@ def x4_embedding_neardup_pairs(
     """Embedding-cosine near-dup pairs — the vector-space flavor of the
     dedup family (d2/d3/d5 operate on token shingles; this one on the
     embedding column). Same sub-quadratic shape: SRP-LSH buckets →
-    in-bucket pair generation (capped) → exact cosine verify ≥
-    threshold.
+    capped in-bucket pairs (:func:`~.dedup.bucket_pairs`) → exact
+    cosine verify ≥ threshold.
 
     **Diagnostic surface** (registered as
     ``x4_embedding_neardup_pairs_diag``): in-bucket pair generation is
@@ -374,23 +374,9 @@ def x4_embedding_neardup_pairs(
     """
     emb = _embeddings(spark, sf_dir).withColumn("buckets", _bucket_cols()).cache()
     bands = emb.select("vec_id", F.posexplode("buckets").alias("t", "bucket"))
-    buckets = (
-        bands.groupBy("t", "bucket")
-        .agg(F.sort_array(F.collect_list("vec_id")).alias("ids"))
-        .filter((F.size("ids") > 1) & (F.size("ids") <= max_bucket_size))
-    )
-    pair_arr = F.flatten(
-        F.transform(
-            F.col("ids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-                lambda y: F.struct(x.alias("vec_a"), y.alias("vec_b")),
-            ),
-        )
-    )
-    cand = buckets.select(F.explode(pair_arr).alias("p")).select(
-        "p.vec_a", "p.vec_b"
-    )
+    cand = bucket_pairs(
+        bands, ["t", "bucket"], "vec_id", cap=max_bucket_size
+    ).toDF("vec_a", "vec_b")
     a = emb.select(
         F.col("vec_id").alias("vec_a"), F.col("e").alias("qe"), F.col("norm").alias("qnorm")
     )
@@ -412,10 +398,10 @@ def x4_embedding_neardup_pairs(
 def x4b_bucket_cap_report(
     spark: SparkSession, sf_dir: str, max_bucket_size: int = 1_000
 ) -> DataFrame:
-    """x4's truncation companion (VERDICT r3 item #3): the bucket-size
-    cap's effect as data. A bucket past the cap generates ZERO pairs,
-    so x4's pair set is complete only when ``n_capped_buckets`` is 0 —
-    on a skew-heavy corpus (mass duplication collapsing into one SRP
+    """x4's truncation companion: the bucket-size cap's effect as
+    data. A bucket past the cap generates ZERO pairs, so x4's pair set
+    is complete only when ``n_capped_buckets`` is 0 — on a skew-heavy
+    corpus (mass duplication collapsing into one SRP
     bucket) this makes the silent recall loss a queryable number. Same
     single shuffle on (table, bucket) as x4's candidate stage; one
     summary row out."""
@@ -501,8 +487,9 @@ def x6_embedding_dedup_apply(
     trick in vector space. x4 materializes near-dup PAIRS, which is
     inherently quadratic per duplicate cluster (k copies ⇒ k(k-1)/2
     pairs); a pipeline that only needs the deduplicated table verifies
-    each vector against its fine SRP bucket's minimum instead —
-    candidates are linear in bucket size — and drops vectors whose
+    each vector against its fine SRP bucket's minimum instead
+    (:func:`~.dedup.bucket_pairs` with ``star=True`` — candidates are
+    linear in bucket size) and drops vectors whose
     exact cosine to the bucket min clears the threshold. Greedy
     per-bucket canonical, the standard large-corpus trade (same as d7
     for token shingles); see ``APPLY_BITS`` for why the apply uses its
@@ -522,16 +509,11 @@ def x6_embedding_dedup_apply(
         .cache()
     )
     bands = emb.select("vec_id", F.posexplode("buckets").alias("t", "bucket"))
-    buckets = (
-        bands.groupBy("t", "bucket")
-        .agg(F.sort_array(F.collect_list("vec_id")).alias("ids"))
-        .filter((F.size("ids") > 1) & (F.size("ids") <= max_bucket_size))
-    )
     cand = (
-        buckets.select(
-            F.col("ids")[0].alias("vec_a"),
-            F.explode(F.slice("ids", 2, F.size("ids"))).alias("vec_b"),
+        bucket_pairs(
+            bands, ["t", "bucket"], "vec_id", cap=max_bucket_size, star=True
         )
+        .toDF("vec_a", "vec_b")
         .distinct()
     )
     a = emb.select(
@@ -2031,31 +2013,16 @@ def _x12_kept_edges(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, list]:
     """x12's kept k-NN edge set (shared x12/x16 core): SRP-LSH
-    buckets → capped in-bucket pairs → DISTINCT → symmetrize → exact
+    buckets → capped in-bucket pairs (:func:`~.dedup.bucket_pairs`) →
+    DISTINCT → symmetrize → exact
     cosine → per-node top-``X12_K`` via one WindowGroupLimit window.
     Returns (kept(node, nb, label, cos_sim), caches) — caller passes
     the caches to ``materialize_release``."""
     emb = _embeddings(spark, sf_dir).withColumn("buckets", _bucket_cols()).cache()
     bands = emb.select("vec_id", F.posexplode("buckets").alias("t", "bucket"))
-    buckets = (
-        bands.groupBy("t", "bucket")
-        .agg(F.sort_array(F.collect_list("vec_id")).alias("ids"))
-        .filter((F.size("ids") > 1) & (F.size("ids") <= X12_MAX_BUCKET))
-    )
-    pair_arr = F.flatten(
-        F.transform(
-            F.col("ids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
-    pairs = (
-        buckets.select(F.explode(pair_arr).alias("p"))
-        .select("p.a", "p.b")
-        .distinct()
-    )
+    pairs = bucket_pairs(
+        bands, ["t", "bucket"], "vec_id", cap=X12_MAX_BUCKET
+    ).distinct()
     edges = pairs.select(
         F.col("a").alias("node"), F.col("b").alias("nb")
     ).unionByName(pairs.select(F.col("b").alias("node"), F.col("a").alias("nb")))

@@ -40,6 +40,7 @@ from ..tables import (
     local_path,
     normalize_event_ts,
     parquet_schema,
+    stream_table,
 )
 from .util import bind, scoped_session
 
@@ -126,19 +127,6 @@ def _stream_session(
     return scoped_session(spark, {"spark.sql.shuffle.partitions": str(parts)})
 
 
-def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The events fixture as a file-source stream, with the same
-    TIMESTAMP(NANOS) → timestamp conversion as ``tables.load_table``
-    so stream and batch arithmetic agree."""
-    ensure_events_read_conf(spark)
-    batch_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
-    return normalize_event_ts(
-        spark.readStream.schema(batch_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-
-
 def _run_to_table(
     frame: DataFrame,
     prefix: str,
@@ -173,7 +161,7 @@ def s1_stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Decimal-stabilized sum keeps the check exact across micro-batch
     accumulation order (the same convention as the batch queries).
     """
-    events = _events_stream(spark, sf_dir)
+    events = stream_table(spark, sf_dir, "events")
     agg = (
         events.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
@@ -373,7 +361,7 @@ def s3_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..streaming.sessions import sessionize_stream
 
-    events = _events_stream(spark, sf_dir)
+    events = stream_table(spark, sf_dir, "events")
     sess = sessionize_stream(events.select("user_id", "ts", "value"))
     # deliberately UNSIZED (cores rule): the cost here is per-group
     # Python compute inside applyInPandasWithState, which wants all
@@ -442,7 +430,6 @@ def s6_stream_base_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .dedup import D10_DELTA_MOD, content_fp_from_toks, tokens_col
 
-    batch_schema = parquet_schema(spark, f"{sf_dir}/documents.parquet")
     fp = content_fp_from_toks(tokens_col(F.col("text"))).alias("fingerprint")
     is_delta = F.col("doc_id") % D10_DELTA_MOD == 0
 
@@ -453,9 +440,7 @@ def s6_stream_base_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     delta = (
-        spark.readStream.schema(batch_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
+        stream_table(spark, sf_dir, "documents")
         .filter(is_delta)
         .select("doc_id", "lang", fp)
     )
@@ -577,28 +562,15 @@ def s8_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     one algorithm, two feeders, one oracle) — the alarm a streaming
     monitor raises is bit-identical to the batch backfill's.
     """
-    import os
-
     from .windows import w16_detect
 
-    src = f"{sf_dir}/events.parquet"
-    if os.path.isdir(src):
-        # Replicated corpora (scalestress) land as multi-file
-        # directories; the shared _events_stream globs for a FILE named
-        # events.parquet and would stream zero rows. Stream the
-        # directory itself instead (the s4 precedent — handled locally
-        # so green s1/s5 don't re-enter the gate for this).
-        ensure_events_read_conf(spark)
-        schema = parquet_schema(spark, src)
-        events = normalize_event_ts(
-            spark.readStream.schema(schema).parquet(src)
-        )
-    else:
-        events = _events_stream(spark, sf_dir)
+    events = stream_table(spark, sf_dir, "events")
     daily = events.groupBy(
         "event_type", F.to_date("ts").alias("day")
     ).agg(F.count(F.lit(1)).alias("n_events"))
-    return w16_detect(_run_to_table(daily, "s8_sink", _path_bytes(src)))
+    return w16_detect(
+        _run_to_table(daily, "s8_sink", _path_bytes(f"{sf_dir}/events.parquet"))
+    )
 
 
 def s9_stream_neardup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:

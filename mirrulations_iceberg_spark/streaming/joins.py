@@ -34,15 +34,9 @@ def attributed_purchases(
     one row per qualifying click within ``max_gap`` before the
     purchase (inner join — unattributed purchases drop out).
     """
-    from ..tables import ensure_events_read_conf, normalize_event_ts, parquet_schema
+    from ..tables import stream_table
 
-    ensure_events_read_conf(spark)
-    batch_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
-    events = normalize_event_ts(
-        spark.readStream.schema(batch_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    events = stream_table(spark, sf_dir, "events")
     clicks = (
         events.filter(F.col("event_type") == "click")
         .select(

@@ -21,22 +21,14 @@ def windowed_event_counts(
 ) -> DataFrame:
     """Streaming tumbling-window counts over the events fixture.
 
-    The stream normalizes ``ts`` with the same helper as
-    tables.load_table (nanos-as-long or plain micros, generation-
-    dependent) so batch and stream agree. Returns an unstarted
-    streaming DataFrame; callers pick sink + trigger.
+    The stream is ``tables.stream_table``'s, which normalizes ``ts``
+    like ``tables.load_table`` (nanos-as-long or plain micros,
+    generation-dependent) so batch and stream agree. Returns an
+    unstarted streaming DataFrame; callers pick sink + trigger.
     """
-    from ..tables import ensure_events_read_conf, normalize_event_ts, parquet_schema
+    from ..tables import stream_table
 
-    ensure_events_read_conf(spark)
-    batch_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
-    # The file stream source wants a DIRECTORY basePath; narrow to the
-    # events file with a glob filter.
-    events = normalize_event_ts(
-        spark.readStream.schema(batch_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    events = stream_table(spark, sf_dir, "events")
     return (
         events.withWatermark("ts", watermark)
         .groupBy(F.window("ts", window).alias("w"), F.col("event_type"))

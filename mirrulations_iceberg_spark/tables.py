@@ -191,15 +191,41 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     filters / prunes columns into the vectorized Parquet reader, so
     callers never pre-materialize.
     """
+    path, schema = _table_schema(spark, sf_dir, name)
+    df = spark.read.schema(schema).parquet(path)
+    return normalize_event_ts(df) if name == "events" else df
+
+
+def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The streaming twin of :func:`load_table`: one table as a
+    file-source stream with the same schema, events conf and ``ts``
+    normalization, so stream and batch arithmetic agree. The file
+    source wants a DIRECTORY: a table written as a single file is
+    streamed from ``sf_dir`` with a ``pathGlobFilter`` on its file name,
+    and a table written as a multi-file directory (a replicated corpus)
+    is streamed from that directory. Returns an unstarted streaming
+    DataFrame."""
+    path, schema = _table_schema(spark, sf_dir, name)
+    reader = spark.readStream.schema(schema)
+    local = local_path(path)
+    if local is not None and os.path.isdir(local):
+        df = reader.parquet(path)
+    else:
+        df = reader.option("pathGlobFilter", f"{name}.parquet").parquet(sf_dir)
+    return normalize_event_ts(df) if name == "events" else df
+
+
+def _table_schema(
+    spark: SparkSession, sf_dir: str, name: str
+) -> tuple[str, StructType]:
+    """(path, schema) of one synthetic table, after setting the events
+    read conf when ``name`` is ``events``."""
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     if name == "events":
         ensure_events_read_conf(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
-    if name == "events":
-        df = normalize_event_ts(df)
-    return df
+    return path, parquet_schema(spark, path)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

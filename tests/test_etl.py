@@ -183,6 +183,16 @@ def test_kind_pruning(spark, tree):
     assert docket_only.count() == expected["dockets"]
 
 
+def test_kind_glob_without_match_is_path_not_found(spark, tmp_path):
+    """The kind glob is expanded before the read; a glob that matches
+    nothing is read as given, so the scan still fails as a missing
+    path instead of silently reading no files."""
+    from pyspark.errors import AnalysisException
+
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        read_docket_json(spark, str(tmp_path), "comments")
+
+
 def test_normalize_event_ts_generation_agnostic(spark, tmp_path):
     """The events fixture has flipped between TIMESTAMP(NANOS) and
     plain-micros across driver testdata regenerations (r5). Pin that

@@ -4,9 +4,12 @@ key structure."""
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import functions as F
 
 from mirrulations_iceberg_spark.operators.dedup import (
+    bucket_pairs,
     d2_ngram_jaccard_pairs,
     d3_minhash_lsh_pairs,
     d4_simhash,
@@ -51,6 +54,46 @@ def test_shingle_cap_fires_and_is_observable(spark):
     assert rep.max_df == 8
     clean = shingle_cap_report(docs, max_shingle_freq=10_000).collect()[0]
     assert clean.n_capped_shingles == 0  # cap idle ⇒ d2 output complete
+
+
+def test_bucket_pairs_matches_combinations_and_group_min(spark):
+    """``bucket_pairs`` over hand-built groups equals
+    ``itertools.combinations`` of each kept group (pair mode) and each
+    member with its group minimum (star mode). Kept: a group of exactly
+    ``cap`` members; dropped: ``cap + 1`` members and a singleton. A
+    pair that shares two groups comes back once per group."""
+    cap = 4
+    groups = {
+        "at_cap": [7, 3, 9, 5],
+        "over_cap": [1, 2, 3, 4, 6],
+        "single": [8],
+        "twice_1": [11, 12],
+        "twice_2": [12, 11, 13],
+    }
+    rows = spark.createDataFrame(
+        [(g, m) for g, ms in groups.items() for m in ms], "g string, m long"
+    )
+    kept = [sorted(ms) for ms in groups.values() if 1 < len(ms) <= cap]
+    pairs = sorted(p for ms in kept for p in itertools.combinations(ms, 2))
+    star = sorted((ms[0], m) for ms in kept for m in ms[1:])
+
+    got = bucket_pairs(rows, ["g"], "m", cap=cap)
+    assert got.columns == ["a", "b"]
+    assert sorted(map(tuple, got.collect())) == pairs
+    assert pairs.count((11, 12)) == 2
+    got_star = bucket_pairs(rows, ["g"], "m", cap=cap, star=True)
+    assert sorted(map(tuple, got_star.collect())) == star
+    # no cap: the over-cap group's pairs come back too
+    uncapped = bucket_pairs(rows, ["g"], "m").collect()
+    assert len(uncapped) == len(pairs) + 10
+
+    # struct members sort by their first field, whatever the second
+    srows = spark.createDataFrame(
+        [("k", 3, "a"), ("k", 1, "z"), ("k", 2, "m")], "g string, id long, v string"
+    )
+    got_s = bucket_pairs(srows, ["g"], F.struct("id", "v")).collect()
+    assert sorted((r.a.id, r.b.id) for r in got_s) == [(1, 2), (1, 3), (2, 3)]
+    assert {(r.a.id, r.a.v) for r in got_s} == {(1, "z"), (2, "m")}
 
 
 def test_lsh_pairs_subset_of_exact(spark):

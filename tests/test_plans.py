@@ -658,3 +658,37 @@ def test_threads_start_only_through_the_helper():
                 continue
             offenders.append(f"{rel}:{line}")
     assert not offenders, offenders
+
+
+#: The in-group pair builder (an index lambda whose body is the inner
+#: transform over the rest of the group) and the star explode of every
+#: member past the group minimum.
+_PAIR_BUILDER = re.compile(
+    r"lambda\s+\w+\s*,\s*\w+\s*:\s*F\.transform\(|F\.slice\([^,]+,\s*2\s*,"
+)
+
+
+def test_bucket_pairs_is_the_one_pair_generator():
+    """Near-dup candidates come from inside a group only through
+    ``dedup.bucket_pairs``: one home for the sorted group array, the
+    hot-group cap and the pair or star explode, so a cap-drop counter
+    or a change to the pairing rule lands in one place."""
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "mirrulations_iceberg_spark"
+    dedup = pkg / "operators" / "dedup.py"
+    helper = next(
+        (
+            range(node.lineno, node.end_lineno + 1)
+            for node in ast.parse(dedup.read_text()).body
+            if isinstance(node, ast.FunctionDef) and node.name == "bucket_pairs"
+        ),
+        range(0),
+    )
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        text = path.read_text()
+        for m in _PAIR_BUILDER.finditer(text):
+            line = text.count("\n", 0, m.start()) + 1
+            if path == dedup and line in helper:
+                continue
+            offenders.append(f"{path.relative_to(pkg).as_posix()}:{line}")
+    assert not offenders, offenders

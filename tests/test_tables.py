@@ -19,7 +19,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql.types import LongType, StructField, StructType
 
 from mirrulations_iceberg_spark import tables
-from mirrulations_iceberg_spark.tables import load_table, parquet_schema
+from mirrulations_iceberg_spark.tables import load_table, parquet_schema, stream_table
 
 from .conftest import jobs_during
 
@@ -110,6 +110,33 @@ def _files(tmp_path, n):
     for i, p in enumerate(paths):
         p.write_bytes(b"x" * (i + 1))
     return [str(p) for p in paths]
+
+
+def test_stream_table_streams_a_file_or_a_directory_table(spark, tmp_path):
+    """``stream_table`` streams the rows ``load_table`` reads, for a
+    table written as one file beside another table's file (the name
+    filter keeps only its own) and for one written as a multi-file
+    directory (a replicated corpus)."""
+    flat = tmp_path / "flat"
+    flat.mkdir()
+    _write(flat / "region.parquet", r_key=[1, 2], r_name=["a", "b"])
+    _write(flat / "nation.parquet", n_key=[9], n_name=["z"])
+    nested = tmp_path / "nested" / "region.parquet"
+    nested.mkdir(parents=True)
+    _write(nested / "part-0.parquet", r_key=[1], r_name=["a"])
+    _write(nested / "part-1.parquet", r_key=[2], r_name=["b"])
+    for i, sf in enumerate((flat, nested.parent)):
+        query = (
+            stream_table(spark, str(sf), "region")
+            .writeStream.format("memory")
+            .queryName(f"stream_table_{i}")
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert query.awaitTermination(120)
+        streamed = sorted(map(tuple, spark.table(query.name).collect()))
+        loaded = sorted(map(tuple, load_table(spark, str(sf), "region").collect()))
+        assert streamed == loaded == [(1, "a"), (2, "b")]
 
 
 def test_memo_evicts_least_recently_used(tmp_path, monkeypatch):
