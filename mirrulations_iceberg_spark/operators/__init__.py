@@ -20,7 +20,13 @@ Conventions that keep the DuckDB differential check meaningful:
   exact half (627/800) Spark's HALF_UP-on-decimal-repr, DuckDB's
   round(x·10⁴)-in-binary, and Python's banker's round give three
   different answers — and use integer basis points instead:
-  ``(10000 * a) DIV b`` (Spark) == ``(10000 * a) // b`` (DuckDB).
+  ``(10000 * a) DIV b`` (Spark) == ``(10000 * a) // b`` (DuckDB);
+* an oracle building block used by more than one oracle (the n-gram
+  window, the token/shingle/pair CTEs, the embedding cast and norm,
+  the SRP bucket, the IVF fit replay) is one shared SQL fragment,
+  generated from the same constants as its Spark-side step and kept
+  next to it (``dedup._ngram_sql``, ``similarity._ivf_fit_ctes``, ...);
+  oracles compose fragments and never restate them.
 """
 
 from __future__ import annotations

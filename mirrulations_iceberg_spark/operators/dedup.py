@@ -40,6 +40,60 @@ from .text import (
 
 SHINGLE_K = 3
 
+
+# DuckDB oracle fragments. Each is the SQL twin of one Spark-side step,
+# generated from the same constant, so the oracles compose them instead
+# of restating the step.
+
+
+def _ngram_concat(k: int, i: str = "i") -> str:
+    """The ``k``-token window of ``t`` starting at 1-based index ``i``,
+    its tokens joined by one space (``concat_ws(" ", ...)``)."""
+    return " || ' ' || ".join(f"t[{i}+{j}]" if j else f"t[{i}]" for j in range(k))
+
+
+def _ngram_sql(k: int) -> str:
+    """Every ``k``-token window of ``t`` in order, as a DuckDB list; empty
+    below ``k`` tokens, like the Spark side's guarded window ladder."""
+    return (
+        f"list_transform(range(1, GREATEST(len(t) - {k - 1}, 0) + 1), "
+        f"i -> {_ngram_concat(k)})"
+    )
+
+
+def _toks_cte(cols: str = "doc_id") -> str:
+    """``toks``: ``cols`` of each document and its ``tokens_col`` list ``t``."""
+    return f"""toks AS (
+            SELECT {cols}, regexp_extract_all(lower(text), '{TOKEN_PATTERN}') AS t
+            FROM documents
+        )"""
+
+
+def _shingles_cte(cols: str = "doc_id", src: str = "toks") -> str:
+    """``sh``: ``cols`` of each ``src`` row and its distinct shingles."""
+    return f"""sh AS (
+            SELECT {cols}, list_distinct({_ngram_sql(SHINGLE_K)}) AS shingles
+            FROM {src}
+        )"""
+
+
+#: ``postings`` → ``pairs``: every doc pair (``doc_a < doc_b``) sharing a
+#: shingle of ``sh``, with both shingle counts and the overlap ``common``;
+#: the exact Jaccard ground truth the candidate stages are verified against.
+_PAIRS_CTES = """postings AS (
+            SELECT doc_id, len(shingles) AS n_sh, unnest(shingles) AS shingle FROM sh
+        ), pairs AS (
+            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+                   a.n_sh AS n_a, b.n_sh AS n_b, COUNT(*) AS common
+            FROM postings a JOIN postings b USING (shingle)
+            WHERE a.doc_id < b.doc_id
+            GROUP BY 1, 2, 3, 4
+        )"""
+
+#: A ``pairs`` row is a near-dup at rounded Jaccard >= 0.18, the default
+#: ``threshold`` of the Spark near-dup operators.
+_JACCARD_KEEP = "ROUND(common / CAST(n_a + n_b - common AS DOUBLE), 4) >= 0.18"
+
 #: Degenerate-bucket cap of the CROSS-frame LSH probe (named so s9's
 #: runtime headroom check and the cap-boundary pytest pin the same
 #: number the probe actually uses). The within-corpus variants keep
@@ -2115,10 +2169,7 @@ QUERIES = {
 # DuckDB twin of d4's SimHash: identical md5-derived 60-bit token
 # hashes, identical sign-of-bit-sum arithmetic.
 _SIMHASH_SQL = f"""
-        WITH toks AS (
-            SELECT doc_id, regexp_extract_all(lower(text), '{TOKEN_PATTERN}') AS t
-            FROM documents
-        ), th AS (
+        WITH {_toks_cte()}, th AS (
             SELECT doc_id,
                    list_transform(t, x -> ('0x' || substr(md5(x), 1, 15))::BIGINT)
                        AS th
@@ -2138,37 +2189,37 @@ _SIMHASH_SQL = f"""
 # candidate recall 1 — deterministically true on the fixtures, see the
 # d3 docstring — both produce exactly this pair set.
 _EXACT_PAIRS_SQL = f"""
-        WITH toks AS (
-            SELECT doc_id, regexp_extract_all(lower(text), '{TOKEN_PATTERN}') AS t
-            FROM documents
-        ), sh AS (
-            SELECT doc_id,
-                   list_distinct(list_transform(range(1, GREATEST(len(t) - {SHINGLE_K - 1}, 0) + 1),
-                                 i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingles
-            FROM toks
-        ), postings AS (
-            SELECT doc_id, len(shingles) AS n_sh, unnest(shingles) AS shingle FROM sh
-        ), pairs AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                   a.n_sh AS n_a, b.n_sh AS n_b, COUNT(*) AS common
-            FROM postings a JOIN postings b USING (shingle)
-            WHERE a.doc_id < b.doc_id
-            GROUP BY 1, 2, 3, 4
-        )
+        WITH {_toks_cte()}, {_shingles_cte()}, {_PAIRS_CTES}
         SELECT doc_a, doc_b, common,
                ROUND(common / CAST(n_a + n_b - common AS DOUBLE), 4) AS jaccard
         FROM pairs
-        WHERE ROUND(common / CAST(n_a + n_b - common AS DOUBLE), 4) >= 0.18
+        WHERE {_JACCARD_KEEP}
         ORDER BY doc_a, doc_b
     """
 
-def _d15_win_concat(idx: str) -> str:
-    """The D15_K-token window concat for the d15/d15b DuckDB oracles,
-    generated from D15_K the same way the UNNEST range bound is — so
-    retuning D15_K can never desynchronize the oracle's window width
-    from the Spark side (ADVICE r11)."""
-    return " || ' ' || ".join(f"t[{idx}+{j}]" for j in range(D15_K))
+#: The exact drop rule of d6/d7: ``drops`` holds the later doc of every
+#: near-dup pair.
+_DROPS_SQL = f"""
+        WITH {_toks_cte()}, {_shingles_cte()}, {_PAIRS_CTES}, drops AS (
+            SELECT DISTINCT doc_b AS doc_id FROM pairs WHERE {_JACCARD_KEEP}
+        )"""
 
+#: d8's closure (shared with d16): ``lab`` labels every doc of a near-dup
+#: pair with the minimum doc_id of its connected component.
+_COMPONENTS_SQL = f"""
+        WITH RECURSIVE {_toks_cte()}, {_shingles_cte()}, {_PAIRS_CTES}, fp AS (
+            SELECT doc_a, doc_b FROM pairs WHERE {_JACCARD_KEEP}
+        ), edges AS (
+            SELECT doc_a AS a, doc_b AS b FROM fp
+            UNION
+            SELECT doc_b AS a, doc_a AS b FROM fp
+        ), reach(a, b) AS (
+            SELECT a, b FROM edges
+            UNION
+            SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
+        ), lab AS (
+            SELECT a AS node, LEAST(a, MIN(b)) AS label FROM reach GROUP BY a
+        )"""
 
 ORACLE = {
     # d18: uncollapsed exact cross-Jaccard (delta×base postings join —
@@ -2176,17 +2227,7 @@ ORACLE = {
     # member-level flags here equal Spark's group-flag expansion
     # because exact copies share all shingles.
     "d18_incremental_neardup": f"""
-        WITH toks AS (
-            SELECT doc_id, lang,
-                   regexp_extract_all(lower(text), '{TOKEN_PATTERN}') AS t
-            FROM documents
-        ), sh AS (
-            SELECT doc_id, lang,
-                   list_distinct(list_transform(
-                       range(1, GREATEST(len(t) - {SHINGLE_K - 1}, 0) + 1),
-                       i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingles
-            FROM toks
-        ), pd AS (
+        WITH {_toks_cte("doc_id, lang")}, {_shingles_cte("doc_id, lang")}, pd AS (
             SELECT doc_id, len(shingles) AS n_sh, unnest(shingles) AS shingle
             FROM sh WHERE doc_id % {D10_DELTA_MOD} = 0
         ), pb AS (
@@ -2199,8 +2240,7 @@ ORACLE = {
             GROUP BY 1, 2, 3, 4
         ), fl AS (
             SELECT DISTINCT doc_a FROM pairs
-            WHERE ROUND(common / CAST(n_a + n_b - common AS DOUBLE), 4)
-                      >= 0.18
+            WHERE {_JACCARD_KEEP}
         ), dd AS (
             SELECT s.doc_id, s.lang,
                    CASE WHEN f.doc_a IS NOT NULL THEN 1 ELSE 0 END AS flag
@@ -2219,30 +2259,14 @@ ORACLE = {
         FROM dd GROUP BY lang ORDER BY lang
     """,
     "d17_split_leakage": f"""
-        WITH toks AS (
-            SELECT doc_id, regexp_extract_all(lower(text), '{TOKEN_PATTERN}') AS t
-            FROM documents
-        ), sh AS (
-            SELECT doc_id,
-                   list_distinct(list_transform(range(1, GREATEST(len(t) - {SHINGLE_K - 1}, 0) + 1),
-                                 i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingles
-            FROM toks
-        ), postings AS (
-            SELECT doc_id, len(shingles) AS n_sh, unnest(shingles) AS shingle FROM sh
-        ), rawp AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                   a.n_sh AS n_a, b.n_sh AS n_b, COUNT(*) AS common
-            FROM postings a JOIN postings b USING (shingle)
-            WHERE a.doc_id < b.doc_id
-            GROUP BY 1, 2, 3, 4
-        ), vp AS (
+        WITH {_toks_cte()}, {_shingles_cte()}, {_PAIRS_CTES}, vp AS (
             SELECT doc_a, doc_b,
                    CASE WHEN substring(md5(CAST(doc_a AS VARCHAR)), 1, 1) < 'd'
                         THEN 'train' ELSE 'holdout' END AS sa,
                    CASE WHEN substring(md5(CAST(doc_b AS VARCHAR)), 1, 1) < 'd'
                         THEN 'train' ELSE 'holdout' END AS sb
-            FROM rawp
-            WHERE ROUND(common / CAST(n_a + n_b - common AS DOUBLE), 4) >= 0.18
+            FROM pairs
+            WHERE {_JACCARD_KEEP}
         ), cat AS (
             SELECT doc_a, doc_b, sa, sb,
                    CASE WHEN sa = sb THEN 'within_' || sa
@@ -2275,13 +2299,9 @@ ORACLE = {
     # keys (DuckDB MIN rejects struct ordering), coverage union via
     # the same fixed-width lead() arithmetic as the Spark side.
     "d15b_exact_substring_cut": f"""
-        WITH toks AS (
-            SELECT doc_id, lang,
-                   regexp_extract_all(lower(text), '{TOKEN_PATTERN}') AS t
-            FROM documents
-        ), occ AS (
+        WITH {_toks_cte("doc_id, lang")}, occ AS (
             SELECT doc_id, lang, u.i - 1 AS pos,
-                   md5({_d15_win_concat('u.i')}) AS h
+                   md5({_ngram_concat(D15_K, 'u.i')}) AS h
             FROM toks,
                  UNNEST(range(1, GREATEST(len(t) - {D15_K - 1}, 0) + 1)) u(i)
         ), hs AS (
@@ -2323,15 +2343,9 @@ ORACLE = {
         FROM pd GROUP BY lang ORDER BY lang
     """,
     "d15_exact_substring_spans": f"""
-        WITH toks AS (
+        WITH {_toks_cte("doc_id, lang")}, w AS (
             SELECT doc_id, lang,
-                   regexp_extract_all(lower(text), '{TOKEN_PATTERN}') AS t
-            FROM documents
-        ), w AS (
-            SELECT doc_id, lang,
-                   md5(unnest(list_distinct(list_transform(
-                       range(1, GREATEST(len(t) - {D15_K - 1}, 0) + 1),
-                       i -> {_d15_win_concat('i')})))) AS h
+                   md5(unnest(list_distinct({_ngram_sql(D15_K)}))) AS h
             FROM toks
         ), c AS (
             SELECT h, COUNT(DISTINCT doc_id) AS nd FROM w GROUP BY h
@@ -2400,15 +2414,11 @@ ORACLE = {
         FROM p
     """,
     "d12_segment_boilerplate": f"""
-        WITH toks AS (
-            SELECT doc_id,
-                   regexp_extract_all(lower(text), '{TOKEN_PATTERN}') AS t
-            FROM documents
-        ), chunks AS (
+        WITH {_toks_cte()}, chunks AS (
             -- lateral unnest of the scalar range(): per-document chunk
             -- indices derived from len(t), so the oracle is unbounded
-            -- like the Spark side (ADVICE r6: the old CROSS JOIN
-            -- range(0, 4096) silently capped docs at 16384 tokens).
+            -- like the Spark side (a fixed CROSS JOIN range(0, 4096)
+            -- would cap docs at 16384 tokens).
             -- Zero-token docs yield range(0,0) = [] and drop out, the
             -- same guard as the Spark side's ceil(size/SEG_TOKENS)=0.
             SELECT doc_id, u.i AS pos,
@@ -2461,15 +2471,7 @@ ORACLE = {
         FROM novel GROUP BY lang ORDER BY lang
     """,
     "d2b_cap_report": f"""
-        WITH toks AS (
-            SELECT doc_id, regexp_extract_all(lower(text), '{TOKEN_PATTERN}') AS t
-            FROM documents
-        ), sh AS (
-            SELECT doc_id,
-                   list_distinct(list_transform(range(1, GREATEST(len(t) - {SHINGLE_K - 1}, 0) + 1),
-                                 i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingles
-            FROM toks
-        ), postings AS (
+        WITH {_toks_cte()}, {_shingles_cte()}, postings AS (
             SELECT unnest(shingles) AS shingle FROM sh
         ), dfreq AS (
             SELECT shingle, COUNT(*) AS df FROM postings GROUP BY 1
@@ -2503,26 +2505,7 @@ ORACLE = {
         WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
     """,
     "d6_dedup_apply": f"""
-        WITH toks AS (
-            SELECT doc_id, regexp_extract_all(lower(text), '{TOKEN_PATTERN}') AS t
-            FROM documents
-        ), sh AS (
-            SELECT doc_id,
-                   list_distinct(list_transform(range(1, GREATEST(len(t) - {SHINGLE_K - 1}, 0) + 1),
-                                 i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingles
-            FROM toks
-        ), postings AS (
-            SELECT doc_id, len(shingles) AS n_sh, unnest(shingles) AS shingle FROM sh
-        ), pairs AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                   a.n_sh AS n_a, b.n_sh AS n_b, COUNT(*) AS common
-            FROM postings a JOIN postings b USING (shingle)
-            WHERE a.doc_id < b.doc_id
-            GROUP BY 1, 2, 3, 4
-        ), drops AS (
-            SELECT DISTINCT doc_b AS doc_id FROM pairs
-            WHERE ROUND(common / CAST(n_a + n_b - common AS DOUBLE), 4) >= 0.18
-        )
+{_DROPS_SQL}
         SELECT COUNT(*) AS n_kept,
                CAST(SUM(n_chars) AS BIGINT) AS kept_chars,
                MIN(doc_id) AS min_kept_id,
@@ -2535,41 +2518,12 @@ ORACLE = {
     # the fixtures (fixed hashes; checked equal to d6 at sf0.01 and
     # sf0.1), so the exact drop-rule SQL is a valid oracle.
     "d7_dedup_apply_lsh": f"""
-        WITH toks AS (
-            SELECT doc_id, regexp_extract_all(lower(text), '{TOKEN_PATTERN}') AS t
-            FROM documents
-        ), sh AS (
-            SELECT doc_id,
-                   list_distinct(list_transform(range(1, GREATEST(len(t) - {SHINGLE_K - 1}, 0) + 1),
-                                 i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingles
-            FROM toks
-        ), postings AS (
-            SELECT doc_id, len(shingles) AS n_sh, unnest(shingles) AS shingle FROM sh
-        ), pairs AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                   a.n_sh AS n_a, b.n_sh AS n_b, COUNT(*) AS common
-            FROM postings a JOIN postings b USING (shingle)
-            WHERE a.doc_id < b.doc_id
-            GROUP BY 1, 2, 3, 4
-        ), drops AS (
-            SELECT DISTINCT doc_b AS doc_id FROM pairs
-            WHERE ROUND(common / CAST(n_a + n_b - common AS DOUBLE), 4) >= 0.18
-        )
+{_DROPS_SQL}
         SELECT COUNT(*) AS n_kept, CAST(SUM(n_chars) AS BIGINT) AS kept_chars
         FROM documents WHERE doc_id NOT IN (SELECT doc_id FROM drops)
     """,
     "d9_decontaminate": f"""
-        WITH toks AS (
-            SELECT doc_id, lang,
-                   regexp_extract_all(lower(text), '{TOKEN_PATTERN}') AS t
-            FROM documents
-        ), sh AS (
-            SELECT doc_id, lang,
-                   list_distinct(list_transform(
-                       range(1, GREATEST(len(t) - {SHINGLE_K - 1}, 0) + 1),
-                       i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingles
-            FROM toks
-        ), bench AS (
+        WITH {_toks_cte("doc_id, lang")}, {_shingles_cte("doc_id, lang")}, bench AS (
             SELECT DISTINCT unnest(shingles) AS shingle FROM sh
             WHERE doc_id % {DECON_MOD} = 0
         ), corpus AS (
@@ -2591,16 +2545,9 @@ ORACLE = {
         FROM totals t LEFT JOIN flagged f ON t.lang = f.lang
     """,
     "d14_contamination_grade": f"""
-        WITH toks AS (
+        WITH {_toks_cte("doc_id, lang")}, g AS (
             SELECT doc_id, lang,
-                   regexp_extract_all(lower(text), '{TOKEN_PATTERN}') AS t
-            FROM documents
-        ), g AS (
-            SELECT doc_id, lang,
-                   unnest(list_transform(
-                       range(1, GREATEST(len(t) - {CONTAM_N - 1}, 0) + 1),
-                       i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' '
-                            || t[i+3] || ' ' || t[i+4])) AS gram
+                   unnest({_ngram_sql(CONTAM_N)}) AS gram
             FROM toks
         ), bench AS (
             SELECT DISTINCT gram FROM g WHERE doc_id % {DECON_MOD} = 0
@@ -2623,36 +2570,7 @@ ORACLE = {
         FROM scored GROUP BY lang ORDER BY lang
     """,
     "d8_dedup_components": f"""
-        WITH RECURSIVE toks AS (
-            SELECT doc_id, regexp_extract_all(lower(text), '{TOKEN_PATTERN}') AS t
-            FROM documents
-        ), sh AS (
-            SELECT doc_id,
-                   list_distinct(list_transform(range(1, GREATEST(len(t) - {SHINGLE_K - 1}, 0) + 1),
-                                 i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingles
-            FROM toks
-        ), postings AS (
-            SELECT doc_id, len(shingles) AS n_sh, unnest(shingles) AS shingle FROM sh
-        ), pairs AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                   a.n_sh AS n_a, b.n_sh AS n_b, COUNT(*) AS common
-            FROM postings a JOIN postings b USING (shingle)
-            WHERE a.doc_id < b.doc_id
-            GROUP BY 1, 2, 3, 4
-        ), fp AS (
-            SELECT doc_a, doc_b FROM pairs
-            WHERE ROUND(common / CAST(n_a + n_b - common AS DOUBLE), 4) >= 0.18
-        ), edges AS (
-            SELECT doc_a AS a, doc_b AS b FROM fp
-            UNION
-            SELECT doc_b AS a, doc_a AS b FROM fp
-        ), reach(a, b) AS (
-            SELECT a, b FROM edges
-            UNION
-            SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-        ), lab AS (
-            SELECT a AS node, LEAST(a, MIN(b)) AS label FROM reach GROUP BY a
-        )
+{_COMPONENTS_SQL}
         SELECT label AS component, COUNT(*) AS n_members
         FROM lab GROUP BY label ORDER BY component
     """,
@@ -2660,36 +2578,7 @@ ORACLE = {
     # with exact Jaccard == the exact pair set (see d3's docstring), so
     # the d2-replay closure is the valid oracle for the LSH apply path.
     "d16_cluster_best_select": f"""
-        WITH RECURSIVE toks AS (
-            SELECT doc_id, regexp_extract_all(lower(text), '{TOKEN_PATTERN}') AS t
-            FROM documents
-        ), sh AS (
-            SELECT doc_id,
-                   list_distinct(list_transform(range(1, GREATEST(len(t) - {SHINGLE_K - 1}, 0) + 1),
-                                 i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingles
-            FROM toks
-        ), postings AS (
-            SELECT doc_id, len(shingles) AS n_sh, unnest(shingles) AS shingle FROM sh
-        ), pairs AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                   a.n_sh AS n_a, b.n_sh AS n_b, COUNT(*) AS common
-            FROM postings a JOIN postings b USING (shingle)
-            WHERE a.doc_id < b.doc_id
-            GROUP BY 1, 2, 3, 4
-        ), fp AS (
-            SELECT doc_a, doc_b FROM pairs
-            WHERE ROUND(common / CAST(n_a + n_b - common AS DOUBLE), 4) >= 0.18
-        ), edges AS (
-            SELECT doc_a AS a, doc_b AS b FROM fp
-            UNION
-            SELECT doc_b AS a, doc_a AS b FROM fp
-        ), reach(a, b) AS (
-            SELECT a, b FROM edges
-            UNION
-            SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-        ), lab AS (
-            SELECT a AS node, LEAST(a, MIN(b)) AS label FROM reach GROUP BY a
-        ), q AS (
+{_COMPONENTS_SQL}, q AS (
             SELECT doc_id, {ALPHA_RATIO_BP_SQL_DUCK} AS quality_bp
             FROM documents
         ), m AS (
@@ -2709,13 +2598,9 @@ ORACLE = {
         FROM m GROUP BY label ORDER BY component
     """,
     "t16_source_overlap": f"""
-        WITH toks AS (
-            SELECT source, regexp_extract_all(lower(text), '{TOKEN_PATTERN}') AS t
-            FROM documents
-        ), sh AS (
+        WITH {_toks_cte("source")}, sh AS (
             SELECT source,
-                   unnest(list_distinct(list_transform(range(1, GREATEST(len(t) - {SHINGLE_K - 1}, 0) + 1),
-                          i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS shingle
+                   unnest(list_distinct({_ngram_sql(SHINGLE_K)})) AS shingle
             FROM toks
         ), ps AS (
             SELECT DISTINCT source, md5(shingle) AS fp FROM sh
@@ -2739,13 +2624,9 @@ ORACLE = {
         ORDER BY src_a, src_b
     """,
     "d20_minhash_source_sketch": f"""
-        WITH toks AS (
-            SELECT source, regexp_extract_all(lower(text), '{TOKEN_PATTERN}') AS t
-            FROM documents
-        ), sh AS (
+        WITH {_toks_cte("source")}, sh AS (
             SELECT source,
-                   unnest(list_distinct(list_transform(range(1, GREATEST(len(t) - {SHINGLE_K - 1}, 0) + 1),
-                          i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS shingle
+                   unnest(list_distinct({_ngram_sql(SHINGLE_K)})) AS shingle
             FROM toks
         ), sig AS (
             SELECT source,

@@ -110,39 +110,16 @@ def e2_training_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _e2_oracle() -> str:
-    from .dedup import SHINGLE_K
-    from .text import TOKEN_PATTERN
-
     return f"""
-        WITH toks AS (
-            SELECT doc_id, lang,
-                   regexp_extract_all(lower(text), '{TOKEN_PATTERN}') AS t
-            FROM documents
-        ), quality AS (
+        WITH {_toks_cte("doc_id, lang")}, quality AS (
             SELECT * FROM toks WHERE len(t) >= {E2_MIN_TOKENS}
         ), fp AS (
             SELECT *, md5(array_to_string(t, ' ')) AS f FROM quality
         ), exact_kept AS (
             SELECT * FROM fp
             QUALIFY doc_id = MIN(doc_id) OVER (PARTITION BY f)
-        ), sh AS (
-            SELECT doc_id,
-                   list_distinct(list_transform(
-                       range(1, GREATEST(len(t) - {SHINGLE_K - 1}, 0) + 1),
-                       i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingles
-            FROM exact_kept
-        ), postings AS (
-            SELECT doc_id, len(shingles) AS n_sh, unnest(shingles) AS shingle
-            FROM sh
-        ), pairs AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                   a.n_sh AS n_a, b.n_sh AS n_b, COUNT(*) AS common
-            FROM postings a JOIN postings b USING (shingle)
-            WHERE a.doc_id < b.doc_id
-            GROUP BY 1, 2, 3, 4
-        ), drops AS (
-            SELECT DISTINCT doc_b AS doc_id FROM pairs
-            WHERE ROUND(common / CAST(n_a + n_b - common AS DOUBLE), 4) >= 0.18
+        ), {_shingles_cte(src="exact_kept")}, {_PAIRS_CTES}, drops AS (
+            SELECT DISTINCT doc_b AS doc_id FROM pairs WHERE {_JACCARD_KEEP}
         ), near_kept AS (
             SELECT * FROM exact_kept
             WHERE doc_id NOT IN (SELECT doc_id FROM drops)
@@ -840,6 +817,33 @@ def _delta_stages(docs: DataFrame, base_fps: DataFrame) -> DataFrame:
     )
 
 
+def _delta_stages_sql() -> str:
+    """Oracle twin of :func:`_delta_stages`: ``toks`` split into ``delta``
+    and ``base``, then one CTE per stage (``gated`` → ``fp``/``exact`` →
+    ``novel``). Novelty is NOT EXISTS, not NOT IN: a NULL fingerprint in
+    base (md5 of NULL text) poisons NOT IN to zero rows, while Spark's
+    left join keeps them."""
+    from .dedup import D10_DELTA_MOD
+
+    return f"""{_toks_cte("doc_id, lang")}, delta AS (
+            SELECT * FROM toks WHERE doc_id % {D10_DELTA_MOD} = 0
+        ), base AS (
+            SELECT * FROM toks WHERE doc_id % {D10_DELTA_MOD} <> 0
+        ), gated AS (
+            SELECT * FROM delta WHERE len(t) >= {E9_MIN_TOKENS}
+        ), fp AS (
+            SELECT *, md5(array_to_string(t, ' ')) AS f FROM gated
+        ), exact AS (
+            SELECT * FROM fp
+            QUALIFY doc_id = MIN(doc_id) OVER (PARTITION BY f)
+        ), basefp AS (
+            SELECT DISTINCT md5(array_to_string(t, ' ')) AS f FROM base
+        ), novel AS (
+            SELECT * FROM exact e
+            WHERE NOT EXISTS (SELECT 1 FROM basefp b WHERE b.f = e.f)
+        )"""
+
+
 def _stage_report(
     stages: DataFrame, dropped: DataFrame, **extra: Column
 ) -> DataFrame:
@@ -966,44 +970,15 @@ def _e8_oracle() -> str:
 
 
 def _e9_oracle() -> str:
-    from .dedup import DECON_MOD, D10_DELTA_MOD, SHINGLE_K
-    from .text import TOKEN_PATTERN
+    from .dedup import DECON_MOD
 
     return f"""
-        WITH toks AS (
-            SELECT doc_id, lang,
-                   regexp_extract_all(lower(text), '{TOKEN_PATTERN}') AS t
-            FROM documents
-        ), delta AS (
-            SELECT * FROM toks WHERE doc_id % {D10_DELTA_MOD} = 0
-        ), base AS (
-            SELECT * FROM toks WHERE doc_id % {D10_DELTA_MOD} <> 0
-        ), gated AS (
-            SELECT * FROM delta WHERE len(t) >= {E9_MIN_TOKENS}
-        ), fp AS (
-            SELECT *, md5(array_to_string(t, ' ')) AS f FROM gated
-        ), exact AS (
-            SELECT * FROM fp
-            QUALIFY doc_id = MIN(doc_id) OVER (PARTITION BY f)
-        ), basefp AS (
-            SELECT DISTINCT md5(array_to_string(t, ' ')) AS f FROM base
-        ), novel AS (
-            -- NOT EXISTS, not NOT IN: a NULL fingerprint in base (e.g.
-            -- md5(NULL) from a future fixture with NULL text) poisons
-            -- NOT IN to zero rows while Spark's left_anti keeps rows;
-            -- NOT EXISTS matches anti-join semantics (ADVICE r8).
-            SELECT * FROM exact e
-            WHERE NOT EXISTS (SELECT 1 FROM basefp b WHERE b.f = e.f)
-        ), bench AS (
-            SELECT DISTINCT unnest(list_distinct(list_transform(
-                       range(1, GREATEST(len(t) - {SHINGLE_K - 1}, 0) + 1),
-                       i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS sh
+        WITH {_delta_stages_sql()}, bench AS (
+            SELECT DISTINCT unnest(list_distinct({_ngram_sql(_SHINGLE_K)})) AS sh
             FROM base WHERE doc_id % {DECON_MOD} = 0
         ), contaminated AS (
             SELECT DISTINCT doc_id FROM (
-                SELECT doc_id, unnest(list_distinct(list_transform(
-                           range(1, GREATEST(len(t) - {SHINGLE_K - 1}, 0) + 1),
-                           i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS sh
+                SELECT doc_id, unnest(list_distinct({_ngram_sql(_SHINGLE_K)})) AS sh
                 FROM novel
             ) WHERE sh IN (SELECT sh FROM bench)
         ), admitted AS (
@@ -1214,8 +1189,8 @@ def e13_cluster_aware_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 from ..etl.workload import DRIVER_ORACLE as _WORKLOAD_ORACLE  # noqa: E402
-from .dedup import D10_DELTA_MOD as _D10_MOD  # noqa: E402
 from .dedup import SHINGLE_K as _SHINGLE_K  # noqa: E402
+from .dedup import _JACCARD_KEEP, _PAIRS_CTES, _ngram_sql, _shingles_cte, _toks_cte  # noqa: E402
 from .text import ALPHA_RATIO_BP_SQL_DUCK as _ALPHA_BP  # noqa: E402
 from .text import TOKEN_PATTERN as _TOKEN_PATTERN  # noqa: E402
 from ..etl.workload import DRIVER_QUERIES as _WORKLOAD_QUERIES  # noqa: E402
@@ -2495,21 +2470,26 @@ QUERIES = {
     # pure-Python replay of the same seeded records as literal SELECTs.
     **_WORKLOAD_QUERIES,
 }
+def _card_docs_cte(cols: str) -> str:
+    """``per``: ``cols`` of each document, its token count ``n_toks`` and
+    its content fingerprint ``fp`` (``content_fp_from_toks``), the
+    per-document rows the e15–e17 cards aggregate."""
+    return f"""per AS (
+            SELECT {cols},
+                   CAST(len(regexp_extract_all(lower(text), '{_TOKEN_PATTERN}'))
+                        AS BIGINT) AS n_toks,
+                   md5(array_to_string(regexp_extract_all(lower(text), '{_TOKEN_PATTERN}'),
+                                       ' ')) AS fp
+            FROM documents
+        )"""
+
+
 ORACLE = {
     # e17: both paths replayed from the modular arithmetic — an
     # INDEPENDENT derivation of the delta the operator obtains from
     # real manifest file-set differences (delete+add at file level).
     "e17_changelog_card_refresh": f"""
-        WITH per AS (
-            SELECT doc_id, source, lang,
-                   CAST(len(regexp_extract_all(lower(text),
-                                               '{_TOKEN_PATTERN}'))
-                        AS BIGINT) AS n_toks,
-                   md5(array_to_string(regexp_extract_all(lower(text),
-                                                          '{_TOKEN_PATTERN}'),
-                                       ' ')) AS fp
-            FROM documents
-        ),
+        WITH {_card_docs_cte("doc_id, source, lang")},
         s1 AS (SELECT * FROM per WHERE doc_id % 4 IN (0, 1, 2)),
         bp AS (
             SELECT doc_id, source,
@@ -2569,16 +2549,7 @@ ORACLE = {
         ORDER BY source, lang
     """,
     "e16_incremental_card": f"""
-        WITH per AS (
-            SELECT doc_id, source, lang,
-                   CAST(len(regexp_extract_all(lower(text),
-                                               '{_TOKEN_PATTERN}'))
-                        AS BIGINT) AS n_toks,
-                   md5(array_to_string(regexp_extract_all(lower(text),
-                                                          '{_TOKEN_PATTERN}'),
-                                       ' ')) AS fp
-            FROM documents
-        ),
+        WITH {_card_docs_cte("doc_id, source, lang")},
         s1 AS (SELECT * FROM per WHERE doc_id % 5 != 4),
         adds AS (SELECT * FROM per WHERE doc_id % 5 = 4),
         dels AS (SELECT * FROM s1 WHERE doc_id % 7 = 3),
@@ -2625,16 +2596,7 @@ ORACLE = {
         ORDER BY source, lang
     """,
     "e15_dataset_card": f"""
-        WITH per AS (
-            SELECT source, lang,
-                   CAST(len(regexp_extract_all(lower(text),
-                                               '{_TOKEN_PATTERN}'))
-                        AS BIGINT) AS n_toks,
-                   md5(array_to_string(regexp_extract_all(lower(text),
-                                                          '{_TOKEN_PATTERN}'),
-                                       ' ')) AS fp
-            FROM documents
-        )
+        WITH {_card_docs_cte("source, lang")}
         SELECT source, lang,
                CAST(GROUPING(source) AS INT) AS g_source,
                CAST(GROUPING(lang) AS INT) AS g_lang,
@@ -2726,41 +2688,13 @@ ORACLE = {
     # split CASE. Pairing novel reps against UNCOLLAPSED base members
     # equals the rep-level LSH (exact copies share all shingles).
     "e14_release_pipeline": f"""
-        WITH toks AS (
-            SELECT doc_id, lang,
-                   regexp_extract_all(lower(text), '{_TOKEN_PATTERN}') AS t
-            FROM documents
-        ), delta AS (
-            SELECT * FROM toks WHERE doc_id % {_D10_MOD} = 0
-        ), base AS (
-            SELECT * FROM toks WHERE doc_id % {_D10_MOD} <> 0
-        ), gated AS (
-            SELECT * FROM delta WHERE len(t) >= {E9_MIN_TOKENS}
-        ), fp AS (
-            SELECT *, md5(array_to_string(t, ' ')) AS f FROM gated
-        ), exact AS (
-            SELECT * FROM fp
-            QUALIFY doc_id = MIN(doc_id) OVER (PARTITION BY f)
-        ), basefp AS (
-            SELECT DISTINCT md5(array_to_string(t, ' ')) AS f FROM base
-        ), novel AS (
-            SELECT * FROM exact e
-            WHERE NOT EXISTS (SELECT 1 FROM basefp b WHERE b.f = e.f)
-        ), pn AS (
+        WITH {_delta_stages_sql()}, pn AS (
             SELECT doc_id, len(shingles) AS n_sh, unnest(shingles) AS shingle
-            FROM (SELECT doc_id,
-                         list_distinct(list_transform(
-                             range(1, GREATEST(len(t) - {_SHINGLE_K - 1}, 0) + 1),
-                             i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-                             AS shingles
+            FROM (SELECT doc_id, list_distinct({_ngram_sql(_SHINGLE_K)}) AS shingles
                   FROM novel)
         ), pb AS (
             SELECT doc_id, len(shingles) AS n_sh, unnest(shingles) AS shingle
-            FROM (SELECT doc_id,
-                         list_distinct(list_transform(
-                             range(1, GREATEST(len(t) - {_SHINGLE_K - 1}, 0) + 1),
-                             i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-                             AS shingles
+            FROM (SELECT doc_id, list_distinct({_ngram_sql(_SHINGLE_K)}) AS shingles
                   FROM base)
         ), pairs AS (
             SELECT n.doc_id AS doc_a, n.n_sh AS n_a,
@@ -2768,9 +2702,7 @@ ORACLE = {
             FROM pn n JOIN pb b USING (shingle)
             GROUP BY 1, 2, 3, 4
         ), flagged AS (
-            SELECT DISTINCT doc_a FROM pairs
-            WHERE ROUND(common / CAST(n_a + n_b - common AS DOUBLE), 4)
-                      >= 0.18
+            SELECT DISTINCT doc_a FROM pairs WHERE {_JACCARD_KEEP}
         ), admitted AS (
             SELECT *, CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)
                                 < 'd'
@@ -2812,29 +2744,8 @@ ORACLE = {
     # split/checksum arithmetic. Proves the rep-collapse staging pure
     # plan optimization, exactly d16/d17's oracle contract.
     "e13_cluster_aware_split": f"""
-        WITH RECURSIVE toks AS (
-            SELECT doc_id,
-                   regexp_extract_all(lower(text), '{_TOKEN_PATTERN}') AS t
-            FROM documents
-        ), sh AS (
-            SELECT doc_id,
-                   list_distinct(list_transform(
-                       range(1, GREATEST(len(t) - {_SHINGLE_K - 1}, 0) + 1),
-                       i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingles
-            FROM toks
-        ), postings AS (
-            SELECT doc_id, len(shingles) AS n_sh, unnest(shingles) AS shingle
-            FROM sh
-        ), pairs AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                   a.n_sh AS n_a, b.n_sh AS n_b, COUNT(*) AS common
-            FROM postings a JOIN postings b USING (shingle)
-            WHERE a.doc_id < b.doc_id
-            GROUP BY 1, 2, 3, 4
-        ), jp AS (
-            SELECT doc_a, doc_b FROM pairs
-            WHERE ROUND(common / CAST(n_a + n_b - common AS DOUBLE), 4)
-                      >= 0.18
+        WITH RECURSIVE {_toks_cte()}, {_shingles_cte()}, {_PAIRS_CTES}, jp AS (
+            SELECT doc_a, doc_b FROM pairs WHERE {_JACCARD_KEEP}
         ), fpg AS (
             SELECT doc_id, md5(array_to_string(t, ' ')) AS g FROM toks
         ), gm AS (

@@ -68,6 +68,24 @@ def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return emb.withColumn("norm", norm)
 
 
+def _emb_cte(cols: str = "vec_id") -> str:
+    """Oracle twin of :func:`_embeddings`' cast: ``e`` holds ``cols`` and
+    each embedding as a DOUBLE list ``e``."""
+    return f"""e AS (
+    SELECT {cols}, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+    FROM embeddings
+)"""
+
+
+def _emb_ctes(cols: str = "vec_id") -> str:
+    """``e`` and ``n``, the same rows with the L2 ``norm`` of
+    :func:`_embeddings`."""
+    return f"""{_emb_cte(cols)}, n AS (
+    SELECT {cols}, e, sqrt(list_sum(list_transform(e, x -> x * x))) AS norm
+    FROM e
+)"""
+
+
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda p, q: p + q)
 
@@ -110,6 +128,26 @@ def _cosine_sim():
     ).otherwise(F.lit(0.0))
 
 
+def _cos_sql(x: str, y: str) -> str:
+    """The rounded cosine of the oracle's vectors ``{x}e`` and ``{y}e``
+    with norms ``{x}norm`` and ``{y}norm``; ``x`` and ``y`` are column
+    prefixes such as ``"n."`` and ``"q.q"`` (→ ``q.qe``, ``q.qnorm``)."""
+    return (
+        f"ROUND(list_sum(list_transform(range(1, {EMB_DIM + 1}), "
+        f"i -> {x}e[i] * {y}e[i])) / ({x}norm * {y}norm), 4)"
+    )
+
+
+def _cosine_sql(x: str, y: str) -> str:
+    """Oracle twin of :func:`_cosine_sim`: :func:`_cos_sql`, 0.0 where a
+    norm is zero."""
+    return f"CASE WHEN {x}norm * {y}norm > 0 THEN {_cos_sql(x, y)} ELSE 0.0 END"
+
+
+#: Corpus row ``n`` against query ``q``.
+_COS = _cos_sql("n.", "q.q")
+
+
 def _queries_side(frame: DataFrame, *cols) -> DataFrame:
     """The query set — the rows of ``frame`` with ``vec_id <
     N_QUERIES`` — as ``query_id`` plus ``cols``: a column name ``c`` is
@@ -149,6 +187,23 @@ def _cosine_truth(emb: DataFrame) -> DataFrame:
     return _rank_topk(pairs.withColumn("cos_sim", _cosine_sim()))
 
 
+def _exact_topk_ctes(score: str = _COS, queries: str = "q") -> str:
+    """Oracle twin of :func:`_cosine_truth`: ``exact_scored`` scores every
+    (``n``, query) pair but the self-pair with ``score``; ``exact_topk``
+    keeps each query's TOP_K. ``queries`` is the query CTE, aliased ``q``."""
+    return f"""exact_scored AS (
+    SELECT q.query_id, n.vec_id, {score} AS cos_sim
+    FROM n CROSS JOIN {queries} WHERE n.vec_id <> q.query_id
+), exact_topk AS (
+    SELECT query_id, vec_id FROM (
+        SELECT query_id, vec_id,
+               row_number() OVER (PARTITION BY query_id
+                                  ORDER BY cos_sim DESC, vec_id) AS rnk
+        FROM exact_scored
+    ) WHERE rnk <= {TOP_K}
+)"""
+
+
 def _cosine_hits(emb: DataFrame, topk: DataFrame) -> DataFrame:
     """(query_id, n_hits): how many of each query's retrieved ``topk``
     rows are in the exact cosine top-k. Queries with no hit have no
@@ -162,6 +217,17 @@ def _cosine_hits(emb: DataFrame, topk: DataFrame) -> DataFrame:
         "left_semi",
     )
     return hits.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_hits"))
+
+
+def _hits_cte(topk: str) -> str:
+    """Oracle twin of :func:`_cosine_hits`: ``hits`` counts each query's
+    ``topk`` rows that are in ``exact_topk``."""
+    return f"""hits AS (
+    SELECT p.query_id, COUNT(*) AS n_hits
+    FROM {topk} p JOIN exact_topk x
+      ON p.query_id = x.query_id AND p.vec_id = x.vec_id
+    GROUP BY p.query_id
+)"""
 
 
 def _cosine_recall(emb: DataFrame, cand: DataFrame) -> DataFrame:
@@ -236,6 +302,34 @@ def _planes_sql() -> str:
     projection arithmetic."""
     flat = [v for table in _hyperplanes() for bits in table for v in bits]
     return "[" + ", ".join(f"{v:.1f}" for v in flat) + "]"
+
+
+#: ``planes``: the flat hyperplane literal as ``m``.
+_PLANES_CTE = f"""planes AS (
+    SELECT {_planes_sql()} AS m
+)"""
+
+
+def _srp_bucket_sql(plane0: str = "") -> str:
+    """Oracle twin of one table of :func:`_bucket_cols`: bit ``bb`` of
+    the bucket int is set iff ``e`` · plane ``bb`` > 0, the planes read
+    from ``m`` after the offset expression ``plane0`` ("" for table 0)."""
+    return f"""list_sum(list_transform(range(0, {LSH_BITS}), bb ->
+        CASE WHEN list_sum(list_transform(range(1, {EMB_DIM + 1}),
+                 i -> e[CAST(i AS INT)]
+                      * m[CAST({plane0}bb * {EMB_DIM} + i AS INT)])) > 0
+             THEN (1 << CAST(bb AS INT)) ELSE 0 END))"""
+
+
+def _srp_buckets_cte(cols: str) -> str:
+    """``b``: ``cols`` of ``n`` and ``buckets``, one bucket int per LSH
+    table (:func:`_bucket_cols`)."""
+    return f"""b AS (
+    SELECT {cols},
+           list_transform(range(0, {LSH_TABLES}), t ->
+               {_srp_bucket_sql(f"t * {LSH_BITS * EMB_DIM} + ")}) AS buckets
+    FROM n CROSS JOIN planes
+)"""
 
 
 def _bucket_cols():
@@ -2586,32 +2680,7 @@ def _x12_kept_ctes() -> str:
     """The shared x12/x16 oracle CTE chain: seeded-plane buckets, the
     x4 cap, distinct symmetric pairs, exact cosine, per-node top-K —
     everything through ``kept(node, nb, label, cos_sim)``."""
-    cos = (
-        f"CASE WHEN cn.norm * nn.norm > 0 THEN "
-        f"ROUND(list_sum(list_transform(range(1, {EMB_DIM + 1}), "
-        f"i -> cn.e[i] * nn.e[i])) / (cn.norm * nn.norm), 4) ELSE 0.0 END"
-    )
-    return f"""planes AS (
-            SELECT {_planes_sql()} AS m
-        ), e0 AS (
-            SELECT vec_id, label,
-                   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-            FROM embeddings
-        ), n AS (
-            SELECT vec_id, label, e,
-                   sqrt(list_sum(list_transform(e, x -> x * x))) AS norm
-            FROM e0
-        ), b AS (
-            SELECT vec_id,
-                   list_transform(range(0, {LSH_TABLES}), t ->
-                       list_sum(list_transform(range(0, {LSH_BITS}), bb ->
-                           CASE WHEN list_sum(list_transform(range(1, {EMB_DIM + 1}),
-                                    i -> e[CAST(i AS INT)]
-                                         * m[CAST(t * {LSH_BITS * EMB_DIM}
-                                                  + bb * {EMB_DIM} + i AS INT)])) > 0
-                                THEN (1 << CAST(bb AS INT)) ELSE 0 END))) AS buckets
-            FROM n CROSS JOIN planes
-        ), bl AS (
+    return f"""{_PLANES_CTE}, {_emb_ctes("vec_id, label")}, {_srp_buckets_cte("vec_id")}, bl AS (
             SELECT vec_id, ti AS t, buckets[CAST(ti + 1 AS INT)] AS bucket
             FROM b, range(0, {LSH_TABLES}) r(ti)
         ), ok AS (
@@ -2628,7 +2697,7 @@ def _x12_kept_ctes() -> str:
             UNION ALL
             SELECT b AS node, a AS nb FROM pairs
         ), scored AS (
-            SELECT ed.node, ed.nb, cn.label, {cos} AS cos_sim
+            SELECT ed.node, ed.nb, cn.label, {_cosine_sql("cn.", "nn.")} AS cos_sim
             FROM edges ed
             JOIN n cn ON cn.vec_id = ed.node
             JOIN n nn ON nn.vec_id = ed.nb
@@ -2712,28 +2781,12 @@ def _mmr_oracle() -> str:
     literal: left-to-right dot folds, ROUND(cos, 4), (mmr DESC,
     vec_id) total order."""
 
-    def cos(p: str, c: str) -> str:
-        return (
-            f"ROUND(list_sum(list_transform(range(1, {EMB_DIM + 1}), "
-            f"i -> {p}.e[i] * {c}.e[i])) / ({p}.norm * {c}.norm), 4)"
-        )
-
     parts = [
         f"""
-        WITH b AS (
-            SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-            FROM embeddings
-        ), n AS (
-            SELECT vec_id, e,
-                   sqrt(list_sum(list_transform(e, x -> x * x))) AS norm
-            FROM b
-        ), qv AS (
+        WITH {_emb_ctes()}, qv AS (
             SELECT e AS qe, norm AS qnorm FROM n WHERE vec_id = {MMR_QUERY_ID}
         ), shortlist AS (
-            SELECT n.vec_id, n.e, n.norm,
-                   ROUND(list_sum(list_transform(range(1, {EMB_DIM + 1}),
-                                                 i -> n.e[i] * q.qe[i]))
-                         / (n.norm * q.qnorm), 4) AS rel
+            SELECT n.vec_id, n.e, n.norm, {_COS} AS rel
             FROM n CROSS JOIN qv q WHERE n.vec_id <> {MMR_QUERY_ID}
             ORDER BY rel DESC, vec_id LIMIT {MMR_SHORTLIST}
         ), chosen1 AS (
@@ -2750,7 +2803,7 @@ def _mmr_oracle() -> str:
         , cand{j} AS (
             SELECT p.vec_id, ANY_VALUE(p.e) AS e, ANY_VALUE(p.norm) AS norm,
                    ANY_VALUE(p.rel) AS rel,
-                   MAX({cos('p', 'c')}) AS max_sim
+                   MAX({_cos_sql("p.", "c.")}) AS max_sim
             FROM shortlist p CROSS JOIN sel{j - 1} c
             WHERE p.vec_id NOT IN (SELECT vec_id FROM sel{j - 1})
             GROUP BY p.vec_id
@@ -2765,13 +2818,6 @@ def _mmr_oracle() -> str:
     )
     parts.append(f" SELECT * FROM ({union}) ORDER BY step")
     return "".join(parts)
-
-_COS = f"""
-            ROUND(list_sum(list_transform(range(1, {EMB_DIM + 1}),
-                                          i -> n.e[i] * q.qe[i]))
-                  / (n.norm * q.qnorm), 4)
-"""
-
 
 def _x5_d2(a: str, b: str) -> str:
     """Squared L2 in DuckDB — the same left-to-right fold over dims as
@@ -2790,8 +2836,7 @@ def _x5_lloyd_step(
     exact per-dim mean → rebuilt centroid list). Unrolled rather than a
     recursive CTE because IVF_LLOYD_ITERS is a fixed constant — the
     same reason the Spark fit has no convergence test. ``samp`` names
-    the fit-sample CTE — x18's composed oracle supplies its own
-    IVF_SAMPLE_MOD sample instead of the ambient PQ one."""
+    the fit-sample CTE (:func:`_ivf_fit_ctes` passes its prefixed one)."""
     return f"""{assigned} AS (
     SELECT cell, e FROM (
         SELECT s.e, c.cell,
@@ -2809,28 +2854,50 @@ def _x5_lloyd_step(
 )"""
 
 
-#: Full replay of x5's deterministic IVF pipeline: md5-seeded init,
-#: IVF_LLOYD_ITERS unrolled Lloyd steps, corpus assignment, n-probe
-#: ranking, candidate re-rank, and in-plan recall vs exact top-k. The
-#: decimal-exact centroid means are what make the two engines agree
-#: bit-for-bit through the iterations (see _ivf_fit_centroids).
-_X5_SQL = f"""
-WITH e AS (
-    SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-    FROM embeddings
-), n AS (
-    SELECT vec_id, e, sqrt(list_sum(list_transform(e, x -> x * x))) AS norm
-    FROM e
-), samp AS (
-    SELECT vec_id, e FROM e WHERE vec_id % {IVF_SAMPLE_MOD} = 0
-), seeds AS (
+def _ivf_fit_ctes(p: str = "", src: str = "e") -> str:
+    """Oracle replay of :func:`_ivf_fit_centroids` as CTEs named with
+    the prefix ``p``: the ``{p}samp`` fit sample of ``src``, its
+    md5-seeded ``{p}seeds`` and initial ``{p}c0``, then the two
+    (IVF_LLOYD_ITERS) unrolled Lloyd steps through ``{p}c2``."""
+    return f"""{p}samp AS (
+    SELECT vec_id, e FROM {src} WHERE vec_id % {IVF_SAMPLE_MOD} = 0
+), {p}seeds AS (
     SELECT vec_id, e, md5(CAST(vec_id AS VARCHAR)) AS s
-    FROM samp ORDER BY s, vec_id LIMIT {IVF_CLUSTERS}
-), c0 AS (
+    FROM {p}samp ORDER BY s, vec_id LIMIT {IVF_CLUSTERS}
+), {p}c0 AS (
     SELECT row_number() OVER (ORDER BY s, vec_id) - 1 AS cell, e AS center
-    FROM seeds
-), {_x5_lloyd_step('c0', 'a1', 'm1', 'c1')},
-{_x5_lloyd_step('c1', 'a2', 'm2', 'c2')}, assign AS (
+    FROM {p}seeds
+), {_x5_lloyd_step(f'{p}c0', f'{p}a1', f'{p}m1', f'{p}c1', samp=f'{p}samp')},
+{_x5_lloyd_step(f'{p}c1', f'{p}a2', f'{p}m2', f'{p}c2', samp=f'{p}samp')}"""
+
+
+def _ivf_replay_ctes(src: str = "e") -> str:
+    """The IVF index the IVF-PQ oracles route through: the i-prefixed
+    :func:`_ivf_fit_ctes` fit over ``src``, then ``iassign`` (each
+    vector of ``e`` in its nearest ``ic2`` cell) and ``iprobes`` (each
+    query of ``q`` with its IVF_NPROBE nearest cells)."""
+    return f"""{_ivf_fit_ctes("i", src)}, iassign AS (
+    SELECT vec_id, cell FROM (
+        SELECT e.vec_id, c.cell,
+               row_number() OVER (PARTITION BY e.vec_id
+                                  ORDER BY {_x5_d2('e.e', 'c.center')},
+                                  c.cell) AS pr
+        FROM e CROSS JOIN ic2 c
+    ) WHERE pr = 1
+), iprobes AS (
+    SELECT query_id, cell FROM (
+        SELECT q.query_id, c.cell,
+               row_number() OVER (PARTITION BY q.query_id
+                                  ORDER BY {_x5_d2('q.qe', 'c.center')},
+                                  c.cell) AS pr
+        FROM q CROSS JOIN ic2 c
+    ) WHERE pr <= {IVF_NPROBE}
+)"""
+
+
+#: x5's IVF fit, corpus ``assign`` and query set ``q`` (shared with x11).
+_X5_PREFIX = f"""
+WITH {_emb_ctes()}, {_ivf_fit_ctes()}, assign AS (
     SELECT vec_id, e, norm, cell FROM (
         SELECT n.vec_id, n.e, n.norm, c.cell,
                row_number() OVER (PARTITION BY n.vec_id
@@ -2840,7 +2907,13 @@ WITH e AS (
 ), q AS (
     SELECT vec_id AS query_id, e AS qe, norm AS qnorm
     FROM n WHERE vec_id < {N_QUERIES}
-), probes AS (
+)"""
+#: Full replay of x5's deterministic IVF pipeline: md5-seeded init,
+#: IVF_LLOYD_ITERS unrolled Lloyd steps, corpus assignment, n-probe
+#: ranking, candidate re-rank, and in-plan recall vs exact top-k. The
+#: decimal-exact centroid means are what make the two engines agree
+#: bit-for-bit through the iterations (see _ivf_fit_centroids).
+_X5_SQL = f"""{_X5_PREFIX}, probes AS (
     SELECT query_id, qe, qnorm, cell FROM (
         SELECT q.query_id, q.qe, q.qnorm, c.cell,
                row_number() OVER (PARTITION BY q.query_id
@@ -2852,12 +2925,7 @@ WITH e AS (
     FROM assign a JOIN probes p USING (cell)
     WHERE a.vec_id <> p.query_id
 ), scored AS (
-    SELECT query_id, vec_id,
-           CASE WHEN norm * qnorm > 0 THEN
-               ROUND(list_sum(list_transform(range(1, {EMB_DIM + 1}),
-                                             i -> e[i] * qe[i]))
-                     / (norm * qnorm), 4)
-           ELSE 0.0 END AS cos_sim
+    SELECT query_id, vec_id, {_cosine_sql("", "q")} AS cos_sim
     FROM cand
 ), ivf_topk AS (
     SELECT query_id, vec_id FROM (
@@ -2866,22 +2934,7 @@ WITH e AS (
                                   ORDER BY cos_sim DESC, vec_id) AS rnk
         FROM scored
     ) WHERE rnk <= {TOP_K}
-), exact_scored AS (
-    SELECT q.query_id, n.vec_id, {_COS} AS cos_sim
-    FROM n CROSS JOIN q WHERE n.vec_id <> q.query_id
-), exact_topk AS (
-    SELECT query_id, vec_id FROM (
-        SELECT query_id, vec_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY cos_sim DESC, vec_id) AS rnk
-        FROM exact_scored
-    ) WHERE rnk <= {TOP_K}
-), hits AS (
-    SELECT i.query_id, COUNT(*) AS n_hits
-    FROM ivf_topk i JOIN exact_topk x
-      ON i.query_id = x.query_id AND i.vec_id = x.vec_id
-    GROUP BY i.query_id
-), ncand AS (
+), {_exact_topk_ctes()}, {_hits_cte("ivf_topk")}, ncand AS (
     SELECT query_id, COUNT(*) AS n_candidates FROM cand GROUP BY query_id
 )
 SELECT nc.query_id, CAST(nc.n_candidates AS BIGINT) AS n_candidates,
@@ -2891,20 +2944,13 @@ FROM ncand nc LEFT JOIN hits h USING (query_id)
 
 
 def _x11_sql() -> str:
-    """x11 oracle: x5's Lloyd-replay prefix (everything up to the
-    single-nprobe probes CTE — fit, assignment, query set, shared
-    string so the two oracles can never drift) + per-nprobe candidate/
-    top-k/hit CTEs + a UNION ALL summary with integer-bp recall."""
-    prefix = _X5_SQL.split("), probes AS (")[0]
-    cos = f"""CASE WHEN a.norm * a.qnorm > 0 THEN
-               ROUND(list_sum(list_transform(range(1, {EMB_DIM + 1}),
-                                             i -> a.e[i] * a.qe[i]))
-                     / (a.norm * a.qnorm), 4)
-           ELSE 0.0 END"""
+    """x11 oracle: ``_X5_PREFIX`` (x5's fit, assignment and query set)
+    + per-nprobe candidate/top-k/hit CTEs + a UNION ALL summary with
+    integer-bp recall."""
     max_probe = max(X11_NPROBE_SWEEP)
     parts = [
-        prefix,
-        f"""), allprobes AS (
+        _X5_PREFIX,
+        f""", allprobes AS (
     SELECT query_id, qe, qnorm, cell, pr FROM (
         SELECT q.query_id, q.qe, q.qnorm, c.cell,
                row_number() OVER (PARTITION BY q.query_id
@@ -2912,20 +2958,10 @@ def _x11_sql() -> str:
         FROM q CROSS JOIN c2 c
     ) WHERE pr <= {max_probe}
 ), pool AS (
-    SELECT p.query_id, s.vec_id, p.pr, {cos.replace('a.e', 's.e').replace('a.norm', 's.norm').replace('a.qe', 'p.qe').replace('a.qnorm', 'p.qnorm')} AS cos_sim
+    SELECT p.query_id, s.vec_id, p.pr, {_cosine_sql("s.", "p.q")} AS cos_sim
     FROM assign s JOIN allprobes p USING (cell)
     WHERE s.vec_id <> p.query_id
-), exact_scored AS (
-    SELECT q.query_id, n.vec_id, {_COS} AS cos_sim
-    FROM n CROSS JOIN q WHERE n.vec_id <> q.query_id
-), exact_topk AS (
-    SELECT query_id, vec_id FROM (
-        SELECT query_id, vec_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY cos_sim DESC, vec_id) AS rnk
-        FROM exact_scored
-    ) WHERE rnk <= {TOP_K}
-)""",
+), {_exact_topk_ctes()}""",
     ]
     denom = N_QUERIES * TOP_K
     selects = []
@@ -2963,26 +2999,10 @@ def _x11_sql() -> str:
     return "".join(parts)
 
 
-#: Full replay of d13: the x5 Lloyd fit (shared CTE builders), fold
-#: assignment with distance capture, per-cluster exemplar, exemplar
-#: cosine, rounded-threshold removal, decimal-exact label means.
 #: x14: the shared Lloyd-replay prefix (seeded init + unrolled steps)
 #: + corpus assignment + the seeded-key exact quota per cell.
 _X14_SQL = f"""
-WITH e AS (
-    SELECT vec_id,
-           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-    FROM embeddings
-), samp AS (
-    SELECT vec_id, e FROM e WHERE vec_id % {IVF_SAMPLE_MOD} = 0
-), seeds AS (
-    SELECT vec_id, e, md5(CAST(vec_id AS VARCHAR)) AS s
-    FROM samp ORDER BY s, vec_id LIMIT {IVF_CLUSTERS}
-), c0 AS (
-    SELECT row_number() OVER (ORDER BY s, vec_id) - 1 AS cell, e AS center
-    FROM seeds
-), {_x5_lloyd_step('c0', 'a1', 'm1', 'c1')},
-{_x5_lloyd_step('c1', 'a2', 'm2', 'c2')}, assign AS (
+WITH {_emb_cte()}, {_ivf_fit_ctes()}, assign AS (
     SELECT vec_id, cell FROM (
         SELECT ee.vec_id, c.cell,
                row_number() OVER (PARTITION BY ee.vec_id
@@ -3015,25 +3035,11 @@ ORDER BY cell
 """
 
 
+#: Full replay of d13: the x5 Lloyd fit (shared CTE builders), fold
+#: assignment with distance capture, per-cluster exemplar, exemplar
+#: cosine, rounded-threshold removal, decimal-exact label means.
 _D13_SQL = f"""
-WITH e AS (
-    SELECT vec_id, label,
-           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-    FROM embeddings
-), n AS (
-    SELECT vec_id, label, e,
-           sqrt(list_sum(list_transform(e, x -> x * x))) AS norm
-    FROM e
-), samp AS (
-    SELECT vec_id, e FROM e WHERE vec_id % {IVF_SAMPLE_MOD} = 0
-), seeds AS (
-    SELECT vec_id, e, md5(CAST(vec_id AS VARCHAR)) AS s
-    FROM samp ORDER BY s, vec_id LIMIT {IVF_CLUSTERS}
-), c0 AS (
-    SELECT row_number() OVER (ORDER BY s, vec_id) - 1 AS cell, e AS center
-    FROM seeds
-), {_x5_lloyd_step('c0', 'a1', 'm1', 'c1')},
-{_x5_lloyd_step('c1', 'a2', 'm2', 'c2')}, assign AS (
+WITH {_emb_ctes("vec_id, label")}, {_ivf_fit_ctes()}, assign AS (
     SELECT vec_id, label, e, norm, cell, d2 AS cent_d2 FROM (
         SELECT n.vec_id, n.label, n.e, n.norm, c.cell,
                {_x5_d2('n.e', 'c.center')} AS d2,
@@ -3106,17 +3112,16 @@ def _x9_lloyd_step(
 )"""
 
 
-#: Shared x9/x17 oracle prefix — the SQL twin of _pq_codes_qside:
-#: md5-seeded sample init, per-subspace unrolled Lloyd, full-corpus
-#: encode, and ADC scoring through the ``adc`` CTE. Codes here carry
-#: cell ids and ADC terms come from a (m, cell) join, while Spark
-#: stores codebook positions and indexes a distance table — the same
-#: bijection, the same d² values, so ranking and recall agree exactly.
-_X9_PQ_CTES = f"""e AS (
-    SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-    FROM embeddings
-), samp AS (
-    SELECT vec_id, e FROM e WHERE vec_id % {PQ_SAMPLE_MOD} = 0
+def _pq_ctes(src: str = "e") -> str:
+    """The SQL twin of _pq_codes_qside: md5-seeded init and per-subspace
+    unrolled Lloyd over a sample of ``src``, full-corpus encode of ``e``,
+    and ADC scoring of the ``q`` queries through the ``adc`` CTE. Codes
+    here carry cell ids and ADC terms come from a (m, cell) join, while
+    Spark stores codebook positions and indexes a distance table — the
+    same bijection, the same d² values, so ranking and recall agree
+    exactly."""
+    return f"""samp AS (
+    SELECT vec_id, e FROM {src} WHERE vec_id % {PQ_SAMPLE_MOD} = 0
 ), subs AS (
     SELECT vec_id, t.m AS m,
            e[(t.m * {PQ_SUBDIM} + 1):(t.m * {PQ_SUBDIM} + {PQ_SUBDIM})] AS sub
@@ -3158,11 +3163,14 @@ _X9_PQ_CTES = f"""e AS (
     GROUP BY q.query_id, k.vec_id
 )"""
 
+
+#: Shared x9/x17/x18/x18b/x20 oracle prefix: ``e`` and the PQ CTEs.
+_X9_PQ_CTES = f"{_emb_cte()}, {_pq_ctes()}"
+
 #: Shared exact-L2 truth CTEs (reference q and e from _X9_PQ_CTES).
 _X9_EXACT_CTES = f"""exact AS (
     SELECT q.query_id, e.vec_id,
-           ROUND(list_sum(list_transform(range(1, {EMB_DIM + 1}), i ->
-               (e.e[i] - q.qe[i]) * (e.e[i] - q.qe[i]))), 4) AS l2
+           ROUND({_x5_d2('e.e', 'q.qe')}, 4) AS l2
     FROM e CROSS JOIN q WHERE e.vec_id <> q.query_id
 ), exact_topk AS (
     SELECT query_id, vec_id FROM (
@@ -3181,12 +3189,7 @@ WITH {_X9_PQ_CTES}, pq_topk AS (
                                   ORDER BY adc, vec_id) AS rnk
         FROM adc
     ) WHERE rnk <= {TOP_K}
-), {_X9_EXACT_CTES}, hits AS (
-    SELECT p.query_id, COUNT(*) AS n_hits
-    FROM pq_topk p JOIN exact_topk x
-      ON p.query_id = x.query_id AND p.vec_id = x.vec_id
-    GROUP BY p.query_id
-)
+), {_X9_EXACT_CTES}, {_hits_cte("pq_topk")}
 SELECT p.query_id, CAST(SUM(p.vec_id) AS BIGINT) AS id_checksum,
        ROUND(COALESCE(MAX(h.n_hits), 0) / {float(TOP_K)}, 4) AS recall_at_k
 FROM pq_topk p LEFT JOIN hits h USING (query_id)
@@ -3209,10 +3212,7 @@ WITH {_X9_PQ_CTES}, short AS (
     SELECT query_id, vec_id FROM (
         SELECT s.query_id, s.vec_id,
                row_number() OVER (PARTITION BY s.query_id
-                                  ORDER BY ROUND(list_sum(list_transform(
-                                      range(1, {EMB_DIM + 1}), i ->
-                                          (e.e[i] - q.qe[i])
-                                          * (e.e[i] - q.qe[i]))), 4),
+                                  ORDER BY ROUND({_x5_d2('e.e', 'q.qe')}, 4),
                                   s.vec_id) AS r2
         FROM short s JOIN e ON e.vec_id = s.vec_id
                      JOIN q ON q.query_id = s.query_id
@@ -3240,42 +3240,11 @@ FROM flag GROUP BY query_id ORDER BY query_id
 """
 
 
-def _x18_sql() -> str:
-    """x18 oracle: the shared PQ prefix + an i-prefixed replay of x5's
-    IVF Lloyd chain (own isamp/iseeds CTEs with their own
-    IVF_SAMPLE_MOD / IVF_CLUSTERS constants — the composition must not
-    silently depend on PQ_SAMPLE_MOD == IVF_SAMPLE_MOD or
-    PQ_K == IVF_CLUSTERS) + routed ADC (compute-all-then-filter ≡ the
-    Spark side's route-then-score: the same top-k over the same
-    candidate set) + recall vs exact L2."""
-    return f"""
-WITH {_X9_PQ_CTES}, isamp AS (
-    SELECT vec_id, e FROM e WHERE vec_id % {IVF_SAMPLE_MOD} = 0
-), iseeds AS (
-    SELECT vec_id, e, md5(CAST(vec_id AS VARCHAR)) AS s
-    FROM isamp ORDER BY s, vec_id LIMIT {IVF_CLUSTERS}
-), ic0 AS (
-    SELECT row_number() OVER (ORDER BY s, vec_id) - 1 AS cell,
-           e AS center
-    FROM iseeds
-), {_x5_lloyd_step('ic0', 'ia1', 'im1', 'ic1', samp='isamp')},
-{_x5_lloyd_step('ic1', 'ia2', 'im2', 'ic2', samp='isamp')}, iassign AS (
-    SELECT vec_id, cell FROM (
-        SELECT e.vec_id, c.cell,
-               row_number() OVER (PARTITION BY e.vec_id
-                                  ORDER BY {_x5_d2('e.e', 'c.center')},
-                                  c.cell) AS pr
-        FROM e CROSS JOIN ic2 c
-    ) WHERE pr = 1
-), iprobes AS (
-    SELECT query_id, cell FROM (
-        SELECT q.query_id, c.cell,
-               row_number() OVER (PARTITION BY q.query_id
-                                  ORDER BY {_x5_d2('q.qe', 'c.center')},
-                                  c.cell) AS pr
-        FROM q CROSS JOIN ic2 c
-    ) WHERE pr <= {IVF_NPROBE}
-), radc AS (
+#: x18's routed ADC (compute-all-then-filter ≡ the Spark side's
+#: route-then-score: the same top-k over the same candidate set):
+#: ``radc`` keeps each query's ``adc`` rows in its ``iprobes`` cells,
+#: ``pq_topk`` ranks them, ``hits`` grades them against exact L2.
+_ROUTED_TOPK_CTES = f"""radc AS (
     SELECT a.query_id, a.vec_id, a.adc,
            COUNT(*) OVER (PARTITION BY a.query_id) AS n_candidates
     FROM adc a
@@ -3288,12 +3257,18 @@ WITH {_X9_PQ_CTES}, isamp AS (
                                   ORDER BY adc, vec_id) AS rnk
         FROM radc
     ) WHERE rnk <= {TOP_K}
-), {_X9_EXACT_CTES}, hits AS (
-    SELECT p.query_id, COUNT(*) AS n_hits
-    FROM pq_topk p JOIN exact_topk x
-      ON p.query_id = x.query_id AND p.vec_id = x.vec_id
-    GROUP BY p.query_id
-)
+), {_X9_EXACT_CTES}, {_hits_cte("pq_topk")}"""
+
+
+def _x18_sql() -> str:
+    """x18 oracle: the shared PQ prefix + an i-prefixed replay of x5's
+    IVF Lloyd chain (own isamp/iseeds CTEs with their own
+    IVF_SAMPLE_MOD / IVF_CLUSTERS constants — the composition must not
+    silently depend on PQ_SAMPLE_MOD == IVF_SAMPLE_MOD or
+    PQ_K == IVF_CLUSTERS) + the routed ADC top-k and its recall vs
+    exact L2."""
+    return f"""
+WITH {_X9_PQ_CTES}, {_ivf_replay_ctes()}, {_ROUTED_TOPK_CTES}
 SELECT p.query_id,
        CAST(MAX(p.n_candidates) AS BIGINT) AS n_candidates,
        CAST(SUM(p.vec_id) AS BIGINT) AS id_checksum,
@@ -3318,33 +3293,7 @@ def _x18b_sql() -> str:
         f" - rc.center[i]"
     )
     return f"""
-WITH {_X9_PQ_CTES}, isamp AS (
-    SELECT vec_id, e FROM e WHERE vec_id % {IVF_SAMPLE_MOD} = 0
-), iseeds AS (
-    SELECT vec_id, e, md5(CAST(vec_id AS VARCHAR)) AS s
-    FROM isamp ORDER BY s, vec_id LIMIT {IVF_CLUSTERS}
-), ic0 AS (
-    SELECT row_number() OVER (ORDER BY s, vec_id) - 1 AS cell,
-           e AS center
-    FROM iseeds
-), {_x5_lloyd_step('ic0', 'ia1', 'im1', 'ic1', samp='isamp')},
-{_x5_lloyd_step('ic1', 'ia2', 'im2', 'ic2', samp='isamp')}, iassign AS (
-    SELECT vec_id, cell FROM (
-        SELECT e.vec_id, c.cell,
-               row_number() OVER (PARTITION BY e.vec_id
-                                  ORDER BY {_x5_d2('e.e', 'c.center')},
-                                  c.cell) AS pr
-        FROM e CROSS JOIN ic2 c
-    ) WHERE pr = 1
-), iprobes AS (
-    SELECT query_id, cell FROM (
-        SELECT q.query_id, c.cell,
-               row_number() OVER (PARTITION BY q.query_id
-                                  ORDER BY {_x5_d2('q.qe', 'c.center')},
-                                  c.cell) AS pr
-        FROM q CROSS JOIN ic2 c
-    ) WHERE pr <= {IVF_NPROBE}
-), rese AS (
+WITH {_X9_PQ_CTES}, {_ivf_replay_ctes()}, rese AS (
     SELECT v.vec_id, v.cell,
            list_transform(range(1, {EMB_DIM + 1}),
                           i -> e.e[i] - c.center[i]) AS e
@@ -3432,105 +3381,14 @@ GROUP BY f.query_id ORDER BY f.query_id
 
 
 def _x21_sql() -> str:
-    """x21 oracle: a self-contained replay of the PQ prefix and x18's
-    i-prefixed IVF chain with both fit samples drawn FROM THE BASE
-    subset (``b``), full-corpus encode/serve, and the delta-share
-    column. The prefix text is deliberately duplicated from
-    ``_X9_PQ_CTES`` / ``_x18_sql`` instead of parameterizing the
-    shared strings — a fit-source parameter on those would have put
-    x9/x17/x18/x18b/x20 back through the rotation gate for a pure
-    refactor (the x19 literal-construction precedent)."""
+    """x21 oracle: x18's PQ prefix and i-prefixed IVF replay with both
+    fit samples drawn from the base subset (``b``), full-corpus
+    encode/serve, and the delta-share column."""
     return f"""
-WITH e AS (
-    SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-    FROM embeddings
-), b AS (
+WITH {_emb_cte()}, b AS (
     SELECT vec_id, e FROM e
     WHERE vec_id % {X21_DELTA_MOD} <> {X21_DELTA_RES}
-), samp AS (
-    SELECT vec_id, e FROM b WHERE vec_id % {PQ_SAMPLE_MOD} = 0
-), subs AS (
-    SELECT vec_id, t.m AS m,
-           e[(t.m * {PQ_SUBDIM} + 1):(t.m * {PQ_SUBDIM} + {PQ_SUBDIM})] AS sub
-    FROM samp CROSS JOIN range(0, {PQ_M}) t(m)
-), seeds AS (
-    SELECT vec_id, e, md5(CAST(vec_id AS VARCHAR)) AS s
-    FROM samp ORDER BY s, vec_id LIMIT {PQ_K}
-), c0 AS (
-    SELECT t.m AS m, r.cell,
-           r.e[(t.m * {PQ_SUBDIM} + 1):(t.m * {PQ_SUBDIM} + {PQ_SUBDIM})] AS center
-    FROM (SELECT row_number() OVER (ORDER BY s, vec_id) - 1 AS cell, e
-          FROM seeds) r
-    CROSS JOIN range(0, {PQ_M}) t(m)
-), {_x9_lloyd_step('c0', 'a1', 'm1', 'c1')},
-{_x9_lloyd_step('c1', 'a2', 'm2', 'c2')}, fullsubs AS (
-    SELECT vec_id, t.m AS m,
-           e[(t.m * {PQ_SUBDIM} + 1):(t.m * {PQ_SUBDIM} + {PQ_SUBDIM})] AS sub
-    FROM e CROSS JOIN range(0, {PQ_M}) t(m)
-), codes AS (
-    SELECT vec_id, m, cell FROM (
-        SELECT f.vec_id, f.m, c.cell,
-               row_number() OVER (PARTITION BY f.vec_id, f.m
-                                  ORDER BY {_x9_sub_d2('f.sub', 'c.center')}, c.cell) AS pr
-        FROM fullsubs f JOIN c2 c USING (m)
-    ) WHERE pr = 1
-), q AS (
-    SELECT vec_id AS query_id, e AS qe FROM e WHERE vec_id < {N_QUERIES}
-), adc AS (
-    SELECT q.query_id, k.vec_id,
-           ROUND(list_sum(list(
-               list_sum(list_transform(range(1, {PQ_SUBDIM + 1}), i ->
-                   (q.qe[k.m * {PQ_SUBDIM} + i] - c.center[i])
-                   * (q.qe[k.m * {PQ_SUBDIM} + i] - c.center[i])))
-               ORDER BY k.m)), 4) AS adc
-    FROM codes k JOIN c2 c USING (m, cell) CROSS JOIN q
-    WHERE k.vec_id <> q.query_id
-    GROUP BY q.query_id, k.vec_id
-), isamp AS (
-    SELECT vec_id, e FROM b WHERE vec_id % {IVF_SAMPLE_MOD} = 0
-), iseeds AS (
-    SELECT vec_id, e, md5(CAST(vec_id AS VARCHAR)) AS s
-    FROM isamp ORDER BY s, vec_id LIMIT {IVF_CLUSTERS}
-), ic0 AS (
-    SELECT row_number() OVER (ORDER BY s, vec_id) - 1 AS cell,
-           e AS center
-    FROM iseeds
-), {_x5_lloyd_step('ic0', 'ia1', 'im1', 'ic1', samp='isamp')},
-{_x5_lloyd_step('ic1', 'ia2', 'im2', 'ic2', samp='isamp')}, iassign AS (
-    SELECT vec_id, cell FROM (
-        SELECT e.vec_id, c.cell,
-               row_number() OVER (PARTITION BY e.vec_id
-                                  ORDER BY {_x5_d2('e.e', 'c.center')},
-                                  c.cell) AS pr
-        FROM e CROSS JOIN ic2 c
-    ) WHERE pr = 1
-), iprobes AS (
-    SELECT query_id, cell FROM (
-        SELECT q.query_id, c.cell,
-               row_number() OVER (PARTITION BY q.query_id
-                                  ORDER BY {_x5_d2('q.qe', 'c.center')},
-                                  c.cell) AS pr
-        FROM q CROSS JOIN ic2 c
-    ) WHERE pr <= {IVF_NPROBE}
-), radc AS (
-    SELECT a.query_id, a.vec_id, a.adc,
-           COUNT(*) OVER (PARTITION BY a.query_id) AS n_candidates
-    FROM adc a
-    JOIN iassign v ON v.vec_id = a.vec_id
-    JOIN iprobes p ON p.query_id = a.query_id AND p.cell = v.cell
-), pq_topk AS (
-    SELECT query_id, vec_id, n_candidates FROM (
-        SELECT query_id, vec_id, n_candidates,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY adc, vec_id) AS rnk
-        FROM radc
-    ) WHERE rnk <= {TOP_K}
-), {_X9_EXACT_CTES}, hits AS (
-    SELECT p.query_id, COUNT(*) AS n_hits
-    FROM pq_topk p JOIN exact_topk x
-      ON p.query_id = x.query_id AND p.vec_id = x.vec_id
-    GROUP BY p.query_id
-)
+), {_pq_ctes("b")}, {_ivf_replay_ctes("b")}, {_ROUTED_TOPK_CTES}
 , perq AS (
     SELECT p.query_id,
            MAX(p.n_candidates) AS n_candidates,
@@ -3563,33 +3421,7 @@ WITH {_X9_PQ_CTES}, lab AS (
 ), ql AS (
     SELECT q.query_id, l.label AS qlabel
     FROM q JOIN lab l ON l.vec_id = q.query_id
-), isamp AS (
-    SELECT vec_id, e FROM e WHERE vec_id % {IVF_SAMPLE_MOD} = 0
-), iseeds AS (
-    SELECT vec_id, e, md5(CAST(vec_id AS VARCHAR)) AS s
-    FROM isamp ORDER BY s, vec_id LIMIT {IVF_CLUSTERS}
-), ic0 AS (
-    SELECT row_number() OVER (ORDER BY s, vec_id) - 1 AS cell,
-           e AS center
-    FROM iseeds
-), {_x5_lloyd_step('ic0', 'ia1', 'im1', 'ic1', samp='isamp')},
-{_x5_lloyd_step('ic1', 'ia2', 'im2', 'ic2', samp='isamp')}, iassign AS (
-    SELECT vec_id, cell FROM (
-        SELECT e.vec_id, c.cell,
-               row_number() OVER (PARTITION BY e.vec_id
-                                  ORDER BY {_x5_d2('e.e', 'c.center')},
-                                  c.cell) AS pr
-        FROM e CROSS JOIN ic2 c
-    ) WHERE pr = 1
-), iprobes AS (
-    SELECT query_id, cell FROM (
-        SELECT q.query_id, c.cell,
-               row_number() OVER (PARTITION BY q.query_id
-                                  ORDER BY {_x5_d2('q.qe', 'c.center')},
-                                  c.cell) AS pr
-        FROM q CROSS JOIN ic2 c
-    ) WHERE pr <= {IVF_NPROBE}
-), radc AS (
+), {_ivf_replay_ctes()}, radc AS (
     SELECT a.query_id, a.vec_id, a.adc, lb.label, ql.qlabel
     FROM adc a
     JOIN iassign v ON v.vec_id = a.vec_id
@@ -3615,8 +3447,7 @@ WITH {_X9_PQ_CTES}, lab AS (
     ) WHERE rnk <= {X20_EXPAND * TOP_K} AND label = qlabel
 ), exactf AS (
     SELECT q.query_id, e.vec_id,
-           ROUND(list_sum(list_transform(range(1, {EMB_DIM + 1}), i ->
-               (e.e[i] - q.qe[i]) * (e.e[i] - q.qe[i]))), 4) AS l2
+           ROUND({_x5_d2('e.e', 'q.qe')}, 4) AS l2
     FROM e CROSS JOIN q
     JOIN lab lb ON lb.vec_id = e.vec_id
     JOIN ql ON ql.query_id = q.query_id
@@ -3663,10 +3494,7 @@ ORDER BY t.query_id
 
 
 _X15_SQL = f"""
-WITH e AS (
-    SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-    FROM embeddings
-), stats AS (
+WITH {_emb_ctes()}, stats AS (
     SELECT t.i AS i, MIN(e.e[t.i]) AS lo, MAX(e.e[t.i]) - MIN(e.e[t.i]) AS span
     FROM e CROSS JOIN range(1, {EMB_DIM + 1}) t(i)
     GROUP BY t.i
@@ -3702,26 +3530,7 @@ WITH e AS (
                                   ORDER BY cos_sim DESC, vec_id) AS rnk
         FROM scored
     ) WHERE rnk <= {TOP_K}
-), n AS (
-    SELECT vec_id, e, sqrt(list_sum(list_transform(e, x -> x * x))) AS norm
-    FROM e
-), exact AS (
-    SELECT q.query_id, n.vec_id,
-           {_COS} AS cos_sim
-    FROM n CROSS JOIN q WHERE n.vec_id <> q.query_id
-), exact_topk AS (
-    SELECT query_id, vec_id FROM (
-        SELECT query_id, vec_id,
-               ROW_NUMBER() OVER (PARTITION BY query_id
-                                  ORDER BY cos_sim DESC, vec_id) AS rnk
-        FROM exact
-    ) WHERE rnk <= {TOP_K}
-), hits AS (
-    SELECT p.query_id, COUNT(*) AS n_hits
-    FROM sq_topk p JOIN exact_topk x
-      ON p.query_id = x.query_id AND p.vec_id = x.vec_id
-    GROUP BY p.query_id
-)
+), {_exact_topk_ctes()}, {_hits_cte("sq_topk")}
 SELECT p.query_id, CAST(SUM(p.vec_id) AS BIGINT) AS id_checksum,
        ROUND(COALESCE(MAX(h.n_hits), 0) / {float(TOP_K)}, 4) AS recall_at_k
 FROM sq_topk p LEFT JOIN hits h USING (query_id)
@@ -3731,10 +3540,7 @@ ORDER BY p.query_id
 
 
 _X22_SQL = f"""
-WITH e AS (
-    SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-    FROM embeddings
-), stats AS (
+WITH {_emb_ctes()}, stats AS (
     SELECT t.i AS i, (MIN(e.e[t.i]) + MAX(e.e[t.i])) / 2 AS mid
     FROM e CROSS JOIN range(1, {EMB_DIM + 1}) t(i)
     GROUP BY t.i
@@ -3748,9 +3554,6 @@ WITH e AS (
                          ELSE 0 END) AS BIGINT) AS s1
     FROM e CROSS JOIN stats s
     GROUP BY e.vec_id
-), n AS (
-    SELECT vec_id, e, sqrt(list_sum(list_transform(e, x -> x * x))) AS norm
-    FROM e
 ), sig AS (
     SELECT n.vec_id, n.e, n.norm, l.s0, l.s1
     FROM n JOIN lanes l USING (vec_id)
@@ -3768,12 +3571,7 @@ WITH e AS (
         FROM ham
     ) WHERE hrnk <= {X22_SHORTLIST}
 ), rerank AS (
-    SELECT query_id, vec_id, hamming,
-           CASE WHEN norm * qnorm > 0
-                THEN ROUND(list_sum(list_transform(range(1, {EMB_DIM + 1}),
-                                                   i -> e[i] * qe[i]))
-                           / (norm * qnorm), 4)
-                ELSE 0.0 END AS cos_sim
+    SELECT query_id, vec_id, hamming, {_cosine_sql("", "q")} AS cos_sim
     FROM short
 ), bin_topk AS (
     SELECT query_id, vec_id, hamming FROM (
@@ -3782,23 +3580,7 @@ WITH e AS (
                                   ORDER BY cos_sim DESC, vec_id) AS rnk
         FROM rerank
     ) WHERE rnk <= {TOP_K}
-), exact AS (
-    SELECT q.query_id, n.vec_id,
-           {_COS} AS cos_sim
-    FROM n CROSS JOIN q WHERE n.vec_id <> q.query_id
-), exact_topk AS (
-    SELECT query_id, vec_id FROM (
-        SELECT query_id, vec_id,
-               ROW_NUMBER() OVER (PARTITION BY query_id
-                                  ORDER BY cos_sim DESC, vec_id) AS rnk
-        FROM exact
-    ) WHERE rnk <= {TOP_K}
-), hits AS (
-    SELECT p.query_id, COUNT(*) AS n_hits
-    FROM bin_topk p JOIN exact_topk x
-      ON p.query_id = x.query_id AND p.vec_id = x.vec_id
-    GROUP BY p.query_id
-)
+), {_exact_topk_ctes()}, {_hits_cte("bin_topk")}
 SELECT p.query_id, CAST(SUM(p.vec_id) AS BIGINT) AS id_checksum,
        ROUND(COALESCE(MAX(h.n_hits), 0) / {float(TOP_K)}, 4) AS recall_at_k,
        CAST(SUM(p.hamming) AS BIGINT) AS hamming_sum
@@ -3828,13 +3610,7 @@ ORACLE = {
     "d13_semdedup": _D13_SQL,
     "x14_cluster_balanced_sample": _X14_SQL,
     "x8_range_search": f"""
-        WITH e AS (
-            SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-            FROM embeddings
-        ), n AS (
-            SELECT vec_id, e, sqrt(list_sum(list_transform(e, x -> x * x))) AS norm
-            FROM e
-        ), q AS (
+        WITH {_emb_ctes()}, q AS (
             SELECT vec_id AS query_id, e AS qe, norm AS qnorm
             FROM n WHERE vec_id < {N_QUERIES}
         ), scored AS (
@@ -3850,14 +3626,7 @@ ORACLE = {
         GROUP BY query_id ORDER BY query_id
     """,
     "x1_cosine_topk": f"""
-        WITH e AS (
-            SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-            FROM embeddings
-        ), n AS (
-            SELECT vec_id, e,
-                   sqrt(list_sum(list_transform(e, x -> x * x))) AS norm
-            FROM e
-        ), q AS (
+        WITH {_emb_ctes()}, q AS (
             SELECT vec_id AS query_id, e AS qe, norm AS qnorm
             FROM n WHERE vec_id < {N_QUERIES}
         ), sims AS (
@@ -3875,15 +3644,7 @@ ORACLE = {
     # x2: seeded engine-native bucketing — rows-only check (one row per
     # query; recall is *measured inside the query* against exact top-k).
     "x3_label_centroid_sim": f"""
-        WITH e AS (
-            SELECT vec_id, label,
-                   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-            FROM embeddings
-        ), n AS (
-            SELECT vec_id, label, e,
-                   sqrt(list_sum(list_transform(e, x -> x * x))) AS norm
-            FROM e
-        ), cent AS (
+        WITH {_emb_ctes("vec_id, label")}, cent AS (
             SELECT label, list(cval ORDER BY i) AS qe
             FROM (
                 SELECT label, i, AVG(e[i]) AS cval
@@ -3897,9 +3658,7 @@ ORACLE = {
             FROM cent
         ), scored AS (
             SELECT n.label,
-                   CASE WHEN n.norm * q.qnorm > 0 THEN
-                       {_COS}
-                   ELSE 0.0 END AS cos_sim
+                   {_cosine_sql("n.", "q.q")} AS cos_sim
             FROM n JOIN cn q USING (label)
         )
         SELECT label, COUNT(*) AS n_vecs,
@@ -3916,26 +3675,7 @@ ORACLE = {
     # to per-(table, bucket) occupancy — pins both the bucket arithmetic
     # and the cap bookkeeping cross-engine.
     "x4b_bucket_cap_report": f"""
-        WITH planes AS (
-            SELECT {_planes_sql()} AS m
-        ), e AS (
-            SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-            FROM embeddings
-        ), n AS (
-            SELECT vec_id, e,
-                   sqrt(list_sum(list_transform(e, x -> x * x))) AS norm
-            FROM e
-        ), b AS (
-            SELECT vec_id,
-                   list_transform(range(0, {LSH_TABLES}), t ->
-                       list_sum(list_transform(range(0, {LSH_BITS}), bb ->
-                           CASE WHEN list_sum(list_transform(range(1, {EMB_DIM + 1}),
-                                    i -> e[CAST(i AS INT)]
-                                         * m[CAST(t * {LSH_BITS * EMB_DIM}
-                                                  + bb * {EMB_DIM} + i AS INT)])) > 0
-                                THEN (1 << CAST(bb AS INT)) ELSE 0 END))) AS buckets
-            FROM n CROSS JOIN planes
-        ), bands AS (
+        WITH {_PLANES_CTE}, {_emb_ctes()}, {_srp_buckets_cte("vec_id")}, bands AS (
             SELECT u.t AS t, b.buckets[CAST(u.t + 1 AS INT)] AS bucket
             FROM b, (SELECT unnest(range(0, {LSH_TABLES})) AS t) u
         ), sz AS (
@@ -3950,26 +3690,7 @@ ORACLE = {
         FROM sz
     """,
     "x2_ann_lsh_topk": f"""
-        WITH planes AS (
-            SELECT {_planes_sql()} AS m
-        ), e AS (
-            SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-            FROM embeddings
-        ), n AS (
-            SELECT vec_id, e,
-                   sqrt(list_sum(list_transform(e, x -> x * x))) AS norm
-            FROM e
-        ), b AS (
-            SELECT vec_id, e, norm,
-                   list_transform(range(0, {LSH_TABLES}), t ->
-                       list_sum(list_transform(range(0, {LSH_BITS}), bb ->
-                           CASE WHEN list_sum(list_transform(range(1, {EMB_DIM + 1}),
-                                    i -> e[CAST(i AS INT)]
-                                         * m[CAST(t * {LSH_BITS * EMB_DIM}
-                                                  + bb * {EMB_DIM} + i AS INT)])) > 0
-                                THEN (1 << CAST(bb AS INT)) ELSE 0 END))) AS buckets
-            FROM n CROSS JOIN planes
-        ), qb AS (
+        WITH {_PLANES_CTE}, {_emb_ctes()}, {_srp_buckets_cte("vec_id, e, norm")}, qb AS (
             SELECT vec_id AS query_id, e AS qe, norm AS qnorm, buckets AS qbuckets
             FROM b WHERE vec_id < {N_QUERIES}
         ), cand AS (
@@ -3979,8 +3700,7 @@ ORACLE = {
               AND c.buckets[CAST(ti + 1 AS INT)] = q.qbuckets[CAST(ti + 1 AS INT)]
         ), scored_lsh AS (
             SELECT cand.query_id, cand.vec_id,
-                   CASE WHEN n.norm * q.qnorm > 0 THEN {_COS}
-                   ELSE 0.0 END AS cos_sim
+                   {_cosine_sql("n.", "q.q")} AS cos_sim
             FROM cand
             JOIN n ON n.vec_id = cand.vec_id
             JOIN qb q ON q.query_id = cand.query_id
@@ -3991,19 +3711,7 @@ ORACLE = {
                                           ORDER BY cos_sim DESC, vec_id ASC) AS rnk
                 FROM scored_lsh
             ) WHERE rnk <= {TOP_K}
-        ), exact_scored AS (
-            SELECT q.query_id, n.vec_id,
-                   CASE WHEN n.norm * q.qnorm > 0 THEN {_COS}
-                   ELSE 0.0 END AS cos_sim
-            FROM n CROSS JOIN qb q WHERE n.vec_id <> q.query_id
-        ), exact_topk AS (
-            SELECT query_id, vec_id FROM (
-                SELECT query_id, vec_id,
-                       ROW_NUMBER() OVER (PARTITION BY query_id
-                                          ORDER BY cos_sim DESC, vec_id ASC) AS rnk
-                FROM exact_scored
-            ) WHERE rnk <= {TOP_K}
-        ), n_cand AS (
+        ), {_exact_topk_ctes(_cosine_sql("n.", "q.q"), "qb q")}, n_cand AS (
             SELECT query_id, COUNT(*) AS n_candidates FROM cand GROUP BY query_id
         ), n_hit AS (
             SELECT l.query_id, COUNT(*) AS n_hits
@@ -4017,26 +3725,7 @@ ORACLE = {
     """,
     # x13: x2's replay + the first-colliding-table axis and the sweep.
     "x13_lsh_recall_curve": f"""
-        WITH planes AS (
-            SELECT {_planes_sql()} AS m
-        ), e AS (
-            SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-            FROM embeddings
-        ), n AS (
-            SELECT vec_id, e,
-                   sqrt(list_sum(list_transform(e, x -> x * x))) AS norm
-            FROM e
-        ), b AS (
-            SELECT vec_id, e, norm,
-                   list_transform(range(0, {LSH_TABLES}), t ->
-                       list_sum(list_transform(range(0, {LSH_BITS}), bb ->
-                           CASE WHEN list_sum(list_transform(range(1, {EMB_DIM + 1}),
-                                    i -> e[CAST(i AS INT)]
-                                         * m[CAST(t * {LSH_BITS * EMB_DIM}
-                                                  + bb * {EMB_DIM} + i AS INT)])) > 0
-                                THEN (1 << CAST(bb AS INT)) ELSE 0 END))) AS buckets
-            FROM n CROSS JOIN planes
-        ), qb AS (
+        WITH {_PLANES_CTE}, {_emb_ctes()}, {_srp_buckets_cte("vec_id, e, norm")}, qb AS (
             SELECT vec_id AS query_id, e AS qe, norm AS qnorm, buckets AS qbuckets
             FROM b WHERE vec_id < {N_QUERIES}
         ), cand AS (
@@ -4047,8 +3736,7 @@ ORACLE = {
             GROUP BY 1, 2
         ), scored AS (
             SELECT cand.query_id, cand.vec_id, cand.first_t,
-                   CASE WHEN n.norm * q.qnorm > 0 THEN {_COS}
-                   ELSE 0.0 END AS cos_sim
+                   {_cosine_sql("n.", "q.q")} AS cos_sim
             FROM cand
             JOIN n ON n.vec_id = cand.vec_id
             JOIN qb q ON q.query_id = cand.query_id
@@ -4064,19 +3752,7 @@ ORACLE = {
                                           ORDER BY cos_sim DESC, vec_id ASC) AS rnk
                 FROM leveled
             ) WHERE rnk <= {TOP_K}
-        ), exact_scored AS (
-            SELECT q.query_id, n.vec_id,
-                   CASE WHEN n.norm * q.qnorm > 0 THEN {_COS}
-                   ELSE 0.0 END AS cos_sim
-            FROM n CROSS JOIN qb q WHERE n.vec_id <> q.query_id
-        ), exact_topk AS (
-            SELECT query_id, vec_id FROM (
-                SELECT query_id, vec_id,
-                       ROW_NUMBER() OVER (PARTITION BY query_id
-                                          ORDER BY cos_sim DESC, vec_id ASC) AS rnk
-                FROM exact_scored
-            ) WHERE rnk <= {TOP_K}
-        ), n_exact AS (
+        ), {_exact_topk_ctes(_cosine_sql("n.", "q.q"), "qb q")}, n_exact AS (
             SELECT COUNT(*) AS n_exact FROM exact_topk
         ), hits AS (
             SELECT l.n_tables, COUNT(*) AS n_hits
@@ -4103,30 +3779,15 @@ ORACLE = {
     # Single-table twin of the partitioned index: same planes (table 0),
     # same bucket ints, same in-bucket rounded-cosine top-k.
     "x7_ann_partitioned_index": f"""
-        WITH planes AS (
-            SELECT {_planes_sql()} AS m
-        ), e AS (
-            SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-            FROM embeddings
-        ), nn AS (
-            SELECT vec_id, e,
-                   sqrt(list_sum(list_transform(e, x -> x * x))) AS norm
-            FROM e
-        ), b AS (
-            SELECT vec_id, e, norm,
-                   list_sum(list_transform(range(0, {LSH_BITS}), bb ->
-                       CASE WHEN list_sum(list_transform(range(1, {EMB_DIM + 1}),
-                                i -> e[CAST(i AS INT)]
-                                     * m[CAST(bb * {EMB_DIM} + i AS INT)])) > 0
-                            THEN (1 << CAST(bb AS INT)) ELSE 0 END)) AS bucket
-            FROM nn CROSS JOIN planes
+        WITH {_PLANES_CTE}, {_emb_ctes()}, b AS (
+            SELECT vec_id, e, norm, {_srp_bucket_sql()} AS bucket
+            FROM n CROSS JOIN planes
         ), q AS (
             SELECT vec_id AS query_id, e AS qe, norm AS qnorm, bucket
             FROM b WHERE vec_id < {N_QUERIES}
         ), scored AS (
             SELECT q.query_id, n.vec_id,
-                   CASE WHEN n.norm * q.qnorm > 0 THEN {_COS}
-                   ELSE 0.0 END AS cos_sim
+                   {_cosine_sql("n.", "q.q")} AS cos_sim
             FROM b n JOIN q ON n.bucket = q.bucket
             WHERE n.vec_id <> q.query_id
         )
@@ -4139,21 +3800,9 @@ ORACLE = {
     """,
     # Exact drop-rule twin of the linear apply (see the x6 docstring).
     "x6_embedding_dedup_apply": f"""
-        WITH e AS (
-            SELECT vec_id, label,
-                   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-            FROM embeddings
-        ), n AS (
-            SELECT vec_id, label, e,
-                   sqrt(list_sum(list_transform(e, x -> x * x))) AS norm
-            FROM e
-        ), pairs AS (
+        WITH {_emb_ctes("vec_id, label")}, pairs AS (
             SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-                   CASE WHEN a.norm * b.norm > 0 THEN
-                       ROUND(list_sum(list_transform(range(1, {EMB_DIM + 1}),
-                                                     i -> a.e[i] * b.e[i]))
-                             / (a.norm * b.norm), 4)
-                   ELSE 0.0 END AS cos_sim
+                   {_cosine_sql("a.", "b.")} AS cos_sim
             FROM n a JOIN n b ON a.vec_id < b.vec_id
         ), drops AS (
             SELECT DISTINCT vec_b FROM pairs WHERE cos_sim >= 0.8
@@ -4166,20 +3815,9 @@ ORACLE = {
     # Exact all-pairs twin of the LSH+verify path (see the x4
     # docstring for why equality holds).
     "x4_embedding_neardup_pairs_diag": f"""
-        WITH e AS (
-            SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-            FROM embeddings
-        ), n AS (
-            SELECT vec_id, e,
-                   sqrt(list_sum(list_transform(e, x -> x * x))) AS norm
-            FROM e
-        ), pairs AS (
+        WITH {_emb_ctes()}, pairs AS (
             SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-                   CASE WHEN a.norm * b.norm > 0 THEN
-                       ROUND(list_sum(list_transform(range(1, {EMB_DIM + 1}),
-                                                     i -> a.e[i] * b.e[i]))
-                             / (a.norm * b.norm), 4)
-                   ELSE 0.0 END AS cos_sim
+                   {_cosine_sql("a.", "b.")} AS cos_sim
             FROM n a JOIN n b ON a.vec_id < b.vec_id
         )
         SELECT vec_a, vec_b, cos_sim FROM pairs WHERE cos_sim >= 0.8

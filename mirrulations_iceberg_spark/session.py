@@ -15,6 +15,13 @@ from typing import Any, Callable
 from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 
+import mirrulations_iceberg_spark
+
+#: The directory the package is imported from.
+_PACKAGE_PARENT = os.path.dirname(
+    os.path.dirname(os.path.abspath(mirrulations_iceberg_spark.__file__))
+)
+
 #: Configs that are correct at any scale (cluster or local test).
 _SCALE_SAFE_CONF = {
     # AQE re-plans at runtime: coalesces tiny shuffle partitions, converts
@@ -117,6 +124,10 @@ def get_spark(
         builder = builder.config(
             "spark.sql.sources.parallelPartitionDiscovery.threshold", "2147483647"
         )
+    # Python workers (mapInPandas, applyInPandasWithState) import the
+    # package by name; a process that found it only through sys.path
+    # would otherwise start workers that cannot.
+    builder = builder.config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

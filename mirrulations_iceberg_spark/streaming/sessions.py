@@ -16,7 +16,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -88,17 +88,3 @@ def sessionize_stream(
         )
     )
 
-
-def events_file_stream(
-    spark: SparkSession, events_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """File-source events stream with the fixture's ts normalization
-    (see tables.normalize_event_ts)."""
-    from ..tables import ensure_events_read_conf, normalize_event_ts, parquet_schema
-
-    ensure_events_read_conf(spark)
-    batch_schema = parquet_schema(spark, events_dir)
-    reader = spark.readStream.schema(batch_schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return normalize_event_ts(reader.parquet(events_dir))

@@ -692,3 +692,37 @@ def test_bucket_pairs_is_the_one_pair_generator():
                 continue
             offenders.append(f"{path.relative_to(pkg).as_posix()}:{line}")
     assert not offenders, offenders
+
+
+#: Oracle SQL texts with one home each: (text, file, fragment).
+_ORACLE_FRAGMENTS = (
+    ("t[i] || ' ' || t[i+1] || ' ' || t[i+2]", "dedup.py", "_ngram_concat"),
+    ("list_transform(embedding, x -> CAST(x AS DOUBLE))", "similarity.py", "_emb_cte"),
+    ("FROM isamp ORDER BY s, vec_id LIMIT", "similarity.py", "_ivf_fit_ctes"),
+    ("THEN (1 << CAST(bb AS INT))", "similarity.py", "_srp_bucket_sql"),
+)
+
+
+def test_oracle_fragments_have_one_home():
+    """The DuckDB oracles' shared building blocks (the shingle window,
+    the embedding cast, the IVF fit replay, the SRP sign-bit bucket) are
+    written once, in the fragment generated from the Spark side's
+    constants, so an oracle cannot drift from its constant or its
+    siblings."""
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "mirrulations_iceberg_spark"
+    offenders = []
+    for text, home_file, home in _ORACLE_FRAGMENTS:
+        home_path = pkg / "operators" / home_file
+        home_lines = next(
+            (
+                range(node.lineno, node.end_lineno + 1)
+                for node in ast.parse(home_path.read_text()).body
+                if isinstance(node, ast.FunctionDef) and node.name == home
+            ),
+            range(0),
+        )
+        for path in sorted(pkg.rglob("*.py")):
+            for line_no, line in enumerate(path.read_text().splitlines(), 1):
+                if text in line and not (path == home_path and line_no in home_lines):
+                    offenders.append(f"{home}: {path.relative_to(pkg).as_posix()}:{line_no}")
+    assert not offenders, offenders

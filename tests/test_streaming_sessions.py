@@ -13,11 +13,12 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from mirrulations_iceberg_spark.streaming.sessions import (
-    events_file_stream,
-    sessionize_stream,
+from mirrulations_iceberg_spark.streaming.sessions import sessionize_stream
+from mirrulations_iceberg_spark.tables import (
+    load_table,
+    normalize_event_ts,
+    parquet_schema,
 )
-from mirrulations_iceberg_spark.tables import load_table
 
 from .conftest import SF_DIR
 
@@ -56,7 +57,11 @@ def _batch_sessions(spark, events):
 
 
 def test_stateful_sessionize_matches_batch(spark, split_events_dir, tmp_path):
-    stream = events_file_stream(spark, split_events_dir, max_files_per_trigger=1)
+    stream = normalize_event_ts(
+        spark.readStream.schema(parquet_schema(spark, split_events_dir))
+        .option("maxFilesPerTrigger", "1")
+        .parquet(split_events_dir)
+    )
     sessions = sessionize_stream(stream)
     q = (
         sessions.writeStream.format("memory")
