@@ -2043,35 +2043,11 @@ def e19_filter_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _e19_oracle() -> str:
     return f"""
-        WITH tok AS (
-            SELECT doc_id, LENGTH(text) AS n, unnest(
-                regexp_extract_all(lower(text), '{_TOKEN_PATTERN}')) AS tok
-            FROM documents
-        ), tc AS (
-            SELECT doc_id, tok, COUNT(*) AS c, MAX(n) AS n
-            FROM tok GROUP BY 1, 2
-        ), per AS (
-            SELECT doc_id, SUM(c) AS n_toks,
-                   SUM(LENGTH(tok) * c) AS alpha,
-                   MAX(c) AS maxc, MAX(n) AS n
-            FROM tc GROUP BY 1
-        ), flags AS MATERIALIZED (
-            SELECT
-                COALESCE(p.n_toks, 0) < {E19_MIN_TOKENS} AS k_tok,
-                (10000 * COALESCE(p.alpha, 0))
-                    // GREATEST(LENGTH(d.text), 1)
-                    < {E19_MIN_ALPHA_BP} AS k_alpha,
-                (10000 * COALESCE(p.maxc, 0))
-                    // GREATEST(COALESCE(p.n_toks, 0), 1)
-                    > {E19_MAX_TOPSHARE_BP} AS k_share,
-                (10 * COALESCE(p.alpha, 0))
-                    // GREATEST(COALESCE(p.n_toks, 0), 1)
-                    < {E19_MIN_MEANLEN_DECI} AS k_len
-            FROM documents d LEFT JOIN per p USING (doc_id)
-        ), f2 AS MATERIALIZED (
-            SELECT *, CAST(k_tok AS INT) + CAST(k_alpha AS INT)
-                    + CAST(k_share AS INT) + CAST(k_len AS INT) AS k_n
-            FROM flags
+        WITH {_e19_stats_ctes()}, f2 AS MATERIALIZED (
+            SELECT CAST(k_tok AS INT) + CAST(k_alpha AS INT)
+                    + CAST(k_share AS INT) + CAST(k_len AS INT) AS k_n,
+                k_tok, k_alpha, k_share, k_len
+            FROM stats
         ), agg AS MATERIALIZED (
             SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
                 CAST(SUM(CASE WHEN k_tok THEN 1 ELSE 0 END) AS BIGINT) AS f_tok,
@@ -2270,6 +2246,44 @@ def _e19b_stats_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stats.agg(*aggs)
 
 
+def _e19_stats_ctes() -> str:
+    """The oracle twin of the per-document stats that e19 and e19b's
+    :func:`_e19b_stats_agg` compute, in e19's explode recipe: token
+    counts per (doc, tok), rolled up per doc and LEFT-joined back to
+    the documents so a zero-token doc still fails. CTE ``stats`` holds
+    n_toks, alpha_bp, share_bp, len_deci and the four calibrated kill
+    flags."""
+    return f"""tok AS (
+            SELECT doc_id, unnest(
+                regexp_extract_all(lower(text), '{_TOKEN_PATTERN}')) AS tok
+            FROM documents
+        ), tc AS (
+            SELECT doc_id, tok, COUNT(*) AS c FROM tok GROUP BY 1, 2
+        ), per AS (
+            SELECT doc_id, SUM(c) AS n_toks,
+                   SUM(LENGTH(tok) * c) AS alpha,
+                   MAX(c) AS maxc
+            FROM tc GROUP BY 1
+        ), stats AS MATERIALIZED (
+            SELECT *,
+                n_toks < {E19_MIN_TOKENS} AS k_tok,
+                alpha_bp < {E19_MIN_ALPHA_BP} AS k_alpha,
+                share_bp > {E19_MAX_TOPSHARE_BP} AS k_share,
+                len_deci < {E19_MIN_MEANLEN_DECI} AS k_len
+            FROM (
+                SELECT
+                    COALESCE(p.n_toks, 0) AS n_toks,
+                    (10000 * COALESCE(p.alpha, 0))
+                        // GREATEST(LENGTH(d.text), 1) AS alpha_bp,
+                    (10000 * COALESCE(p.maxc, 0))
+                        // GREATEST(COALESCE(p.n_toks, 0), 1) AS share_bp,
+                    (10 * COALESCE(p.alpha, 0))
+                        // GREATEST(COALESCE(p.n_toks, 0), 1) AS len_deci
+                FROM documents d LEFT JOIN per p USING (doc_id)
+            )
+        )"""
+
+
 def _e19b_oracle() -> str:
     grid_values = ", ".join(
         f"('{rule}', CAST({theta} AS BIGINT))"
@@ -2277,36 +2291,7 @@ def _e19b_oracle() -> str:
         for theta in grid
     )
     return f"""
-        WITH tok AS (
-            SELECT doc_id, LENGTH(text) AS n, unnest(
-                regexp_extract_all(lower(text), '{_TOKEN_PATTERN}')) AS tok
-            FROM documents
-        ), tc AS (
-            SELECT doc_id, tok, COUNT(*) AS c, MAX(n) AS n
-            FROM tok GROUP BY 1, 2
-        ), per AS (
-            SELECT doc_id, SUM(c) AS n_toks,
-                   SUM(LENGTH(tok) * c) AS alpha,
-                   MAX(c) AS maxc
-            FROM tc GROUP BY 1
-        ), stats AS MATERIALIZED (
-            SELECT
-                COALESCE(p.n_toks, 0) AS n_toks,
-                (10000 * COALESCE(p.alpha, 0))
-                    // GREATEST(LENGTH(d.text), 1) AS alpha_bp,
-                (10000 * COALESCE(p.maxc, 0))
-                    // GREATEST(COALESCE(p.n_toks, 0), 1) AS share_bp,
-                (10 * COALESCE(p.alpha, 0))
-                    // GREATEST(COALESCE(p.n_toks, 0), 1) AS len_deci
-            FROM documents d LEFT JOIN per p USING (doc_id)
-        ), flagged AS MATERIALIZED (
-            SELECT *,
-                n_toks < {E19_MIN_TOKENS} AS k_tok,
-                alpha_bp < {E19_MIN_ALPHA_BP} AS k_alpha,
-                share_bp > {E19_MAX_TOPSHARE_BP} AS k_share,
-                len_deci < {E19_MIN_MEANLEN_DECI} AS k_len
-            FROM stats
-        ), grid(rule, threshold) AS (VALUES {grid_values}),
+        WITH {_e19_stats_ctes()}, grid(rule, threshold) AS (VALUES {grid_values}),
         crossed AS (
             SELECT g.rule, g.threshold,
                 CASE g.rule
@@ -2321,7 +2306,7 @@ def _e19b_oracle() -> str:
                     WHEN 'max_token_share' THEN (k_tok OR k_alpha OR k_len)
                     ELSE (k_tok OR k_alpha OR k_share)
                 END AS other
-            FROM flagged s CROSS JOIN grid g
+            FROM stats s CROSS JOIN grid g
         )
         SELECT rule, threshold,
                CAST(COUNT(*) AS BIGINT) AS n_docs,

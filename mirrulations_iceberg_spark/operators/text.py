@@ -817,261 +817,76 @@ def apply_bpe_merge(symbols: Column, a: str, b: str) -> Column:
     )
 
 
-T17B_ITERS = 6  # BPE training rounds to unroll
+def _bpe_train(
+    counts: DataFrame, batch: int, rounds: int, pool: int
+) -> tuple[list[list[tuple[str, str, int]]], list[DataFrame]]:
+    """The one BPE training loop behind t17b, t17c and t20: up to
+    ``rounds`` rounds of count → select → apply (Sennrich et al. 2016)
+    over ``counts``, a (tok, cnt) vocabulary whose other columns (t20's
+    per-token keys) ride through every round. ``tok`` is split into a
+    ``syms`` character array first.
 
-
-def t17b_bpe_train_iters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Iterated BPE training — t17 computes iteration 1's statistics;
-    real tokenizer training is N rounds of count → select → apply
-    with the growing merge table applied each round (Sennrich et al.
-    2016). This unrolls ``T17B_ITERS`` rounds over the corpus-weighted
-    vocabulary and returns the learned merge table with per-iteration
-    accounting: the winning pair and its corpus frequency, how many
-    greedy non-overlapping applications it made, the total symbol
-    count after the round, and compression in basis points of the
-    initial symbol count.
-
-    Scale shape (the PLANS.md note t17 promised): each round is ONE
-    bounded aggregate over the DISTINCT-token vocabulary (Heaps-bounded,
-    never raw text) — adjacent-pair counts via zip_with on the symbol
-    arrays, the argmax as TakeOrderedAndProject (orderBy+limit(1), no
-    global sort materialization), the merge applied Spark-side with
-    :func:`apply_bpe_merge` (pure array fold, no UDF) and the result
-    LOCAL-CHECKPOINTED per round so round r+1 never replays rounds
-    1..r — checkpoint, not cache: a cache truncates execution but NOT
-    the logical plan, so at N rounds the analyzer re-walks an
-    r-deep plan every round (O(N²) driver time — measured 6.6 s/round
-    and climbing at N=16, dead before N=64; with lineage truncation
-    the marginal round is flat, see PLANS.md round-12 N-scaling). At
-    production scale the same truncation is a reliable checkpoint or
-    a vocab-table write per K rounds. The driver holds only the N
-    winning merges — N·|vocab| total work, the same cost shape as any
-    production BPE trainer's counting phase.
-
-    Oracle: the same N rounds unrolled as chained CTEs (the x10
-    pattern) — symbol sequences as boundary-wrapped strings
-    ``(a)(bc)…`` where DuckDB's left-to-right non-overlapping
-    ``replace('(a)(b)' → '(ab)')`` is exactly the greedy fold (both
-    boundaries of every symbol are delimited, so no cross-symbol false
-    match and no separator-consumption under self-overlap — ``a a a``
-    merges once on both engines).
-    """
-    from .dedup import parallelize_scan as _pscan
-
-    docs = _pscan(load_table(spark, sf_dir, "documents"))
-    chars = F.transform(
-        F.sequence(F.lit(1), F.length("tok")),
-        lambda i: F.col("tok").substr(i, F.lit(1)),
-    )
-    cur = (
-        docs.select(F.explode(tokens_col(F.col("text"))).alias("tok"))
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(chars.alias("syms"), "cnt")
-        .localCheckpoint()
-    )
-    total0 = cur.agg(
-        F.sum(F.col("cnt") * F.size("syms")).cast("long")
-    ).collect()[0][0]
-    total_prev = total0
-    rows = []
-    for it in range(1, T17B_ITERS + 1):
-        pair = F.zip_with(
-            F.slice(F.col("syms"), F.lit(1), F.size("syms") - 1),
-            F.slice(F.col("syms"), F.lit(2), F.size("syms") - 1),
-            lambda a, b: F.struct(a.alias("lft"), b.alias("rgt")),
-        )
-        best = (
-            cur.filter(F.size("syms") >= 2)
-            .select("cnt", F.explode(pair).alias("pr"))
-            .groupBy("pr.lft", "pr.rgt")
-            .agg(F.sum("cnt").cast("long").alias("pc"))
-            .orderBy(F.desc("pc"), F.asc("lft"), F.asc("rgt"))
-            .limit(1)
-            .collect()
-        )
-        if not best:  # fully merged vocabulary — nothing left to learn
-            break
-        a, b, pc = best[0]["lft"], best[0]["rgt"], best[0]["pc"]
-        # Superseded rounds' checkpoint blocks are reclaimed lazily:
-        # Dataset.unpersist only speaks to the CacheManager and is a
-        # silent no-op for a localCheckpoint's internally-persisted
-        # RDD (review r12), and the ContextCleaner frees blocks only
-        # when driver GC collects the RDD reference — on a big heap
-        # all N Heaps-bounded vocab copies may coexist for the run.
-        # That bounds memory at N·|vocab| rows, fine at fixture N; at
-        # production N, checkpoint every K rounds to a reliable store
-        # (which truncates AND frees deterministically) instead.
-        nxt = cur.select(
-            apply_bpe_merge(F.col("syms"), a, b).alias("syms"), "cnt"
-        ).localCheckpoint()
-        total_new = nxt.agg(
-            F.sum(F.col("cnt") * F.size("syms")).cast("long")
-        ).collect()[0][0]
-        rows.append(
-            (
-                it,
-                a,
-                b,
-                a + b,
-                int(pc),
-                int(total_prev - total_new),
-                int(total_new),
-                (10000 * int(total_new)) // int(total0),
-            )
-        )
-        cur = nxt
-        total_prev = total_new
-    return spark.createDataFrame(
-        rows,
-        "iter int, left_sym string, right_sym string, merged string,"
-        " pair_count long, merges_applied long, total_syms long,"
-        " compression_bp long",
-    )
-
-
-def _t17b_sql() -> str:
-    """t17b oracle: ``T17B_ITERS`` BPE rounds unrolled as chained CTEs
-    over boundary-wrapped symbol strings (see the t17b docstring for
-    the replace-equals-greedy-fold argument)."""
-    sym = r"\(([a-z0-9]+)\)"
-    parts = [
-        f"""tok AS (
-            SELECT unnest(regexp_extract_all(lower(text),
-                                             '{TOKEN_PATTERN}')) AS tok
-            FROM documents
-        ), v0 AS (
-            SELECT regexp_replace(tok, '(.)', '(\\1)', 'g') AS s,
-                   CAST(COUNT(*) AS BIGINT) AS cnt
-            FROM tok GROUP BY tok
-        ), t0 AS (
-            SELECT SUM(cnt * len(regexp_extract_all(s, '{sym}', 1)))
-                AS tot FROM v0
-        )"""
-    ]
-    for r in range(1, T17B_ITERS + 1):
-        parts.append(
-            f"""l{r} AS (
-            SELECT s, cnt,
-                   regexp_extract_all(s, '{sym}', 1) AS li
-            FROM v{r - 1}
-        ), p{r} AS (
-            SELECT li[u.i] AS lft, li[u.i + 1] AS rgt,
-                   CAST(SUM(cnt) AS BIGINT) AS pc
-            FROM l{r}, UNNEST(range(1, len(li))) u(i)
-            GROUP BY 1, 2
-        ), b{r} AS (
-            SELECT lft, rgt, pc FROM p{r}
-            ORDER BY pc DESC, lft, rgt LIMIT 1
-        ), v{r} AS (
-            SELECT replace(s, '(' || b.lft || ')(' || b.rgt || ')',
-                           '(' || b.lft || b.rgt || ')') AS s, cnt
-            FROM l{r} CROSS JOIN b{r} b
-        ), t{r} AS (
-            SELECT SUM(cnt * len(regexp_extract_all(s, '{sym}', 1)))
-                AS tot FROM v{r}
-        ), row{r} AS (
-            SELECT CAST({r} AS INT) AS iter,
-                   (SELECT lft FROM b{r}) AS left_sym,
-                   (SELECT rgt FROM b{r}) AS right_sym,
-                   (SELECT lft || rgt FROM b{r}) AS merged,
-                   (SELECT pc FROM b{r}) AS pair_count,
-                   CAST((SELECT tot FROM t{r - 1})
-                        - (SELECT tot FROM t{r}) AS BIGINT)
-                       AS merges_applied,
-                   CAST((SELECT tot FROM t{r}) AS BIGINT) AS total_syms,
-                   CAST((10000 * (SELECT tot FROM t{r}))
-                        // (SELECT tot FROM t0) AS BIGINT)
-                       AS compression_bp
-            -- pair table exhausted -> b{r} is empty -> no row, the
-            -- SQL twin of the Spark side's `if not best: break`
-            -- (without this, the scalar subqueries above still emit
-            -- one NULL-filled row per remaining round)
-            WHERE EXISTS (SELECT 1 FROM b{r})
-        )"""
-        )
-    union = "\n            UNION ALL ".join(
-        f"SELECT * FROM row{r}" for r in range(1, T17B_ITERS + 1)
-    )
-    return (
-        "WITH "
-        + ", ".join(parts)
-        + f"\n        SELECT * FROM ({union}) ORDER BY iter"
-    )
-
-
-#: t17c batched-BPE geometry: merges accepted per round, rounds run by
-#: the driver entry, and the ranked candidate pool each round's greedy
-#: disjoint selection walks (bounded driver collect).
-T17C_BATCH = 4
-T17C_ROUNDS = 3
-T17C_POOL = 4 * T17C_BATCH
-
-
-def _t17c_train(
-    spark: SparkSession,
-    sf_dir: str,
-    batch: int,
-    rounds: int,
-    pool: int,
-) -> DataFrame:
-    """Batched BPE training core (t17c; VERDICT r13 item #2): per
-    round, ONE pair-count aggregate ranks candidates, the driver
-    greedily accepts up to ``batch`` pairs whose symbols are PAIRWISE
-    DISJOINT (walking the top-``pool`` ranked list in (count desc,
-    lft, rgt) order), and all accepted merges apply in ONE composed
-    fold — the standard top-B batching that cuts driver round-trips
-    by ~B× vs t17b's one-merge-per-round loop (real tokenizers run
-    thousands of merges; two collects per MERGE cannot ship).
+    Per round, ONE pair-count aggregate over the vocabulary ranks the
+    adjacent symbol pairs (zip_with on the symbol arrays, weighted by
+    ``cnt``) and the driver collects the top ``pool`` in (count desc,
+    lft, rgt) order — TakeOrderedAndProject, never a global sort. It
+    greedily accepts up to ``batch`` of them whose symbols are PAIRWISE
+    DISJOINT, and all accepted merges apply in ONE composed
+    :func:`apply_bpe_merge` fold. ``batch=1, pool=1`` is the sequential
+    argmax trainer (t17b, t20); a larger batch is the standard top-B
+    batching that cuts driver round-trips by ~B× (t17c).
 
     Why disjointness: acceptance excludes any candidate whose left,
     right, OR MERGED symbol intersects the inputs-and-outputs of the
-    already-accepted set. Input-disjointness alone is not enough (the
-    r14 review's hole): with symbols 'a','bc','abc','d' all live,
-    ('a','bc') and ('abc','d') have disjoint INPUTS but the first
-    merge's OUTPUT 'abc' feeds the second — its round-start count is
-    stale and the fold becomes order-dependent. Excluding outputs too
-    restores the invariant: no accepted merge can create or destroy
-    instances of another accepted pair (an adjacency of (c,d) can
-    only be disturbed by a replacement touching c or d, and no
-    replacement produces c or d), so the batch's sequential fold
-    equals applying each merge against its round-start counts. With
-    ``batch=1`` the selection IS t17b's argmax and the output equals
-    t17b's merge table row-for-row (pinned by pytest).
+    already-accepted set. Input-disjointness alone is not enough: with
+    symbols 'a','bc','abc','d' all live, ('a','bc') and ('abc','d')
+    have disjoint INPUTS but the first merge's OUTPUT 'abc' feeds the
+    second — its round-start count is stale and the fold becomes
+    order-dependent. Excluding outputs too restores the invariant: no
+    accepted merge can create or destroy instances of another accepted
+    pair (an adjacency of (c,d) can only be disturbed by a replacement
+    touching c or d, and no replacement produces c or d), so the
+    batch's sequential fold equals applying each merge against its
+    round-start counts.
 
-    Scale shape: t17b's exactly — per round one Heaps-bounded
-    aggregate over the distinct-token vocabulary, TakeOrdered top-pool
-    (never a global sort), a localCheckpoint to truncate lineage, one
-    total aggregate. Driver traffic per round: ``pool`` candidate rows
-    + 1 total row, independent of corpus size.
+    Scale shape: each round is one bounded aggregate over the
+    DISTINCT-token vocabulary (Heaps-bounded, never raw text), and the
+    driver holds only ``pool`` candidate rows per round — N·|vocab|
+    total work, the cost shape of any production BPE trainer's
+    counting phase. Each round's vocabulary is LOCAL-CHECKPOINTED so
+    round r+1 never replays rounds 1..r. Checkpoint, not cache: a
+    cache truncates execution but NOT the logical plan, so at N rounds
+    the analyzer re-walks an r-deep plan every round (O(N²) driver
+    time — measured 6.6 s/round and climbing at N=16, dead before
+    N=64; with lineage truncation the marginal round is flat, see
+    PLANS.md's t17b iteration-count table). Superseded rounds' blocks
+    are reclaimed lazily: Dataset.unpersist is a silent no-op for a
+    localCheckpoint's internally-persisted RDD, and the ContextCleaner
+    frees blocks only when driver GC collects the RDD reference, so
+    all N vocabulary copies may coexist for the run. That bounds
+    memory at N·|vocab| rows, fine at fixture N; at production N,
+    checkpoint every K rounds to a reliable store instead.
+
+    Returns ``(merges, vocabs)``: per round the accepted (lft, rgt,
+    pair_count) merges, and the checkpointed vocabulary before the
+    first round followed by the one after each round. The loop stops
+    early, with fewer rounds, once no symbol pair is left.
     """
-    from .dedup import parallelize_scan as _pscan
-
-    docs = _pscan(load_table(spark, sf_dir, "documents"))
-    chars = F.transform(
-        F.sequence(F.lit(1), F.length("tok")),
-        lambda i: F.col("tok").substr(i, F.lit(1)),
+    cur = counts.withColumn(
+        "syms",
+        F.transform(
+            F.sequence(F.lit(1), F.length("tok")),
+            lambda i: F.col("tok").substr(i, F.lit(1)),
+        ),
+    ).localCheckpoint()
+    pair = F.zip_with(
+        F.slice(F.col("syms"), F.lit(1), F.size("syms") - 1),
+        F.slice(F.col("syms"), F.lit(2), F.size("syms") - 1),
+        lambda a, b: F.struct(a.alias("lft"), b.alias("rgt")),
     )
-    cur = (
-        docs.select(F.explode(tokens_col(F.col("text"))).alias("tok"))
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(chars.alias("syms"), "cnt")
-        .localCheckpoint()
-    )
-    total0 = int(
-        cur.agg(F.sum(F.col("cnt") * F.size("syms")).cast("long")).collect()[
-            0
-        ][0]
-    )
-    total_prev = total0
-    out_rows = []
-    for rnd in range(1, rounds + 1):
-        pair = F.zip_with(
-            F.slice(F.col("syms"), F.lit(1), F.size("syms") - 1),
-            F.slice(F.col("syms"), F.lit(2), F.size("syms") - 1),
-            lambda a, b: F.struct(a.alias("lft"), b.alias("rgt")),
-        )
+    merges: list[list[tuple[str, str, int]]] = []
+    vocabs = [cur]
+    for _ in range(rounds):
         cands = (
             cur.filter(F.size("syms") >= 2)
             .select("cnt", F.explode(pair).alias("pr"))
@@ -1100,71 +915,41 @@ def _t17c_train(
         col = F.col("syms")
         for a, b, _pc in accepted:
             col = apply_bpe_merge(col, a, b)
-        nxt = cur.select(col.alias("syms"), "cnt").localCheckpoint()
-        total_new = int(
-            nxt.agg(
-                F.sum(F.col("cnt") * F.size("syms")).cast("long")
-            ).collect()[0][0]
-        )
-        for i, (a, b, pc) in enumerate(accepted, 1):
-            out_rows.append(
-                (
-                    rnd,
-                    i,
-                    a,
-                    b,
-                    a + b,
-                    pc,
-                    int(total_prev - total_new),
-                    total_new,
-                    (10000 * total_new) // total0,
-                )
-            )
-        cur = nxt
-        total_prev = total_new
-    return spark.createDataFrame(
-        out_rows,
-        "round int, rank_in_round int, left_sym string, right_sym string,"
-        " merged string, pair_count long, round_merges_applied long,"
-        " total_syms long, compression_bp long",
-    )
+        cur = cur.withColumn("syms", col).localCheckpoint()
+        merges.append(accepted)
+        vocabs.append(cur)
+    return merges, vocabs
 
 
-def t17c_bpe_batch_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver entry for the batched trainer: ``T17C_ROUNDS`` rounds ×
-    up to ``T17C_BATCH`` disjoint merges — the same learning budget
-    shape as t17b in a third of the driver round-trips (measured in
-    PLANS.md). See :func:`_t17c_train`."""
-    return _t17c_train(spark, sf_dir, T17C_BATCH, T17C_ROUNDS, T17C_POOL)
+#: The boundary-wrapped symbol ``(x)`` of the BPE oracles.
+_BPE_SYM = r"\(([a-z0-9]+)\)"
 
 
-def _t17c_sql(
-    batch: int = T17C_BATCH,
-    rounds: int = T17C_ROUNDS,
-    pool: int = T17C_POOL,
-) -> str:
-    """t17c oracle: the batched rounds unrolled as chained CTEs on
-    t17b's boundary-wrapped-string model, with the greedy disjoint
-    selection replayed EXACTLY by a recursive CTE per round — walk the
-    top-``pool`` ranked pairs in rank order carrying the used-symbol
-    list, accept while symbols are unseen and the batch has room —
-    and the accepted merges applied as ``batch`` nested sequential
-    ``replace``s (``COALESCE(…, chr(1))`` turns absent ranks into
-    identity replaces; chr(1) cannot occur in a boundary-wrapped
-    alnum string)."""
-    sym = r"\(([a-z0-9]+)\)"
+def _bpe_chain_sql(batch: int, rounds: int, pool: int) -> str:
+    """The oracle twin of :func:`_bpe_train`: its rounds unrolled as
+    chained ``MATERIALIZED`` CTEs ``v0`` … ``v{rounds}`` (tok, s, cnt)
+    over a (tok, cnt) CTE named ``vc``, with the accepted merges of
+    round r in ``accf{r}`` (lft, rgt, pc, ar). The statement must open
+    with ``WITH RECURSIVE``.
+
+    Symbol sequences are boundary-wrapped strings ``(a)(bc)…``, where
+    DuckDB's left-to-right non-overlapping ``replace('(a)(b)' →
+    '(ab)')`` is exactly the greedy fold: both boundaries of every
+    symbol are delimited, so there is no cross-symbol false match and
+    no separator consumption under self-overlap — ``a a a`` merges
+    once on both engines. The greedy disjoint selection is replayed
+    EXACTLY by a recursive CTE per round: walk the top-``pool`` ranked
+    pairs in rank order carrying the used-symbol list, accept while
+    symbols are unseen and the batch has room. The accepted merges
+    apply as ``batch`` nested sequential ``replace``s
+    (``COALESCE(…, chr(1))`` turns absent ranks into identity
+    replaces; chr(1) cannot occur in a boundary-wrapped alnum string).
+    A round with no pair left accepts nothing and leaves ``s`` as it
+    was."""
     parts = [
-        f"""tok AS (
-            SELECT unnest(regexp_extract_all(lower(text),
-                                             '{TOKEN_PATTERN}')) AS tok
-            FROM documents
-        ), v0 AS MATERIALIZED (
-            SELECT regexp_replace(tok, '(.)', '(\\1)', 'g') AS s,
-                   CAST(COUNT(*) AS BIGINT) AS cnt
-            FROM tok GROUP BY tok
-        ), t0 AS MATERIALIZED (
-            SELECT SUM(cnt * len(regexp_extract_all(s, '{sym}', 1)))
-                AS tot FROM v0
+        """v0 AS MATERIALIZED (
+            SELECT tok, regexp_replace(tok, '(.)', '(\\1)', 'g') AS s, cnt
+            FROM vc
         )"""
     ]
     for r in range(1, rounds + 1):
@@ -1190,8 +975,8 @@ def _t17c_sql(
             )
         parts.append(
             f"""l{r} AS MATERIALIZED (
-            SELECT s, cnt,
-                   regexp_extract_all(s, '{sym}', 1) AS li
+            SELECT tok, s, cnt,
+                   regexp_extract_all(s, '{_BPE_SYM}', 1) AS li
             FROM v{r - 1}
         ), p{r} AS MATERIALIZED (
             SELECT li[u.i] AS lft, li[u.i + 1] AS rgt,
@@ -1230,11 +1015,148 @@ def _t17c_sql(
                    CAST(ar AS INT) AS ar
             FROM accu{r}
         ), v{r} AS MATERIALIZED (
-            SELECT {apply_expr} AS s, cnt FROM l{r}
-        ), t{r} AS MATERIALIZED (
-            SELECT SUM(cnt * len(regexp_extract_all(s, '{sym}', 1)))
+            SELECT tok, {apply_expr} AS s, cnt FROM l{r}
+        )"""
+        )
+    return ", ".join(parts)
+
+
+T17B_ITERS = 6  # BPE training rounds to unroll
+
+
+def t17b_bpe_train_iters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Iterated BPE training — t17 computes iteration 1's statistics;
+    real tokenizer training is N rounds of count → select → apply
+    with the growing merge table applied each round (Sennrich et al.
+    2016). This runs ``T17B_ITERS`` one-merge rounds over the
+    corpus-weighted vocabulary and returns the learned merge table with
+    per-iteration accounting: the winning pair and its corpus
+    frequency, how many greedy non-overlapping applications it made,
+    the total symbol count after the round, and compression in basis
+    points of the initial symbol count.
+
+    It is the batched trainer with ``batch=1, pool=1`` — each round's
+    disjoint selection is then the argmax — projected to one row per
+    iteration (see :func:`_bpe_train` for the scale shape).
+
+    Oracle: :func:`_t17c_sql` with the same parameters, projected the
+    same way.
+    """
+    return _t17c_train(spark, sf_dir, 1, T17B_ITERS, 1).select(
+        F.col("round").alias("iter"),
+        "left_sym",
+        "right_sym",
+        "merged",
+        "pair_count",
+        F.col("round_merges_applied").alias("merges_applied"),
+        "total_syms",
+        "compression_bp",
+    )
+
+
+def _t17b_sql() -> str:
+    return f"""
+        SELECT round AS iter, left_sym, right_sym, merged, pair_count,
+               round_merges_applied AS merges_applied, total_syms,
+               compression_bp
+        FROM ({_t17c_sql(1, T17B_ITERS, 1)}) ORDER BY iter"""
+
+
+#: t17c batched-BPE geometry: merges accepted per round, rounds run by
+#: the driver entry, and the ranked candidate pool each round's greedy
+#: disjoint selection walks (bounded driver collect).
+T17C_BATCH = 4
+T17C_ROUNDS = 3
+T17C_POOL = 4 * T17C_BATCH
+
+
+def _t17c_train(
+    spark: SparkSession,
+    sf_dir: str,
+    batch: int,
+    rounds: int,
+    pool: int,
+) -> DataFrame:
+    """The merge table :func:`_bpe_train` learns over the corpus
+    vocabulary, one row per accepted merge with its round's accounting:
+    the symbols the round's merges removed and the total left, also in
+    basis points of the initial total. Every round's total comes from
+    ONE aggregate over the union of the rounds' checkpointed
+    vocabularies, so the driver collects one row per round once, not
+    one aggregate per round. With ``batch=1`` the output equals t17b's
+    merge table row-for-row (pinned by pytest)."""
+    from functools import reduce
+
+    from .dedup import parallelize_scan as _pscan
+
+    docs = _pscan(load_table(spark, sf_dir, "documents"))
+    merges, vocabs = _bpe_train(
+        docs.select(F.explode(tokens_col(F.col("text"))).alias("tok"))
+        .groupBy("tok")
+        .agg(F.count(F.lit(1)).alias("cnt")),
+        batch,
+        rounds,
+        pool,
+    )
+    sized = reduce(
+        DataFrame.unionByName,
+        [
+            v.select(
+                F.lit(r).alias("r"), (F.col("cnt") * F.size("syms")).alias("n")
+            )
+            for r, v in enumerate(vocabs)
+        ],
+    )
+    total = {
+        row["r"]: int(row["n"])
+        for row in sized.groupBy("r").agg(F.sum("n").alias("n")).collect()
+    }
+    return spark.createDataFrame(
+        [
+            (
+                rnd,
+                i,
+                a,
+                b,
+                a + b,
+                pc,
+                total[rnd - 1] - total[rnd],
+                total[rnd],
+                (10000 * total[rnd]) // total[0],
+            )
+            for rnd, accepted in enumerate(merges, 1)
+            for i, (a, b, pc) in enumerate(accepted, 1)
+        ],
+        "round int, rank_in_round int, left_sym string, right_sym string,"
+        " merged string, pair_count long, round_merges_applied long,"
+        " total_syms long, compression_bp long",
+    )
+
+
+def t17c_bpe_batch_train(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Driver entry for the batched trainer: ``T17C_ROUNDS`` rounds ×
+    up to ``T17C_BATCH`` disjoint merges — the same learning budget
+    shape as t17b in a third of the driver round-trips (measured in
+    PLANS.md). See :func:`_bpe_train`."""
+    return _t17c_train(spark, sf_dir, T17C_BATCH, T17C_ROUNDS, T17C_POOL)
+
+
+def _t17c_sql(
+    batch: int = T17C_BATCH,
+    rounds: int = T17C_ROUNDS,
+    pool: int = T17C_POOL,
+) -> str:
+    """t17c oracle: :func:`_bpe_chain_sql` over the corpus vocabulary,
+    then each round's symbol total and one row per accepted merge."""
+    totals = ", ".join(
+        f"""t{r} AS MATERIALIZED (
+            SELECT SUM(cnt * len(regexp_extract_all(s, '{_BPE_SYM}', 1)))
                 AS tot FROM v{r}
-        ), row{r} AS (
+        )"""
+        for r in range(rounds + 1)
+    )
+    rows = ", ".join(
+        f"""row{r} AS (
             SELECT CAST({r} AS INT) AS round, ar AS rank_in_round,
                    lft AS left_sym, rgt AS right_sym,
                    lft || rgt AS merged, pc AS pair_count,
@@ -1247,15 +1169,19 @@ def _t17c_sql(
                        AS compression_bp
             FROM accf{r}
         )"""
-        )
+        for r in range(1, rounds + 1)
+    )
     union = "\n            UNION ALL ".join(
         f"SELECT * FROM row{r}" for r in range(1, rounds + 1)
     )
-    return (
-        "WITH RECURSIVE "
-        + ", ".join(parts)
-        + f"\n        SELECT * FROM ({union}) ORDER BY round, rank_in_round"
-    )
+    return f"""WITH RECURSIVE tok AS (
+            SELECT unnest(regexp_extract_all(lower(text),
+                                             '{TOKEN_PATTERN}')) AS tok
+            FROM documents
+        ), vc AS (
+            SELECT tok, CAST(COUNT(*) AS BIGINT) AS cnt FROM tok GROUP BY tok
+        ), {_bpe_chain_sql(batch, rounds, pool)}, {totals}, {rows}
+        SELECT * FROM ({union}) ORDER BY round, rank_in_round"""
 
 
 #: t22 flag thresholds, integer basis points (the Gopher/MassiveText
@@ -1594,30 +1520,20 @@ def t20_bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The scale insight that makes corpus-wide encoding cheap: BPE
     merges NEVER cross token boundaries, so the corpus is encoded by
-    encoding each DISTINCT token once — the merge fold runs over the
-    Heaps-bounded vocabulary (same table the trainer already owns,
-    with ``tok`` threaded through), and the corpus-sized side is ONE
-    (source, tok) count join against that broadcast vocabulary. Raw
-    text is scanned once; no merge ever touches a document row.
+    encoding each DISTINCT token once — :func:`_bpe_train` runs over
+    the Heaps-bounded vocabulary with ``tok`` carried through the
+    rounds, and the corpus-sized side is ONE (source, tok) count join
+    against that broadcast vocabulary. Raw text is scanned once; no
+    merge ever touches a document row. If the pair table exhausts
+    before ``T20_ITERS`` merges the operator raises rather than
+    silently encoding with a shorter table.
 
-    The trainer loop is deliberately self-contained rather than
-    refactored out of t17b — sharing it would put green t17b back
-    through the rotation gate for a pure refactor (the x19/x21
-    precedent). If the pair table exhausts before ``T20_ITERS`` the
-    operator raises rather than silently encoding with a shorter
-    table (the oracle's chained CTEs have no break path).
-
-    Oracle: t17b's boundary-wrapped replay with ``tok`` carried
-    through the rounds, then the same vocabulary join and per-source
-    integer arithmetic.
+    Oracle: t17b's :func:`_bpe_chain_sql`, then the same vocabulary
+    join and per-source integer arithmetic.
     """
     from .dedup import parallelize_scan as _pscan
 
     docs = _pscan(load_table(spark, sf_dir, "documents"))
-    chars = F.transform(
-        F.sequence(F.lit(1), F.length("tok")),
-        lambda i: F.col("tok").substr(i, F.lit(1)),
-    )
     per_src = (
         docs.select(
             "source", F.explode(tokens_col(F.col("text"))).alias("tok")
@@ -1626,37 +1542,18 @@ def t20_bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("cnt"))
         .localCheckpoint()
     )
-    vocab = (
-        per_src.groupBy("tok")
-        .agg(F.sum("cnt").alias("cnt"))
-        .select("tok", chars.alias("syms"), "cnt")
-        .localCheckpoint()
+    merges, vocabs = _bpe_train(
+        per_src.groupBy("tok").agg(F.sum("cnt").alias("cnt")),
+        1,
+        T20_ITERS,
+        1,
     )
-    for _ in range(T20_ITERS):
-        pair = F.zip_with(
-            F.slice(F.col("syms"), F.lit(1), F.size("syms") - 1),
-            F.slice(F.col("syms"), F.lit(2), F.size("syms") - 1),
-            lambda a, b: F.struct(a.alias("lft"), b.alias("rgt")),
+    if len(merges) < T20_ITERS:
+        raise RuntimeError(
+            "t20: pair table exhausted before"
+            f" {T20_ITERS} merges — reduce T20_ITERS"
         )
-        best = (
-            vocab.filter(F.size("syms") >= 2)
-            .select("cnt", F.explode(pair).alias("pr"))
-            .groupBy("pr.lft", "pr.rgt")
-            .agg(F.sum("cnt").cast("long").alias("pc"))
-            .orderBy(F.desc("pc"), F.asc("lft"), F.asc("rgt"))
-            .limit(1)
-            .collect()
-        )
-        if not best:
-            raise RuntimeError(
-                "t20: pair table exhausted before"
-                f" {T20_ITERS} merges — reduce T20_ITERS"
-            )
-        a, b = best[0]["lft"], best[0]["rgt"]
-        vocab = vocab.select(
-            "tok", apply_bpe_merge(F.col("syms"), a, b).alias("syms"), "cnt"
-        ).localCheckpoint()
-    units = vocab.select(
+    units = vocabs[-1].select(
         "tok",
         F.size("syms").alias("units"),
         F.length("tok").alias("chars"),
@@ -1690,53 +1587,22 @@ def t20_bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _t20_sql() -> str:
-    """t20 oracle: t17b's chained boundary-wrapped rounds with ``tok``
-    threaded through (deliberate textual twin — see the t20 docstring
-    for why the trainer is not refactored out of t17b), then the
-    vocabulary join and per-source integer stats."""
-    sym = r"\(([a-z0-9]+)\)"
-    parts = [
-        f"""tok AS (
+    """t20 oracle: the trainer's :func:`_bpe_chain_sql` over the
+    corpus vocabulary, then the vocabulary join and per-source integer
+    stats."""
+    return f"""WITH RECURSIVE tok AS (
             SELECT source,
                    unnest(regexp_extract_all(lower(text),
                                              '{TOKEN_PATTERN}')) AS tok
             FROM documents
-        ), pst AS (
+        ), pst AS MATERIALIZED (
             SELECT source, tok, CAST(COUNT(*) AS BIGINT) AS cnt
             FROM tok GROUP BY 1, 2
-        ), v0 AS (
-            SELECT tok, regexp_replace(tok, '(.)', '(\\1)', 'g') AS s,
-                   CAST(SUM(cnt) AS BIGINT) AS cnt
-            FROM pst GROUP BY tok
-        )"""
-    ]
-    for r in range(1, T20_ITERS + 1):
-        parts.append(
-            f"""l{r} AS (
-            SELECT tok, s, cnt,
-                   regexp_extract_all(s, '{sym}', 1) AS li
-            FROM v{r - 1}
-        ), p{r} AS (
-            SELECT li[u.i] AS lft, li[u.i + 1] AS rgt,
-                   CAST(SUM(cnt) AS BIGINT) AS pc
-            FROM l{r}, UNNEST(range(1, len(li))) u(i)
-            GROUP BY 1, 2
-        ), b{r} AS (
-            SELECT lft, rgt FROM p{r}
-            ORDER BY pc DESC, lft, rgt LIMIT 1
-        ), v{r} AS (
+        ), vc AS (
+            SELECT tok, CAST(SUM(cnt) AS BIGINT) AS cnt FROM pst GROUP BY tok
+        ), {_bpe_chain_sql(1, T20_ITERS, 1)}, enc AS (
             SELECT tok,
-                   replace(s, '(' || b.lft || ')(' || b.rgt || ')',
-                           '(' || b.lft || b.rgt || ')') AS s, cnt
-            FROM l{r} CROSS JOIN b{r} b
-        )"""
-        )
-    return (
-        "WITH "
-        + ", ".join(parts)
-        + f""", enc AS (
-            SELECT tok,
-                   CAST(len(regexp_extract_all(s, '{sym}', 1))
+                   CAST(len(regexp_extract_all(s, '{_BPE_SYM}', 1))
                         AS BIGINT) AS units,
                    CAST(len(tok) AS BIGINT) AS chars
             FROM v{T20_ITERS}
@@ -1753,7 +1619,6 @@ def _t20_sql() -> str:
         FROM pst p JOIN enc e USING (tok)
         GROUP BY p.source ORDER BY p.source
     """
-    )
 
 
 T21_SIZE = 64  # tokens per chunk — the RAG/pretraining context window

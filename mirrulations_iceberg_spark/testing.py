@@ -1,11 +1,36 @@
 """Shared differential-check helpers (used by scripts/drivercheck.py
-and the pytest suite): order-insensitive value-hash comparison between
-a Spark result and a DuckDB oracle result, mirroring the round
-driver's CORRECTNESS gate."""
+and the pytest suite): the DuckDB connection the oracles run on, and
+order-insensitive value-hash comparison between a Spark result and a
+DuckDB oracle result, mirroring the round driver's CORRECTNESS gate."""
 
 from __future__ import annotations
 
 import hashlib
+import os
+
+#: DuckDB memory bound for every oracle connection: an oracle whose
+#: plan needs more than this fails loudly instead of swapping the host.
+ORACLE_MEMORY_LIMIT = "2GB"
+
+
+def oracle_db(sf_dir: str):
+    """A DuckDB connection bounded by :data:`ORACLE_MEMORY_LIMIT` with
+    one view per table of ``sf_dir``: ``<table>.parquet`` as one file or
+    as a directory of part files; absent tables get no view."""
+    import duckdb
+
+    from .tables import TABLE_NAMES
+
+    con = duckdb.connect()
+    con.execute(f"SET memory_limit = '{ORACLE_MEMORY_LIMIT}'")
+    for t in TABLE_NAMES:
+        path = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.isdir(path):
+            path = os.path.join(path, "*.parquet")
+        elif not os.path.exists(path):
+            continue
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+    return con
 
 
 def norm_cell(v) -> str:

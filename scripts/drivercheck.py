@@ -36,12 +36,9 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-import duckdb  # noqa: E402
-
 import __spark_entry__ as entrymod  # noqa: E402
 from mirrulations_iceberg_spark.session import get_spark  # noqa: E402
-from mirrulations_iceberg_spark.tables import TABLE_NAMES  # noqa: E402
-from mirrulations_iceberg_spark.testing import value_hash  # noqa: E402
+from mirrulations_iceberg_spark.testing import oracle_db, value_hash  # noqa: E402
 
 
 def main() -> int:
@@ -64,13 +61,7 @@ def main() -> int:
     else:
         spark = get_spark(shuffle_partitions=8)
 
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(path):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
-            )
+    con = oracle_db(sf_dir)
 
     n_pass = n_rowsonly = n_fail = n_err = 0
     items = (

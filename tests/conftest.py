@@ -4,13 +4,12 @@ import os
 import sys
 import uuid
 
-import duckdb
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from mirrulations_iceberg_spark.session import get_spark
-from mirrulations_iceberg_spark.tables import TABLE_NAMES
+from mirrulations_iceberg_spark.testing import compare, oracle_db
 
 #: Tiny scale factor keeps the full-suite oracle sweep fast. This is
 #: NOT sufficient as a pre-commit gate for operators with value-boundary
@@ -59,14 +58,8 @@ def documents_oracle_mismatch(sf: str, name: str, df) -> str | None:
     oracle run over the ``documents.parquet`` that :func:`write_docs`
     wrote under ``sf``: None when they agree."""
     from mirrulations_iceberg_spark.operators import collect_queries
-    from mirrulations_iceberg_spark.testing import compare
 
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{sf}/documents.parquet/*.parquet')"
-    )
-    res = con.execute(collect_queries()[1][name])
+    res = oracle_db(sf).execute(collect_queries()[1][name])
     return compare(
         df.columns,
         [tuple(r) for r in df.collect()],
@@ -82,12 +75,7 @@ def spark():
 
 @pytest.fixture(scope="session")
 def ddb():
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        path = os.path.join(SF_DIR, f"{t}.parquet")
-        if os.path.exists(path):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
-    return con
+    return oracle_db(SF_DIR)
 
 
 @pytest.fixture()

@@ -700,15 +700,19 @@ _ORACLE_FRAGMENTS = (
     ("list_transform(embedding, x -> CAST(x AS DOUBLE))", "similarity.py", "_emb_cte"),
     ("FROM isamp ORDER BY s, vec_id LIMIT", "similarity.py", "_ivf_fit_ctes"),
     ("THEN (1 << CAST(bb AS INT))", "similarity.py", "_srp_bucket_sql"),
+    ('lambda a, b: F.struct(a.alias("lft"), b.alias("rgt"))', "text.py", "_bpe_train"),
+    (r"regexp_replace(tok, '(.)', '(\\1)', 'g')", "text.py", "_bpe_chain_sql"),
+    ("SUM(LENGTH(tok) * c) AS alpha", "etl.py", "_e19_stats_ctes"),
 )
 
 
 def test_oracle_fragments_have_one_home():
     """The DuckDB oracles' shared building blocks (the shingle window,
-    the embedding cast, the IVF fit replay, the SRP sign-bit bucket) are
-    written once, in the fragment generated from the Spark side's
-    constants, so an oracle cannot drift from its constant or its
-    siblings."""
+    the embedding cast, the IVF fit replay, the SRP sign-bit bucket, the
+    BPE boundary wrap, the e19 per-document stats) are written once, in
+    the fragment generated from the Spark side's constants, so an oracle
+    cannot drift from its constant or its siblings. The BPE trainers'
+    pair builder has one home too: the shared round loop."""
     pkg = pathlib.Path(__file__).resolve().parent.parent / "mirrulations_iceberg_spark"
     offenders = []
     for text, home_file, home in _ORACLE_FRAGMENTS:

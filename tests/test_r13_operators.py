@@ -10,6 +10,8 @@ from __future__ import annotations
 import datetime
 import os
 
+import pytest
+
 
 def _write_events(spark, tmp_path, rows):
     """Write events as a single FILE named events.parquet (not a
@@ -284,6 +286,16 @@ def test_t20_encode_matches_python_bpe_replay(spark, tmp_path):
     b = out["B"]
     assert b["n_units"] == b["n_words"] == b["n_chars"] == 6
     assert out["A"]["n_units"] < out["A"]["n_chars"]  # merges applied
+
+
+def test_t20_raises_when_the_pair_table_exhausts(spark, tmp_path):
+    """A corpus of single-character tokens has no symbol pair to merge,
+    so t20 must raise instead of encoding with a shorter merge table."""
+    from mirrulations_iceberg_spark.operators.text import t20_bpe_encode_corpus
+
+    sf = _write_docs(spark, tmp_path, [(1, "q z w x q z", "A"), (2, "a b", "B")])
+    with pytest.raises(RuntimeError, match="pair table exhausted"):
+        t20_bpe_encode_corpus(spark, sf)
 
 
 def test_x21_upsert_serves_delta_rows(spark, tmp_path):
